@@ -9,12 +9,12 @@ Run from the repository root.  The first run builds the inputs under
 embedded Derby database) and reuses them afterwards; that time is recorded
 in the run record, not in ``setup_s``.
 
-One run: start the session, warm the tables, run two untimed warm-up
-passes over the workload's ops, the first of which checks every result
-(query ops: hash-equal to the DuckDB oracle; export ops: validated, row
-counts equal to Derby's, reference file names), then run whole passes --
-each in an order drawn from ``--seed`` -- until ``--seconds`` have
-elapsed, and at least two.  The last stdout line
+One run: start the session, warm the tables, run one untimed warm-up pass
+over the workload's ops that checks every result (query ops: hash-equal
+to the DuckDB oracle; export ops: validated, row counts equal to Derby's,
+reference file names), then run whole passes -- each in an order drawn
+from ``--seed`` -- until ``--seconds`` have elapsed, and at least two.
+The last stdout line
 is the result: end-to-end metrics with ``--trace 0``; with ``--trace 1``
 the session also writes Spark's event log, and the result holds per-layer
 metrics instead.  The line before it is the run record (config, sample
@@ -73,7 +73,7 @@ END_TO_END = (
     ("peak_rss_mb", "MB"),
 )
 PER_LAYER = (
-    (("session.get_spark_s", "s"), ("tables.warm_s", "s"), ("setup.warmup_passes_s", "s"))
+    (("session.get_spark_s", "s"), ("tables.warm_s", "s"), ("setup.warmup_pass_s", "s"))
     + EXPORT_METRICS
     + tuple((f"{m}.{k}", u) for m in MODULES for k, u in MODULE_METRICS)
     + (("spark.failed_tasks", "count"), ("spark.gc_s", "s"),
@@ -448,17 +448,13 @@ def run(args) -> None:
 
         rng = random.Random(args.seed)
         attempted = 0
-        warmup_ops: dict[str, list[float]] = {}
+        warmup_ops = {}
         t0 = time.perf_counter()
-        # Two untimed passes: the first checks every result; the second
-        # runs while the JIT still compiles the ops' hot paths, which the
-        # first timed pass would otherwise pay for.
-        for check in (True, False):
-            for op in rng.sample(workload.ops, len(workload.ops)):
-                t1 = time.perf_counter()
-                runner.run_op(op, f"w{attempted}:{runner.layer(op)}", check=check)
-                attempted += 1
-                warmup_ops.setdefault(op, []).append(round(time.perf_counter() - t1, 4))
+        for op in rng.sample(workload.ops, len(workload.ops)):  # untimed; checks results
+            t1 = time.perf_counter()
+            runner.run_op(op, f"w{attempted}:{runner.layer(op)}", check=True)
+            attempted += 1
+            warmup_ops[op] = round(time.perf_counter() - t1, 4)
         warmup_s = time.perf_counter() - t0
         setup_s = time.perf_counter() - t_start
         clock.totals.clear()  # per-layer spans cover the timed passes only
@@ -520,7 +516,7 @@ def run(args) -> None:
         "samples": {"op_p50_cpu_s": len(cpu)},
         "op_input_rows": {op: runner.input_rows.get(op) for op in workload.ops},
         "setup_parts_s": {"get_spark": round(get_spark_s, 4), "warm_tables": round(warm_s, 4),
-                          "warmup_passes": warmup_ops},
+                          "warmup_pass": warmup_ops},
         "op_latency_s": {op: [round(t[2], 4) for t in timed if t[1] == op] for op in workload.ops},
         "op_cpu_s": {op: [round(t[3]["cpu_s"], 4) for t in timed if t[1] == op]
                      for op in workload.ops},
@@ -532,7 +528,7 @@ def run(args) -> None:
     if args.trace:
         metrics = per_layer(runner, timed, passes, {
             "session.get_spark_s": get_spark_s, "tables.warm_s": warm_s,
-            "setup.warmup_passes_s": warmup_s, "wall.ops_per_s": secondary["ops_per_s"],
+            "setup.warmup_pass_s": warmup_s, "wall.ops_per_s": secondary["ops_per_s"],
             "wall.op_p50_s": secondary["op_p50_s"],
             "trace.cpu_s_per_op": secondary["cpu_s_per_op"],
         }, eventlog_dir, config["app_id"])
