@@ -1,12 +1,12 @@
-"""Benchmark of the engine: JDBC->Parquet export, OLAP queries and an
-LLM-data pipeline, each driven by one closed-loop client on
+"""Benchmark of the engine: JDBC->Parquet export, and one query per
+operator module, each driven by one closed-loop client on
 ``local[<cores>]``.
 
-    python3 perfbench/run.py --workload olap --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload queries --seed 1 --seconds 5 --trace 0
 
 Run from the repository root.  The first run builds the inputs under
-``perfbench/.work`` (generated parquet fixtures, DuckDB oracle hashes, an
-embedded Derby database) and reuses them afterwards; that time is recorded
+``perfbench/.work`` (DuckDB oracle hashes of the fixtures, an embedded
+Derby database) and reuses them afterwards; that time is recorded
 in the run record, not in ``setup_s``.
 
 One run: start the session, warm the tables, run one untimed warm-up pass
@@ -43,15 +43,16 @@ sys.path.insert(0, ROOT)
 from workloads import (  # noqa: E402
     EXPORT_MAX_FILE_BYTES,
     PACKAGE,
-    TINY_SF,
+    TABLES,
+    TINY_DATA,
     WORKLOADS,
     Clock,
     check_export,
     dir_bytes,
     result_hash,
-    sf_name,
 )
 
+FIXTURES = os.path.join(HERE, "fixtures")
 # Two samples of every op per run, even when one pass outlasts --seconds.
 MIN_PASSES = 2
 MODULES = ("relational", "windows", "setops", "scalars", "events_analytics",
@@ -69,15 +70,17 @@ EXPORT_METRICS = (
     ("exporter.executor_cpu_s", "s"), ("exporter.driver_gap_s", "s"),
 )
 END_TO_END = (
-    ("setup_s", "s"), ("op_p50_cpu_s", "s"), ("parquet_bytes_per_row", "bytes/row"),
+    ("setup_s", "s"), ("pass_cpu_s", "s"), ("parquet_bytes_per_row", "bytes/row"),
     ("peak_rss_mb", "MB"),
 )
 PER_LAYER = (
-    (("session.get_spark_s", "s"), ("tables.warm_s", "s"), ("setup.warmup_pass_s", "s"))
+    (("session.get_spark_s", "s"), ("tables.warm_s", "s"), ("setup.warmup_pass_s", "s"),
+     ("setup.wall_s", "s"))
     + EXPORT_METRICS
     + tuple((f"{m}.{k}", u) for m in MODULES for k, u in MODULE_METRICS)
     + (("spark.failed_tasks", "count"), ("spark.gc_s", "s"),
-       ("wall.ops_per_s", "ops/s"), ("wall.op_p50_s", "s"), ("trace.cpu_s_per_op", "s"))
+       ("wall.ops_per_s", "ops/s"), ("wall.op_p50_s", "s"), ("wall.pass_s", "s"),
+       ("trace.cpu_s_per_op", "s"))
 )
 
 
@@ -186,6 +189,14 @@ def tree_cpu_s(jvm_pid: int) -> tuple[float, float]:
     return own.user + own.system + ticks / hz, jit_ticks(jvm_pid) / hz
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(stolen, total) clock ticks of the machine's CPUs so far: time the
+    hypervisor gave this VM's CPUs to other guests."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    return f[7], sum(f)
+
+
 def stop_spark(spark) -> None:
     """Stop the session, then wait for the JVM and its workers to exit."""
     from pyspark import SparkContext
@@ -219,51 +230,44 @@ def stop_spark(spark) -> None:
 
 
 def prepared_dir(tiny: bool) -> str:
-    """Keyed by the workload definitions and the generator's source, so a
-    change to either prepares afresh instead of reusing stale inputs."""
+    """Keyed by the workload definitions and the fixture files, so a change
+    to either prepares afresh instead of reusing stale inputs."""
     import hashlib
 
-    h = hashlib.sha1(repr([(w.name, w.sf, w.ops) for w in WORKLOADS.values()]).encode())
-    with open(os.path.join(HERE, "gen.py"), "rb") as fh:
-        h.update(fh.read())
+    h = hashlib.sha1(repr([(w.name, w.data, w.ops) for w in WORKLOADS.values()]).encode())
+    files = [os.path.join(d, f) for d, _dirs, names in os.walk(FIXTURES) for f in names]
+    for path in sorted(files):
+        h.update(os.path.relpath(path, FIXTURES).encode())
+        with open(path, "rb") as fh:
+            h.update(fh.read())
     return os.path.join(WORK, f"{'tiny' if tiny else 'full'}-{h.hexdigest()[:10]}")
 
 
 def prepare(tiny: bool) -> None:
-    """Generate the fixtures, the oracle hashes and the Derby database;
-    write ``prep.json`` last, as the completion marker."""
+    """Compute the oracle hashes and load the Derby database; write
+    ``prep.json`` last, as the completion marker."""
     import duckdb
-
-    import gen
-
-    base = prepared_dir(tiny)
-    record: dict = {"steps_s": {}}
-    t_all = time.perf_counter()
-    sfs = {TINY_SF} if tiny else {w.sf for w in WORKLOADS.values()}
-    counts = {}
-    for sf in sorted(sfs):
-        dst = os.path.join(base, "data", sf_name(sf))
-        t0 = time.perf_counter()
-        if not os.path.isdir(dst):
-            counts[sf_name(sf)] = gen.write_sf(dst, sf)
-        record["steps_s"][f"generate_{sf_name(sf)}"] = round(time.perf_counter() - t0, 3)
 
     from oracle_parquet_dumper_spark import plans
 
+    base = prepared_dir(tiny)
+    os.makedirs(base, exist_ok=True)
+    record: dict = {"steps_s": {}}
+    t_all = time.perf_counter()
     t0 = time.perf_counter()
     oracle: dict[str, dict[str, str]] = {}
     for w in WORKLOADS.values():
-        sf = TINY_SF if tiny else w.sf
-        sf_dir = os.path.join(base, "data", sf_name(sf))
+        data = TINY_DATA if tiny else w.data
+        sf_dir = os.path.join(FIXTURES, data)
         con = duckdb.connect()
-        for t in gen.TABLES:
+        for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
             )
         for q in w.ops:
             spec = plans.REGISTRY.get(q)
             if spec is not None and spec.oracle is not None:
-                oracle.setdefault(sf_name(sf), {})[q] = result_hash(con.sql(spec.oracle).df())
+                oracle.setdefault(data, {})[q] = result_hash(con.sql(spec.oracle).df())
         con.close()
     record["steps_s"]["oracle_hashes"] = round(time.perf_counter() - t0, 3)
     with open(os.path.join(base, "oracle.json"), "w") as fh:
@@ -273,17 +277,15 @@ def prepare(tiny: bool) -> None:
     from workloads import load_derby
 
     t0 = time.perf_counter()
-    export_sf = TINY_SF if tiny else WORKLOADS["export_jdbc"].sf
+    export_data = TINY_DATA if tiny else WORKLOADS["export_jdbc"].data
     spark = get_spark("perfbench-prepare", extra_conf=spark_conf(None))
     try:
-        derby_rows = load_derby(
-            spark, os.path.join(base, "data", sf_name(export_sf)), os.path.join(base, "derby")
-        )
+        derby_rows = load_derby(spark, os.path.join(FIXTURES, export_data),
+                                os.path.join(base, "derby"))
     finally:
         stop_spark(spark)
     record["steps_s"]["derby_load"] = round(time.perf_counter() - t0, 3)
-    record.update(total_s=round(time.perf_counter() - t_all, 3), derby_rows=derby_rows,
-                  generated_rows=counts)
+    record.update(total_s=round(time.perf_counter() - t_all, 3), derby_rows=derby_rows)
     with open(os.path.join(base, "prep.json"), "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
 
@@ -310,17 +312,19 @@ class Runner:
         self.spark = spark
         self.sc = spark.sparkContext
         self.workload = workload
-        self.sf_dir = os.path.join(base, "data", sf_name(TINY_SF if tiny else workload.sf))
+        self.data = TINY_DATA if tiny else workload.data
+        self.sf_dir = os.path.join(FIXTURES, self.data)
         self.clock = clock
         self.specs = {q: plans.REGISTRY[q] for q in workload.ops if q != "export"}
         with open(os.path.join(base, "oracle.json")) as fh:
-            self.oracle = json.load(fh).get(os.path.basename(self.sf_dir), {})
+            self.oracle = json.load(fh).get(self.data, {})
         self.derby_rows = prep["derby_rows"]
         self.derby_path = os.path.join(base, "derby")
         self.export_out = os.path.join(WORK, "export-out")
         self.input_rows: dict[str, int] = {}  # per query op, from the warm-up pass
         self.input_bytes: dict[str, int] = {}
-        self.failures: list[str] = []
+        self.failed_ops = 0
+        self.failures: list[str] = []  # messages; one failed op may have several
         self.catalog = None
         self.jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
 
@@ -338,9 +342,7 @@ class Runner:
             return
         from oracle_parquet_dumper_spark.sources.tables import load_table
 
-        import gen
-
-        for t in gen.TABLES:  # file listing and footers; the warm-up pass runs the jobs
+        for t in TABLES:  # file listing and footers; the warm-up pass runs the jobs
             load_table(self.spark, self.sf_dir, t)
 
     def _export(self, group: str) -> tuple[float, dict]:
@@ -400,18 +402,23 @@ class Runner:
         gc.collect()
         self.spark.catalog.clearCache()
         cpu0, jit0 = tree_cpu_s(self.jvm_pid)
+        steal0, ticks0 = cpu_ticks()
         try:
             if op == "export":
                 elapsed, info = self._export(group)
             else:
                 elapsed, info = self._query(op, group, check)
         except Exception as exc:  # a failed op is counted, the run goes on
+            self.failed_ops += 1
             self.failures.append(f"{op}: {type(exc).__name__}: {str(exc)[:300]}")
             return None
         cpu1, jit1 = tree_cpu_s(self.jvm_pid)
+        steal1, ticks1 = cpu_ticks()
+        info["steal_share"] = (steal1 - steal0) / max(1, ticks1 - ticks0)
         info["jit_cpu_s"] = jit1 - jit0
         info["cpu_s"] = cpu1 - cpu0 - info["jit_cpu_s"]
         if info.get("issues"):
+            self.failed_ops += 1
             self.failures.extend(info["issues"])
             return None
         return elapsed, info
@@ -424,6 +431,9 @@ def run(args) -> None:
     pins = pin_environment()
     prep = ensure_prepared(args.tiny)
     t_start = time.perf_counter()  # setup clock: preparation is excluded
+    own = os.times()
+    cpu_start = own.user + own.system
+    steal_start, ticks_start = cpu_ticks()
     from bench import box_state  # other-JVM / load tripwire, sampled before our JVM starts
 
     box = box_state()
@@ -456,7 +466,11 @@ def run(args) -> None:
             attempted += 1
             warmup_ops[op] = round(time.perf_counter() - t1, 4)
         warmup_s = time.perf_counter() - t0
-        setup_s = time.perf_counter() - t_start
+        setup_wall = time.perf_counter() - t_start
+        setup_cpu, setup_jit = tree_cpu_s(runner.jvm_pid)
+        setup_cpu -= cpu_start
+        steal_end, ticks_end = cpu_ticks()
+        setup_steal = (steal_end - steal_start) / max(1, ticks_end - ticks_start)
         clock.totals.clear()  # per-layer spans cover the timed passes only
 
         timed = []  # (job group, op, wall seconds, details)
@@ -487,6 +501,11 @@ def run(args) -> None:
         raise RuntimeError(f"no op succeeded: {runner.failures[:5]}")
     lat = [t[2] for t in timed]
     cpu = [t[3]["cpu_s"] for t in timed]
+    op_lat = {op: [t[2] for t in timed if t[1] == op] for op in workload.ops}
+    op_cpu = {op: [t[3]["cpu_s"] for t in timed if t[1] == op] for op in workload.ops}
+    # Each op's median over the passes, summed, so every op counts.
+    med_lat = {op: statistics.median(v) for op, v in op_lat.items() if v}
+    med_cpu = {op: statistics.median(v) for op, v in op_cpu.items() if v}
     if workload.ops == ("export",):  # rows exported, parquet bytes written
         op_rows = [t[3]["rows"] for t in timed]
         nbytes = sum(t[3]["bytes"] for t in timed)
@@ -494,42 +513,50 @@ def run(args) -> None:
         op_rows = [runner.input_rows.get(t[1], 0) for t in timed]
         nbytes = sum(runner.input_bytes.get(t[1], 0) for t in timed)
     rows = sum(op_rows)
-    # A median over ops: a burst of load from another tenant inflates a few
-    # ops, not the middle one.
+    # Set-up and op cost are CPU seconds: wall time moved 19-39% between
+    # runs of the same code with the time other guests took from this VM.
     e2e = {
-        "setup_s": setup_s,
-        "op_p50_cpu_s": statistics.median(cpu),
+        "setup_s": setup_cpu,
+        "pass_cpu_s": sum(med_cpu.values()),
         "parquet_bytes_per_row": nbytes / rows if rows else 0.0,
         "peak_rss_mb": peak_rss_mb,
     }
     # Measured but too noisy on a shared machine to carry a bound.
-    secondary = {"ops_per_s": len(timed) / wall, "op_p50_s": statistics.median(lat),
+    secondary = {"setup_wall_s": setup_wall, "pass_wall_s": sum(med_lat.values()),
+                 "ops_per_s": len(timed) / wall, "op_p50_s": statistics.median(lat),
                  "rows_per_s": rows / sum(lat), "cpu_s_per_op": sum(cpu) / len(cpu),
                  "rows_per_cpu_s": rows / sum(cpu)}
-    failed = len(runner.failures)
+    failed = runner.failed_ops
     record = {
         "workload": workload.name, "why": workload.why, "seed": args.seed,
         "seconds": args.seconds, "trace": args.trace,
-        "sf": TINY_SF if args.tiny else workload.sf, "ops": list(workload.ops),
+        "data": runner.data, "sf_dir": os.path.relpath(runner.sf_dir, ROOT),
+        "ops": list(workload.ops),
         "closed_loop_clients": 1, "passes": passes, "timed_ops": len(timed),
         "timed_wall_s": round(wall, 4),
-        "samples": {"op_p50_cpu_s": len(cpu)},
+        "samples": {"pass_cpu_s": {op: len(v) for op, v in op_cpu.items()},
+                    "pass_wall_s": {op: len(v) for op, v in op_lat.items()}},
         "op_input_rows": {op: runner.input_rows.get(op) for op in workload.ops},
         "setup_parts_s": {"get_spark": round(get_spark_s, 4), "warm_tables": round(warm_s, 4),
                           "warmup_pass": warmup_ops},
-        "op_latency_s": {op: [round(t[2], 4) for t in timed if t[1] == op] for op in workload.ops},
-        "op_cpu_s": {op: [round(t[3]["cpu_s"], 4) for t in timed if t[1] == op]
-                     for op in workload.ops},
+        "setup_jit_cpu_s": round(setup_jit, 3), "setup_steal_share": round(setup_steal, 4),
+        "op_latency_s": {op: [round(x, 4) for x in v] for op, v in op_lat.items()},
+        "op_cpu_s": {op: [round(x, 4) for x in v] for op, v in op_cpu.items()},
+        "op_median_latency_s": {op: round(v, 4) for op, v in med_lat.items()},
+        "op_median_cpu_s": {op: round(v, 4) for op, v in med_cpu.items()},
+        "op_steal_share": {op: [round(t[3]["steal_share"], 4) for t in timed if t[1] == op]
+                           for op in workload.ops},
         "jit_cpu_s": round(sum(t[3]["jit_cpu_s"] for t in timed), 4),
         "box_state": box, "env": pins, **config,
-        "preparation": prep, "failures": runner.failures[:20],
+        "preparation": prep, "failed_ops": failed, "failures": runner.failures[:20],
         "end_to_end": e2e, "secondary": secondary,
     }
     if args.trace:
         metrics = per_layer(runner, timed, passes, {
             "session.get_spark_s": get_spark_s, "tables.warm_s": warm_s,
-            "setup.warmup_pass_s": warmup_s, "wall.ops_per_s": secondary["ops_per_s"],
-            "wall.op_p50_s": secondary["op_p50_s"],
+            "setup.warmup_pass_s": warmup_s, "setup.wall_s": setup_wall,
+            "wall.ops_per_s": secondary["ops_per_s"], "wall.op_p50_s": secondary["op_p50_s"],
+            "wall.pass_s": secondary["pass_wall_s"],
             "trace.cpu_s_per_op": secondary["cpu_s_per_op"],
         }, eventlog_dir, config["app_id"])
         units = dict(PER_LAYER)
@@ -592,7 +619,7 @@ def main() -> None:
     ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--tiny", action="store_true",
-                    help=f"use sf{TINY_SF:g} data for every workload (smoke check)")
+                    help=f"use the {TINY_DATA} fixture for every workload (smoke check)")
     ap.add_argument("--prepare", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
     if not os.path.isfile(os.path.join(ROOT, PACKAGE, "__init__.py")):

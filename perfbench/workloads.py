@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 PACKAGE = "oracle_parquet_dumper_spark"
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 TPCH_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+# Every table the query registry reads, one parquet file each.
+TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 # Small enough that LINEITEM rolls into several files at the export scale.
 EXPORT_MAX_FILE_BYTES = 1_000_000
 
@@ -28,44 +30,39 @@ EXPORT_MAX_FILE_BYTES = 1_000_000
 @dataclass(frozen=True)
 class Workload:
     name: str
-    sf: float  # data scale (sf=0.1 -> 600k lineitem rows)
+    data: str  # a fixture directory under perfbench/fixtures/
     ops: tuple[str, ...]  # registry query names; ("export",) for the export op
     why: str
+
+
+# perfbench/fixtures/ holds the repo's standard fixtures, sf0.01 (60k
+# lineitem rows) and sf0.001, unchanged: the files the tests read.
+# Fixture used instead of each workload's own by the smoke check.
+TINY_DATA = "sf0.001"
 
 
 WORKLOADS = {
     w.name: w
     for w in (
         Workload(
-            "export_jdbc", 0.01, ("export",),
+            "export_jdbc", "sf0.01", ("export",),
             "the reference's own job: serial JDBC reads, zstd parquet writes with "
             "file rolling, no Python workers, no shuffle",
         ),
         # One op per operator module, so each module's layer metrics come
-        # from exactly one query.
+        # from exactly one query: five JVM-only OLAP modules, then five
+        # LLM-data modules that run Python workers or driver-side loops.
         Workload(
-            "olap", 0.1,
+            "queries", "sf0.01",
             ("q6_forecast_revenue", "window_topk_per_group", "set_union_distinct",
-             "fn_regexp_family", "events_retention_cohorts"),
-            "JVM-only work: parquet scans, codegen, aggregation, windows and "
-            "shuffles; no Python workers, no checkpoints",
-        ),
-        Workload(
-            "llm_pipeline", 0.01,
-            ("dedup_exact", "sim_topk_bruteforce", "text_tfidf_topterms",
+             "fn_regexp_family", "events_retention_cohorts",
+             "dedup_exact", "sim_topk_bruteforce", "text_token_count",
              "graph_degree_distribution", "udf_scalar_pandas"),
-            "small LLM-data inputs where time is in the driver and the Python-worker "
-            "boundary (pandas UDF, tokenizing, vector math), not in scanning",
+            "one query per operator module: JVM-only scans, aggregation, windows and "
+            "shuffles, then dedup, vector math, tokenizing, graph and pandas-UDF work",
         ),
     )
 }
-
-# Scale used instead of each workload's own by the smoke check.
-TINY_SF = 0.001
-
-
-def sf_name(sf: float) -> str:
-    return f"sf{sf:g}"
 
 
 def result_hash(pdf) -> str:
