@@ -283,7 +283,7 @@ def main() -> None:
             "w",
         ) as fh:
             json.dump({**contract, "env": env}, fh, indent=1)
-    except OSError as e:
+    except Exception as e:  # best-effort artifact; the contract line still prints
         print(f"bench: bench_out.json write failed: {e}", file=sys.stderr)
     print(json.dumps(contract))
 

@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.functions.vectors import as_double, dot_d
+from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, dot_d, norm
 
 DIM = 64
 N_SIGN_BANDS = 4
@@ -154,12 +154,9 @@ def banded_buckets(
     becomes a co-located join with zero wide shuffle.  ``planes``/``bits``
     select the band width (the capacity knob — see PLANES_WIDE).
 
-    Lazily checkpointed: the caller self-joins this frame, and without
-    truncation Spark would evaluate the 16 hyperplane dots once per join
-    side (2x the dominant cost); the local checkpoint materializes the
-    tiny (id, band, bucket) relation on first use and both sides read
-    it."""
-    # r14: the hyperplane dots are heavy per-row map work over a
+    Lazily checkpointed, ready for ``band_pairs`` (see its docstring
+    for why the materialization sits here)."""
+    # the hyperplane dots are heavy per-row map work over a
     # single-row-group fixture scan (one task however many cores) —
     # restore scan parallelism adaptively before computing them
     # (no-op on an already-split source; guide §2.5).
@@ -177,6 +174,116 @@ def banded_buckets_wide(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """8-bit-band variant of ``banded_buckets`` — the measured capacity
     fix for large n (see PLANES_WIDE note)."""
     return banded_buckets(df, id_col, vec_col, PLANES_WIDE, WIDE_BITS_PER_BAND)
+
+
+def band_pairs(
+    bands: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    cap: int | None = None,
+    min_agree: int | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs ``(a, b)``, ``a < b``, of the rows of a
+    band relation that share every ``key_cols`` value — the banded-LSH
+    self-join every pairwise dedup/similarity operator runs.  The join
+    keys keep the caller's column names, so plans/audit.py's
+    banded-join detector sees a ``(band, bucket)`` join exactly where
+    the caller's relation has one.
+
+    Materialization.  ``bands`` must be materialized ONCE before it
+    gets here, so both join sides read the same blocks (``Scan
+    ExistingRDD`` in the executed plan) instead of each re-deriving the
+    per-row signatures — tokenize + shingle md5 for MinHash, the
+    hyperplane dot folds for sign-LSH.  ``banded_buckets`` and
+    ``dedup._minhash_pairs`` localCheckpoint (lazily) the relation they
+    pass; the Levenshtein name bands, a small aggregate, are joined as
+    they are.  The checkpoint sits on the narrow band relation
+    with no repartition above it, a shape chosen by interleaved A/B on a
+    32-core box:
+
+    - An explicit ``(band, bucket)`` repartition relied on for
+      ReusedExchange did not reuse at runtime: AQE broadcasts one side
+      at fixture scale and the broadcast build re-derived the signature
+      pipeline.  Repartition-reuse vs checkpoint medians (s, sf0.1 /
+      sf1): dedup_minhash_lsh 2.13 -> 1.87 / 2.98 -> 2.49;
+      dedup_threshold_sensitivity 3.74 -> 2.57 / 5.18 -> 4.16;
+      pipeline_split_leakage_audit 4.61 -> 4.44 / 4.34 -> 3.35;
+      pipeline_curation 2.26 -> 2.11 / 4.38 -> 4.33.
+    - Checkpoint THEN repartition measured between the two (minhash
+      1.98 / 2.84 s), and dropping the repartition above
+      ``banded_buckets_wide`` took dedup_embedding_cosine_lsh 2.41 ->
+      2.37 s at sf0.1 and 6.51 -> 4.32 s at sf1 (1.51x): the standing
+      exchange of the exploded band relation costs more than letting
+      AQE plan the join (broadcast or sort-merge) over the
+      materialized relation.
+
+    Fault tolerance: ``localCheckpoint`` blocks live unreplicated in
+    executor storage and the lineage behind them is cut, so losing an
+    executor mid-query fails the job instead of recomputing its
+    partitions, and at 100 TB the exploded band relation is written per
+    query.  The production form is a reliable checkpoint
+    (``truncate_lineage`` with a checkpoint dir) or a stored band index
+    (``write_dedup_corpus_state``).
+
+    Signatures.  If ``bands`` carries a ``sig`` array column
+    (``minhash_band_rows(..., keep_sig=True)``), each pair also gets
+    ``agree``, the number of equal signature components, computed on the
+    joined row BEFORE the pair dedup.  ``agree`` is row-local and the
+    same for every band a pair collides in, so the dedup exchange then
+    shuffles ``(a, b, agree)`` instead of two signature arrays per
+    collision row.  ``min_agree`` keeps pairs with ``agree >=
+    min_agree``, also before the dedup.
+
+    ``cap`` bounds work on degenerate data: each bucket admits only its
+    ``cap`` smallest ids (row_number — deterministic), so a bucket yields
+    at most C(cap, 2) pairs and total work is O(#buckets).  The window is
+    partitioned by the join key, so it rides the join's own exchange."""
+    if cap is not None:
+        from pyspark.sql import Window as W
+
+        rn = F.row_number().over(W.partitionBy(*key_cols).orderBy(id_col))
+        bands = bands.withColumn("rn", rn).where(F.col("rn") <= cap).drop("rn")
+    carry = ["sig"] if "sig" in bands.columns else []
+    a, b = (
+        bands.select(
+            F.col(id_col).alias(side),
+            *[F.col(c).alias(f"{c}_{side}") for c in carry],
+            *key_cols,
+        )
+        for side in ("a", "b")
+    )
+    out = [F.col("a"), F.col("b")]
+    if carry:
+        agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e))
+        out.append(agree.cast("long").alias("agree"))
+    pairs = a.join(b, key_cols).where(F.col("a") < F.col("b")).select(*out)
+    if min_agree is not None:
+        pairs = pairs.where(F.col("agree") >= min_agree)
+    return pairs.dropDuplicates(["a", "b"])
+
+
+def pair_sides(pairs: DataFrame, rows: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` joined to ``rows`` on both pair sides: every other
+    column ``c`` of ``rows`` arrives as ``c_a`` (a's row) and ``c_b``
+    (b's row) — the re-attach step that verifies candidate pairs."""
+    cols = [c for c in rows.columns if c != id_col]
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            rows.select(
+                F.col(id_col).alias(side), *[F.col(c).alias(f"{c}_{side}") for c in cols]
+            ),
+            side,
+        )
+    return pairs
+
+
+def pair_cosine(pairs: DataFrame, vecs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(a, b, cos)``: the exact rounded cosine of each candidate pair's
+    vectors, re-attached from ``vecs`` (norms computed once per row)."""
+    v = vecs.select(id_col, as_double(vec_col).alias("v"), norm(vec_col).alias("n"))
+    return pair_sides(pairs, v, id_col).select(
+        "a", "b", cosine_prenormed("v_a", "v_b", "n_a", "n_b").alias("cos")
+    )
 
 
 # --- matching DuckDB SQL (generated from the SAME plane literals) ----------

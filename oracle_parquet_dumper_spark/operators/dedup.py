@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded, cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table, split_scan
@@ -60,25 +61,42 @@ def _affine_min_sql(i: int, sh_expr: str) -> str:
     return f"MIN(({MINHASH_A[i]} * ({sh_expr} % {MINHASH_P}) + {MINHASH_B[i]}) % {MINHASH_P})"
 
 
-def _pair_participants(pairs: DataFrame) -> DataFrame:
-    """Distinct doc ids appearing on either side of a candidate-pair
-    relation — the semi-join key that keeps exact-verify stages
-    O(participants), not O(corpus).
+def _participant_shingle_sets(d: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, ss): the distinct md5 shingle-id set of every document
+    of ``d`` that appears on either side of a candidate-pair relation —
+    the exact-verify input, built for pair participants only.
 
-    The round-13 profile that motivated this: at sf1 the minhash evals
-    spent 99 s building distinct-shingle arrays for ALL 600k documents
-    and 13 s on everything else, while only ~5k documents actually
-    appear in a candidate pair — Catalyst cannot push a join's key
-    membership below a per-row array constructor, so the restriction
-    must be stated explicitly (`d.join(_pair_participants(p), "doc_id",
-    "left_semi")` BEFORE the array build).  Callers localCheckpoint the
-    pair relation first so the banded join isn't re-derived for the
-    participant list."""
-    return (
+    The round-13 profile that motivated the restriction: at sf1 the
+    minhash evals spent 99 s building distinct-shingle arrays for ALL
+    600k documents and 13 s on everything else, while only ~5k documents
+    actually appear in a candidate pair — Catalyst cannot push a join's
+    key membership below a per-row array constructor, so the left-semi
+    must come BEFORE the array build.  Callers localCheckpoint the pair
+    relation first so the banded join isn't re-derived for the
+    participant list.  No forced broadcast: the participant list grows
+    with the candidate set, so AQE broadcasts it while small and falls
+    back to a shuffled semi-join beyond that."""
+    participants = (
         pairs.select(F.col("a").alias("doc_id"))
         .union(pairs.select(F.col("b").alias("doc_id")))
         .distinct()
     )
+    return d.join(participants, "doc_id", "left_semi").select(
+        "doc_id", F.array_distinct(F.transform(shingles(F.col("text")), _md5_long)).alias("ss")
+    )
+
+
+def _minhash_pairs(
+    sig: DataFrame, keep_sig: bool = False, min_agree: int | None = None
+) -> DataFrame:
+    """Distinct MinHash-LSH candidate pairs (a, b) of a (doc_id, sig)
+    frame: the band relation is localCheckpointed once and self-joined
+    by ``band_pairs`` (functions/lsh.py, which documents the shape).
+    ``keep_sig`` carries the signatures through the checkpoint so each
+    pair also gets ``agree`` (and ``min_agree`` can threshold it) before
+    the pair dedup."""
+    bands = minhash_band_rows(sig, keep_sig).localCheckpoint(eager=False)
+    return band_pairs(bands, "doc_id", ["band", "bucket"], min_agree=min_agree)
 
 
 @query(
@@ -246,10 +264,10 @@ def minhash_band_rows(sig: DataFrame, keep_sig: bool = False) -> DataFrame:
     bucket) row per band: the bucket key joins the band's minhash
     components with '_' — the exact encoding the SQL twin
     (``_band_eq_sql``) replays, so this single definition is what keeps
-    every LSH query's candidate set in lockstep with its oracle.  The
-    four banded queries (flagship pair finder, cluster keeper pass,
-    containment, incremental batch-vs-corpus) all bucket through
-    here."""
+    every LSH query's candidate set in lockstep with its oracle.  Every
+    MinHash banded query buckets through here: the self-joins (via
+    ``_minhash_pairs``), the train x test leakage audit, and the
+    incremental batch-vs-corpus joins and their stored corpus index."""
     rpb = N_MINHASH // N_BANDS
     cols = ["doc_id", "sig"] if keep_sig else ["doc_id"]
     bb = F.explode(
@@ -369,45 +387,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally unit-tested.
     """
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # r15 (VERDICT r14 #4): the band relation is materialized ONCE with
-    # a lazy localCheckpoint and both join sides read it.  The r14 form
-    # (an explicit (band, bucket) repartition relied on for
-    # ReusedExchange) did not reliably reuse at runtime — the planner
-    # broadcasts one side at fixture scale and the broadcast build
-    # re-derived the whole tokenize+md5 signature pipeline.  Interleaved
-    # three-way A/B medians (reuse / ckpt / ckpt+repartition):
-    # 2.13 / 1.87 / 1.98 s at sf0.1, 2.98 / 2.49 / 2.84 s at sf1 — the
-    # checkpoint alone wins both; the join's own distribution (AQE picks
-    # broadcast or SMJ over the materialized narrow relation) beats
-    # paying an extra standing exchange.
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
-        )
-    ) / F.lit(float(N_MINHASH))
-    # r14 (guide §2.3 — shuffle fewer bytes): the estimate is row-local
-    # and identical for every (band, bucket) copy of a pair, so verify
-    # and THRESHOLD before the pair-dedup exchange — the dedup then
-    # shuffles (a, b, est) for surviving pairs only, instead of two
-    # 16-long signature arrays for every banded collision.
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= 0.5)
-        .dropDuplicates(["a", "b"])
-        .orderBy("a", "b")
-    )
+    pairs = _minhash_pairs(minhash_signatures_df(d), keep_sig=True, min_agree=N_MINHASH // 2)
+    return pairs.select(
+        "a", "b", (F.col("agree") / F.lit(float(N_MINHASH))).alias("est_jaccard")
+    ).orderBy("a", "b")
 
 
 def _simhash_oracle() -> str:
@@ -632,32 +615,18 @@ def dedup_embedding_cosine_narrow_demo(spark: SparkSession, sf_dir: str) -> Data
     regenerates the same seeded planes), and its denser candidate set is
     what keeps the small-SF fixture oracle rich (268 pairs at sf0.01)."""
     from oracle_parquet_dumper_spark.functions.lsh import banded_buckets
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
 
     e = load_table(spark, sf_dir, "embeddings")
-    # r15: no repartition above banded_buckets' internal checkpoint —
-    # the 16 sign-bit dots are evaluated once inside the checkpoint
-    # build either way, and the standing exchange of the exploded band
-    # relation measured slower than letting AQE plan the join (the
-    # dedup_embedding_cosine_lsh A/B: 1.51x at sf1)
-    bands = banded_buckets(e, "vec_id", "embedding")
-    cand = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    v = e.select(
-        "vec_id", as_double("embedding").alias("v"), norm("embedding").alias("nv")
-    )
-    va = v.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    vb = v.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    pairs = cand.join(va, "a").join(vb, "b").select(
-        "a", "b", cosine_prenormed("va", "vb", "na", "nb").alias("cos")
-    )
+    return _embedding_near_dups(e, banded_buckets(e, "vec_id", "embedding"))
+
+
+def _embedding_near_dups(e: DataFrame, bands: DataFrame) -> DataFrame:
+    """Per-vector near-dup summary over the banded sign-LSH candidates
+    of ``bands``: exact rounded cosine >= 0.3, count and best per ``a``."""
+    cand = band_pairs(bands, "vec_id", ["band", "bucket"])
     return (
-        pairs.where(F.col("cos") >= 0.3)
+        pair_cosine(cand, e, "vec_id", "embedding")
+        .where(F.col("cos") >= 0.3)
         .groupBy("a")
         .agg(F.count(F.lit(1)).alias("n_dups"), F.max("cos").alias("best_cos"))
     )
@@ -765,6 +734,14 @@ def dedup_fuzzy_levenshtein_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle can regenerate identical signatures — bit-exact
     candidate sets, full hash-match check.  (In production swap md5 for
     xxhash64: same plan, cheaper hash.)"""
+    return _levenshtein_lsh(spark, sf_dir)
+
+
+def _levenshtein_lsh(spark: SparkSession, sf_dir: str, cap: int | None = None) -> DataFrame:
+    """Body of the two name-hash Levenshtein LSH queries: character
+    3-gram md5 min-hashes -> (band, v0, v1) rows -> ``band_pairs``
+    (``cap`` per bucket) -> exact Levenshtein <= 3 on the re-attached
+    names."""
     c = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
     g = c.select(
         "c_custkey",
@@ -804,20 +781,10 @@ def dedup_fuzzy_levenshtein_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("c_custkey", "bb.band", "bb.v0", "bb.v1")
-    cand = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "v0", "v1"])
-        .where(F.col("l.c_custkey") < F.col("r.c_custkey"))
-        .select(F.col("l.c_custkey").alias("a"), F.col("r.c_custkey").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    names = c.select("c_custkey", "c_name")
-    na = names.select(F.col("c_custkey").alias("a"), F.col("c_name").alias("name_a"))
-    nb = names.select(F.col("c_custkey").alias("b"), F.col("c_name").alias("name_b"))
-    dist = F.levenshtein("name_a", "name_b")
+    cand = band_pairs(bands, "c_custkey", ["band", "v0", "v1"], cap=cap)
+    dist = F.levenshtein("c_name_a", "c_name_b")
     return (
-        cand.join(na, "a")
-        .join(nb, "b")
+        pair_sides(cand, c.select("c_custkey", "c_name"), "c_custkey")
         .where(dist <= 3)
         .select("a", "b", dist.cast("long").alias("edit_dist"))
     )
@@ -892,74 +859,7 @@ def dedup_fuzzy_levenshtein_lsh_capped(spark: SparkSession, sf_dir: str) -> Data
     band key (per-task state = one bucket's rows — the same key the
     join shuffles on, so the window rides the join's own exchange);
     everything else is the uncapped plan."""
-    from pyspark.sql import Window as W
-
-    c = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
-    g = c.select(
-        "c_custkey",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, greatest(length(c_name) - 2, 1)),"
-                " i -> substring(c_name, i, 3))"
-            )
-        ).alias("g"),
-    )
-
-    def name_hash(j: int):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("g"), F.lit(f"#{j}")).cast("binary")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-        )
-
-    sig = g.groupBy("c_custkey").agg(
-        *[F.min(name_hash(j)).alias(f"h{j}") for j in range(N_NAME_HASHES)]
-    )
-    bands = sig.select(
-        "c_custkey",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"h{b * NAME_ROWS_PER_BAND}").alias("v0"),
-                        F.col(f"h{b * NAME_ROWS_PER_BAND + 1}").alias("v1"),
-                    )
-                    for b in range(N_NAME_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("c_custkey", "bb.band", "bb.v0", "bb.v1")
-    capped = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("band", "v0", "v1").orderBy("c_custkey")
-            ),
-        )
-        .where(F.col("rn") <= LEV_LSH_CAP)
-        .drop("rn")
-    )
-    cand = (
-        capped.alias("l")
-        .join(capped.alias("r"), ["band", "v0", "v1"])
-        .where(F.col("l.c_custkey") < F.col("r.c_custkey"))
-        .select(F.col("l.c_custkey").alias("a"), F.col("r.c_custkey").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    names = c.select("c_custkey", "c_name")
-    na = names.select(F.col("c_custkey").alias("a"), F.col("c_name").alias("name_a"))
-    nb = names.select(F.col("c_custkey").alias("b"), F.col("c_name").alias("name_b"))
-    dist = F.levenshtein("name_a", "name_b")
-    return (
-        cand.join(na, "a")
-        .join(nb, "b")
-        .where(dist <= 3)
-        .select("a", "b", dist.cast("long").alias("edit_dist"))
-    )
+    return _levenshtein_lsh(spark, sf_dir, cap=LEV_LSH_CAP)
 
 
 def truncate_lineage(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
@@ -1269,23 +1169,8 @@ def pipeline_curation(
     )
 
     # 3. near dedup: LSH pairs over the exact-deduped set -> CC -> drop
-    # non-keepers.  Reuse the registered pair finder on a filtered view
-    # by recomputing pairs here on `exact`.
-    sig = minhash_sig_from_shm(exact)
-    # r15: band relation localCheckpointed once instead of the explicit
-    # repartition (the family fix measured on dedup_minhash_lsh — the
-    # repartition's exchange reuse did not fire at runtime).  Here bands
-    # derive from the parquet-materialized `exact`, so the stakes are
-    # the 16 affine folds per side: A/B 2.26 -> 2.11 s sf0.1,
-    # 4.38 -> 4.33 s sf1 (mild, never slower), hash-identical.
-    bands = minhash_band_rows(sig).localCheckpoint(eager=False)
-    pairs = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    # non-keepers.
+    pairs = _minhash_pairs(minhash_sig_from_shm(exact))
     comps = connected_components(pairs, checkpoint_dir=checkpoint_dir)
     drop = comps.groupBy("component").agg(F.min("node").alias("keeper"))
     # Join by NAME, not comps.component == drop.component: ``drop``
@@ -1754,41 +1639,20 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's shingle sample, same verification stage.  All counts are md5
     shingle-id set sizes — integer, bit-exact across engines."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # r15: band relation materialized once (see dedup_minhash_lsh —
-    # the repartition reuse did not fire at runtime)
-    bands = minhash_band_rows(sig).localCheckpoint(eager=False)
-    pairs = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
-    )
-    # shingle arrays only for pair participants (_pair_participants —
-    # the round-13 fix: the unrestricted corpus-wide array build
-    # dominated the minhash evals' sf1 cost by ~8x)
-    sets = d.join(_pair_participants(pairs), "doc_id", "left_semi").select(
-        "doc_id",
-        F.array_distinct(F.transform(shingles(F.col("text")), _md5_long)).alias("ss"),
-    )
-    sa = sets.select(F.col("doc_id").alias("a"), F.col("ss").alias("ssa"))
-    sb = sets.select(F.col("doc_id").alias("b"), F.col("ss").alias("ssb"))
-    inter = F.size(F.array_intersect("ssa", "ssb"))
-    cont_a = inter / F.size("ssa")
-    cont_b = inter / F.size("ssb")
+    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
+    sets = _participant_shingle_sets(d, pairs)
+    inter = F.size(F.array_intersect("ss_a", "ss_b"))
+    cont_a = inter / F.size("ss_a")
+    cont_b = inter / F.size("ss_b")
     return (
-        pairs.join(sa, "a")
-        .join(sb, "b")
+        pair_sides(pairs, sets, "doc_id")
         .where(F.greatest(cont_a, cont_b) >= CONTAIN_THRESHOLD)
         .select(
             "a",
             "b",
             inter.cast("long").alias("n_inter"),
-            F.size("ssa").cast("long").alias("n_a"),
-            F.size("ssb").cast("long").alias("n_b"),
+            F.size("ss_a").cast("long").alias("n_a"),
+            F.size("ss_b").cast("long").alias("n_b"),
             F.round(cont_a, 6).alias("cont_a"),
             F.round(cont_b, 6).alias("cont_b"),
         )
@@ -1850,37 +1714,9 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     same seeded planes and rounded-dot sign bits, so candidate sets
     match exactly."""
     from oracle_parquet_dumper_spark.functions.lsh import banded_buckets_wide
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
 
     e = load_table(spark, sf_dir, "embeddings")
-    # r15: the explicit (band, bucket) repartition above banded_buckets'
-    # internal checkpoint is DROPPED — AQE plans the self-join over the
-    # materialized narrow relation itself (broadcast at fixture scale,
-    # its own exchanges past the threshold), and the standing exchange
-    # of the 8x-exploded band relation cost more than it saved.
-    # Interleaved A/B medians: 2.41 -> 2.37 s sf0.1 (wash),
-    # **6.51 -> 4.32 s sf1 (1.51x)** — tight runs both sides.
-    bands = banded_buckets_wide(e, "vec_id", "embedding")
-    cand = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    v = e.select(
-        "vec_id", as_double("embedding").alias("v"), norm("embedding").alias("nv")
-    )
-    va = v.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    vb = v.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    pairs = cand.join(va, "a").join(vb, "b").select(
-        "a", "b", cosine_prenormed("va", "vb", "na", "nb").alias("cos")
-    )
-    return (
-        pairs.where(F.col("cos") >= 0.3)
-        .groupBy("a")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.max("cos").alias("best_cos"))
-    )
+    return _embedding_near_dups(e, banded_buckets_wide(e, "vec_id", "embedding"))
 
 
 # --- incremental dedup: new batch vs existing corpus -----------------------
@@ -2386,57 +2222,17 @@ def dedup_minhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle has no floating point.  Scale shape: signatures stay the
     shuffle-free per-row pipeline; the distinct-shingle sets are built
     ONLY for pair-participant documents (left-semi against the
-    checkpointed candidate relation — _pair_participants; the round-13
+    checkpointed candidate relation — _participant_shingle_sets; the round-13
     profile measured the unrestricted build at 99 of the query's ~110 s
     at sf1, for ~5k participants out of 600k docs) and joined only for
     the LSH-surviving candidate pairs — exact verification cost is
     O(participants + candidates), never O(corpus array builds)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # r15: band relation materialized once (see dedup_minhash_lsh)
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    ).cast("long")
-    # r14: agree is row-local and identical across a pair's (band,
-    # bucket) copies — compute it BEFORE the dedup exchange so the
-    # dedup (and the checkpoint write behind it) carries (a, b, agree)
-    # instead of two 16-long signature arrays per collision row.
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", agree.alias("agree"))
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
-    )
-
-    # no forced broadcast: the participant list grows with the candidate
-    # set, so the hint would be an unbounded build side — AQE broadcasts
-    # it while small and falls back to a shuffled semi-join beyond that
-    sets = d.join(
-        _pair_participants(pairs.select("a", "b")), "doc_id", "left_semi"
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(shingles(F.col("text")), lambda s: _md5_long(s))
-        ).alias("ss"),
-    )
-    sa = sets.select(F.col("doc_id").alias("a"), F.col("ss").alias("ss_a"))
-    sb = sets.select(F.col("doc_id").alias("b"), F.col("ss").alias("ss_b"))
+    pairs = _minhash_pairs(minhash_signatures_df(d), keep_sig=True).localCheckpoint(eager=False)
     inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
     nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
-    scored = (
-        pairs.select("a", "b", "agree")
-        .join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", "agree", inter.alias("inter"), nu.alias("nu"))
+    scored = pair_sides(pairs, _participant_shingle_sets(d, pairs), "doc_id").select(
+        "a", "b", "agree", inter.alias("inter"), nu.alias("nu")
     )
     return scored.select(
         "a",
@@ -2464,6 +2260,13 @@ EVAL_SAMPLE_MOD = 3
 # a candidate pair counts as a TRUE near-duplicate when its exact
 # shingle Jaccard reaches 0.5 — the precision numerator.
 EVAL_GOOD_PPM = 500_000
+
+
+def _sample_pairs(pairs: DataFrame) -> DataFrame:
+    """The deterministic 1-in-EVAL_SAMPLE_MOD sample of candidate pairs:
+    md5 of 'a:b' — reproducible across runs and engines, no RNG."""
+    key = F.concat_ws(":", F.col("a").cast("string"), F.col("b").cast("string"))
+    return pairs.where(_md5_long(key) % EVAL_SAMPLE_MOD == 0)
 
 
 def _sampled_eval_summary(pairs: DataFrame, scored: DataFrame) -> DataFrame:
@@ -2618,60 +2421,17 @@ def dedup_minhash_accuracy_eval_sampled(spark: SparkSession, sf_dir: str) -> Dat
     the sample licenses.  Sampling BEFORE the set join also means the
     heavy arrays ship for sampled pairs only."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # carry the 16-int signatures THROUGH the band join (keep_sig, like
-    # the exact eval) instead of re-joining sig onto the sampled pairs:
-    # the signature subtree is the evals' dominant linear cost (~12.5 s
-    # at sf1), and a separate sig join re-derives it — measured +3 s at
-    # sf1 before this fix.  Only the heavy shingle SETS are gated on the
-    # sample; sigs are 16 longs per row.
-    # r15: band relation materialized once (see dedup_minhash_lsh)
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    ).cast("long")
-    # r14: agree computed BEFORE the dedup exchange (row-local, copy-
-    # invariant) — the dedup and its checkpoint carry (a, b, agree), not
-    # two signature arrays per banded collision row.
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", agree.alias("agree"))
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
-    )
-    samp = pairs.where(
-        _md5_long(
-            F.concat_ws(":", F.col("a").cast("string"), F.col("b").cast("string"))
-        )
-        % EVAL_SAMPLE_MOD
-        == 0
-    )
-    # shingle arrays only for SAMPLED-pair participants: the whole point
-    # of the twin — the unrestricted build was 99 of ~110 s at sf1
-    sets = d.join(
-        _pair_participants(samp.select("a", "b")), "doc_id", "left_semi"
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(shingles(F.col("text")), lambda s: _md5_long(s))
-        ).alias("ss"),
-    )
-    sa = sets.select(F.col("doc_id").alias("a"), F.col("ss").alias("ss_a"))
-    sb = sets.select(F.col("doc_id").alias("b"), F.col("ss").alias("ss_b"))
+    # the signatures ride THROUGH the band join (keep_sig) instead of
+    # being re-joined onto the sampled pairs: a separate sig join
+    # re-derives the signature subtree, the evals' dominant linear cost
+    # (~12.5 s at sf1; +3 s measured).  Only the heavy shingle SETS are
+    # gated on the sample.
+    pairs = _minhash_pairs(minhash_signatures_df(d), keep_sig=True).localCheckpoint(eager=False)
+    samp = _sample_pairs(pairs)
     inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
     nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
     scored = (
-        samp.select("a", "b", "agree")
-        .join(sa, "a")
-        .join(sb, "b")
+        pair_sides(samp, _participant_shingle_sets(d, samp), "doc_id")
         .select("a", "b", "agree", inter.alias("inter"), nu.alias("nu"))
         .select(
             F.expr("(inter * 1000000) div nu").alias("true_ppm"),
@@ -2682,6 +2442,40 @@ def dedup_minhash_accuracy_eval_sampled(spark: SparkSession, sf_dir: str) -> Dat
         )
     )
     return _sampled_eval_summary(pairs, scored)
+
+
+def _oph_scored(pairs: DataFrame, d: DataFrame) -> DataFrame:
+    """(a, b, n_match, n_both_empty, inter, nu) per candidate pair: the
+    OPH_BINS one-permutation-hashing bin matches and both-empty bins,
+    and the exact shingle-set intersection and union sizes.  The bin
+    arrays and sets are built for pair participants only."""
+    oph = F.transform(
+        F.sequence(F.lit(0), F.lit(OPH_BINS - 1)),
+        lambda k: F.array_min(F.filter(F.col("ss"), lambda s: s % OPH_BINS == k)),
+    )
+    sets = _participant_shingle_sets(d, pairs).select("doc_id", "ss", oph.alias("oph"))
+    n_match = F.size(
+        F.filter(
+            F.zip_with("oph_a", "oph_b", lambda x, y: F.coalesce(x == y, F.lit(False))),
+            lambda m: m,
+        )
+    ).cast("long")
+    n_both_empty = F.size(
+        F.filter(
+            F.zip_with("oph_a", "oph_b", lambda x, y: x.isNull() & y.isNull()),
+            lambda m: m,
+        )
+    ).cast("long")
+    inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
+    nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
+    return pair_sides(pairs, sets, "doc_id").select(
+        "a",
+        "b",
+        n_match.alias("n_match"),
+        n_both_empty.alias("n_both_empty"),
+        inter.alias("inter"),
+        nu.alias("nu"),
+    )
 
 
 def _oph_sampled_oracle() -> str:
@@ -2748,67 +2542,10 @@ def dedup_minhash_oph_eval_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     sampled pairs only; the candidate count itself stays exact (the
     banded join is production dedup's own cost)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # r15: band relation materialized once (see dedup_minhash_lsh)
-    bands = minhash_band_rows(sig).localCheckpoint(eager=False)
-    left = bands.select(F.col("doc_id").alias("a"), "band", "bucket")
-    right = bands.select(F.col("doc_id").alias("b"), "band", "bucket")
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
-    )
-    samp = pairs.where(
-        _md5_long(
-            F.concat_ws(":", F.col("a").cast("string"), F.col("b").cast("string"))
-        )
-        % EVAL_SAMPLE_MOD
-        == 0
-    )
-    ss = F.array_distinct(F.transform(shingles(F.col("text")), lambda s: _md5_long(s)))
-    oph = F.transform(
-        F.sequence(F.lit(0), F.lit(OPH_BINS - 1)),
-        lambda k: F.array_min(F.filter(F.col("ss"), lambda s: s % OPH_BINS == k)),
-    )
-    # per-doc arrays only for SAMPLED-pair participants (see the
-    # accuracy twin — the unrestricted build dominated the sf1 cost)
-    sets = (
-        d.join(_pair_participants(samp), "doc_id", "left_semi")
-        .select("doc_id", ss.alias("ss"))
-        .select("doc_id", "ss", oph.alias("oph"))
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("a"), F.col("ss").alias("ss_a"), F.col("oph").alias("oph_a")
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("b"), F.col("ss").alias("ss_b"), F.col("oph").alias("oph_b")
-    )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("oph_a", "oph_b", lambda x, y: F.coalesce(x == y, F.lit(False))),
-            lambda m: m,
-        )
-    ).cast("long")
-    n_both_empty = F.size(
-        F.filter(
-            F.zip_with("oph_a", "oph_b", lambda x, y: x.isNull() & y.isNull()),
-            lambda m: m,
-        )
-    ).cast("long")
-    inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
-    nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
+    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
+    samp = _sample_pairs(pairs)
     scored = (
-        samp.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            n_match.alias("n_match"),
-            n_both_empty.alias("n_both_empty"),
-            inter.alias("inter"),
-            nu.alias("nu"),
-        )
+        _oph_scored(samp, d)
         .select(
             F.expr("(inter * 1000000) div nu").alias("true_ppm"),
             F.expr(
@@ -3441,14 +3178,9 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt = base.where(
         (F.col("bucket") < LEAK_TRAIN_LT) | (F.col("bucket") >= LEAK_TEST_GE)
     )
-    # r14 kept: the split bucket is a pure hash of doc_id, recomputed
-    # row-locally (the old doc_id join existed only to reuse base's
-    # column).  r15 (VERDICT r14 #4): the r14 repartition exchange-reuse
-    # form did NOT reuse at runtime (executed plan: zero ReusedExchange;
-    # the broadcast join side re-derived the signature pipeline) — the
-    # band relation is localCheckpointed ONCE and both split sides
-    # filter it.  Interleaved A/B medians: 4.61 -> 4.44 s sf0.1 (wash),
-    # 4.34 -> 3.35 s sf1.
+    # the split bucket is a pure hash of doc_id, recomputed row-locally;
+    # the band relation is localCheckpointed once and both split sides
+    # filter it (the band_pairs materialization, functions/lsh.py)
     sig = minhash_signatures_df(tt)
     bands = (
         minhash_band_rows(sig, keep_sig=True)
@@ -3464,9 +3196,7 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e)
     ) / F.lit(float(N_MINHASH))
-    # r14: estimate + threshold BEFORE the pair-dedup exchange (row-
-    # local, copy-invariant) — the dedup shuffles surviving id pairs
-    # only, not two signature arrays per banded collision.
+    # estimate + threshold before the pair dedup, as band_pairs does
     hits = (
         tr.join(te, ["band", "bucket"])
         .where(est >= 0.5)
@@ -3532,36 +3262,9 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to dedup_minhash_lsh (zero-shuffle
     signatures, ONE (band, bucket) exchange, row-local verification),
     plus a map-side-partial fold to <= 11 decile rows."""
-    # r15 (VERDICT r14 #4): the r14 repartition exchange-reuse form did
-    # NOT reuse at runtime — the executed final plan shows the planner
-    # broadcasting one join side, whose build re-derives the whole
-    # signature pipeline (tokenize + shingle md5) a second time instead
-    # of reading the shared exchange.  Restored to ONE localCheckpoint
-    # of the band relation read by both sides (the dedup_minhash_lsh-
-    # era materialization): interleaved A/B medians 3.74 -> 2.57 s
-    # sf0.1, 5.18 -> 4.16 s sf1.  agree stays computed BEFORE the
-    # pair-dedup exchange (r14 win kept) so the dedup shuffles one int
-    # per collision row instead of two 16-long signature arrays.
     sig = minhash_signatures_df(load_table(spark, sf_dir, "documents"))
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    a = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e)
-    )
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", agree.alias("agree"))
-        .dropDuplicates(["a", "b"])
-        .select("agree")
-    )
     return (
-        pairs.groupBy(
+        _minhash_pairs(sig, keep_sig=True).groupBy(
             F.expr(f"CAST((10 * agree) div {N_MINHASH} AS BIGINT)").alias("est_decile")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
@@ -3652,37 +3355,13 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural key — AQE sizes them), then a fold to the <=
     (#sources choose 2) matrix."""
     d = load_table(spark, sf_dir, "documents")
-    # r15 (VERDICT r14 #4): back to ONE localCheckpoint of the band
-    # relation (the r14 repartition form did not reuse its exchange at
-    # runtime — see dedup_threshold_sensitivity); verify+threshold
-    # BEFORE the pair-dedup exchange kept from r14.
-    sig = minhash_signatures_df(d)
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    a = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e)
-    ) / F.lit(float(N_MINHASH))
-    keep = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .where(est >= 0.5)
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    src = d.select("doc_id", "source")
-    lab = (
-        keep.join(src.select(F.col("doc_id").alias("a"), F.col("source").alias("sa")), "a")
-        .join(src.select(F.col("doc_id").alias("b"), F.col("source").alias("sb")), "b")
-    )
+    keep = _minhash_pairs(minhash_signatures_df(d), keep_sig=True, min_agree=N_MINHASH // 2)
+    src = d.select("doc_id", F.col("source").alias("s"))
+    lab = pair_sides(keep.select("a", "b"), src, "doc_id")
     return (
         lab.groupBy(
-            F.least("sa", "sb").alias("source_a"),
-            F.greatest("sa", "sb").alias("source_b"),
+            F.least("s_a", "s_b").alias("source_a"),
+            F.greatest("s_a", "s_b").alias("source_b"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
         .orderBy("source_a", "source_b")
@@ -3766,67 +3445,14 @@ def dedup_minhash_oph_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: signatures and bins are per-row array work built ONLY
     for pair-participant documents (left-semi against the checkpointed
-    candidate relation — _pair_participants, the round-13 fix that cut
+    candidate relation — _participant_shingle_sets, the round-13 fix that cut
     the sf1 cost ~3x for both evals); exact verification is joined only
     for LSH-surviving candidates, O(participants + candidates) like
     dedup_minhash_accuracy_eval."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-
-    # r15: band relation materialized once (see dedup_minhash_lsh)
-    bands = minhash_band_rows(sig).localCheckpoint(eager=False)
-    left = bands.select(F.col("doc_id").alias("a"), "band", "bucket")
-    right = bands.select(F.col("doc_id").alias("b"), "band", "bucket")
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=False)
-    )
-    ss = F.array_distinct(
-        F.transform(shingles(F.col("text")), lambda s: _md5_long(s))
-    )
-    oph = F.transform(
-        F.sequence(F.lit(0), F.lit(OPH_BINS - 1)),
-        lambda k: F.array_min(F.filter(F.col("ss"), lambda s: s % OPH_BINS == k)),
-    )
-    sets = (
-        d.join(_pair_participants(pairs), "doc_id", "left_semi")
-        .select("doc_id", ss.alias("ss"))
-        .select("doc_id", "ss", oph.alias("oph"))
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("a"), F.col("ss").alias("ss_a"), F.col("oph").alias("oph_a")
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("b"), F.col("ss").alias("ss_b"), F.col("oph").alias("oph_b")
-    )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("oph_a", "oph_b", lambda x, y: F.coalesce(x == y, F.lit(False))),
-            lambda m: m,
-        )
-    ).cast("long")
-    n_both_empty = F.size(
-        F.filter(
-            F.zip_with("oph_a", "oph_b", lambda x, y: x.isNull() & y.isNull()),
-            lambda m: m,
-        )
-    ).cast("long")
-    inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
-    nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
+    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
     return (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            n_match.alias("n_match"),
-            n_both_empty.alias("n_both_empty"),
-            inter.alias("inter"),
-            nu.alias("nu"),
-        )
+        _oph_scored(pairs, d)
         .select(
             "a",
             "b",

@@ -157,27 +157,7 @@ def sim_threshold_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-checked: the SQL twin regenerates the identical seeded planes
     and rounded-dot sign bits."""
-    from oracle_parquet_dumper_spark.functions.lsh import banded_buckets
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
-
-    e = load_table(spark, sf_dir, "embeddings")
-    bands = banded_buckets(e, "vec_id", "embedding")
-    cand = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    v = e.select("vec_id", as_double("embedding").alias("v"), norm("embedding").alias("nv"))
-    va = v.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    vb = v.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    return (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .select("a", "b", cosine_prenormed("va", "vb", "na", "nb").alias("cos"))
-        .where(F.col("cos") >= 0.2)
-    )
+    return _threshold_join_lsh(spark, sf_dir)
 
 
 SIM_LSH_CAP = 32  # max rows admitted per (band, bucket)
@@ -234,37 +214,17 @@ def sim_threshold_join_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame
     (band, bucket) — the same key the candidate join shuffles on, so
     the window rides that exchange; everything else is the uncapped
     plan.  Candidates verified with the exact rounded cosine."""
-    from pyspark.sql import Window as W
+    return _threshold_join_lsh(spark, sf_dir, cap=SIM_LSH_CAP)
 
-    from oracle_parquet_dumper_spark.functions.lsh import banded_buckets
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
+
+def _threshold_join_lsh(spark: SparkSession, sf_dir: str, cap: int | None = None) -> DataFrame:
+    """Body of the two sign-LSH threshold joins: 4-bit banded candidates
+    (``cap`` per bucket), exact rounded cosine >= 0.2."""
+    from oracle_parquet_dumper_spark.functions.lsh import band_pairs, banded_buckets, pair_cosine
 
     e = load_table(spark, sf_dir, "embeddings")
-    capped = (
-        banded_buckets(e, "vec_id", "embedding")
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("band", "bucket").orderBy("vec_id")),
-        )
-        .where(F.col("rn") <= SIM_LSH_CAP)
-        .drop("rn")
-    )
-    cand = (
-        capped.alias("l")
-        .join(capped.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    v = e.select("vec_id", as_double("embedding").alias("v"), norm("embedding").alias("nv"))
-    va = v.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    vb = v.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    return (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .select("a", "b", cosine_prenormed("va", "vb", "na", "nb").alias("cos"))
-        .where(F.col("cos") >= 0.2)
-    )
+    cand = band_pairs(banded_buckets(e, "vec_id", "embedding"), "vec_id", ["band", "bucket"], cap)
+    return pair_cosine(cand, e, "vec_id", "embedding").where(F.col("cos") >= 0.2)
 
 
 def _bucket_expr(vec_col):

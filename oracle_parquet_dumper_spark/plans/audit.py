@@ -488,11 +488,12 @@ EXCHANGE_BUDGET: dict[str, tuple[int, str]] = {
 
 
 # A banded candidate join's plan signature: a logical Join whose
-# condition equi-matches BOTH a band and a bucket column (the shared
-# (band, bucket) key every LSH/banding helper in this repo emits —
-# functions/lsh.py banded_buckets, dedup.minhash_band_rows, the pHash
-# 16-bit blocks).  The registry-level band-domain rule (VERDICT r9 #2,
-# plans/registry.py) keys off self-declared lsh-family TAGS; this
+# condition equi-matches BOTH a band and a bucket column — e.g. the
+# self-join functions/lsh.py band_pairs runs over banded_buckets or
+# dedup.minhash_band_rows rows, and the minhash_band_rows train x test
+# and batch x corpus joins.  The pHash (band, val) and Levenshtein
+# (band, v0, v1) keys do not match it.  The registry-level band-domain
+# rule (VERDICT r9 #2, plans/registry.py) keys off self-declared lsh-family TAGS; this
 # plan-level detector closes the escape hatch VERDICT r10 #5 names — a
 # future bucketed operator that banding-joins WITHOUT self-tagging now
 # trips the lint instead of silently skipping domain review.

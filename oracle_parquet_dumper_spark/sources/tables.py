@@ -159,12 +159,14 @@ def split_scan(df: DataFrame, cpu_weight: int = 1) -> DataFrame:
     # a one-row-group file, but a row group lands whole in the split
     # containing its start offset — the other planned tasks are empty.
     # Footer-only reads, and only on the cur < p path (never at scale).
+    # If the footers cannot be read, assume ONE row group: the split then
+    # errs toward splitting, never toward a silently one-task scan.
     try:
         import pyarrow.parquet as pq
 
         row_groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in paths)
     except Exception:
-        row_groups = cur
+        row_groups = 1
     eff = min(cur, row_groups)
     # ceil, matching Spark's own bin-packing convention
     target = min(p, max(2, (nbytes * cpu_weight + min_bytes - 1) // min_bytes))

@@ -261,271 +261,6 @@ def dedup_incremental_r13(spark, sf_dir):
     )
 
 
-def threshold_sensitivity_ckpt(spark, sf_dir):
-    """VERDICT r14 #4 alternative: ONE localCheckpoint of the band
-    relation read by both join sides (the pre-r14 materialization),
-    instead of the repartition exchange-reuse form."""
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        N_MINHASH,
-        minhash_band_rows,
-        minhash_signatures_df,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table
-
-    sig = minhash_signatures_df(load_table(spark, sf_dir, "documents"))
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    a = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e)
-    )
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", agree.alias("agree"))
-        .dropDuplicates(["a", "b"])
-        .select("agree")
-    )
-    return (
-        pairs.groupBy(
-            F.expr(f"CAST((10 * agree) div {N_MINHASH} AS BIGINT)").alias("est_decile")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .orderBy("est_decile")
-    )
-
-
-def minhash_lsh_ckpt(spark, sf_dir):
-    """Checkpoint-once variant of dedup_minhash_lsh."""
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        N_MINHASH,
-        minhash_band_rows,
-        minhash_signatures_df,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-    bands = minhash_band_rows(sig, keep_sig=True).localCheckpoint(eager=False)
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    ) / F.lit(float(N_MINHASH))
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= 0.5)
-        .dropDuplicates(["a", "b"])
-        .orderBy("a", "b")
-    )
-
-
-def minhash_lsh_ckpt_rep(spark, sf_dir):
-    """Checkpoint + repartition variant: ONE (band, bucket) exchange
-    over the cheap checkpoint scan, read twice (the embedding-LSH
-    shape)."""
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        N_MINHASH,
-        minhash_band_rows,
-        minhash_signatures_df,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    sig = minhash_signatures_df(d)
-    bands = (
-        minhash_band_rows(sig, keep_sig=True)
-        .localCheckpoint(eager=False)
-        .repartition("band", "bucket")
-    )
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    ) / F.lit(float(N_MINHASH))
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= 0.5)
-        .dropDuplicates(["a", "b"])
-        .orderBy("a", "b")
-    )
-
-
-def embedding_cosine_norepartition(spark, sf_dir):
-    """Variant: drop the explicit (band, bucket) repartition above
-    banded_buckets_wide's internal checkpoint — let AQE pick the join
-    distribution over the materialized narrow relation (the winner in
-    the minhash three-way A/B)."""
-    from oracle_parquet_dumper_spark.functions.lsh import banded_buckets_wide
-    from oracle_parquet_dumper_spark.functions.vectors import (
-        as_double,
-        cosine_prenormed,
-        norm,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    bands = banded_buckets_wide(e, "vec_id", "embedding")
-    cand = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    v = e.select(
-        "vec_id", as_double("embedding").alias("v"), norm("embedding").alias("nv")
-    )
-    va = v.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    vb = v.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    pairs = cand.join(va, "a").join(vb, "b").select(
-        "a", "b", cosine_prenormed("va", "vb", "na", "nb").alias("cos")
-    )
-    return (
-        pairs.where(F.col("cos") >= 0.3)
-        .groupBy("a")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.max("cos").alias("best_cos"))
-    )
-
-
-def split_leakage_ckpt(spark, sf_dir):
-    """Checkpoint-once variant of pipeline_split_leakage_audit."""
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        LEAK_TEST_GE,
-        LEAK_TRAIN_LT,
-        N_MINHASH,
-        minhash_band_rows,
-        minhash_signatures_df,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-
-    def split_bucket(col):
-        return (
-            F.conv(
-                F.substring(F.md5(col.cast("string").cast("binary")), 1, 8), 16, 10
-            ).cast("long")
-            % 100
-        )
-
-    base = d.select("doc_id", "text", split_bucket(F.col("doc_id")).alias("bucket"))
-    tt = base.where(
-        (F.col("bucket") < LEAK_TRAIN_LT) | (F.col("bucket") >= LEAK_TEST_GE)
-    )
-    sig = minhash_signatures_df(tt)
-    bands = (
-        minhash_band_rows(sig, keep_sig=True)
-        .withColumn("split_bkt", split_bucket(F.col("doc_id")))
-        .localCheckpoint(eager=False)
-    )
-    tr = bands.where(F.col("split_bkt") < LEAK_TRAIN_LT).select(
-        F.col("doc_id").alias("train_id"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    te = bands.where(F.col("split_bkt") >= LEAK_TEST_GE).select(
-        F.col("doc_id").alias("test_id"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e)
-    ) / F.lit(float(N_MINHASH))
-    hits = (
-        tr.join(te, ["band", "bucket"])
-        .where(est >= 0.5)
-        .select("train_id", "test_id")
-        .dropDuplicates(["train_id", "test_id"])
-    )
-    n_test = base.where(F.col("bucket") >= LEAK_TEST_GE).agg(
-        F.count(F.lit(1)).alias("nt")
-    )
-    return (
-        hits.agg(
-            F.count_distinct("test_id").cast("long").alias("n_leaked_test_docs"),
-            F.count(F.lit(1)).cast("long").alias("n_cross_pairs"),
-        )
-        .crossJoin(F.broadcast(n_test))
-        .select(
-            F.col("nt").cast("long").alias("n_test_docs"),
-            "n_leaked_test_docs",
-            "n_cross_pairs",
-            F.expr(
-                "CAST((1000000 * n_leaked_test_docs) div nt AS BIGINT)"
-            ).alias("leak_ppm"),
-        )
-    )
-
-
-def pipeline_curation_bandckpt(spark, sf_dir):
-    """pipeline_curation with the pair join's band relation
-    localCheckpointed once instead of repartitioned (same family fix as
-    dedup_minhash_lsh; here bands derive from the parquet-materialized
-    exact relation, so the stakes are the 16 affine folds only)."""
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        connected_components,
-        minhash_band_rows,
-        minhash_shingle_hashes_from_toks,
-        minhash_sig_from_shm,
-        truncate_lineage,
-        words_col_d,
-    )
-    from oracle_parquet_dumper_spark.sources.tables import load_table, split_scan
-
-    d = split_scan(load_table(spark, sf_dir, "documents"), cpu_weight=32)
-    base = d.select("doc_id", "lang", "text", words_col_d(d).alias("toks"))
-    quality = base.where((F.length("text") > 0) & (F.size("toks") >= 3))
-    wk = F.md5(F.col("text").cast("binary"))
-    keepers_exact = (
-        quality.groupBy(wk.alias("h")).agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    )
-    exact = truncate_lineage(
-        quality.join(keepers_exact, "doc_id", "left_semi").select(
-            "doc_id",
-            "lang",
-            F.size("toks").cast("long").alias("ntok"),
-            minhash_shingle_hashes_from_toks().alias("shm"),
-        ),
-        None,
-    )
-    sig = minhash_sig_from_shm(exact)
-    bands = minhash_band_rows(sig).localCheckpoint(eager=False)  # <- the change
-    pairs = (
-        bands.alias("l")
-        .join(bands.alias("r"), ["band", "bucket"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    comps = connected_components(pairs, checkpoint_dir=None)
-    drop = comps.groupBy("component").agg(F.min("node").alias("keeper"))
-    non_keepers = comps.join(drop, "component").where(
-        F.col("node") != F.col("keeper")
-    ).select(F.col("node").alias("doc_id"))
-    survivors = exact.join(non_keepers, "doc_id", "left_anti")
-    return (
-        survivors.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("ntok").alias("token_budget"),
-        )
-        .orderBy("lang")
-    )
-
-
 def stickiness_ckpt(spark, sf_dir):
     """events_stickiness_dau_mau with the user-day relation
     localCheckpointed once (it feeds obs, support AND dau — three
@@ -667,12 +402,6 @@ def main():
             "r13": dedup_incremental_r13,
             "r14": plans.REGISTRY["dedup_incremental"].fn,
         }
-    elif case == "minhash":
-        variants = {
-            "reuse": plans.REGISTRY["dedup_minhash_lsh"].fn,
-            "ckpt": minhash_lsh_ckpt,
-            "ckpt_rep": minhash_lsh_ckpt_rep,
-        }
     elif case == "pagerank":
         variants = {
             "cur": plans.REGISTRY["graph_pagerank"].fn,
@@ -682,26 +411,6 @@ def main():
         variants = {
             "cur": plans.REGISTRY["events_stickiness_dau_mau"].fn,
             "ckpt": stickiness_ckpt,
-        }
-    elif case == "curation":
-        variants = {
-            "rep": plans.REGISTRY["pipeline_curation"].fn,
-            "bandckpt": pipeline_curation_bandckpt,
-        }
-    elif case == "embed":
-        variants = {
-            "rep": plans.REGISTRY["dedup_embedding_cosine_lsh"].fn,
-            "norep": embedding_cosine_norepartition,
-        }
-    elif case == "threshold":
-        variants = {
-            "reuse": plans.REGISTRY["dedup_threshold_sensitivity"].fn,
-            "ckpt": threshold_sensitivity_ckpt,
-        }
-    elif case == "leakage":
-        variants = {
-            "reuse": plans.REGISTRY["pipeline_split_leakage_audit"].fn,
-            "ckpt": split_leakage_ckpt,
         }
     elif case == "inc_noanti":
         variants = {

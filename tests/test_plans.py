@@ -5,6 +5,10 @@ turns a top-k into a global sort."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from oracle_parquet_dumper_spark.plans import REGISTRY
 
 
@@ -151,9 +155,7 @@ def test_minhash_signatures_shuffle_free_and_staged(spark, sf_dir):
     # every Exchange (if any) must be the round-robin scan split — an
     # allowlist, so a future SinglePartition/range/hash exchange fails
     # instead of slipping past a blacklist (ADVICE r14)
-    import re as _re
-
-    for mode in _re.findall(r"Exchange (\w+)", physical):
+    for mode in re.findall(r"Exchange (\w+)", physical):
         assert mode.lower().startswith("roundrobin"), f"unexpected Exchange {mode}"
     assert "Window" not in physical
     assert "Generate" not in physical
@@ -164,47 +166,101 @@ def test_minhash_signatures_shuffle_free_and_staged(spark, sf_dir):
     assert optimized.count("md5(") == 1
 
 
-def test_minhash_lsh_band_relation_materialized_once(spark, sf_dir):
-    """dedup_minhash_lsh's self-join must read ONE materialized band
-    relation from both sides (signatures computed once).  r15: the
-    materialization is a lazy localCheckpoint — the r14 repartition
-    exchange-reuse form did not reuse at runtime (the planner broadcast
-    one side and the build re-derived tokenize+md5).  The final plan
-    must therefore contain NO parquet scan (both sides read the
-    checkpointed RDD; the one tokenize+md5 pass lives in the checkpoint
-    build) and no Window."""
-    df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
-    df.collect()  # need the AQE final plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    assert "Window" not in plan
-    assert "FileScan parquet" not in plan
-    assert plan.count("Scan ExistingRDD") >= 2  # both sides read the checkpoint
-
-
-def test_embedding_lsh_band_relation_materialized_once(spark, sf_dir):
-    """dedup_embedding_cosine_lsh's band self-join must read ONE
-    materialized band relation from both sides — the 32 sign-bit dot
-    products (8-bit capacity-scaled banding) are per-row fold
-    expressions, so without a materialization the join would evaluate
-    all of them twice.  r15: the materialization is banded_buckets'
-    internal localCheckpoint; the r14 repartition above it was dropped
-    (measured 1.51x at sf1 — the standing exchange of the exploded band
-    relation cost more than AQE's own join planning).  Both join sides
-    must read the checkpointed RDD; the only parquet scans left are the
-    vector re-attach."""
-    df = REGISTRY["dedup_embedding_cosine_lsh"].fn(spark, sf_dir)
+def _final_plan(df) -> str:
+    """The AQE FINAL executed plan of ``df`` (runs it; the toString
+    appends the initial plan, which would double-count scans)."""
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
-    # inspect the FINAL plan only (the toString appends the initial
-    # plan, which double-counts scans)
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Scan ExistingRDD") >= 2
-    # the sign-bit dot folds live only in the checkpoint build: no
-    # FileScan of embeddings feeds the band join itself (the remaining
-    # scans are the cosine verification's vector re-attach)
-    assert final.count("FileScan parquet") <= 2
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _assert_band_relation_materialized_once(spark, sf_dir, monkeypatch, name, file_scans):
+    """Every banded-LSH self-join goes through functions.lsh.band_pairs
+    over a band relation materialized ONCE (a lazy localCheckpoint —
+    see band_pairs' docstring): both join sides read the checkpointed
+    RDD and none re-derives signatures or hyperplane dots from parquet.
+    The query's own final plan holds exactly ``file_scans`` parquet
+    scans, so a scan re-added under the band join fails too."""
+    import oracle_parquet_dumper_spark.functions.lsh as lsh
+    import oracle_parquet_dumper_spark.operators.dedup as dedup
+
+    joins = []
+    real = lsh.band_pairs
+
+    def spy(bands, id_col, key_cols, cap=None, min_agree=None):
+        joins.append((real(bands, id_col, key_cols, cap, min_agree), cap))
+        return joins[-1][0]
+
+    monkeypatch.setattr(lsh, "band_pairs", spy)
+    monkeypatch.setattr(dedup, "band_pairs", spy)
+    final = _final_plan(REGISTRY[name].fn(spark, sf_dir))
+    assert final.count("FileScan parquet") == file_scans
+    ((pairs, cap),) = joins
+    band_join = _final_plan(pairs)
+    assert "FileScan parquet" not in band_join
+    # every checkpoint read is the band relation itself, not an upstream
+    # checkpoint the signatures would be re-derived from
+    reads = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", band_join)
+    assert all(re.search(r"\bband#", r) for r in reads), reads
+    if cap is None:
+        assert "Window" not in band_join
+        assert len(reads) == 2  # one per join side
+    else:
+        # the per-bucket cap window is read once; the other join side
+        # reuses that window's (band, bucket) exchange
+        assert len(reads) == 1
+        assert "ReusedExchange" in band_join
+
+
+# query -> parquet scans left in its final plan, each named.  Queries that
+# checkpoint their pair relation (the evals, containment) hold the band
+# join inside that checkpoint's build, not in the final plan.
+MINHASH_BAND_JOIN_SCANS = {
+    "dedup_minhash_lsh": 0,
+    "dedup_threshold_sensitivity": 0,
+    # the corpus is scanned only inside the eager exact-dedup checkpoint
+    "pipeline_curation": 0,
+    # one documents scan: the participant shingle sets' a side; the b
+    # side reads it through a ReusedExchange
+    "dedup_containment_lsh": 1,
+    "dedup_minhash_accuracy_eval": 1,
+    "dedup_minhash_accuracy_eval_sampled": 1,
+    "dedup_minhash_oph_eval": 1,
+    "dedup_minhash_oph_eval_sampled": 1,
+    # one documents scan: the source re-attach's a side (b reuses it)
+    "dedup_cross_source_matrix": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(MINHASH_BAND_JOIN_SCANS))
+def test_minhash_lsh_band_relation_materialized_once(spark, sf_dir, monkeypatch, name):
+    """MinHash band self-joins: the band relation (signatures carried
+    for the agree-verified queries) is checkpointed once, so the
+    tokenize + shingle-md5 signature pipeline runs once per query."""
+    _assert_band_relation_materialized_once(
+        spark, sf_dir, monkeypatch, name, MINHASH_BAND_JOIN_SCANS[name]
+    )
+
+
+# one embeddings scan each: the cosine re-attach's a side (vectors and
+# norms); the b side reads it through a ReusedExchange.  The sign-bit
+# dot folds run only inside banded_buckets' checkpoint build.
+EMBEDDING_BAND_JOIN_SCANS = {
+    "dedup_embedding_cosine_lsh": 1,
+    "dedup_embedding_cosine_narrow_demo": 1,
+    "sim_threshold_join_lsh": 1,
+    "sim_threshold_join_lsh_capped": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(EMBEDDING_BAND_JOIN_SCANS))
+def test_embedding_lsh_band_relation_materialized_once(spark, sf_dir, monkeypatch, name):
+    """Embedding sign-LSH band self-joins: without the materialization
+    the join would evaluate every hyperplane dot fold once per side."""
+    _assert_band_relation_materialized_once(
+        spark, sf_dir, monkeypatch, name, EMBEDDING_BAND_JOIN_SCANS[name]
+    )
 
 
 def test_global_shuffle_no_full_data_single_partition_window(spark, sf_dir):

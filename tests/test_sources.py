@@ -104,3 +104,43 @@ def test_xml_roundtrip(spark, smoke_sf_dir, tmp_path):
     write_xml(nation, p, row_tag="nation", root_tag="nations")
     back = read_xml(spark, p, row_tag="nation", schema=nation.schema)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
+
+
+def test_split_scan_footer_read_failure_assumes_one_row_group(spark, tmp_path, monkeypatch):
+    """split_scan counts parquet row groups from the file footers.  When
+    that read fails it must assume ONE row group, so a scan planned as
+    several splits over a one-row-group file (all rows in one task) is
+    still split rather than silently left at one task."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oracle_parquet_dumper_spark.sources.tables import split_scan
+
+    path = str(tmp_path / "one_row_group.parquet")
+    vals = np.random.default_rng(0).integers(0, 2**62, 12_000)
+    pq.write_table(pa.table({"x": vals}), path, row_group_size=len(vals))
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    nbytes = os.path.getsize(path)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(nbytes // 2 + 1))  # two planned splits
+    try:
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() == 2
+        # bytes floor at half the file: the sized target is 2 partitions,
+        # which only a one-row-group (effective 1-task) scan falls short of
+        monkeypatch.setenv("SPARK_GRAFT_SPLIT_SCAN_MIN_BYTES", str(nbytes // 2 + 1))
+
+        def unreadable(*args, **kwargs):
+            raise OSError("footer unreadable")
+
+        monkeypatch.setattr(pq, "ParquetFile", unreadable)
+        out = split_scan(df)
+        assert out is not df
+        assert out.rdd.getNumPartitions() == 2
+    finally:
+        spark.conf.set(key, old)
