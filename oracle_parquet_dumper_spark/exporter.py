@@ -19,8 +19,8 @@ Parity map (SURVEY.md §2 Part A):
 - A16    schema x table driver loop with wall-clock metrics
 - A17    zero-eligible-column skip (warn)
 - empty-table semantics (SURVEY.md §1.2): reference writes NO file for an
-  empty table (lazy writer, main.py:165-170) — reproduced with an
-  ``isEmpty`` guard.
+  empty table (lazy writer, main.py:165-170) — reproduced by the
+  row-width sample of A12: a sample with no rows means no write.
 
 Unlike the reference (strictly serial: one connection, sequential tables,
 sequential 10k-row batches), every table export here is a distributed
@@ -39,6 +39,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,8 +95,10 @@ def validate_export(
     output must (a) exist, (b) read back with the exported row count
     (>= for incremental appends), (c) carry at least one column.  This
     catches the failure exports silently tolerate — a sink that wrote
-    fewer rows than it claimed — by paying one cheap count() per table
-    against the parquet footers.  The per-table DQ operators
+    fewer rows than it claimed.  Row and column counts come from the
+    footers of the written files (hive partition directories add their
+    columns), read with pyarrow on the driver, so the audit runs no Spark
+    job; ``spark`` is unused.  The per-table DQ operators
     (operators/validation.py) are the deeper, schema-aware layer."""
     out: list[TableValidation] = []
     for r in results:
@@ -111,10 +114,14 @@ def validate_export(
             issues.append("output directory missing")
         else:
             try:
-                df = spark.read.parquet(target)
-                if not df.columns:
+                # Same files Spark would read: names starting with "_" or
+                # "." (markers, checksums) are skipped.
+                dataset = pads.dataset(target, format="parquet", partitioning="hive")
+                if not dataset.files:
+                    raise FileNotFoundError(f"no parquet data files under {target}")
+                if not dataset.schema.names:
                     issues.append("no columns in output")
-                n = df.count()
+                n = dataset.count_rows()
                 if incremental:
                     if n < r.rows:
                         issues.append(f"read-back rows {n} < exported rows {r.rows}")
@@ -124,6 +131,52 @@ def validate_export(
                 issues.append(f"unreadable output: {type(exc).__name__}")
         out.append(TableValidation(r.schema, r.table, not issues, issues))
     return out
+
+
+def _rows_per_file(df: DataFrame, max_file_size: int) -> int | None:
+    """maxRecordsPerFile ~= max_file_size / avg_in_memory_row_bytes,
+    measured on a bounded sample via Arrow — the same 'uncompressed
+    buffer size' the reference rolls on (main.py:174-181).  Returns None
+    when the sample has no rows: the relation is empty, and the sample
+    is its only emptiness probe."""
+    sample = df.limit(SIZE_SAMPLE_ROWS)
+    try:
+        tbl = sample.toArrow()
+        n, nbytes = tbl.num_rows, tbl.nbytes
+    except Exception:
+        pdf = sample.toPandas()
+        n, nbytes = len(pdf), int(pdf.memory_usage(deep=True).sum())
+    if n == 0:
+        return None
+    if nbytes == 0:
+        return 1_000_000
+    return max(1, int(max_file_size / (nbytes / n)))
+
+
+def _reference_names(parts_dir: str, target: str, table: str) -> dict[str, str]:
+    """Map each Spark part-file in ``parts_dir`` to the reference name
+    ``<table>_<n>.parquet`` (main.py:166,245-253), numbering on after the
+    files already finalized in ``target`` so appends extend the sequence
+    instead of colliding."""
+    existing = re.compile(re.escape(table) + r"_(\d+)\.parquet$")
+    taken = [int(m.group(1)) for f in os.listdir(target) if (m := existing.match(f))]
+    start = max(taken) + 1 if taken else 0
+    parts = sorted(
+        f for f in os.listdir(parts_dir) if f.startswith("part-") and f.endswith(".parquet")
+    )
+    return {p: f"{table}_{start + i}.parquet" for i, p in enumerate(parts)}
+
+
+def _finalize_layout(target: str, table: str) -> list[str]:
+    """Rename Spark's part-files in ``target`` to the reference layout and
+    drop job markers.  Pure metadata renames — O(#files), not O(bytes)."""
+    names = _reference_names(target, target, table)
+    for part, new in names.items():
+        os.rename(os.path.join(target, part), os.path.join(target, new))
+    for entry in os.listdir(target):
+        if entry == "_SUCCESS" or entry.startswith(".") or entry.endswith(".crc"):
+            os.remove(os.path.join(target, entry))
+    return list(names.values())
 
 
 @dataclass
@@ -212,22 +265,6 @@ class SparkParquetExporter:
             df = df.toDF(*[c.lower() for c in cols])
         return df
 
-    # -- byte-targeted rolling (A12) ----------------------------------------
-    def _rows_per_file(self, df: DataFrame) -> int:
-        """maxRecordsPerFile ~= target_bytes / avg_in_memory_row_bytes,
-        measured on a bounded sample via Arrow — the same 'uncompressed
-        buffer size' the reference rolls on (main.py:174-181)."""
-        sample = df.limit(SIZE_SAMPLE_ROWS)
-        try:
-            tbl = sample.toArrow()
-            n, nbytes = tbl.num_rows, tbl.nbytes
-        except Exception:
-            pdf = sample.toPandas()
-            n, nbytes = len(pdf), int(pdf.memory_usage(deep=True).sum())
-        if n == 0 or nbytes == 0:
-            return 1_000_000
-        return max(1, int(self.parquet_max_file_size / (nbytes / n)))
-
     # -- single table (reference export_table, main.py:129-187) -------------
     def export_table(self, schema: str, table: str) -> ExportResult:
         t0 = time.perf_counter()
@@ -242,7 +279,13 @@ class SparkParquetExporter:
             return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "no_eligible_columns")
         if self.row_limit != DEFAULT_ROW_LIMIT:
             projected = projected.limit(self.row_limit)
-        if projected.isEmpty():
+        # One bounded sample both sizes the rolling threshold (A12) and
+        # probes for rows, so a table exports in two jobs: sample, write.
+        # Size on the PRE-cluster relation: the sample is a cheap limit()
+        # there, but on a range-repartitioned plan it would execute the
+        # clustering shuffle a second time.
+        rows_per_file = _rows_per_file(projected, self.parquet_max_file_size)
+        if rows_per_file is None:
             # Reference semantics: empty table -> no file at all (the
             # ParquetWriter is created lazily on the first batch,
             # main.py:165-170, so zero batches -> zero files).
@@ -250,15 +293,9 @@ class SparkParquetExporter:
             return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "empty")
 
         part_cols = self.partition_by.get(table, [])
-        # Size the rolling threshold on the PRE-cluster relation: the
-        # sample is a cheap limit() there, but on a range-repartitioned
-        # plan it would execute the clustering shuffle a second time.
-        rows_per_file = self._rows_per_file(projected)
         projected = self._cluster(projected, table)
         # Row count comes from an Observation on the write job itself —
-        # one pass over the data.  (Re-reading the written output to
-        # count, as round 1 did, is a full extra scan per table: at
-        # 100 TB that doubles export I/O.)
+        # one pass over the data, no post-write re-scan.
         obs = Observation()
         observed = projected.observe(obs, F.count(F.lit(1)).alias("rows"))
         writer = (
@@ -270,36 +307,11 @@ class SparkParquetExporter:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(target)
         rows = int(obs.get["rows"])
-        files = [] if part_cols else self._finalize_layout(target, out_table)
+        naming = self.reference_file_naming and not part_cols
+        files = _finalize_layout(target, out_table) if naming else []
         elapsed = time.perf_counter() - t0
         logger.info("Exported %s.%s in %.4f s", schema, table, elapsed)
         return ExportResult(schema, table, rows, files, elapsed, target=target)
-
-    def _finalize_layout(self, target: str, table: str) -> list[str]:
-        """Rename Spark's part-files to the reference layout
-        ``<table>_<n>.parquet`` (main.py:166,245-253) and drop job markers.
-        Pure metadata renames — O(#files), not O(bytes).  Numbering
-        continues after any already-finalized files, so incremental
-        appends extend the sequence instead of colliding."""
-        if not self.reference_file_naming:
-            return []
-        existing = re.compile(re.escape(table) + r"_(\d+)\.parquet$")
-        taken = [
-            int(m.group(1)) for f in os.listdir(target) if (m := existing.match(f))
-        ]
-        start = max(taken) + 1 if taken else 0
-        parts = sorted(
-            f for f in os.listdir(target) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        out = []
-        for i, fname in enumerate(parts):
-            new = f"{table}_{start + i}.parquet"
-            os.rename(os.path.join(target, fname), os.path.join(target, new))
-            out.append(new)
-        for entry in os.listdir(target):
-            if entry == "_SUCCESS" or entry.startswith(".") or entry.endswith(".crc"):
-                os.remove(os.path.join(target, entry))
-        return out
 
     # -- incremental export (watermark high-water-mark pattern) -------------
     # No reference counterpart (the reference always re-exports fully);
@@ -367,7 +379,8 @@ class SparkParquetExporter:
             return ExportResult(
                 schema, table, 0, [], time.perf_counter() - t0, "no_eligible_columns"
             )
-        if projected.isEmpty():
+        rows_per_file = _rows_per_file(projected, self.parquet_max_file_size)
+        if rows_per_file is None:
             logger.info("Table %s.%s: no rows past watermark %r", schema, table, last)
             return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "up_to_date")
 
@@ -395,7 +408,7 @@ class SparkParquetExporter:
         (
             observed.write.mode("overwrite")
             .option("compression", self.compression_method)
-            .option("maxRecordsPerFile", str(self._rows_per_file(projected)))
+            .option("maxRecordsPerFile", str(rows_per_file))
             .parquet(staging)
         )
         rows = int(obs.get["rows"])
@@ -415,16 +428,7 @@ class SparkParquetExporter:
             )
         new_wm = str(raw_wm)
         os.makedirs(target, exist_ok=True)
-        existing = re.compile(re.escape(out_table) + r"_(\d+)\.parquet$")
-        taken = [
-            int(m.group(1)) for f in os.listdir(target) if (m := existing.match(f))
-        ]
-        start = max(taken) + 1 if taken else 0
-        parts = sorted(
-            f for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        moves = {p: f"{out_table}_{start + i}.parquet" for i, p in enumerate(parts)}
+        moves = _reference_names(staging, target, out_table)
         manifest = {"key": key, "target": target, "staging": staging,
                     "watermark": new_wm, "moves": moves}
         mtmp = self._pending_path() + ".tmp"
@@ -650,10 +654,8 @@ def compact_table(
             break
         probe = parent
     df = spark.read.parquet(path)
-    sample = df.limit(SIZE_SAMPLE_ROWS)
-    tbl = sample.toArrow()
-    per_row = (tbl.nbytes / tbl.num_rows) if tbl.num_rows else 1000.0
-    rows_per_file = max(1, int(target_file_size / per_row))
+    # An empty input sizes as 1000-byte rows and still writes one file.
+    rows_per_file = _rows_per_file(df, target_file_size) or max(1, int(target_file_size / 1000))
     n_files = max(1, (df.count() + rows_per_file - 1) // rows_per_file)
 
     tmp = path.rstrip("/") + ".compact.tmp"
@@ -693,15 +695,7 @@ def compact_table(
         os.rename(old, path)  # roll back: restore the live dir
         raise
     shutil.rmtree(old)
-    parts = sorted(
-        f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    for i, fname in enumerate(parts):
-        os.rename(os.path.join(path, fname), os.path.join(path, f"{table}_{i}.parquet"))
-    for entry in os.listdir(path):
-        if entry == "_SUCCESS" or entry.startswith(".") or entry.endswith(".crc"):
-            os.remove(os.path.join(path, entry))
-    return len(parts)
+    return len(_finalize_layout(path, table))
 
 
 def exporter(

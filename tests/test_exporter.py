@@ -921,3 +921,144 @@ def test_cli_rejects_hilbert_with_wrong_width(tmp_path):
         ]
     )
     assert rc == 2  # rejected at parse time, before any Spark work
+
+
+class _PreReadCatalog(ParquetDirectoryCatalog):
+    """Reads every table up front, so the schema-inference job of
+    ``spark.read.parquet`` is not counted among the exporter's jobs (a
+    JDBC source resolves its schema without one)."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        read = super().read_table
+        self._dfs = {t: read("main", t) for t in self.list_tables("main")}
+
+    def read_table(self, schema, table):
+        return self._dfs[table]
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result and
+    the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_export_job_count_and_jobless_validation(spark, source_dir, tmp_path):
+    """A table exports in two Spark jobs: the row-width sample, which is
+    also the empty-table probe, and the write.  An empty table costs the
+    sample alone, a table with no eligible columns none, and validation
+    reads the written footers without any Spark job."""
+    from oracle_parquet_dumper_spark.exporter import validate_export
+
+    exp = SparkParquetExporter(
+        spark=spark,
+        catalog=_PreReadCatalog(spark, source_dir),
+        output_path=str(tmp_path / "out"),
+    )
+    expected = {"BINONLY": 0, "EMPTYTAB": 1, "NATION": 2, "REGION": 2}
+    results = []
+    for table, n_jobs in expected.items():
+        group = f"export-{table}-{tmp_path.name}"
+        r, got = _jobs_in_group(spark, group, lambda: exp.export_table("main", table))
+        assert got == n_jobs, (table, got)
+        results.append(r)
+    assert [r.skipped for r in results] == ["no_eligible_columns", "empty", None, None]
+    report, got = _jobs_in_group(
+        spark, f"validate-{tmp_path.name}",
+        lambda: validate_export(spark, exp.output_path, results),
+    )
+    assert got == 0
+    assert [v.table for v in report] == ["NATION", "REGION"]
+    assert all(v.ok for v in report), [v.issues for v in report]
+
+
+def _rolled_nation(spark, source_dir, out):
+    """Export NATION rolled into several small files; return the result
+    and its sorted data files."""
+    (r,) = exporter(
+        spark, source_dir, str(out), table_name_include_pattern="NATION",
+        parquet_max_file_size=100,
+    )
+    files = sorted(f for f in os.listdir(r.target) if f.endswith(".parquet"))
+    assert len(files) > 2
+    return r, files
+
+
+def test_validate_export_multi_file_deleted(spark, source_dir, tmp_path):
+    """Deleting one of several rolled files leaves a readable dataset with
+    fewer rows than exported: a row-count mismatch, not a read error."""
+    from oracle_parquet_dumper_spark.exporter import validate_export
+
+    r, files = _rolled_nation(spark, source_dir, tmp_path / "out")
+    assert validate_export(spark, str(tmp_path / "out"), [r])[0].ok
+    lost = pq.read_metadata(os.path.join(r.target, files[1])).num_rows
+    os.remove(os.path.join(r.target, files[1]))
+    (v,) = validate_export(spark, str(tmp_path / "out"), [r])
+    assert v.issues == [f"read-back rows {25 - lost} != exported rows 25"]
+
+
+def test_validate_export_junk_part_file(spark, source_dir, tmp_path):
+    """A part file overwritten with junk bytes is unreadable output, also
+    when it is not the file the dataset schema is taken from."""
+    from oracle_parquet_dumper_spark.exporter import validate_export
+
+    r, files = _rolled_nation(spark, source_dir, tmp_path / "out")
+    with open(os.path.join(r.target, files[-1]), "wb") as fh:
+        fh.write(b"not a parquet file")
+    (v,) = validate_export(spark, str(tmp_path / "out"), [r])
+    assert not v.ok
+    assert len(v.issues) == 1 and v.issues[0].startswith("unreadable output: ")
+
+
+def test_validate_export_partitioned(spark, smoke_sf_dir, tmp_path):
+    """A hive-partitioned export validates clean: rows are summed over
+    every partition directory."""
+    from oracle_parquet_dumper_spark.exporter import validate_export
+
+    out = str(tmp_path / "out")
+    results = SparkParquetExporter(
+        spark=spark,
+        catalog=ParquetDirectoryCatalog(spark, smoke_sf_dir),
+        output_path=out,
+        table_name_include_pattern="^orders$",
+        partition_by={"orders": ["o_orderstatus"]},
+    ).export_tables()
+    (r,) = results
+    assert r.rows == pq.read_metadata(os.path.join(smoke_sf_dir, "orders.parquet")).num_rows
+    (v,) = validate_export(spark, out, results)
+    assert v.ok, v.issues
+
+
+def test_validate_export_incremental_at_least_rule(spark, tmp_path):
+    """After an incremental append the directory holds more rows than the
+    delta exported: fine under ``incremental=True`` (>=), a mismatch
+    otherwise; fewer rows than exported fails either way."""
+    import dataclasses
+
+    from oracle_parquet_dumper_spark.exporter import validate_export
+
+    src = _mini_src(tmp_path, n=3)
+    out = tmp_path / "out"
+    exp = _inc_exporter(spark, src, out)
+    exp.export_tables_incremental({"EVT": "id"})
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2, 3, 4, 5], pa.int64()),
+                  "v": pa.array([f"r{i}" for i in range(1, 6)])}),
+        src / "EVT.parquet",
+    )
+    (r,) = exp.export_tables_incremental({"EVT": "id"})
+    assert r.rows == 2
+    (v,) = validate_export(spark, str(out), [r], incremental=True)
+    assert v.ok, v.issues
+    (v,) = validate_export(spark, str(out), [r])
+    assert v.issues == ["read-back rows 5 != exported rows 2"]
+    (v,) = validate_export(
+        spark, str(out), [dataclasses.replace(r, rows=6)], incremental=True
+    )
+    assert v.issues == ["read-back rows 5 < exported rows 6"]
