@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog, eligible_fields
+from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust
 
 logger = logging.getLogger(__name__)
 
@@ -594,7 +595,7 @@ def check_export_drift(
     """Drift between the catalog's CURRENT schema for a table and what an
     earlier export wrote (read from parquet footers — metadata only)."""
     current = catalog.read_table(schema, table).schema
-    previous = spark.read.parquet(exported_path).schema
+    previous = read_parquet_robust(spark, exported_path).schema
     return schema_drift(previous, current)
 
 
@@ -653,6 +654,8 @@ def compact_table(
         if parent == probe:
             break
         probe = parent
+    # A raw read, not read_parquet_robust: compaction must write back
+    # exactly the types it read (no nanosecond-timestamp conversion).
     df = spark.read.parquet(path)
     # An empty input sizes as 1000-byte rows and still writes one file.
     rows_per_file = _rows_per_file(df, target_file_size) or max(1, int(target_file_size / 1000))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded, cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
-from oracle_parquet_dumper_spark.sources.tables import load_table, split_scan
+from oracle_parquet_dumper_spark.sources.tables import load_table, read_parquet_robust, split_scan
 
 N_MINHASH = 16
 OPH_BINS = 16  # one-permutation-hashing bin count (r12 eval + r13 sampled twin)
@@ -2030,8 +2030,8 @@ def dedup_incremental_stored(
         from oracle_parquet_dumper_spark.sources.layouts import revive_state
 
         revive_state(state_dir)  # warm managed hit: clear any stale tombstone
-    corp_dig = spark.read.parquet(state_dir + "/corpus_digests")
-    corp_bands = spark.read.parquet(state_dir + "/corpus_bands")
+    corp_dig = read_parquet_robust(spark, state_dir + "/corpus_digests")
+    corp_bands = read_parquet_robust(spark, state_dir + "/corpus_bands")
 
     d = load_table(spark, sf_dir, "documents")
     newb = d.where(F.col("doc_id") % INC_MOD == 0).select("doc_id", "text")

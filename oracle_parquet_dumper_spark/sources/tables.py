@@ -6,13 +6,23 @@ Loading goes through ``spark.read.parquet`` so Catalyst's vectorized
 reader, predicate pushdown, and column pruning all apply — at 100 TB the
 same call reads a partitioned table directory instead of one file, with
 no code change.
+
+Parquet schema inference is a one-task Spark job on every
+``spark.read.parquet`` call, plus a pyarrow footer read here for the
+nanosecond-timestamp check.  A table is read once per query, so
+``read_parquet_robust`` infers each file version's schema once per
+process and then reads with that schema given: a repeat read runs no
+Spark job.  The memo key is the stat of every file under the path plus
+the session settings that change what inference returns.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 TABLES = [
     "region",
@@ -54,23 +64,92 @@ def _ns_timestamp_columns(path: str) -> list[str]:
     ]
 
 
+# The session settings that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# memo key -> (inferred StructType, nanosecond-timestamp columns).  One
+# small entry per file version read in the process.  Two threads that
+# miss together both infer and store the same value, so it needs no lock.
+_SCHEMA_MEMO: dict[tuple, tuple[StructType, tuple[str, ...]]] = {}
+
+
+def _file_versions(path: str) -> tuple | None:
+    """``(path, size, st_mtime_ns, st_ino)`` of every file under ``path``
+    (the file itself, or every file of a directory table), or None when
+    ``path`` cannot be stat'ed locally."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns, st.st_ino),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            f = os.path.join(root, n)
+            try:
+                st = os.stat(f)
+            except OSError:  # removed mid-walk: the next read sees it gone
+                return None
+            files.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(files)
+
+
+def _infer_schema(spark: SparkSession, path: str) -> tuple[StructType, tuple[str, ...]]:
+    """Spark's inferred schema of ``path`` (one Spark job) and the
+    nanosecond-timestamp columns it holds as raw longs."""
+    ns_cols = _ns_timestamp_columns(path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(path).schema
+    ns_longs = tuple(
+        f.name for f in schema.fields if f.name in ns_cols and isinstance(f.dataType, LongType)
+    )
+    return schema, ns_longs
+
+
 def read_parquet_robust(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet that tolerates nanosecond timestamps: reads
     them as raw nanos (``nanosAsLong``) and truncates to microseconds —
     exactly what DuckDB's ``CAST(ts AS TIMESTAMP)`` does — yielding
-    TIMESTAMP_NTZ like every other timestamp column."""
+    TIMESTAMP_NTZ like every other timestamp column.
+
+    Spark's inferred schema and the nanosecond columns are memoized per
+    file version, and every read passes the schema to
+    ``spark.read.schema``, so only the first read of a file version pays
+    the inference job and the footer read.  The key is the path, the
+    ``(path, size, st_mtime_ns, st_ino)`` of every file under it, and the
+    ``_INFERENCE_CONFS`` values: adding, removing or rewriting a file, or
+    changing one of those settings, misses.  (An in-place rewrite to the
+    same size within one file-system timestamp tick would not; writers
+    that replace files by rename get a new inode.)  A path ``os.stat``
+    cannot see is inferred on every read, so a missing table still raises
+    Spark's own PATH_NOT_FOUND."""
     from pyspark.sql import functions as F
 
-    ns_cols = _ns_timestamp_columns(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    versions = _file_versions(path)
+    key = None
+    if versions is not None:
+        key = (path, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS), versions)
+    hit = _SCHEMA_MEMO.get(key)  # None is never stored as a key
+    if hit is None:
+        hit = _infer_schema(spark, path)
+        if key is not None:
+            _SCHEMA_MEMO[key] = hit
+    elif hit[1]:  # a session started since the memo was filled lacks it
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema, ns_cols = hit
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
-        if dict(df.dtypes).get(c) == "bigint":
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
-            )
+        df = df.withColumn(
+            c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
+        )
     return df
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,6 +28,24 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns its result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -923,56 +923,32 @@ def test_cli_rejects_hilbert_with_wrong_width(tmp_path):
     assert rc == 2  # rejected at parse time, before any Spark work
 
 
-class _PreReadCatalog(ParquetDirectoryCatalog):
-    """Reads every table up front, so the schema-inference job of
-    ``spark.read.parquet`` is not counted among the exporter's jobs (a
-    JDBC source resolves its schema without one)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        read = super().read_table
-        self._dfs = {t: read("main", t) for t in self.list_tables("main")}
-
-    def read_table(self, schema, table):
-        return self._dfs[table]
-
-
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under Spark job group ``group``; return its result and
-    the number of Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_export_job_count_and_jobless_validation(spark, source_dir, tmp_path):
+def test_export_job_count_and_jobless_validation(spark, source_dir, tmp_path, count_jobs):
     """A table exports in two Spark jobs: the row-width sample, which is
     also the empty-table probe, and the write.  An empty table costs the
     sample alone, a table with no eligible columns none, and validation
     reads the written footers without any Spark job."""
     from oracle_parquet_dumper_spark.exporter import validate_export
 
+    # Read every table once first: the parquet schema is then memoized, so
+    # the schema-inference job (which a JDBC source does not run) is not
+    # counted among the exporter's jobs.
+    catalog = ParquetDirectoryCatalog(spark, source_dir)
+    for t in catalog.list_tables("main"):
+        catalog.read_table("main", t)
     exp = SparkParquetExporter(
         spark=spark,
-        catalog=_PreReadCatalog(spark, source_dir),
+        catalog=catalog,
         output_path=str(tmp_path / "out"),
     )
     expected = {"BINONLY": 0, "EMPTYTAB": 1, "NATION": 2, "REGION": 2}
     results = []
     for table, n_jobs in expected.items():
-        group = f"export-{table}-{tmp_path.name}"
-        r, got = _jobs_in_group(spark, group, lambda: exp.export_table("main", table))
+        r, got = count_jobs(lambda: exp.export_table("main", table))
         assert got == n_jobs, (table, got)
         results.append(r)
     assert [r.skipped for r in results] == ["no_eligible_columns", "empty", None, None]
-    report, got = _jobs_in_group(
-        spark, f"validate-{tmp_path.name}",
-        lambda: validate_export(spark, exp.output_path, results),
-    )
+    report, got = count_jobs(lambda: validate_export(spark, exp.output_path, results))
     assert got == 0
     assert [v.table for v in report] == ["NATION", "REGION"]
     assert all(v.ok for v in report), [v.issues for v in report]
