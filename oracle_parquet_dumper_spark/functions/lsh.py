@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, dot_d, norm
+from oracle_parquet_dumper_spark.session import materialize
 
 DIM = 64
 N_SIGN_BANDS = 4
@@ -167,7 +168,7 @@ def banded_buckets(
         .select(F.col(id_col), F.explode(band_structs(vec_col, planes, bits)).alias("bb"))
         .select(id_col, "bb.band", "bb.bucket")
     )
-    return bands.localCheckpoint(eager=False)
+    return materialize(bands)
 
 
 def banded_buckets_wide(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -195,7 +196,7 @@ def band_pairs(
     ExistingRDD`` in the executed plan) instead of each re-deriving the
     per-row signatures — tokenize + shingle md5 for MinHash, the
     hyperplane dot folds for sign-LSH.  ``banded_buckets`` and
-    ``dedup._minhash_pairs`` localCheckpoint (lazily) the relation they
+    ``dedup._minhash_pairs`` materialize (lazily) the relation they
     pass; the Levenshtein name bands, a small aggregate, are joined as
     they are.  The checkpoint sits on the narrow band relation
     with no repartition above it, a shape chosen by interleaved A/B on a
@@ -217,13 +218,14 @@ def band_pairs(
       AQE plan the join (broadcast or sort-merge) over the
       materialized relation.
 
-    Fault tolerance: ``localCheckpoint`` blocks live unreplicated in
-    executor storage and the lineage behind them is cut, so losing an
-    executor mid-query fails the job instead of recomputing its
-    partitions, and at 100 TB the exploded band relation is written per
-    query.  The production form is a reliable checkpoint
-    (``truncate_lineage`` with a checkpoint dir) or a stored band index
-    (``write_dedup_corpus_state``).
+    Fault tolerance: the band relation goes through
+    ``session.materialize``.  With ``spark.checkpoint.dir`` set it is a
+    reliable checkpoint that survives a lost executor; without it, its
+    ``localCheckpoint`` blocks live unreplicated in executor storage
+    behind a cut lineage, so losing an executor mid-query fails the job.
+    Either way the exploded band relation is written per query at
+    100 TB; a stored band index (``write_dedup_corpus_state``) is the
+    form that amortizes it.
 
     Signatures.  If ``bands`` carries a ``sig`` array column
     (``minhash_band_rows(..., keep_sig=True)``), each pair also gets

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded, cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table, read_parquet_robust, split_scan
 
 N_MINHASH = 16
@@ -71,7 +72,7 @@ def _participant_shingle_sets(d: DataFrame, pairs: DataFrame) -> DataFrame:
     600k documents and 13 s on everything else, while only ~5k documents
     actually appear in a candidate pair — Catalyst cannot push a join's
     key membership below a per-row array constructor, so the left-semi
-    must come BEFORE the array build.  Callers localCheckpoint the pair
+    must come BEFORE the array build.  Callers materialize the pair
     relation first so the banded join isn't re-derived for the
     participant list.  No forced broadcast: the participant list grows
     with the candidate set, so AQE broadcasts it while small and falls
@@ -90,12 +91,12 @@ def _minhash_pairs(
     sig: DataFrame, keep_sig: bool = False, min_agree: int | None = None
 ) -> DataFrame:
     """Distinct MinHash-LSH candidate pairs (a, b) of a (doc_id, sig)
-    frame: the band relation is localCheckpointed once and self-joined
+    frame: the band relation is materialized once and self-joined
     by ``band_pairs`` (functions/lsh.py, which documents the shape).
     ``keep_sig`` carries the signatures through the checkpoint so each
     pair also gets ``agree`` (and ``min_agree`` can threshold it) before
     the pair dedup."""
-    bands = minhash_band_rows(sig, keep_sig).localCheckpoint(eager=False)
+    bands = materialize(minhash_band_rows(sig, keep_sig))
     return band_pairs(bands, "doc_id", ["band", "bucket"], min_agree=min_agree)
 
 
@@ -862,25 +863,9 @@ def dedup_fuzzy_levenshtein_lsh_capped(spark: SparkSession, sf_dir: str) -> Data
     return _levenshtein_lsh(spark, sf_dir, cap=LEV_LSH_CAP)
 
 
-def truncate_lineage(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Lineage truncation for iterative algorithms, parametrized by
-    durability.  ``localCheckpoint`` (default) stores blocks on executor
-    storage — fast, but a lost executor loses its blocks and the
-    truncated lineage cannot recompute them.  Passing ``checkpoint_dir``
-    switches to reliable ``checkpoint`` on that (at scale: HDFS/S3)
-    directory, which survives executor loss — the right setting for
-    long CC/label-propagation runs on a real cluster."""
-    if checkpoint_dir is not None:
-        sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
     strategy: str = "min_label",
 ) -> DataFrame:
     """Connected components over undirected (a, b) pair rows.  Returns
@@ -904,7 +889,7 @@ def connected_components(
     probe per round.
     """
     if strategy == "star":
-        return _star_contraction_components(edges, max_iterations, checkpoint_dir)
+        return _star_contraction_components(edges, max_iterations)
     if strategy != "min_label":
         raise ValueError(f"strategy must be 'min_label' or 'star', got {strategy!r}")
     both = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
@@ -913,7 +898,7 @@ def connected_components(
     # Truncate lineage: without this every iteration's convergence count
     # re-executes the (possibly expensive) edge-producing pipeline, and
     # the label lineage doubles per round.
-    both = truncate_lineage(both, checkpoint_dir)
+    both = materialize(both, eager=True)
     labels = (
         both.groupBy("x").agg(F.least(F.min("y"), F.first("x")).alias("component"))
         .select(F.col("x").alias("node"), "component")
@@ -935,7 +920,7 @@ def connected_components(
                 F.min(F.when(F.col("own"), F.col("component"))).alias("prev"),
             )
         )
-        prop = truncate_lineage(prop, checkpoint_dir)
+        prop = materialize(prop, eager=True)
         changed = prop.where(F.col("component") < F.col("prev")).limit(1).count()
         labels = prop.select("node", "component")
         if changed == 0:
@@ -993,9 +978,7 @@ def _small_star(half: DataFrame) -> DataFrame:
     return _canon(rew)
 
 
-def _star_contraction_components(
-    edges: DataFrame, max_iterations: int, checkpoint_dir: str | None
-) -> DataFrame:
+def _star_contraction_components(edges: DataFrame, max_iterations: int) -> DataFrame:
     """Kiveris alternating-star CC (see connected_components docstring).
 
     State is the canonical half-edge set; each round applies large-star
@@ -1004,13 +987,12 @@ def _star_contraction_components(
     distinct by construction).  At the fixpoint every component is a
     star rooted at its minimum node, so the final labels fall out of one
     neighborhood-min aggregate."""
-    half = truncate_lineage(
-        _canon(edges.select(F.col("a").alias("u"), F.col("b").alias("v"))),
-        checkpoint_dir,
+    half = materialize(
+        _canon(edges.select(F.col("a").alias("u"), F.col("b").alias("v"))), eager=True
     )
     converged = False
     for _ in range(max_iterations):
-        nxt = truncate_lineage(_small_star(_large_star(half)), checkpoint_dir)
+        nxt = materialize(_small_star(_large_star(half)), eager=True)
         changed = (
             nxt.exceptAll(half).limit(1).count()
             or half.exceptAll(nxt).limit(1).count()
@@ -1060,9 +1042,7 @@ _CLOSURE_SQL = """
     bench=True,
     band_bits=124,
 )
-def dedup_clusters(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: MinHash-LSH candidate pairs -> connected
     components -> one row per cluster with its canonical (min doc_id)
     keeper and size.  The full near-dedup pipeline a training-data run
@@ -1070,10 +1050,9 @@ def dedup_clusters(
     Oracle-checked: the distributed min-label iteration converges to the
     same fixpoint as the oracle's recursive closure (integer labels, so
     equality is exact); planted-cluster semantics additionally
-    unit-tested.  ``checkpoint_dir`` switches lineage truncation to
-    reliable checkpoints (executor-loss tolerance on a real cluster)."""
+    unit-tested."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("a", "b")
-    comps = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    comps = connected_components(pairs)
     return (
         comps.groupBy("component")
         .agg(F.count(F.lit(1)).alias("cluster_size"), F.min("node").alias("keeper_id"))
@@ -1117,9 +1096,7 @@ _WORDS_SQL = "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)"
     bench=True,
     band_bits=124,
 )
-def pipeline_curation(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data curation pass over ``documents``:
 
     1. quality gate   — drop empty/short docs (cheap column filter first);
@@ -1131,9 +1108,7 @@ def pipeline_curation(
     Stage order is the cost order: each stage shrinks the data the next
     (more expensive) stage sees.  Output is the per-language summary a
     curation run reports.  Iterative CC -> rows-only check; the stagewise
-    row-count monotonicity is unit-tested.  ``checkpoint_dir`` switches
-    every lineage truncation (the shared exact-dedup set and the CC
-    rounds) to reliable checkpoints — both modes are pytest-exercised."""
+    row-count monotonicity is unit-tested."""
     d = load_table(spark, sf_dir, "documents")
 
     # 1. quality gate (tokenize once; toks feeds the gate, the token
@@ -1158,20 +1133,20 @@ def pipeline_curation(
     # the token count — instead of raw text, so each consumer reads what
     # it needs (signatures: 16 affine folds over shm; accounting: ntok)
     # and nothing downstream ever re-tokenizes or re-hashes the corpus.
-    exact = truncate_lineage(
+    exact = materialize(
         quality.join(keepers_exact, "doc_id", "left_semi").select(
             "doc_id",
             "lang",
             F.size("toks").cast("long").alias("ntok"),
             minhash_shingle_hashes_from_toks().alias("shm"),
         ),
-        checkpoint_dir,
+        eager=True,
     )
 
     # 3. near dedup: LSH pairs over the exact-deduped set -> CC -> drop
     # non-keepers.
     pairs = _minhash_pairs(minhash_sig_from_shm(exact))
-    comps = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    comps = connected_components(pairs)
     drop = comps.groupBy("component").agg(F.min("node").alias("keeper"))
     # Join by NAME, not comps.component == drop.component: ``drop``
     # derives from ``comps``, so the attribute form makes both sides
@@ -1356,9 +1331,7 @@ def _label_prop_oracle(rounds: int = 3) -> str:
     tags=("dedup", "graph", "iterative", "lsh"),
     band_bits=124,
 )
-def dedup_label_propagation(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def dedup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-supervised label propagation over the near-dup graph: 10% of
     documents (doc_id % 10 == 0) are treated as labeled seeds (their
     ``lang``); labels spread outward along MinHash-LSH candidate edges by
@@ -1373,23 +1346,28 @@ def dedup_label_propagation(
     unrolls into chained CTEs (votes are integer counts, ties broken
     deterministically, so the unroll is bit-exact); seed-reachability is
     additionally unit-tested."""
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("a", "b")
+    edges = materialize(
+        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y"))),
+        eager=True,
+    )
+    return _label_prop_histogram(spark, sf_dir, edges)
+
+
+def _label_prop_histogram(spark: SparkSession, sf_dir: str, edges: DataFrame) -> DataFrame:
+    """The label-propagation rounds over the symmetric (x, y) ``edges``
+    and the final (assigned, status, n) histogram; each round's labels
+    are materialized eagerly."""
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("a", "b")
-    edges = truncate_lineage(
-        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y"))),
-        checkpoint_dir,
-    )
-
-    labels = truncate_lineage(
+    labels = materialize(
         d.where(F.col("doc_id") % 10 == 0).select(
             "doc_id", F.col("lang").alias("assigned"), F.lit("seed").alias("status")
         ),
-        checkpoint_dir,
+        eager=True,
     )
-
     for _ in range(3):
         votes = (
             edges.join(labels, edges.y == labels.doc_id)
@@ -1403,7 +1381,7 @@ def dedup_label_propagation(
             .select(F.col("x").alias("doc_id"), "assigned", F.lit("propagated").alias("status"))
         )
         new = winners.join(labels.select("doc_id"), "doc_id", "left_anti")
-        labels = truncate_lineage(labels.unionByName(new), checkpoint_dir)
+        labels = materialize(labels.unionByName(new), eager=True)
 
     full = d.join(labels, "doc_id", "left").select(
         F.coalesce(F.col("assigned"), F.lit("__unlabeled__")).alias("assigned"),
@@ -1460,7 +1438,7 @@ def label_prop_edge_state(spark: SparkSession, sf_dir: str) -> str:
 def dedup_label_propagation_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_label_propagation's exact semantics (same oracle, same
     integer votes and tie-breaks) with the round-invariant edge relation
-    persisted as a bucketBy(y) table instead of a localCheckpoint —
+    persisted as a bucketBy(y) table instead of a checkpoint —
     VERDICT r8 "Next" #4, the second instance of the bucketed-state
     pattern.  The r8 checkpoint sweep's physics apply verbatim: a
     checkpointed edge list re-shuffles per round once the labels side
@@ -1471,41 +1449,8 @@ def dedup_label_propagation_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
     groupBy(x) vote shuffle remains — that aggregation IS the
     algorithm.  Results equality-asserted against the checkpointed
     variant in tests/test_round9_ops.py."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    edges = spark.table(label_prop_edge_state(spark, sf_dir))
-
-    labels = truncate_lineage(
-        d.where(F.col("doc_id") % 10 == 0).select(
-            "doc_id", F.col("lang").alias("assigned"), F.lit("seed").alias("status")
-        )
-    )
-    for _ in range(3):
-        votes = (
-            edges.join(labels, edges.y == labels.doc_id)
-            .groupBy(F.col("x"), F.col("assigned"))
-            .agg(F.count(F.lit(1)).alias("n_votes"))
-        )
-        win = W.partitionBy("x").orderBy(F.col("n_votes").desc(), F.col("assigned"))
-        winners = (
-            votes.withColumn("rn", F.row_number().over(win))
-            .where(F.col("rn") == 1)
-            .select(
-                F.col("x").alias("doc_id"), "assigned", F.lit("propagated").alias("status")
-            )
-        )
-        new = winners.join(labels.select("doc_id"), "doc_id", "left_anti")
-        labels = truncate_lineage(labels.unionByName(new))
-
-    full = d.join(labels, "doc_id", "left").select(
-        F.coalesce(F.col("assigned"), F.lit("__unlabeled__")).alias("assigned"),
-        F.coalesce(F.col("status"), F.lit("unlabeled")).alias("status"),
-    )
-    return (
-        full.groupBy("assigned", "status")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("assigned", "status")
+    return _label_prop_histogram(
+        spark, sf_dir, spark.table(label_prop_edge_state(spark, sf_dir))
     )
 
 
@@ -1639,7 +1584,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's shingle sample, same verification stage.  All counts are md5
     shingle-id set sizes — integer, bit-exact across engines."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
+    pairs = materialize(_minhash_pairs(minhash_signatures_df(d)))
     sets = _participant_shingle_sets(d, pairs)
     inter = F.size(F.array_intersect("ss_a", "ss_b"))
     cont_a = inter / F.size("ss_a")
@@ -2228,7 +2173,7 @@ def dedup_minhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH-surviving candidate pairs — exact verification cost is
     O(participants + candidates), never O(corpus array builds)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    pairs = _minhash_pairs(minhash_signatures_df(d), keep_sig=True).localCheckpoint(eager=False)
+    pairs = materialize(_minhash_pairs(minhash_signatures_df(d), keep_sig=True))
     inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
     nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
     scored = pair_sides(pairs, _participant_shingle_sets(d, pairs), "doc_id").select(
@@ -2426,7 +2371,7 @@ def dedup_minhash_accuracy_eval_sampled(spark: SparkSession, sf_dir: str) -> Dat
     # re-derives the signature subtree, the evals' dominant linear cost
     # (~12.5 s at sf1; +3 s measured).  Only the heavy shingle SETS are
     # gated on the sample.
-    pairs = _minhash_pairs(minhash_signatures_df(d), keep_sig=True).localCheckpoint(eager=False)
+    pairs = materialize(_minhash_pairs(minhash_signatures_df(d), keep_sig=True))
     samp = _sample_pairs(pairs)
     inter = F.size(F.array_intersect("ss_a", "ss_b")).cast("long")
     nu = (F.size("ss_a") + F.size("ss_b")).cast("long") - inter
@@ -2542,7 +2487,7 @@ def dedup_minhash_oph_eval_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     sampled pairs only; the candidate count itself stays exact (the
     banded join is production dedup's own cost)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
+    pairs = materialize(_minhash_pairs(minhash_signatures_df(d)))
     samp = _sample_pairs(pairs)
     scored = (
         _oph_scored(samp, d)
@@ -2678,14 +2623,15 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the narrow (doc_id, pre, idx) rows once instead of re-deriving the
     # whole two-pass index machinery (and the normalization regex pass
     # behind it) per side.
-    keyed = truncate_lineage(
+    keyed = materialize(
         with_global_index(
             docs.withColumn("num8", enc),
             value_col="num8",
             tiebreak_cols=["norm", "doc_id"],
             bucketer="quantile",
             idx_col="idx",
-        ).select("doc_id", F.substring("norm", 1, SNM_PREFIX).alias("pre"), "idx")
+        ).select("doc_id", F.substring("norm", 1, SNM_PREFIX).alias("pre"), "idx"),
+        eager=True,
     )
     a = keyed.select(
         F.col("doc_id").alias("doc_a"),
@@ -2843,11 +2789,11 @@ def dedup_sorted_neighborhood_multipass(spark: SparkSession, sf_dir: str) -> Dat
     # r14: each pass's indexed relation feeds both banded-join sides —
     # checkpoint the narrow keyed rows once per pass (the single-pass
     # query's rewrite, applied to both sort keys)
-    p1 = normed(pass_pairs(truncate_lineage(indexed(docs, "norm"))))
+    p1 = normed(pass_pairs(materialize(indexed(docs, "norm"), eager=True)))
     p2 = normed(
         pass_pairs(
-            truncate_lineage(
-                indexed(docs.withColumn("rnorm", F.reverse("norm")), "rnorm")
+            materialize(
+                indexed(docs.withColumn("rnorm", F.reverse("norm")), "rnorm"), eager=True
             )
         )
     )
@@ -3031,15 +2977,14 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
     d38 = "decimal(38,0)"
-    m = (
+    m = materialize(
         li.groupBy("flag")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").cast(d38).alias("s"),
             F.sum(F.col("cents").cast(d38) * F.col("cents")).cast(d38).alias("q"),
         )
-        .localCheckpoint(eager=False)  # 3-row relation, multiple consumers
-    )
+    )  # 3-row relation, multiple consumers
     dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     wts = m.select(
         "flag",
@@ -3179,13 +3124,12 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("bucket") < LEAK_TRAIN_LT) | (F.col("bucket") >= LEAK_TEST_GE)
     )
     # the split bucket is a pure hash of doc_id, recomputed row-locally;
-    # the band relation is localCheckpointed once and both split sides
+    # the band relation is materialized once and both split sides
     # filter it (the band_pairs materialization, functions/lsh.py)
     sig = minhash_signatures_df(tt)
-    bands = (
+    bands = materialize(
         minhash_band_rows(sig, keep_sig=True)
         .withColumn("split_bkt", split_bucket(F.col("doc_id")))
-        .localCheckpoint(eager=False)
     )
     tr = bands.where(F.col("split_bkt") < LEAK_TRAIN_LT).select(
         F.col("doc_id").alias("train_id"), F.col("sig").alias("sig_a"), "band", "bucket"
@@ -3450,7 +3394,7 @@ def dedup_minhash_oph_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     for LSH-surviving candidates, O(participants + candidates) like
     dedup_minhash_accuracy_eval."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    pairs = _minhash_pairs(minhash_signatures_df(d)).localCheckpoint(eager=False)
+    pairs = materialize(_minhash_pairs(minhash_signatures_df(d)))
     return (
         _oph_scored(pairs, d)
         .select(

@@ -20,6 +20,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 RETENTION_MAX_OFFSET = 7
@@ -453,20 +454,19 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_global_index,
     )
 
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
     # per_user feeds the anchor aggregate AND (via the melt) both arms
     # of the global-index pass — four consumers in one plan; Catalyst
     # re-derives a shared subtree PER REFERENCE, so materialize the
     # per-user reduction (distinct users, not events) once.
-    per_user = truncate_lineage(
+    per_user = materialize(
         ev.groupBy("user_id").agg(
             F.max(F.to_date("ts")).alias("last_day"),
             F.count(F.lit(1)).alias("freq"),
             F.sum(F.floor(F.col("value") * 100).cast("long"))
             .cast("long")
             .alias("monetary_cents"),
-        )
+        ),
+        eager=True,
     )
     anchor = per_user.agg(F.max("last_day").alias("max_day"))
     scored = per_user.crossJoin(F.broadcast(anchor)).select(
@@ -1448,7 +1448,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     — whose size is bounded by the value domain, not the row count —
     after one map-side-partial groupBy(cents) and a broadcast 1-row
     total.  The argmax is a struct-max aggregate, not a second sort.
-    The aggregated distribution is lazily localCheckpointed: the plan
+    The aggregated distribution is lazily materialized: the plan
     references it four times (total, weights, bucket counts, bucket
     join) and the checkpoint makes that ONE events scan + one shuffle
     instead of four re-derivations (the lsh.py band convention)."""
@@ -1459,10 +1459,12 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin(KS_A, KS_B)
     )
     cents = F.floor(F.col("value") * 100).cast("long")
-    v = ev.select(cents.alias("c"), "event_type").groupBy("c").agg(
-        F.count(F.when(F.col("event_type") == KS_A, 1)).cast("long").alias("d1"),
-        F.count(F.when(F.col("event_type") == KS_B, 1)).cast("long").alias("d2"),
-    ).localCheckpoint(eager=False)
+    v = materialize(
+        ev.select(cents.alias("c"), "event_type").groupBy("c").agg(
+            F.count(F.when(F.col("event_type") == KS_A, 1)).cast("long").alias("d1"),
+            F.count(F.when(F.col("event_type") == KS_B, 1)).cast("long").alias("d2"),
+        )
+    )
     t = v.agg(
         F.sum("d1").cast("long").alias("n1"), F.sum("d2").cast("long").alias("n2")
     )
@@ -1567,7 +1569,7 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin(KS_A, KS_B)
     )
     cents = F.floor(F.col("value") * 100).cast("long")
-    v = (
+    v = materialize(
         ev.select(cents.alias("c"), "event_type")
         .groupBy("c")
         .agg(
@@ -1575,7 +1577,6 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("event_type") == KS_B, 1)).cast("long").alias("d2"),
         )
         .withColumn("d", (F.col("d1") + F.col("d2")).cast("long"))
-        .localCheckpoint(eager=False)
     )
     idx = with_global_index(v, "c", ["c"], weight_col="d", cum_col="cumd")
     s = idx.agg(
@@ -1644,11 +1645,10 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = ev.select(
         F.col("event_type").alias("src"), F.lead("event_type").over(w).alias("dst")
     )
-    pairs = (
+    pairs = materialize(
         seq.where(F.col("dst").isNotNull())
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .localCheckpoint(eager=False)
     )
     tot = pairs.groupBy("src").agg(F.sum("n_pairs").cast("long").alias("n_src"))
     return pairs.join(F.broadcast(tot), "src").select(
@@ -1802,7 +1802,7 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     the low-cardinality-partition trap (5 types = 5 tasks forever), so
     the Spark plan pairs consecutive rows through the distributed
     global-index primitive GROUPED by type (the cusum/gapfill recipe):
-    index once, localCheckpoint, then self-join (type, i) to
+    index once, materialize, then self-join (type, i) to
     (type, i+1) — a shuffle on the high-cardinality (type, index) key —
     and one map-side-partial aggregate.  Bound: n*Sxy stays inside
     DECIMAL(38,0) to ~1e9 rows/type at c <= 56k cents; past that the
@@ -1818,9 +1818,9 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.floor(F.col("value") * 100).cast("long").alias("c"),
     )
-    idx = with_global_index(
-        base, "ts_us", ["event_id"], group_cols=["event_type"]
-    ).localCheckpoint(eager=False)
+    idx = materialize(
+        with_global_index(base, "ts_us", ["event_id"], group_cols=["event_type"])
+    )
     prev = idx.select("event_type", F.col("_gidx").alias("i"), F.col("c").alias("x"))
     nxt = idx.select(
         "event_type", (F.col("_gidx") - 1).alias("i"), F.col("c").alias("y")
@@ -2135,7 +2135,7 @@ def events_markov_top1_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             " + MAX(unix_micros(CAST(ts AS TIMESTAMP)))) div 2 AS BIGINT)"
         ).alias("split_us")
     )
-    counts = (
+    counts = materialize(
         pairs.crossJoin(F.broadcast(b))
         .groupBy(
             "prev_type",
@@ -2145,7 +2145,6 @@ def events_markov_top1_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         # tiny (#states^2 x 2) but referenced by both the train and the
         # eval branch — checkpoint so events is scanned ONCE
-        .localCheckpoint(eager=False)
     )
     train = counts.where("is_train").select("prev_type", "event_type", "cnt")
     mw = W.partitionBy("prev_type").orderBy(F.col("cnt").desc(), "event_type")
@@ -2429,7 +2428,7 @@ def events_psi_category_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grand total); truncate lineage once so the event scan + aggregate
     # run once instead of being re-derived per consumer (the
     # agg_mannwhitney_u convention for tiny fan-out relations).
-    g = (
+    g = materialize(
         e.crossJoin(F.broadcast(b))
         .groupBy("event_type")
         .agg(
@@ -2440,7 +2439,6 @@ def events_psi_category_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(2 * F.col("ts_us") >= F.col("mn") + F.col("mx"), 1).otherwise(0)
             ).alias("n_post"),
         )
-        .localCheckpoint(eager=False)
     )
     t = g.agg(
         F.sum("n_pre").alias("tot_pre"),
@@ -2521,7 +2519,7 @@ def events_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")
     )
     b = e.agg(F.min("ts_us").alias("mn"), F.max("ts_us").alias("mx"))
-    g = (
+    g = materialize(
         e.crossJoin(F.broadcast(b))
         .groupBy("event_type")
         .agg(
@@ -2532,7 +2530,6 @@ def events_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(2 * F.col("ts_us") >= F.col("mn") + F.col("mx"), 1).otherwise(0)
             ).alias("n_post"),
         )
-        .localCheckpoint(eager=False)
     )
     t = g.agg(
         F.sum("n_pre").alias("tot_pre"),
@@ -2783,7 +2780,7 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = e.agg(F.min("ts_us").alias("mn"), F.max("ts_us").alias("mx"))
     pre = 2 * F.col("ts_us") < F.col("mn") + F.col("mx")
-    u = (
+    u = materialize(
         e.crossJoin(F.broadcast(b))
         .groupBy("user_id")
         .agg(
@@ -2803,7 +2800,6 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumers (bounds, bucket counts, bucketed rows); truncate
         # lineage once so the event scan + aggregate run once (the
         # events_rfm_segments convention for global-index inputs)
-        .localCheckpoint(eager=False)
     )
     r = with_global_index(u, "neg_score", ["user_id"])
     g = (
@@ -3408,14 +3404,13 @@ def events_bloom_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cutoff)
     )
     # hist/today are tiny (O(distinct users)) but feed 2-3 branches
-    # each; lazy localCheckpoints truncate the lineage so the events
+    # each; lazy materializations truncate the lineage so the events
     # scan + cutoff fold run ONCE, not once per branch (the
     # banded_buckets convention, functions/lsh.py)
-    hist = (
+    hist = materialize(
         with_day.where(F.col("day") < F.col("d"))
         .select("user_id")
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def pos(lo: int):
@@ -3441,11 +3436,10 @@ def events_bloom_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.expr("bit_or(b)").alias("word"))
     )
-    today = (
+    today = materialize(
         with_day.where(F.col("day") == F.col("d"))
         .select("user_id")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     probe = today.unionAll(today.select((F.col("user_id") + 10000000).alias("user_id")))
     ppos = probe.select("user_id", pos(1).alias("p1"), pos(6).alias("p2"))
@@ -3700,21 +3694,23 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "d")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    det = s.select(
-        "event_type",
-        "d",
-        "n",
-        (
-            1000 * F.col("n")
-            - F.expr(
-                f"CAST(1000 * sum(n) OVER (PARTITION BY event_type ORDER BY d "
-                f"ROWS BETWEEN {DECOMP_HALF_WIN} PRECEDING AND {DECOMP_HALF_WIN} FOLLOWING) AS BIGINT) div "
-                f"count(*) OVER (PARTITION BY event_type ORDER BY d "
-                f"ROWS BETWEEN {DECOMP_HALF_WIN} PRECEDING AND {DECOMP_HALF_WIN} FOLLOWING)"
-            )
-        ).alias("detr_milli"),
-        F.dayofweek("d").alias("dow"),
-    ).localCheckpoint(eager=False)  # grid-sized; feeds seas AND res
+    det = materialize(
+        s.select(
+            "event_type",
+            "d",
+            "n",
+            (
+                1000 * F.col("n")
+                - F.expr(
+                    f"CAST(1000 * sum(n) OVER (PARTITION BY event_type ORDER BY d "
+                    f"ROWS BETWEEN {DECOMP_HALF_WIN} PRECEDING AND {DECOMP_HALF_WIN} FOLLOWING) AS BIGINT) div "
+                    f"count(*) OVER (PARTITION BY event_type ORDER BY d "
+                    f"ROWS BETWEEN {DECOMP_HALF_WIN} PRECEDING AND {DECOMP_HALF_WIN} FOLLOWING)"
+                )
+            ).alias("detr_milli"),
+            F.dayofweek("d").alias("dow"),
+        )
+    )  # grid-sized; feeds seas AND res
     from oracle_parquet_dumper_spark.operators.global_index import weighted_quantiles
 
     seas = weighted_quantiles(
@@ -3726,12 +3722,14 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=["event_type", "dow"],
         cont={"seasonal_milli": 0.5},
     )
-    res = det.join(F.broadcast(seas), ["event_type", "dow"]).select(
-        "event_type",
-        "d",
-        "n",
-        (F.col("detr_milli") - F.col("seasonal_milli")).alias("residual_milli"),
-    ).localCheckpoint(eager=False)  # grid-sized; feeds mad AND the alert join
+    res = materialize(
+        det.join(F.broadcast(seas), ["event_type", "dow"]).select(
+            "event_type",
+            "d",
+            "n",
+            (F.col("detr_milli") - F.col("seasonal_milli")).alias("residual_milli"),
+        )
+    )  # grid-sized; feeds mad AND the alert join
     mad = weighted_quantiles(
         res.select("event_type", F.abs("residual_milli").alias("a"))
         .groupBy("event_type", "a")
@@ -4406,11 +4404,10 @@ def events_engagement_concentration(spark: SparkSession, sf_dir: str) -> DataFra
     # fire across their differently-pruned subtrees, so the rollup is
     # lazily checkpointed once — the audit's exchange budget caught the
     # 5x events re-scan of the uncheckpointed form.
-    uc = (
+    uc = materialize(
         ev.groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .withColumn("_negc", -F.col("c"))
-        .localCheckpoint(eager=False)
     )
     ranked = with_global_index(
         uc,

@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.session import materialize
+
 DEFAULT_BUCKETS = 64
 
 
@@ -119,9 +121,7 @@ def with_global_index(
     if bucketer == "quantile":
         pcts = [i / float(n_buckets) for i in range(1, n_buckets)]
         qagg = F.percentile_approx(v, F.array(*[F.lit(p) for p in pcts])).alias("_qb")
-        bounds = (
-            df.groupBy(*gb).agg(qagg) if gb else df.agg(qagg)
-        ).localCheckpoint(eager=False)
+        bounds = materialize(df.groupBy(*gb).agg(qagg) if gb else df.agg(qagg))
         bounded = (
             df.join(F.broadcast(bounds), gb) if gb else df.crossJoin(F.broadcast(bounds))
         )

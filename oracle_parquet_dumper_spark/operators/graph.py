@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 PR_ITERS = 5
@@ -86,20 +87,10 @@ def supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cooccurrence_edges(su)
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    damping: float = PR_DAMPING,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPING) -> DataFrame:
     """(node, pr) after ``iters`` synchronous rounds.  Assumes every node
     has out-edges (true for a symmetric edge list, so no dangling-mass
-    term).  ``checkpoint_dir`` switches lineage truncation to reliable
-    checkpoints for executor-loss tolerance at scale."""
-    # function-level import: dedup itself imports the registry package,
-    # which imports this module — a module-level import would be circular
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
+    term)."""
     # Round-invariant relation: computed and materialized ONCE, with the
     # out-degree denormalized onto each edge via a count() window riding
     # a single src exchange (r14: the old two-step — checkpoint edges,
@@ -119,28 +110,37 @@ def pagerank(
     # across queries, so only the ranks side ever moves).
     from pyspark.sql import Window as W
 
-    edges_deg = truncate_lineage(
-        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src"))),
-        checkpoint_dir,
+    edges_deg = materialize(
+        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src"))), eager=True
     )
     # 1-row node count, materialized ONCE (r14): left in-plan it was
     # re-derived per round — 5 extra aggregation jobs over the edges.
-    n1 = truncate_lineage(
-        edges_deg.agg(F.count_distinct("src").alias("nn")), checkpoint_dir
-    )
+    n1 = materialize(edges_deg.agg(F.count_distinct("src").alias("nn")), eager=True)
+    ranks = _pagerank_rounds(edges_deg, edges_deg.select("src").distinct(), n1, iters, damping)
+    return ranks.select("node", (F.col("r") / F.lit(float(PR_SCALE))).alias("pr"))
 
+
+def _pagerank_rounds(
+    edges_deg: DataFrame, nodes: DataFrame, n1: DataFrame, iters: int, damping: float
+) -> DataFrame:
+    """(node, r): ``iters`` synchronous rounds over the (src, dst, deg)
+    relation ``edges_deg``, starting from uniform integer rank mass on
+    the ``src`` column of ``nodes``; ``n1`` is the 1-row node count
+    ``nn``.  Each round's ranks are materialized eagerly."""
     d_num = int(round(damping * 100))  # 0.85 -> 85, exact integer damping
-    ranks = (
-        edges_deg.select("src")
-        .distinct()
-        .crossJoin(F.broadcast(n1))
-        .select(F.col("src").alias("node"), F.expr(f"{PR_SCALE} div nn").alias("r"))
+    ranks = nodes.crossJoin(F.broadcast(n1)).select(
+        F.col("src").alias("node"), F.expr(f"{PR_SCALE} div nn").alias("r")
     )
     for _ in range(iters):
+        # no join hint: while ranks fits the broadcast threshold the
+        # round is a zero-shuffle broadcast join; past it, the SAME plan
+        # becomes a merge join, and over graph_pagerank_bucketed's
+        # bucketed scan only ranks exchanges (asserted with
+        # auto-broadcast disabled in tests/test_plans.py)
         contribs = edges_deg.join(ranks, edges_deg.src == ranks.node).select(
             "dst", F.expr("r div deg").alias("c")
         )
-        ranks = (
+        ranks = materialize(
             contribs.groupBy("dst")
             .agg(F.sum("c").alias("sc"))
             .crossJoin(F.broadcast(n1))
@@ -149,10 +149,10 @@ def pagerank(
                 F.expr(
                     f"{(100 - d_num) * PR_SCALE} div (100 * nn) + ({d_num} * sc) div 100"
                 ).alias("r"),
-            )
+            ),
+            eager=True,
         )
-        ranks = truncate_lineage(ranks, checkpoint_dir)
-    return ranks.select("node", (F.col("r") / F.lit(float(PR_SCALE))).alias("pr"))
+    return ranks
 
 
 def _pagerank_oracle() -> str:
@@ -230,7 +230,7 @@ def pagerank_edge_state(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the round-invariant (src, dst, deg) relation exists as a
     BUCKETED parquet table (bucketBy src, sortBy src) and return its
     catalog name.  This is the structural fix for the checkpoint-drops-
-    partitioning trap (r8 sweep): a localCheckpoint surfaces as Scan
+    partitioning trap (r8 sweep): a checkpoint surfaces as Scan
     ExistingRDD with NO outputPartitioning, so at node counts where the
     ranks side stops being broadcastable every round re-shuffles the
     edges.  A bucketed scan reports its hash clustering to EVERY query
@@ -272,7 +272,7 @@ def pagerank_edge_state(spark: SparkSession, sf_dir: str) -> str:
 def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """graph_pagerank's exact semantics (same oracle, identical integer
     rank mass) with the round-invariant edge relation persisted as a
-    BUCKETED table instead of a localCheckpoint: the bucketBy(src) scan
+    BUCKETED table instead of a checkpoint: the bucketBy(src) scan
     carries HashPartitioning(src) into every round's edges⋈ranks merge
     join, so the edge relation is shuffled ZERO times across all
     {PR_ITERS} rounds — only the node-sized ranks side moves (plan-
@@ -282,39 +282,13 @@ def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the variant that holds: the checkpointed form silently degrades to
     an edge re-shuffle per round once V outgrows the broadcast
     threshold (measured note at pagerank(), graph.py)."""
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
     table = pagerank_edge_state(spark, sf_dir)
     edges_deg = spark.table(table)
     deg = edges_deg.groupBy("src").agg(F.first("deg").alias("deg"))
     # 1-row node count, materialized ONCE — left in-plan it would
     # re-scan the edge table every round just to recount nodes
-    n1 = truncate_lineage(deg.agg(F.count(F.lit(1)).alias("nn")))
-    d_num = int(round(PR_DAMPING * 100))
-    ranks = deg.crossJoin(F.broadcast(n1)).select(
-        F.col("src").alias("node"), F.expr(f"{PR_SCALE} div nn").alias("r")
-    )
-    for _ in range(PR_ITERS):
-        # no join hint: while ranks fits the broadcast threshold the
-        # round is a zero-shuffle broadcast join over the bucketed scan;
-        # past it, the SAME plan degrades gracefully to a merge join
-        # where only ranks exchanges (the bucketed side never moves —
-        # asserted with auto-broadcast disabled in tests/test_plans.py)
-        contribs = edges_deg.join(ranks, edges_deg.src == ranks.node).select(
-            "dst", F.expr("r div deg").alias("c")
-        )
-        ranks = (
-            contribs.groupBy("dst")
-            .agg(F.sum("c").alias("sc"))
-            .crossJoin(F.broadcast(n1))
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(
-                    f"{(100 - d_num) * PR_SCALE} div (100 * nn) + ({d_num} * sc) div 100"
-                ).alias("r"),
-            )
-        )
-        ranks = truncate_lineage(ranks)
+    n1 = materialize(deg.agg(F.count(F.lit(1)).alias("nn")), eager=True)
+    ranks = _pagerank_rounds(edges_deg, deg, n1, PR_ITERS, PR_DAMPING)
     return (
         ranks.select(
             F.col("node").cast("long").alias("node"),
@@ -390,13 +364,11 @@ def graph_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("a.depth") + F.col("b.depth")).alias("depth"),
             )
         )
-        from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
         # The convergence probe rides the eager checkpoint's own job via
         # observe() — one job per round, not two (checkpoint + count).
         obs = Observation(f"hier_round_{r}")
-        ptr = truncate_lineage(
-            nxt.observe(obs, F.sum((F.col("anc") != 0).cast("long")).alias("live")), None
+        ptr = materialize(
+            nxt.observe(obs, F.sum((F.col("anc") != 0).cast("long")).alias("live")), eager=True
         )
         remaining = int(obs.get["live"])
         if remaining == 0:
@@ -513,9 +485,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline once PER reference (the audit tool counted 109 exchanges /
     # 54 scans).  Materialize the oriented edges once — the Spark analog
     # of the oracle's AS MATERIALIZED CTE.
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
-    oriented = truncate_lineage(oriented)
+    oriented = materialize(oriented, eager=True)
     paths = (
         oriented.alias("p")
         .join(oriented.alias("q"), F.col("p.v") == F.col("q.u"))
@@ -693,20 +663,20 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round, one degree aggregate (map-side partial) and
     two semi-shaped joins keyed by node id — all high-cardinality keys;
-    each round's edge relation is eagerly localCheckpointed
+    each round's edge relation is eagerly materialized
     (iterative.py's flat-plan convention) so round r+1 re-reads a
     materialized relation instead of re-deriving r rounds of joins.
     The per-order wedge bound (<= 7 suppliers/order, supplier_edges)
     keeps |E| linear in data."""
-    e = supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = materialize(supplier_edges(spark, sf_dir), eager=True)
     for _ in range(KCORE_ROUNDS):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.where(F.col("c") >= KCORE_K).select("src")
-        e = (
+        e = materialize(
             e.join(keep, "src")
             .join(keep.withColumnRenamed("src", "dst"), "dst")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
+            .select("src", "dst"),
+            eager=True,
         )
     return e.groupBy(F.col("src").alias("s_suppkey")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
@@ -765,7 +735,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-part degree is a count() window over partitionBy(p),
     # which rides the same p-exchange (clustering satisfied, only a
     # local sort added — which the wedge SMJ needed anyway).  NO
-    # localCheckpoint — a checkpoint surfaces as Scan ExistingRDD,
+    # materialize — a checkpoint surfaces as Scan ExistingRDD,
     # which DROPS outputPartitioning and forces every consumer to
     # re-exchange (VERDICT r7 #1).  NO F.broadcast of the degree
     # relation — it is O(#parts), data-sized (~20B rows at the 100 TB
@@ -928,7 +898,7 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the seed fold, and re-deriving the distinct self-join per round
     # measured 18.9 s at sf1 vs 6.9 s checkpointed (the bucketed edge
     # state of pagerank_edge_state is the stored-state equivalent)
-    edges = supplier_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = materialize(supplier_edges(spark, sf_dir))
     seed = edges.agg(F.min("src").alias("node"))
     return _bfs_rounds(edges, seed)
 
@@ -938,18 +908,17 @@ def _bfs_rounds(edges: DataFrame, seed: DataFrame) -> DataFrame:
     the (materialized) symmetric edge relation, seed the 1-row start
     node.  All frontier/visited joins are UNHINTED — see the
     graph_bfs_reachability docstring for the scale argument."""
-    frontier = seed.localCheckpoint(eager=False)
+    frontier = materialize(seed)
     visited = frontier
     out = frontier.select("node", F.lit(0).cast("long").alias("depth"))
     for d in range(1, BFS_DEPTH + 1):
-        frontier = (
+        frontier = materialize(
             edges.join(frontier.select(F.col("node").alias("src")), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
-        visited = visited.unionAll(frontier).localCheckpoint(eager=False)
+        visited = materialize(visited.unionAll(frontier))
         out = out.unionAll(frontier.select("node", F.lit(d).cast("long").alias("depth")))
     return out
 
@@ -1084,9 +1053,7 @@ def graph_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
-
-    oriented = truncate_lineage(oriented)
+    oriented = materialize(oriented, eager=True)
     paths = (
         oriented.alias("p")
         .join(oriented.alias("q"), F.col("p.v") == F.col("q.u"))

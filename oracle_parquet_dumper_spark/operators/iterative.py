@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.vectors import as_double
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 K_CLUSTERS = 4
@@ -299,14 +300,17 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    vocab = words.select(
-        "freq",
-        F.concat(
-            # split-to-chars keeps a trailing empty (limit -1) — drop it
-            F.filter(F.split("w", "(?!^)"), lambda s: F.length(s) > 0),
-            F.array(F.lit(END_MARK)),
-        ).alias("syms"),
-    ).localCheckpoint(eager=True)  # vocabulary is small; re-folding each round reads this
+    vocab = materialize(
+        words.select(
+            "freq",
+            F.concat(
+                # split-to-chars keeps a trailing empty (limit -1) — drop it
+                F.filter(F.split("w", "(?!^)"), lambda s: F.length(s) > 0),
+                F.array(F.lit(END_MARK)),
+            ).alias("syms"),
+        ),
+        eager=True,
+    )  # vocabulary is small; re-folding each round reads this
 
     merges: list[tuple[int, str, str, int]] = []
     for step in range(N_BPE_MERGES):
@@ -330,7 +334,7 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         left, right = top[0].p.split(" ")
         merges.append((step, left, right, int(top[0].cnt)))
         vocab = vocab.select("freq", _merge_pair(F.col("syms"), left, right).alias("syms"))
-        vocab = vocab.localCheckpoint(eager=True)  # keep each round's plan flat
+        vocab = materialize(vocab, eager=True)  # keep each round's plan flat
 
     return spark.createDataFrame(
         [(s, l, r, l + r, c) for (s, l, r, c) in merges],

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 
@@ -360,7 +361,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     XOR+popcount."""
     d = _docs(spark, sf_dir)
     p = with_payload(d).select("doc_id", "payload")
-    hashes = p.mapInPandas(payload_dhash, PHASH_SCHEMA).localCheckpoint(eager=False)
+    hashes = materialize(p.mapInPandas(payload_dhash, PHASH_SCHEMA))
 
     bands = hashes.select(
         "doc_id",

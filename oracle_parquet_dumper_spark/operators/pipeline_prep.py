@@ -28,6 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 CHUNK_TOKENS = 32  # window size (tokens)
@@ -762,7 +763,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW_NUMBER windows are DuckDB-side only.)"""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d = (
+    d = materialize(
         load_table(spark, sf_dir, "documents")
         .where(F.length("text") > 0)
         .select(
@@ -771,20 +772,21 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.filter(F.split(F.lower(F.col("text")), " "), lambda t: F.length(t) > 0)
             ).cast("long").alias("n_tok"),
         )
-        .localCheckpoint(eager=False)
     )
     ranked = with_global_index(d, "n_tok", ["doc_id"])
     # truncate between the two index passes: the second pass's internal
     # consumers (bounds, bucket counts, bucketed rows) would otherwise
     # re-derive the ENTIRE first pass each
-    phased = ranked.select(
-        "doc_id",
-        "n_tok",
-        F.expr(f"CAST(({CURRICULUM_PHASES} * _gidx) div _gn AS INT)").alias("phase"),
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    ).localCheckpoint(eager=False)
+    phased = materialize(
+        ranked.select(
+            "doc_id",
+            "n_tok",
+            F.expr(f"CAST(({CURRICULUM_PHASES} * _gidx) div _gn AS INT)").alias("phase"),
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15), 16, 10)
+            .cast("long")
+            .alias("h"),
+        )
+    )
     pos = with_global_index(
         phased, "h", ["doc_id"], group_cols=["phase"], idx_col="position"
     )
@@ -857,7 +859,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; everything after lives on that bounded relation crossJoined
     with broadcast 1-row folds."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    s = (
+    s = materialize(
         d.groupBy("source")
         .agg(
             F.sum(
@@ -870,8 +872,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_tok")
         )
-        .localCheckpoint(eager=False)  # <= #sources rows, 3 consumers
-    )
+    )  # <= #sources rows, 3 consumers
     t = s.agg(
         F.sum("n_tok").alias("total"),
         F.sum(F.sqrt(F.col("n_tok").cast("double"))).alias("z"),
@@ -906,15 +907,17 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("target_tok"),
         )
     )
-    capped = terms.select(
-        "source",
-        "n_tok",
-        "share_ppm",
-        "w_ppm",
-        "target_tok",
-        (F.col("target_tok") > MIX_MAX_EPOCHS * F.col("n_tok")).alias("capped"),
-        F.least(F.col("target_tok"), MIX_MAX_EPOCHS * F.col("n_tok")).alias("final_tok"),
-    ).localCheckpoint(eager=False)
+    capped = materialize(
+        terms.select(
+            "source",
+            "n_tok",
+            "share_ppm",
+            "w_ppm",
+            "target_tok",
+            (F.col("target_tok") > MIX_MAX_EPOCHS * F.col("n_tok")).alias("capped"),
+            F.least(F.col("target_tok"), MIX_MAX_EPOCHS * F.col("n_tok")).alias("final_tok"),
+        )
+    )
     lo = capped.agg(
         F.sum(F.col("target_tok") - F.col("final_tok")).cast("long").alias("leftover")
     )

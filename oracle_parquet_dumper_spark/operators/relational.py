@@ -26,6 +26,7 @@ from oracle_parquet_dumper_spark.plans.registry import (
     dec_sum_sql,
     query,
 )
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 
@@ -377,12 +378,11 @@ def join_interval_overlap_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both output aggregations consume the deduped pair relation —
     # checkpoint it once instead of re-deriving the bin join per branch
-    pairs = (
+    pairs = materialize(
         tbins.join(wbins, "_bin")
         .where((F.col("ts_s") <= F.col("w_e")) & (F.col("w_s") <= F.col("ts_e")))
         .dropDuplicates(["yr", "peak_day", "o_orderkey"])
         .select("yr", "peak_day", "o_orderkey", "rev_cents")
-        .localCheckpoint(eager=False)
     )
     agg1 = pairs.groupBy("yr").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -2808,18 +2808,17 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE scan with a map-side-partial groupBy on the two
     key columns; the cell relation (|priorities| x |statuses| = 15
-    rows) is lazily localCheckpointed, so the three margin re-reads
+    rows) is lazily materialized, so the three margin re-reads
     cost nothing, and every join after the scan is a broadcast over
     <= 15 rows.  No reference counterpart (main.py:144-146)."""
     d38 = "decimal(38,0)"
     o = load_table(spark, sf_dir, "orders")
-    cells = (
+    cells = materialize(
         o.groupBy(
             F.col("o_orderpriority").alias("priority"),
             F.col("o_orderstatus").alias("status"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-        .localCheckpoint(eager=False)
     )
     r = cells.groupBy("priority").agg(F.sum("n_obs").cast("long").alias("n_row"))
     c = cells.groupBy("status").agg(F.sum("n_obs").cast("long").alias("n_col"))
@@ -3223,7 +3222,7 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    vc = (
+    vc = materialize(
         o.groupBy("status", "cents")
         .agg(F.count(F.lit(1)).alias("_w"))
         # cents first: the checkpointed value-domain relation must NOT
@@ -3232,8 +3231,7 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the value column keeps the lint able to flag a (hypothetical)
         # forced broadcast of this data-sized relation
         .select("cents", "status", "_w")
-        .localCheckpoint(eager=False)  # value-domain relation, 2 consumers
-    )
+    )  # value-domain relation, 2 consumers
     q = weighted_quantiles(
         vc,
         "cents",

@@ -24,6 +24,7 @@ from oracle_parquet_dumper_spark.functions.vectors import (
     dot_sql,
 )
 from oracle_parquet_dumper_spark.plans.registry import dec_sum_sql, query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 QUERY_VEC_ID = 0
@@ -2252,7 +2253,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return F.round(c * 1_000_000).cast("long")
 
-    cand = (
+    cand = materialize(
         e.where(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
         .select(
@@ -2262,12 +2263,11 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rel_ppm").desc(), "vec_id")
         .limit(MMR_POOL)
-        .localCheckpoint(eager=False)
     )
     packed = cand.agg(
         F.collect_list(F.struct("vec_id", "vd")).alias("pool")
     )
-    p = (
+    p = materialize(
         packed.select(F.explode("pool").alias("a"), "pool")
         .select(F.col("a.vec_id").alias("ai"), F.col("a.vd").alias("va"),
                 F.explode("pool").alias("b"))
@@ -2277,7 +2277,6 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.vec_id").alias("bi"),
             cos_ppm(F.col("va"), F.col("b.vd")).alias("sim_ppm"),
         )
-        .localCheckpoint(eager=False)
     )
     sel = (
         cand.orderBy(F.col("rel_ppm").desc(), "vec_id")
@@ -2313,7 +2312,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # checkpoint the accumulated picks each round (the kmeans-chain
         # convention) so step k's plan does not re-derive steps 1..k-1
-        sel = sel.unionByName(nxt).localCheckpoint(eager=False)
+        sel = materialize(sel.unionByName(nxt))
     return sel.select(
         F.col("rk").cast("int").alias("rk"),
         "vec_id",

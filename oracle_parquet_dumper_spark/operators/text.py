@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 
@@ -1314,14 +1315,11 @@ def text_perplexity_bigram_interp(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("doc_id", "b.prev", "b.cur")
     # collapsed relation feeds the model tables + the scoring join;
     # truncate lineage once (the kneser-ney/mannwhitney convention)
-    tf2 = (
+    tf2 = materialize(
         bg.groupBy("doc_id", "prev", "cur")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
-    c2 = tf2.groupBy("prev", "cur").agg(F.sum("tf").alias("c2")).localCheckpoint(
-        eager=False
-    )
+    c2 = materialize(tf2.groupBy("prev", "cur").agg(F.sum("tf").alias("c2")))
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     nll_u = F.round(
         -F.log(
@@ -1433,14 +1431,11 @@ def text_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the collapsed relation feeds FOUR model tables + the scoring join;
     # truncate lineage once so the scan+explode+combine run once (the
     # agg_mannwhitney_u convention), and likewise for c2's three readers
-    tf2 = (
+    tf2 = materialize(
         bg.groupBy("doc_id", "prev", "cur")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
-    c2 = tf2.groupBy("prev", "cur").agg(F.sum("tf").alias("c2")).localCheckpoint(
-        eager=False
-    )
+    c2 = materialize(tf2.groupBy("prev", "cur").agg(F.sum("tf").alias("c2")))
     c1 = c2.groupBy("prev").agg(
         F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("n1v")
     )
@@ -1724,9 +1719,9 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast vs shuffle from its runtime size; the final rollup is a
     map-side partial to <= #sources rows."""
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
-    tok = d.select(
-        "source", F.explode(words_col_lower()).alias("token")
-    ).localCheckpoint(eager=False)  # one tokenize pass, two consumers
+    tok = materialize(
+        d.select("source", F.explode(words_col_lower()).alias("token"))
+    )  # one tokenize pass, two consumers
     vocab = (
         tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))

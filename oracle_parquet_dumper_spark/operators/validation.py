@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.plans.registry import query
+from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 N_HIST_BUCKETS = 10
@@ -390,10 +391,9 @@ def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deviation join and the final fold — truncate lineage once (the
     # agg_mannwhitney_u convention) so the plan scans it, not re-derives
     # it per consumer.
-    vc = (
+    vc = materialize(
         ev.groupBy("event_type", "value")
         .agg(F.count(F.lit(1)).alias("_w"))
-        .localCheckpoint(eager=False)
     )
     med = weighted_quantiles(
         vc, "value", "_w", group_cols=["event_type"], disc={"med": 0.5},
@@ -402,7 +402,7 @@ def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = vc.join(F.broadcast(med), "event_type").select(
         "event_type", "med", "_w", F.abs(F.col("value") - F.col("med")).alias("d")
     )
-    dev = dev.localCheckpoint(eager=False)
+    dev = materialize(dev)
     devc = dev.groupBy("event_type", "med", "d").agg(F.sum("_w").alias("_w"))
     mad = weighted_quantiles(
         devc, "d", "_w", group_cols=["event_type"], disc={"mad": 0.5},
@@ -729,7 +729,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is per-class exact (partial distinct within the bounded
     cell)."""
     o = load_table(spark, sf_dir, "orders")
-    cls = (
+    cls = materialize(
         o.groupBy(
             F.col("o_orderstatus").alias("status"),
             F.col("o_orderpriority").alias("priority"),
@@ -743,8 +743,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("l_distinct"),
         )
-        .localCheckpoint(eager=False)  # <= #QI-cells rows, feeds 2 consumers
-    )
+    )  # <= #QI-cells rows, feeds 2 consumers
     s = cls.agg(
         F.sum(F.when(F.col("k") < K_ANON_MIN, F.col("k")).otherwise(0)).alias(
             "rows_below_k"
@@ -801,15 +800,14 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is 1 row crossJoined back broadcast.  No window, no raw-row
     shuffle — the scan's partial aggregates are the entire data-sized
     work at any scale."""
-    g = (
+    g = materialize(
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("last_us"),
         )
-        .localCheckpoint(eager=False)  # <= #types rows, feeds 2 consumers
-    )
+    )  # <= #types rows, feeds 2 consumers
     t = g.agg(F.max("last_us").alias("now_us"))
     lag_s = F.expr("(now_us - last_us) div 1000000")
     return g.crossJoin(F.broadcast(t)).select(
@@ -1009,7 +1007,7 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second consumer, and without the checkpoint Catalyst re-derives
     # the whole two-pass machinery per reference (the triangle-count
     # 109-exchange lesson)
-    idx = raw.localCheckpoint(eager=False)
+    idx = materialize(raw)
     firsts = idx.groupBy("_gb").agg(F.min("cents").alias("_bf"))
     nxtb = firsts.select(
         "_gb", F.lead("_bf").over(W.orderBy("_gb")).alias("_nxt_bf")
@@ -1143,10 +1141,9 @@ def dq_association_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pair(table: str, rcol: str, ccol: str, name: str) -> DataFrame:
         df = load_table(spark, sf_dir, table)
-        cells = (
+        cells = materialize(
             df.groupBy(F.col(rcol).alias("rl"), F.col(ccol).alias("cl"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-            .localCheckpoint(eager=False)
         )
         r = cells.groupBy("rl").agg(F.sum("n_obs").cast("long").alias("n_row"))
         c = cells.groupBy("cl").agg(F.sum("n_obs").cast("long").alias("n_col"))

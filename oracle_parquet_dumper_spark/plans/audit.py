@@ -443,7 +443,7 @@ QUERY_BOUNDED_DOMAIN_COLS: dict[str, dict[str, str]] = {
     "events_dau_wau": {"day": "observed calendar days in the window"},
     "sample_stratified_neyman": {"flag": "3 (l_returnflag alias)"},
     "agg_winsorized_trimmed_mean": {"status": "3 (o_orderstatus alias)"},
-    # the checkpointed 1-row node-count fold (truncate_lineage'd
+    # the checkpointed 1-row node-count fold (materialized
     # Aggregate, graph.py): surfaces as LogicalRDD [nn] inside each
     # round's checkpoint fragment — visible only since the r11
     # capture_checkpoints fix made fragments lintable
@@ -904,9 +904,9 @@ def capture_checkpoints():
     invisible to the final optimized plan the broadcast-boundedness
     lint reads — graph_triangle_count audited ``fbcast=0`` for three
     rounds while its source carried two forced node-sized broadcasts.
-    Patching ``DataFrame.localCheckpoint`` (the engine's single lineage
-    -truncation primitive, whether called directly or via
-    dedup.truncate_lineage) captures each fragment at exactly the
+    Patching ``DataFrame.localCheckpoint`` and ``DataFrame.checkpoint``
+    (the two methods ``session.materialize``, the engine's single
+    lineage cut, calls) captures each fragment at exactly the
     moment it disappears from downstream plans; ``audit_query`` then
     lints every fragment with the same rule as the final plan.
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -62,3 +62,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: the one place the engine decides how a
+    relation it reuses, or an iterative loop's state, is stored.
+
+    With a checkpoint directory set on the SparkContext (the
+    ``spark.checkpoint.dir`` setting, e.g. ``get_spark(extra_conf=...)``,
+    or ``sc.setCheckpointDir``) this is a reliable ``checkpoint``: the
+    rows are written as files there, so a lost executor costs a re-read,
+    not the query.  Without one it is a ``localCheckpoint``: blocks in
+    executor storage, fast, but a lost executor fails the job because
+    the cut lineage cannot recompute them.  ``eager`` materializes now
+    (iterative loops, whose next round must not re-derive this one);
+    otherwise the first action that reads ``df`` does."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

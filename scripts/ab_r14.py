@@ -37,8 +37,8 @@ def row_hash(pdf):
 
 
 def new_triangle_sampled(spark, sf_dir):
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
     from oracle_parquet_dumper_spark.operators.graph import TRI_SAMPLE_MOD
+    from oracle_parquet_dumper_spark.session import materialize
     from oracle_parquet_dumper_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -86,7 +86,7 @@ def new_triangle_sampled(spark, sf_dir):
         )
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
-    oriented = truncate_lineage(oriented)
+    oriented = materialize(oriented, eager=True)
     paths = (
         oriented.alias("p")
         .join(oriented.alias("q"), F.col("p.v") == F.col("q.u"))
@@ -187,12 +187,12 @@ def new_threshold_sensitivity(spark, sf_dir):
         N_MINHASH,
         minhash_band_rows,
         minhash_signatures_df,
-        truncate_lineage,
     )
+    from oracle_parquet_dumper_spark.session import materialize
     from oracle_parquet_dumper_spark.sources.tables import load_table
 
-    sig = truncate_lineage(
-        minhash_signatures_df(load_table(spark, sf_dir, "documents"))
+    sig = materialize(
+        minhash_signatures_df(load_table(spark, sf_dir, "documents")), eager=True
     )
     bands = minhash_band_rows(sig, keep_sig=True)
     a = bands.select(
@@ -220,13 +220,13 @@ def new_threshold_sensitivity(spark, sf_dir):
 
 
 def new_pagerank(spark, sf_dir):
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
     from oracle_parquet_dumper_spark.operators.graph import (
         PR_DAMPING,
         PR_ITERS,
         PR_SCALE,
         PR_TOP,
     )
+    from oracle_parquet_dumper_spark.session import materialize
     from oracle_parquet_dumper_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -246,10 +246,10 @@ def new_pagerank(spark, sf_dir):
             )
         ).alias("e")
     ).select(F.col("e.u").alias("src"), F.col("e.v").alias("dst"))
-    edges_deg = truncate_lineage(
-        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src")))
+    edges_deg = materialize(
+        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src"))), eager=True
     )
-    n1 = truncate_lineage(edges_deg.agg(F.count_distinct("src").alias("nn")))
+    n1 = materialize(edges_deg.agg(F.count_distinct("src").alias("nn")), eager=True)
     d_num = int(round(PR_DAMPING * 100))
     ranks = (
         edges_deg.select("src")
@@ -272,7 +272,7 @@ def new_pagerank(spark, sf_dir):
                 ).alias("r"),
             )
         )
-        ranks = truncate_lineage(ranks)
+        ranks = materialize(ranks, eager=True)
     return (
         ranks.select(
             F.col("node").cast("long").alias("node"),

@@ -309,7 +309,6 @@ def pagerank_nockpt(spark, sf_dir):
     round's ranks has exactly ONE consumer (the next round's join), so
     the whole 5-round recurrence is a single tree evaluated once — the
     per-round truncation only pays 5 materializations + job barriers."""
-    from oracle_parquet_dumper_spark.operators.dedup import truncate_lineage
     from oracle_parquet_dumper_spark.operators.graph import (
         PR_DAMPING,
         PR_ITERS,
@@ -317,13 +316,14 @@ def pagerank_nockpt(spark, sf_dir):
         PR_TOP,
         supplier_edges,
     )
+    from oracle_parquet_dumper_spark.session import materialize
     from pyspark.sql import Window as W
 
     edges = supplier_edges(spark, sf_dir)
-    edges_deg = truncate_lineage(
-        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src"))), None
+    edges_deg = materialize(
+        edges.withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src"))), eager=True
     )
-    n1 = truncate_lineage(edges_deg.agg(F.count_distinct("src").alias("nn")), None)
+    n1 = materialize(edges_deg.agg(F.count_distinct("src").alias("nn")), eager=True)
     d_num = int(round(PR_DAMPING * 100))
     ranks = (
         edges_deg.select("src")

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import uuid
@@ -46,6 +47,28 @@ def count_jobs(spark):
         return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """``with reliable_checkpoints() as ckpt:`` sets the SparkContext's
+    checkpoint dir to ``ckpt`` (a fresh directory under ``tmp_path``), so
+    every ``materialize`` inside the block writes reliable checkpoint
+    files there, and unsets it on the way out.  Spark has no public
+    unset, so the JVM setter gets ``None``; otherwise every later test
+    in the session would run in reliable mode."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def enabled():
+        ckpt = tmp_path / "checkpoints"
+        sc.setCheckpointDir(str(ckpt))
+        try:
+            yield ckpt
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+    return enabled
 
 
 @pytest.fixture(scope="session")

@@ -4,6 +4,9 @@ near-duplicates, and ANN recall against the exact brute-force top-k."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -129,42 +132,6 @@ def test_connected_components_planted(spark):
     )
     comps = {r.node: r.component for r in connected_components(edges).collect()}
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation from executor-local
-    blocks to reliable checkpoint files — same result, and checkpoint
-    data actually lands in the directory (survives executor loss at
-    scale)."""
-    import os
-
-    from oracle_parquet_dumper_spark.operators.dedup import connected_components
-
-    ckpt = str(tmp_path / "ckpt")
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)], ["a", "b"]
-    )
-    comps = {
-        r.node: r.component
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    written = [f for _, _, fs in os.walk(ckpt) for f in fs]
-    assert written, "reliable checkpoint wrote no files"
-
-
-def test_label_propagation_reliable_checkpoint(spark, sf_dir, tmp_path):
-    """The registered query and its reliable-checkpoint variant agree."""
-    from oracle_parquet_dumper_spark.operators.dedup import dedup_label_propagation
-
-    base = {tuple(r) for r in dedup_label_propagation(spark, sf_dir).collect()}
-    reli = {
-        tuple(r)
-        for r in dedup_label_propagation(
-            spark, sf_dir, checkpoint_dir=str(tmp_path / "ckpt2")
-        ).collect()
-    }
-    assert base == reli
 
 
 def test_dedup_clusters_planted(spark, tmp_path):
@@ -486,34 +453,41 @@ def test_phash_locality_planted_edit(spark, tmp_path):
     assert ham(0, 2) > PHASH_HAMMING_MAX
 
 
-def test_curation_and_clusters_reliable_checkpoint(spark, sf_dir, tmp_path):
-    """The flagship pipelines produce identical results with reliable
-    (on-disk) checkpoints as with localCheckpoint, and the checkpoint
-    dir is actually written — executor-loss tolerance is exercised, not
-    doc-only."""
-    import os
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_clusters",
+        "pipeline_curation",
+        "dedup_label_propagation",
+        "graph_pagerank",
+        # band relations: the lazy materialize in dedup._minhash_pairs
+        # and in lsh.banded_buckets
+        "dedup_minhash_lsh",
+        "dedup_embedding_cosine_lsh",
+    ],
+)
+def test_reliable_checkpoints_match_default_mode(spark, sf_dir, reliable_checkpoints, name):
+    """With a checkpoint dir set, every lineage cut of the query is a
+    reliable checkpoint: the result is the one the default
+    (localCheckpoint) mode returns, checkpoint files land in the dir,
+    and the dir is unset again afterwards."""
+    from oracle_parquet_dumper_spark.plans import REGISTRY
 
-    from oracle_parquet_dumper_spark.operators.dedup import (
-        dedup_clusters,
-        pipeline_curation,
-    )
+    fn = REGISTRY[name].fn
 
-    ckpt = tmp_path / "ckpt_curation"
-    base = {tuple(r) for r in pipeline_curation(spark, sf_dir).collect()}
-    reli = {
-        tuple(r)
-        for r in pipeline_curation(spark, sf_dir, checkpoint_dir=str(ckpt)).collect()
-    }
-    assert base == reli
-    assert [f for _, _, fs in os.walk(ckpt) for f in fs], "no checkpoint files written"
+    def result_hash():
+        rows = sorted(tuple(str(v) for v in r) for r in fn(spark, sf_dir).collect())
+        return hashlib.md5(repr(rows).encode()).hexdigest()
 
-    ckpt2 = tmp_path / "ckpt_clusters"
-    base_c = {tuple(r) for r in dedup_clusters(spark, sf_dir).collect()}
-    reli_c = {
-        tuple(r)
-        for r in dedup_clusters(spark, sf_dir, checkpoint_dir=str(ckpt2)).collect()
-    }
-    assert base_c == reli_c
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    base = result_hash()
+    with reliable_checkpoints() as ckpt:
+        reliable = result_hash()
+        written = [f for _, _, fs in os.walk(ckpt) for f in fs]
+    assert sc.getCheckpointDir() is None
+    assert reliable == base
+    assert written, "reliable mode wrote no checkpoint files"
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
