@@ -12,6 +12,7 @@ showed ~3x phantom swings on byte-identical plans round over round);
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -22,8 +23,34 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def run_rep(spark, fn) -> float:
+    """One timed rep of ``fn(spark, SF_DIR)`` through the no-op sink;
+    returns wall seconds.
+
+    Leftovers from the PREVIOUS rep are drained outside the timed region:
+    iterative queries materialize interim relations whose blocks are only
+    freed when the async ContextCleaner notices the Python refs died —
+    left alone, that cleanup (and the executor-memory pressure it
+    relieves) lands randomly inside later timings and shows up as ±30%
+    phantom swings on byte-identical plans."""
+    gc.collect()
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def config_stamp(spark, box: dict) -> dict:
+    """The config a timing ran under, for every artifact that records
+    one; ``box`` is ``box_state()`` sampled before the JVM started."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "defaultParallelism": sc.defaultParallelism,
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+        "sf_dir": SF_DIR,
+        "box_state": box,
+    }
 
 
 def box_state() -> dict:
@@ -67,30 +94,31 @@ def main() -> None:
     # just defends itself first).  Override with BENCH_QUIET_WAIT_S=0.
     wait_budget = float(os.environ.get("BENCH_QUIET_WAIT_S", "600"))
     waited = 0.0
-    env = box_state()
-    while not env["clean"] and waited < wait_budget:
+    box = box_state()
+    while not box["clean"] and waited < wait_budget:
         step = 15.0
         print(
-            f"bench: box not quiet ({env['other_jvms']} other JVM(s), "
-            f"load1={env['load1']}) — waiting {step:.0f}s "
+            f"bench: box not quiet ({box['other_jvms']} other JVM(s), "
+            f"load1={box['load1']}) — waiting {step:.0f}s "
             f"({waited:.0f}/{wait_budget:.0f}s used)",
             file=sys.stderr,
         )
         time.sleep(step)
         waited += step
-        env = box_state()
+        box = box_state()
     if waited:
-        env["quiet_wait_s"] = round(waited, 1)
-    if not env["clean"]:
+        box["quiet_wait_s"] = round(waited, 1)
+    if not box["clean"]:
         print(
-            f"WARNING: dirty box at bench start ({env['other_jvms']} other JVM(s), "
-            f"load1={env['load1']} vs {env['cores']} cores) after waiting "
+            f"WARNING: dirty box at bench start ({box['other_jvms']} other JVM(s), "
+            f"load1={box['load1']} vs {box['cores']} cores) after waiting "
             f"{waited:.0f}s — timings are contaminated; rerun on a quiet box. "
             "Stamping env into the JSON.",
             file=sys.stderr,
         )
 
     spark = get_spark("bench")
+    env = config_stamp(spark, box)
 
     # Warm the JVM + parquet footers outside the timed region — every
     # table, so the first-alphabetical query doesn't absorb the cold
@@ -238,23 +266,8 @@ def main() -> None:
     specs = plans.bench_queries()
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings: dict[str, float] = {}
-    import gc
-
     for name, spec in sorted(specs.items()):
-        runs = []
-        for _ in range(reps):
-            # Drain leftovers from the PREVIOUS run outside the timed
-            # region: iterative queries eagerly localCheckpoint interim
-            # relations whose blocks are only freed when the async
-            # ContextCleaner notices the Python refs died — left alone,
-            # that cleanup (and the executor-memory pressure it relieves)
-            # lands randomly inside later timings and shows up as ±30%
-            # phantom swings on byte-identical plans.
-            gc.collect()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            materialize(spec.fn(spark, SF_DIR))
-            runs.append(time.perf_counter() - t0)
+        runs = [run_rep(spark, spec.fn) for _ in range(reps)]
         runs.sort()
         mid = len(runs) // 2
         median = runs[mid] if len(runs) % 2 else (runs[mid - 1] + runs[mid]) / 2

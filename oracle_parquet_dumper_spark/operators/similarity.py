@@ -431,8 +431,11 @@ def sim_ann_ivf_rerank_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
+    schema = "vec_id long, cos double"
     e = load_table(spark, sf_dir, "embeddings")
     qrow = e.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding", "label").first()
+    if qrow is None:  # no query vector: the oracle's cross join is empty too
+        return spark.createDataFrame([], schema)
     qvec = np.asarray(qrow["embedding"], dtype=np.float64)
     qcell = int(qrow["label"])
     qnorm = float(np.sqrt(qvec @ qvec))
@@ -447,7 +450,7 @@ def sim_ann_ivf_rerank_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos = (m @ qvec) / (np.sqrt((m * m).sum(axis=1)) * qnorm)
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "cos": np.round(cos, 6)})
 
-    scored = cand.mapInPandas(rerank, schema="vec_id long, cos double")
+    scored = cand.mapInPandas(rerank, schema=schema)
     return scored.orderBy(F.col("cos").desc(), "vec_id").limit(TOP_K)
 
 

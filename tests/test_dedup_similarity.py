@@ -296,6 +296,30 @@ def test_ann_pandas_rerank_matches_jvm_expression(spark, sf_dir):
     assert pandas_ids == jvm_ids
 
 
+def test_ann_pandas_rerank_without_query_vector_matches_oracle(spark, smoke_sf_dir, tmp_path):
+    """No QUERY_VEC_ID row in embeddings: the re-rank returns the oracle's
+    empty result with its usual schema instead of indexing a missing row."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from oracle_parquet_dumper_spark.operators.similarity import QUERY_VEC_ID
+    from oracle_parquet_dumper_spark.plans import REGISTRY
+    from oracle_parquet_dumper_spark.testing import compare
+
+    emb = pq.read_table(os.path.join(smoke_sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(emb.filter(pc.field("vec_id") != QUERY_VEC_ID), path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+
+    spec = REGISTRY["sim_ann_ivf_rerank_pandas"]
+    df = spec.fn(spark, str(tmp_path))
+    assert df.schema.simpleString() == "struct<vec_id:bigint,cos:double>"
+    rep = compare(spec.name, df, con, spec.oracle)
+    assert rep.match, rep.detail
+
+
 def test_join_skew_salted_equals_plain_join(spark, sf_dir):
     """The salted join must be row-for-row identical to the plain join."""
     from pyspark.sql import functions as F
