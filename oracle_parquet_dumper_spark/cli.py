@@ -15,6 +15,14 @@ import os
 import sys
 
 
+class _AppendOverEnv(argparse.Action):
+    """``append`` that replaces, not extends, its env-var default."""
+
+    def __call__(self, parser, namespace, values, option_string=None):
+        items = getattr(namespace, self.dest)
+        setattr(namespace, self.dest, [*([] if items is self.default else items), values])
+
+
 def build_parser() -> argparse.ArgumentParser:
     env = os.environ.get
     p = argparse.ArgumentParser(
@@ -63,7 +71,7 @@ def build_parser() -> argparse.ArgumentParser:
     # recorded high-water mark (exporter.export_tables_incremental)
     p.add_argument(
         "--incremental",
-        action="append",
+        action=_AppendOverEnv,
         metavar="TABLE:COLUMN",
         default=_parse_incremental_env(env("INCREMENTAL_TABLES")),
         help="Export only rows past the saved watermark of COLUMN for TABLE "
@@ -71,7 +79,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--cluster",
-        action="append",
+        action=_AppendOverEnv,
         metavar="TABLE:COL1,COL2",
         default=_parse_cluster_env(env("CLUSTER_TABLES")),
         help="Cluster TABLE's output files on a space-filling curve over the "
@@ -189,32 +197,25 @@ def main(argv: list[str] | None = None) -> int:
 
     try:
         watermarks = parse_incremental(args.incremental)
-        cluster_by = parse_cluster(args.cluster)
-        for table, cols in cluster_by.items():
-            if args.cluster_curve == "hilbert" and len(cols) != 2:
-                raise ValueError(
-                    f"--cluster-curve hilbert needs exactly 2 columns, got "
-                    f"{len(cols)} for table {table!r} (use zorder for other widths)"
-                )
-    except ValueError as exc:
+        exporter = SparkParquetExporter(
+            spark=spark,
+            catalog=catalog,
+            output_path=args.output_path,
+            schemas=args.schemas or [],
+            table_name_include_pattern=args.table_name_include_pattern,
+            table_name_exclude_pattern=args.table_name_exclude_pattern,
+            compression_method=args.compression_method,
+            overwrite=args.overwrite,
+            row_limit=args.row_limit,
+            lowercase_object_names=args.lowercase_object_names,
+            parquet_max_file_size=args.parquet_max_file_size,
+            max_concurrent_tables=args.max_concurrent_tables,
+            cluster_by=parse_cluster(args.cluster),
+            cluster_curve=args.cluster_curve,
+        )
+    except ValueError as exc:  # malformed flag values, checked before any job
         print(f"error: {exc}", file=sys.stderr)
         return 2
-    exporter = SparkParquetExporter(
-        spark=spark,
-        catalog=catalog,
-        output_path=args.output_path,
-        schemas=args.schemas or [],
-        table_name_include_pattern=args.table_name_include_pattern,
-        table_name_exclude_pattern=args.table_name_exclude_pattern,
-        compression_method=args.compression_method,
-        overwrite=args.overwrite,
-        row_limit=args.row_limit,
-        lowercase_object_names=args.lowercase_object_names,
-        parquet_max_file_size=args.parquet_max_file_size,
-        max_concurrent_tables=args.max_concurrent_tables,
-        cluster_by=cluster_by,
-        cluster_curve=args.cluster_curve,
-    )
     if watermarks:
         results = exporter.export_tables_incremental(watermarks)
     else:

@@ -5,16 +5,18 @@ Parity map (SURVEY.md §2 Part A):
 
 - A1-A3  catalog enumeration + regex include/exclude  -> ``catalog.py``
 - A4-A5  type-pruned projection + lowercase rename    -> ``_project``
-- A6/A9  table scan, batched fetch                    -> Spark scan (JDBC
-         fetchsize / parquet vectorized reader), partitioned = parallel
+- A6/A9  table scan, batched fetch                    -> one
+         ``catalog.read_table(schema, table)`` per table (JDBC fetchsize);
+         ``JdbcCatalog``'s partitioned and ``AS OF SCN`` reads are not
+         used by the exporter yet
 - A7     row limit                                    -> ``df.limit``
 - A11    compression (none/snappy/gzip/zstd, default zstd)
 - A12    byte-targeted file rolling                   -> ``maxRecordsPerFile``
          derived from a sampled average row width (the reference itself
          documents its size as approximate, main.py:453-454)
 - A13    overwrite / error-if-exists                  -> directory guard
-- A14    snapshot isolation                           -> sessionInitStatement
-         + AS OF SCN (see catalog.JdbcCatalog.read_table)
+- A14    snapshot isolation                           -> JDBC
+         ``sessionInitStatement``, per connection (no shared SCN yet)
 - A15    ``<out>/<schema>/<table>/<table>_<n>.parquet`` layout
 - A16    schema x table driver loop with wall-clock metrics
 - A17    zero-eligible-column skip (warn)
@@ -24,37 +26,43 @@ Parity map (SURVEY.md §2 Part A):
 
 Unlike the reference (strictly serial: one connection, sequential tables,
 sequential 10k-row batches), every table export here is a distributed
-Spark job, and independent tables can export concurrently via a thread
-pool (Spark schedules the jobs FAIR across executors).
+Spark job, and ``max_concurrent_tables`` tables export at once on threads
+that keep the caller's job group (under Spark's default FIFO scheduler).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import logging
 import os
 import re
 import shutil
 import time
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from pathlib import Path
 
 import pyarrow.dataset as pads
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog, eligible_fields
+from oracle_parquet_dumper_spark.sources.layouts import check_curve, curve_clustered
 from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust
 
 logger = logging.getLogger(__name__)
 
-# Reference defaults (main.py:20-21, main.py:408,417)
+# Reference defaults (main.py:20-21, main.py:408)
 DEFAULT_ROW_LIMIT = -1
 DEFAULT_MAX_FILE_SIZE = 200_000_000
 DEFAULT_COMPRESSION = "zstd"
-DEFAULT_BATCH_SIZE = 10_000
 COMPRESSION_CHOICES = ("none", "snappy", "gzip", "zstd")
 SIZE_SAMPLE_ROWS = 2_000
+_STAGING = ".delta.tmp"  # suffix of an incremental delta's staging dir
 # Watermark types whose str() round-trip preserves ordering under
 # ``> CAST(lit AS type)``; string is deliberately absent (lexicographic).
 _ORDERABLE_WATERMARK_TYPES = frozenset(
@@ -71,10 +79,8 @@ class ExportResult:
     files: list[str]
     seconds: float
     skipped: str | None = None
-    # Resolved output directory actually written (None for skipped tables).
-    # validate_export audits exactly this path instead of re-deriving it —
-    # re-deriving guessed lowercase-first and could validate a stale
-    # directory left by a previous run with different casing settings.
+    # Output directory written (None for skipped tables): validate_export
+    # audits this path, never one guessed from the names.
     target: str | None = None
 
 
@@ -93,33 +99,29 @@ def validate_export(
     incremental: bool = False,
 ) -> list[TableValidation]:
     """Post-export read-back audit: every non-skipped table's parquet
-    output must (a) exist, (b) read back with the exported row count
-    (>= for incremental appends), (c) carry at least one column.  This
-    catches the failure exports silently tolerate — a sink that wrote
-    fewer rows than it claimed.  Row and column counts come from the
-    footers of the written files (hive partition directories add their
-    columns), read with pyarrow on the driver, so the audit runs no Spark
-    job; ``spark`` is unused.  The per-table DQ operators
+    output (``ExportResult.target``) must (a) exist, (b) read back with
+    the exported row count (>= for incremental appends), (c) carry at
+    least one column.  This catches the failure exports silently
+    tolerate — a sink that wrote fewer rows than it claimed.  Row and
+    column counts come from the footers of the written files (hive
+    partition directories add their columns), read with pyarrow on the
+    driver, so the audit runs no Spark job; ``spark`` and
+    ``output_path`` are unused.  The per-table DQ operators
     (operators/validation.py) are the deeper, schema-aware layer."""
     out: list[TableValidation] = []
     for r in results:
         if r.skipped:
             continue
         issues: list[str] = []
-        target = r.target
-        if target is None:  # legacy results without a recorded path
-            target = os.path.join(output_path, r.schema.lower(), r.table.lower())
-            if not os.path.isdir(target):
-                target = os.path.join(output_path, r.schema, r.table)
-        if not os.path.isdir(target):
+        if not os.path.isdir(r.target):
             issues.append("output directory missing")
         else:
             try:
                 # Same files Spark would read: names starting with "_" or
                 # "." (markers, checksums) are skipped.
-                dataset = pads.dataset(target, format="parquet", partitioning="hive")
+                dataset = pads.dataset(r.target, format="parquet", partitioning="hive")
                 if not dataset.files:
-                    raise FileNotFoundError(f"no parquet data files under {target}")
+                    raise FileNotFoundError(f"no parquet data files under {r.target}")
                 if not dataset.schema.names:
                     issues.append("no columns in output")
                 n = dataset.count_rows()
@@ -152,6 +154,34 @@ def _rows_per_file(df: DataFrame, max_file_size: int) -> int | None:
     if nbytes == 0:
         return 1_000_000
     return max(1, int(max_file_size / (nbytes / n)))
+
+
+def _write_rolled(
+    df: DataFrame, path: str, compression: str, rows_per_file: int,
+    partition_cols: list[str] = (), metrics: tuple = (),
+) -> dict:
+    """The write every export ends in (A11/A12): overwrite ``path``,
+    one file per ``rows_per_file`` rows.  ``metrics`` are observed on
+    the write job itself (no re-scan) and returned by alias."""
+    if metrics:
+        obs = Observation()
+        df = df.observe(obs, *metrics)
+    writer = (
+        df.write.mode("overwrite")
+        .option("compression", compression)
+        .option("maxRecordsPerFile", str(rows_per_file))
+    )
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    return obs.get if metrics else {}
+
+
+def _dump_json(path: str, obj) -> None:
+    """Write ``obj`` to ``path`` atomically (temp file, then rename)."""
+    with open(path + ".tmp", "w") as fh:
+        json.dump(obj, fh, indent=1, sort_keys=True)
+    os.replace(path + ".tmp", path)
 
 
 def _reference_names(parts_dir: str, target: str, table: str) -> dict[str, str]:
@@ -197,20 +227,16 @@ class SparkParquetExporter:
     row_limit: int = DEFAULT_ROW_LIMIT
     lowercase_object_names: bool = False
     parquet_max_file_size: int = DEFAULT_MAX_FILE_SIZE
-    reference_file_naming: bool = True
     max_concurrent_tables: int = 1
     # Hive-style partition columns per table (A15 extension — SURVEY.md
     # §2: "within a table, partitionBy if we add partition columns").
-    # Partitioned tables keep Spark's directory layout (partition pruning
-    # needs it), so reference_file_naming does not apply to them.
+    # Partitioned tables keep Spark's directory layout and file names
+    # (partition pruning needs the directories); full export only.
     partition_by: dict[str, list[str]] = field(default_factory=dict)
-    # Space-filling-curve clustering per table (sources/layouts.py): rows
-    # are range-repartitioned + sorted on a Morton or Hilbert key over
-    # the listed columns before writing, so every output file carries a
-    # tight min/max envelope on EVERY clustered column — parquet
-    # row-group/file skipping then prunes multi-dimensional predicates
-    # (Delta/Iceberg OPTIMIZE ZORDER, as an export-time option).  Column
-    # names are post-projection (lowercased if lowercase_object_names).
+    # Space-filling-curve clustering per table (layouts.curve_clustered):
+    # every file gets a tight min/max envelope on EVERY listed column, for
+    # multi-dimensional file skipping (OPTIMIZE ZORDER at export time).
+    # Column names are post-projection (lowercased if lowercase_object_names).
     cluster_by: dict[str, list[str]] = field(default_factory=dict)
     cluster_curve: str = "hilbert"  # or "zorder"
 
@@ -219,29 +245,9 @@ class SparkParquetExporter:
             raise ValueError(
                 f"compression_method must be one of {COMPRESSION_CHOICES}, got {self.compression_method!r}"
             )
-        if self.cluster_curve not in ("hilbert", "zorder"):
-            raise ValueError(
-                f"cluster_curve must be 'hilbert' or 'zorder', got {self.cluster_curve!r}"
-            )
-
-    def _cluster(self, df: DataFrame, table: str) -> DataFrame:
-        """Apply space-filling-curve clustering when configured for this
-        table: key the rows (in-plan broadcast bounds, integer bit ops),
-        range-repartition on the key (one skew-resistant sampling
-        shuffle producing contiguous, disjoint key ranges per output
-        partition), sort within each partition, drop the key.  Combined
-        with maxRecordsPerFile rolling, every rolled file is a disjoint
-        curve-range tile."""
-        cols = self.cluster_by.get(table, [])
-        if not cols:
-            return df
-        from oracle_parquet_dumper_spark.sources.layouts import hilbert_key, zorder_key
-
-        if self.cluster_curve == "hilbert":
-            keyed, key = hilbert_key(df, cols), "_h"
-        else:
-            keyed, key = zorder_key(df, cols), "_z"
-        return keyed.repartitionByRange(key).sortWithinPartitions(key).drop(key)
+        check_curve(self.cluster_curve)
+        for cols in filter(None, self.cluster_by.values()):  # [] = unclustered
+            check_curve(self.cluster_curve, cols)
 
     # -- catalog introspection (reference EP3 surface, main.py:87-217) ------
     def get_tables(self, schema: str) -> list[str]:
@@ -266,53 +272,55 @@ class SparkParquetExporter:
             df = df.toDF(*[c.lower() for c in cols])
         return df
 
-    # -- single table (reference export_table, main.py:129-187) -------------
-    def export_table(self, schema: str, table: str) -> ExportResult:
-        t0 = time.perf_counter()
-        out_schema = schema.lower() if self.lowercase_object_names else schema
-        out_table = table.lower() if self.lowercase_object_names else table
-        target = os.path.join(self.output_path, out_schema, out_table)
+    def _name(self, name: str) -> str:
+        return name.lower() if self.lowercase_object_names else name
 
-        df = self.catalog.read_table(schema, table)
+    def _write_table(
+        self, t0: float, schema: str, table: str, df: DataFrame, empty: str, *metrics,
+        row_limit: int = DEFAULT_ROW_LIMIT, staged: bool = False,
+    ) -> tuple[ExportResult, dict]:
+        """Full and incremental export: project, limit, size the rolling
+        from one sample that is also the emptiness probe (skipped as
+        ``empty``), cluster, write observing ``rows`` and ``metrics``.
+        Writes the table dir in reference layout, or, when ``staged``, its
+        ``.delta.tmp`` dir with Spark's names for the caller to commit."""
+        target = os.path.join(self.output_path, self._name(schema), self._name(table))
         projected = self._project(df)
         if projected is None:
             logger.warning("Table %s.%s has no eligible columns - skipping", schema, table)
-            return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "no_eligible_columns")
-        if self.row_limit != DEFAULT_ROW_LIMIT:
-            projected = projected.limit(self.row_limit)
-        # One bounded sample both sizes the rolling threshold (A12) and
-        # probes for rows, so a table exports in two jobs: sample, write.
-        # Size on the PRE-cluster relation: the sample is a cheap limit()
-        # there, but on a range-repartitioned plan it would execute the
-        # clustering shuffle a second time.
+            return ExportResult(
+                schema, table, 0, [], time.perf_counter() - t0, "no_eligible_columns"
+            ), {}
+        if row_limit != DEFAULT_ROW_LIMIT:
+            projected = projected.limit(row_limit)
+        # Sized before clustering, where the sample is a cheap limit().  No
+        # rows, no file: the reference's ParquetWriter is lazy (main.py:165).
         rows_per_file = _rows_per_file(projected, self.parquet_max_file_size)
         if rows_per_file is None:
-            # Reference semantics: empty table -> no file at all (the
-            # ParquetWriter is created lazily on the first batch,
-            # main.py:165-170, so zero batches -> zero files).
-            logger.warning("Table %s.%s is empty - no file written", schema, table)
-            return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "empty")
-
+            logger.info("Table %s.%s: %s - no file written", schema, table, empty)
+            return ExportResult(schema, table, 0, [], time.perf_counter() - t0, empty), {}
+        if self.cluster_by.get(table):
+            projected = curve_clustered(projected, self.cluster_by[table], self.cluster_curve)
         part_cols = self.partition_by.get(table, [])
-        projected = self._cluster(projected, table)
-        # Row count comes from an Observation on the write job itself —
-        # one pass over the data, no post-write re-scan.
-        obs = Observation()
-        observed = projected.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = (
-            observed.write.mode("overwrite")
-            .option("compression", self.compression_method)
-            .option("maxRecordsPerFile", str(rows_per_file))
+        got = _write_rolled(
+            projected,
+            target + _STAGING if staged else target,
+            self.compression_method,
+            rows_per_file,
+            part_cols,
+            (F.count(F.lit(1)).alias("rows"), *metrics),
         )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(target)
-        rows = int(obs.get["rows"])
-        naming = self.reference_file_naming and not part_cols
-        files = _finalize_layout(target, out_table) if naming else []
+        files = [] if staged or part_cols else _finalize_layout(target, self._name(table))
         elapsed = time.perf_counter() - t0
-        logger.info("Exported %s.%s in %.4f s", schema, table, elapsed)
-        return ExportResult(schema, table, rows, files, elapsed, target=target)
+        return ExportResult(schema, table, int(got["rows"]), files, elapsed, target=target), got
+
+    # -- single table (reference export_table, main.py:129-187) -------------
+    def export_table(self, schema: str, table: str) -> ExportResult:
+        t0 = time.perf_counter()
+        df = self.catalog.read_table(schema, table)
+        result, _ = self._write_table(t0, schema, table, df, "empty", row_limit=self.row_limit)
+        logger.info("Exported %s.%s in %.4f s", schema, table, result.seconds)
+        return result
 
     # -- incremental export (watermark high-water-mark pattern) -------------
     # No reference counterpart (the reference always re-exports fully);
@@ -337,16 +345,17 @@ class SparkParquetExporter:
 
     def _save_state(self, state: dict[str, str]) -> None:
         os.makedirs(self.output_path, exist_ok=True)
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._state_path())
+        _dump_json(self._state_path(), state)
 
     def export_table_incremental(
         self, schema: str, table: str, watermark_col: str
     ) -> ExportResult:
         t0 = time.perf_counter()
-        os.makedirs(self.output_path, exist_ok=True)
+        if self.partition_by.get(table):
+            raise ValueError(
+                f"partition_by is not supported for incremental export of "
+                f"{schema}.{table}: the staged delta is committed as flat files"
+            )
         self._recover_pending()
         key = f"{schema}.{table}"
         state = self._load_state()
@@ -375,71 +384,35 @@ class SparkParquetExporter:
             )
         if last is not None:
             df = df.where(F.col(watermark_col) > F.lit(last).cast(wm_field.dataType))
-        projected = self._project(df)
-        if projected is None:
-            return ExportResult(
-                schema, table, 0, [], time.perf_counter() - t0, "no_eligible_columns"
-            )
-        rows_per_file = _rows_per_file(projected, self.parquet_max_file_size)
-        if rows_per_file is None:
-            logger.info("Table %s.%s: no rows past watermark %r", schema, table, last)
-            return ExportResult(schema, table, 0, [], time.perf_counter() - t0, "up_to_date")
-
-        out_schema = schema.lower() if self.lowercase_object_names else schema
-        out_table = table.lower() if self.lowercase_object_names else table
-        target = os.path.join(self.output_path, out_schema, out_table)
-        wm_out = (
-            watermark_col.lower() if self.lowercase_object_names else watermark_col
+        # Crash-consistent append: stage the delta, then commit through a
+        # pending manifest (atomic rename) listing every file move and the
+        # new watermark.  A crash before the manifest leaves only garbage
+        # staging (the next run overwrites it); after it, _recover_pending()
+        # finishes the idempotent moves and advances the watermark before
+        # any new delta.  Append-then-save-state would double-export.
+        result, got = self._write_table(
+            t0, schema, table, df, "up_to_date",
+            F.max(self._name(watermark_col)).alias("wm"), staged=True,
         )
-        obs = Observation()
-        observed = projected.observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.max(wm_out).alias("wm")
-        )
-        # Crash-consistent append: write the delta to a staging dir, then
-        # commit via a pending manifest (atomic os.replace) that lists every
-        # file move and the new watermark.  A crash anywhere replays cleanly:
-        #   - before the manifest: staging is garbage, state unchanged — the
-        #     next run recomputes the same delta and overwrites staging;
-        #   - after the manifest: _recover_pending() finishes the moves
-        #     (each move is idempotent — skip if already done) and advances
-        #     the watermark BEFORE the next delta is computed.
-        # Without this, append-then-save-state double-exports the delta if
-        # the process dies between the two steps.
-        staging = target + ".delta.tmp"
-        (
-            observed.write.mode("overwrite")
-            .option("compression", self.compression_method)
-            .option("maxRecordsPerFile", str(rows_per_file))
-            .parquet(staging)
-        )
-        rows = int(obs.get["rows"])
-        raw_wm = obs.get["wm"]
-        if raw_wm is None:
-            # Non-empty delta whose watermark column is entirely NULL: only
-            # possible on a first run (later runs filter `col > last`, which
-            # excludes NULLs).  str(None) would store the literal "None",
-            # which the next run casts to the watermark type — an ANSI error
-            # or a silent filter-everything.  The rows were staged but no
-            # manifest written, so aborting here is clean (staging is
-            # overwritten on the next attempt, state unchanged).
+        if result.skipped:
+            return result
+        if got["wm"] is None:
+            # All-NULL watermark (first run only: later runs filter
+            # `col > last`).  Storing "None" would poison every later run;
+            # nothing is committed yet, so aborting is clean.
             raise ValueError(
                 f"Watermark column {watermark_col!r} is NULL for every row of "
                 f"{schema}.{table}; incremental export needs at least one "
                 f"non-NULL watermark value to record a high-water mark"
             )
-        new_wm = str(raw_wm)
+        target, staging = result.target, result.target + _STAGING
         os.makedirs(target, exist_ok=True)
-        moves = _reference_names(staging, target, out_table)
+        moves = _reference_names(staging, target, self._name(table))
         manifest = {"key": key, "target": target, "staging": staging,
-                    "watermark": new_wm, "moves": moves}
-        mtmp = self._pending_path() + ".tmp"
-        with open(mtmp, "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(mtmp, self._pending_path())
+                    "watermark": str(got["wm"]), "moves": moves}
+        _dump_json(self._pending_path(), manifest)
         files = self._commit_pending(manifest, state)
-        return ExportResult(
-            schema, table, rows, files, time.perf_counter() - t0, target=target
-        )
+        return dataclasses.replace(result, files=files, seconds=time.perf_counter() - t0)
 
     def _pending_path(self) -> str:
         return os.path.join(self.output_path, "_incremental_pending.json")
@@ -472,12 +445,8 @@ class SparkParquetExporter:
         """Finish a commit interrupted by a crash: if a pending manifest
         exists, its delta was fully staged but possibly only partially
         moved — complete the moves and watermark advance before computing
-        any new delta (otherwise the same rows would export twice).
-        Afterwards sweep staging directories no manifest references: a
-        crash *before* the manifest is written leaves ``*.delta.tmp``
-        garbage that would otherwise persist forever (and confuse
-        recursive parquet globs) unless the same table happened to run
-        incrementally again."""
+        any new delta (otherwise the same rows would export twice).  One
+        file probe when nothing is pending."""
         if os.path.exists(self._pending_path()):
             with open(self._pending_path()) as fh:
                 manifest = json.load(fh)
@@ -486,16 +455,14 @@ class SparkParquetExporter:
                 manifest["key"], len(manifest["moves"]),
             )
             self._commit_pending(manifest, self._load_state())
-        self._sweep_orphan_staging()
 
     def _sweep_orphan_staging(self) -> None:
-        """Delete ``*.delta.tmp`` staging dirs under the output path.  Only
-        called when no pending manifest exists (recovery just completed or
-        none was needed) and before any new staging is written, so every
-        surviving staging dir is an orphan from a pre-manifest crash."""
+        """Delete the ``*.delta.tmp`` dirs a crash before the manifest
+        write left behind (they would confuse recursive parquet globs).
+        Called after recovery, before any new staging: all are orphans."""
         for root, dirs, _files in os.walk(self.output_path):
             for d in list(dirs):
-                if d.endswith(".delta.tmp"):
+                if d.endswith(_STAGING):
                     orphan = os.path.join(root, d)
                     logger.warning("Removing orphaned staging directory %s", orphan)
                     shutil.rmtree(orphan)
@@ -510,13 +477,11 @@ class SparkParquetExporter:
         the per-table high-water marks in ``_incremental_state.json``."""
         os.makedirs(self.output_path, exist_ok=True)
         self._recover_pending()
+        self._sweep_orphan_staging()
         results: list[ExportResult] = []
         matched: set[str] = set()
-        schemas = self.schemas or self.catalog.list_schemas()
-        for schema in schemas:
-            for table in self.catalog.list_tables(
-                schema, self.table_name_include_pattern, self.table_name_exclude_pattern
-            ):
+        for schema in self.schemas or self.catalog.list_schemas():
+            for table in self.get_tables(schema):
                 if table in watermarks:
                     matched.add(table)
                     results.append(
@@ -544,21 +509,22 @@ class SparkParquetExporter:
         os.makedirs(self.output_path, exist_ok=True)
 
         results: list[ExportResult] = []
-        schemas = self.schemas or self.catalog.list_schemas()
-        for schema in schemas:
-            t_schema = time.perf_counter()
-            tables = self.catalog.list_tables(
-                schema, self.table_name_include_pattern, self.table_name_exclude_pattern
-            )
-            if self.max_concurrent_tables > 1:
-                with ThreadPoolExecutor(max_workers=self.max_concurrent_tables) as pool:
-                    results.extend(pool.map(lambda t: self.export_table(schema, t), tables))
-            else:
-                for table in tables:
-                    results.append(self.export_table(schema, table))
-            logger.info(
-                "Exported schema: %s in %.4f s", schema, time.perf_counter() - t_schema
-            )
+        # One loop for every max_concurrent_tables (1 = serial).  Pool
+        # threads do not inherit the caller's Spark local properties (job
+        # group, description, scheduler pool); the wrapper copies them in.
+        # Given the session, PySpark would also copy job tags, but it then
+        # fails when PYSPARK_PIN_THREAD=false; without it, it warns that
+        # tags are not copied, which this exporter does not use.
+        with warnings.catch_warnings():
+            warnings.filterwarnings("ignore", "Spark session is not provided")
+            export = inheritable_thread_target(self.export_table)
+        with ThreadPoolExecutor(max_workers=self.max_concurrent_tables) as pool:
+            for schema in self.schemas or self.catalog.list_schemas():
+                t_schema = time.perf_counter()
+                results.extend(pool.map(partial(export, schema), self.get_tables(schema)))
+                logger.info(
+                    "Exported schema: %s in %.4f s", schema, time.perf_counter() - t_schema
+                )
         logger.info("Exported all schemas in %.4f s", time.perf_counter() - t_all)
         return results
 
@@ -624,36 +590,30 @@ def compact_table(
     # holding the (complete) pre-compaction data.  If the live dir is
     # missing, restore it before proceeding; if both exist, the swap
     # completed and the old copy is stale garbage.
-    stale = path.rstrip("/") + ".compact.old"
-    if os.path.exists(stale):
+    path = path.rstrip("/")
+    old = path + ".compact.old"
+    if os.path.exists(old):
         if not os.path.exists(path):
-            os.rename(stale, path)
+            os.rename(old, path)
         else:
-            shutil.rmtree(stale)
+            shutil.rmtree(old)
     # Refuse to compact while a crashed incremental commit is pending for
     # this directory: compaction renumbers files from <table>_0, but the
     # manifest's staged moves were computed against the PRE-compaction
     # numbering — replaying them afterwards would overwrite compacted data
     # files.  The manifest lives at the exporter's output root; probe the
     # ancestors of the table dir (layout is <out>/<schema>/<table>).
-    probe = os.path.dirname(os.path.abspath(path.rstrip("/")))
-    for _ in range(3):
-        pending = os.path.join(probe, "_incremental_pending.json")
-        if os.path.exists(pending):
-            with open(pending) as fh:
-                manifest = json.load(fh)
-            if os.path.abspath(manifest.get("target", "")) == os.path.abspath(
-                path.rstrip("/")
-            ):
-                raise RuntimeError(
-                    f"A pending incremental commit targets {path}; run the "
-                    f"incremental exporter once to recover it before compacting"
-                )
-            break  # manifest found but for another table — safe
-        parent = os.path.dirname(probe)
-        if parent == probe:
-            break
-        probe = parent
+    live = os.path.abspath(path)
+    pending = [
+        m for d in list(Path(live).parents)[:3]
+        if (m := d / "_incremental_pending.json").exists()
+    ]
+    # The nearest manifest counts; one for another table is safe.
+    if pending and os.path.abspath(json.loads(pending[0].read_text()).get("target", "")) == live:
+        raise RuntimeError(
+            f"A pending incremental commit targets {path}; run the "
+            f"incremental exporter once to recover it before compacting"
+        )
     # A raw read, not read_parquet_robust: compaction must write back
     # exactly the types it read (no nanosecond-timestamp conversion).
     df = spark.read.parquet(path)
@@ -661,26 +621,12 @@ def compact_table(
     rows_per_file = _rows_per_file(df, target_file_size) or max(1, int(target_file_size / 1000))
     n_files = max(1, (df.count() + rows_per_file - 1) // rows_per_file)
 
-    tmp = path.rstrip("/") + ".compact.tmp"
+    tmp = path + ".compact.tmp"
     if cluster_by:
-        from oracle_parquet_dumper_spark.sources.layouts import hilbert_key, zorder_key
-
-        if cluster_curve == "hilbert":
-            keyed, key = hilbert_key(df, cluster_by), "_h"
-        elif cluster_curve == "zorder":
-            keyed, key = zorder_key(df, cluster_by), "_z"
-        else:
-            raise ValueError(f"cluster_curve must be 'hilbert' or 'zorder', got {cluster_curve!r}")
-        out_df = keyed.repartitionByRange(n_files, key).sortWithinPartitions(key).drop(key)
+        df = curve_clustered(df, cluster_by, cluster_curve, n_files)
     else:
-        out_df = df.repartition(n_files)
-    (
-        out_df
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(rows_per_file))
-        .parquet(tmp)
-    )
+        df = df.repartition(n_files)
+    _write_rolled(df, tmp, compression, rows_per_file)
     # Atomic-ish swap: never leave a window where the live dir is gone.
     # rmtree-then-rename would lose the table entirely if we crash between
     # the two (the incremental state still records the high-water mark, so
@@ -688,9 +634,6 @@ def compact_table(
     # move the live dir aside, rename tmp into place, then delete the old
     # copy; a crash at any point leaves either the old or the new data
     # present, and a leftover ``.compact.old`` is recovered on re-run.
-    old = path.rstrip("/") + ".compact.old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
     os.rename(path, old)
     try:
         os.rename(tmp, path)

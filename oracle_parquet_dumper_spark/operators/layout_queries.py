@@ -69,7 +69,7 @@ def _zorder_tiles_sql() -> str:
 def layout_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering audit: Morton key over (l_partkey, l_suppkey)
     via ``sources.layouts.zorder_key`` (the same expression
-    ``write_zordered`` sorts files by), rolled up into the 256 top-level
+    ``curve_clustered(..., "zorder")`` sorts files by), rolled up into the 256 top-level
     z-tiles with each tile's min/max envelope on BOTH columns.
 
     The output is the file-skipping story made checkable: every tile's

@@ -2,7 +2,7 @@
 
 The engine's incremental/compaction/Z-order story is implemented on
 plain parquet (exporter.compact_table's atomic dir swap + crash replay,
-sources/layouts.write_zordered) because ``import delta`` fails in this
+and its ``cluster_by`` curve clustering) because ``import delta`` fails in this
 container.  Where delta-spark IS installed, the same operations are a
 transaction-log one-liner — this module is the probe + the Delta-backed
 variants, following the transformWithState precedent
@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 FALLBACK = (
     "delta-spark is not installed; use the plain-parquet equivalents: "
     "exporter.compact_table (atomic small-file compaction with crash "
-    "replay) and sources.layouts.write_zordered (OPTIMIZE ZORDER "
+    "replay; compact_table(cluster_by=...) for OPTIMIZE ZORDER "
     "re-clustering). Install delta-spark and configure "
     "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension to "
     "enable the transaction-log path."
@@ -70,7 +70,7 @@ def compact_delta(
     spark: SparkSession, path: str, zorder_cols: list[str] | None = None
 ) -> None:
     """OPTIMIZE (+ ZORDER BY) — the Delta twin of
-    exporter.compact_table + layouts.write_zordered.  Readers are never
+    exporter.compact_table(cluster_by=...).  Readers are never
     blocked: the log swaps file sets atomically, the same contract the
     parquet path gets from its ``.compact.old`` dir swap."""
     require_delta()

@@ -2,8 +2,8 @@
 
 Same contract as the Delta probe (sources/delta.py): the engine's
 snapshot/compaction/clustering story is implemented on plain parquet
-(exporter.compact_table's atomic dir swap, sources/layouts's bucketed
-and Z-ordered layouts) because neither the ``pyiceberg`` bindings nor
+(exporter.compact_table's atomic dir swap and curve clustering,
+sources/layouts's bucketed layouts) because neither the ``pyiceberg`` bindings nor
 the ``iceberg-spark-runtime`` jars are in this container.  Where they
 ARE installed, the same operations are a table-format one-liner — this
 module is the probe, the documented session config, and the
@@ -27,9 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 FALLBACK = (
     "Iceberg is not available; use the plain-parquet equivalents: "
     "exporter.compact_table (atomic small-file compaction with crash "
-    "replay), sources.layouts.ensure_bucketed_state (standing bucketed "
-    "layouts) and sources.layouts.write_zordered (space-filling-curve "
-    "re-clustering). Install the iceberg-spark-runtime jar matching "
+    "replay; compact_table(cluster_by=...) for space-filling-curve "
+    "re-clustering) and sources.layouts.ensure_bucketed_state (standing "
+    "bucketed layouts). Install the iceberg-spark-runtime jar matching "
     "your Spark version and configure an Iceberg catalog "
     "(spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog) "
     "to enable the table-format path."

@@ -317,9 +317,53 @@ def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: st
     return spark.table(left_table).hint("merge").join(spark.table(right_table), on)
 
 
-# --- Z-order clustering (multi-dimensional file skipping) ------------------
+# --- Space-filling-curve clustering (multi-dimensional file skipping) -------
 
 ZORDER_BITS = 16
+
+
+def check_curve(curve: str, cols: list[str] | None = None) -> None:
+    """ValueError for an unknown curve, or a Hilbert over other than 2 ``cols``."""
+    if curve not in ("hilbert", "zorder"):
+        raise ValueError(f"cluster_curve must be 'hilbert' or 'zorder', got {curve!r}")
+    if curve == "hilbert" and cols is not None and len(cols) != 2:
+        raise ValueError(f"hilbert clustering needs exactly 2 columns, got {cols} (use zorder)")
+
+
+def curve_clustered(
+    df: DataFrame, cols: list[str], curve: str, n: int | None = None
+) -> DataFrame:
+    """Range-repartition ``df`` on a ``curve`` key over ``cols`` (one
+    sampling shuffle into ``n`` partitions, default the shuffle partition
+    count), sort within each, drop the key: rolled files come out as
+    disjoint curve-range tiles, tight on every clustered column."""
+    check_curve(curve, cols)
+    key_of, key = (hilbert_key, "_h") if curve == "hilbert" else (zorder_key, "_z")
+    keyed = key_of(df, cols)
+    return keyed.repartitionByRange(*([n] if n else []), key).sortWithinPartitions(key).drop(key)
+
+
+def _with_scaled(df: DataFrame, cols: list[str], bits: int):
+    """``df`` cross-joined with its in-plan broadcast min/max row, each of
+    ``cols`` min-max scaled to ``bits`` bits, and the bound columns."""
+    from pyspark.sql import functions as F
+
+    mins_maxes = df.agg(
+        *[F.min(F.col(c).cast("double")).alias(f"_mn_{i}") for i, c in enumerate(cols)],
+        *[F.max(F.col(c).cast("double")).alias(f"_mx_{i}") for i, c in enumerate(cols)],
+    )
+    top = (1 << bits) - 1
+    scaled = []
+    for i, c in enumerate(cols):
+        mn, mx = F.col(f"_mn_{i}"), F.col(f"_mx_{i}")
+        span = F.when(mx > mn, mx - mn).otherwise(F.lit(1.0))
+        scaled.append(
+            F.least(
+                F.floor((F.col(c).cast("double") - mn) / span * top).cast("long"), F.lit(top)
+            )
+        )
+    bounds = [f"_m{x}_{i}" for x in "nx" for i in range(len(cols))]
+    return df.crossJoin(F.broadcast(mins_maxes)), scaled, bounds
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
@@ -352,50 +396,14 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
             f"(signed-long overflow would corrupt the sort order); "
             f"use bits <= {63 // n} for {n} columns"
         )
-    mins_maxes = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"_mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"_mx_{i}") for i, c in enumerate(cols)],
-    )
-    j = df.crossJoin(F.broadcast(mins_maxes))
-    top = (1 << bits) - 1
-    terms = []
-    for i, c in enumerate(cols):
-        mn, mx = F.col(f"_mn_{i}"), F.col(f"_mx_{i}")
-        span = F.when(mx > mn, mx - mn).otherwise(F.lit(1.0))
-        scaled = F.least(
-            F.floor((F.col(c).cast("double") - mn) / span * top).cast("long"), F.lit(top)
-        )
-        for b in range(bits):
-            terms.append(
-                F.shiftleft(F.shiftrightunsigned(scaled, b).bitwiseAND(F.lit(1)), b * n + i)
-            )
+    j, scaled, bounds = _with_scaled(df, cols, bits)
+    terms = [
+        F.shiftleft(F.shiftrightunsigned(s, b).bitwiseAND(F.lit(1)), b * n + i)
+        for i, s in enumerate(scaled)
+        for b in range(bits)
+    ]
     # bit positions are disjoint, so summing assembles the Morton code
-    z = reduce(add, terms)
-    return j.withColumn("_z", z).drop(*[f"_mn_{i}" for i in range(n)], *[f"_mx_{i}" for i in range(n)])
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int,
-    compression: str = "zstd",
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered by the Morton
-    key: range-repartition on ``_z`` (contiguous key ranges per file,
-    one skew-resistant sampling shuffle) + within-partition sort, then
-    drop the key.  Files come out as disjoint z-range tiles, which is
-    exactly the property row-group pruning needs."""
-    keyed = zorder_key(df, cols)
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .option("compression", compression)
-        .parquet(path)
-    )
+    return j.withColumn("_z", reduce(add, terms)).drop(*bounds)
 
 
 def hilbert_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
@@ -417,29 +425,13 @@ def hilbert_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
     operators/layout_queries.py mirrors it CTE-for-CTE)."""
     from pyspark.sql import functions as F
 
-    if len(cols) != 2:
-        raise ValueError("hilbert_key supports exactly 2 columns")
+    check_curve("hilbert", cols)
     if 2 * bits > 62:
         raise ValueError(f"hilbert_key: 2*bits = {2 * bits} exceeds 62 (signed-long overflow)")
-    mins_maxes = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"_mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"_mx_{i}") for i, c in enumerate(cols)],
-    )
-    j = df.crossJoin(F.broadcast(mins_maxes))
-    top = (1 << bits) - 1
-    scaled = []
-    for i, c in enumerate(cols):
-        mn, mx = F.col(f"_mn_{i}"), F.col(f"_mx_{i}")
-        span = F.when(mx > mn, mx - mn).otherwise(F.lit(1.0))
-        scaled.append(
-            F.least(
-                F.floor((F.col(c).cast("double") - mn) / span * top).cast("long"), F.lit(top)
-            )
-        )
-    base = j.withColumn("_hx", scaled[0]).withColumn("_hy", scaled[1]).withColumn(
+    j, scaled, bounds = _with_scaled(df, cols, bits)
+    cur = j.withColumn("_hx", scaled[0]).withColumn("_hy", scaled[1]).withColumn(
         "_h", F.lit(0).cast("long")
     )
-    cur = base
     for lvl in range(bits - 1, -1, -1):
         s = 1 << lvl
         x, y, d = F.col("_hx"), F.col("_hy"), F.col("_h")
@@ -453,6 +445,4 @@ def hilbert_key(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS):
         nx = F.when(ry == 0, fy).otherwise(x)
         ny = F.when(ry == 0, fx).otherwise(y)
         cur = cur.withColumns({"_h": d2, "_hx": nx, "_hy": ny})
-    return cur.drop(
-        "_hx", "_hy", *[f"_mn_{i}" for i in range(2)], *[f"_mx_{i}" for i in range(2)]
-    )
+    return cur.drop("_hx", "_hy", *bounds)

@@ -30,7 +30,7 @@ def test_delta_probe_contract():
         with pytest.raises(RuntimeError) as ei:
             require_delta()
         msg = str(ei.value)
-        assert "compact_table" in msg and "write_zordered" in msg
+        assert "compact_table" in msg and "compact_table(cluster_by=...)" in msg
         assert FALLBACK in msg
 
 

@@ -234,6 +234,27 @@ def test_concurrent_table_export(spark, source_dir, tmp_path):
         assert os.path.exists(os.path.join(out, "main", t, f"{t}_0.parquet"))
 
 
+def test_concurrent_export_runs_in_callers_job_group(spark, source_dir, tmp_path, count_jobs):
+    """Pool threads carry the caller's Spark local properties: every job
+    of a concurrent export lands in the caller's job group, as many as a
+    serial export runs."""
+    catalog = ParquetDirectoryCatalog(spark, source_dir)
+    for t in ("REGION", "NATION"):
+        catalog.read_table("main", t)  # schema memo warm: same jobs on both runs
+    jobs = {}
+    for n in (1, 2):
+        exp = SparkParquetExporter(
+            spark=spark,
+            catalog=catalog,
+            output_path=str(tmp_path / f"out{n}"),
+            table_name_include_pattern="REGION|NATION",
+            max_concurrent_tables=n,
+        )
+        results, jobs[n] = count_jobs(exp.export_tables)
+        assert [r.rows for r in results] == [25, 5]
+    assert jobs[1] == jobs[2] > 0, jobs
+
+
 def test_rows_from_observed_metric(spark, source_dir, tmp_path):
     """ExportResult.rows comes from the write job's Observation — always
     populated (reference parity: rows_exported is always reported), with
@@ -242,10 +263,7 @@ def test_rows_from_observed_metric(spark, source_dir, tmp_path):
     results = exporter(spark, source_dir, out, table_name_include_pattern="REGION")
     assert results[0].rows == 5
     out2 = str(tmp_path / "out2")
-    results2 = exporter(
-        spark, source_dir, out2, table_name_include_pattern="NATION",
-        reference_file_naming=False,
-    )
+    results2 = exporter(spark, source_dir, out2, table_name_include_pattern="NATION")
     assert results2[0].rows == 25
     out3 = str(tmp_path / "out3")
     results3 = exporter(
@@ -819,24 +837,62 @@ def test_clustered_export_tightens_file_envelopes(spark, tmp_path):
     )
     results = ex.export_tables()
     assert results[0].skipped is None and results[0].rows == 6000
-    table_dir = os.path.join(out, "main", "lineitem")
-    files = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
-    assert len(files) >= 4
-    import pyarrow.parquet as _pq
+    _assert_tight_envelopes(results[0], 6000)
 
+
+def _assert_tight_envelopes(result, rows):
+    """The files of ``result`` (sf0.001 lineitem clustered on
+    l_partkey, l_suppkey) hold ``rows`` rows, number at least four, and
+    average a per-file min/max envelope well under the full span on BOTH
+    clustered columns."""
+    files = result.files
+    assert len(files) >= 4
     total = 0
     spans = {"l_partkey": [], "l_suppkey": []}
     full = {"l_partkey": (0, 199), "l_suppkey": (0, 9)}
     for f in files:
-        t = _pq.read_table(os.path.join(table_dir, f))
+        t = pq.read_table(os.path.join(result.target, f))
         total += t.num_rows
         for c in spans:
             col = t.column(c).to_pylist()
             spans[c].append((max(col) - min(col) + 1) / (full[c][1] - full[c][0] + 1))
-    assert total == 6000
-    # clustered: average envelope well under the full span on BOTH dims
+    assert total == rows
     assert sum(spans["l_partkey"]) / len(files) < 0.6
     assert sum(spans["l_suppkey"]) / len(files) < 0.8
+
+
+def test_incremental_delta_is_clustered(spark, tmp_path):
+    """cluster_by applies to incremental deltas too: a second delta
+    rolled into several files has the same tight per-file envelopes as
+    a clustered full export.  partition_by is refused for incremental
+    export, naming the table."""
+    import pyarrow.compute as pc
+
+    lineitem = pq.read_table("/root/testdata/sf0.001/lineitem.parquet")
+    early = pc.less(lineitem["l_orderkey"], 300)
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(lineitem.filter(early), src / "lineitem.parquet")
+    exp = SparkParquetExporter(
+        spark=spark,
+        catalog=ParquetDirectoryCatalog(spark, str(src)),
+        output_path=str(tmp_path / "out"),
+        parquet_max_file_size=60_000,
+        cluster_by={"lineitem": ["l_partkey", "l_suppkey"]},
+    )
+    (first,) = exp.export_tables_incremental({"lineitem": "l_orderkey"})
+    assert first.rows == pc.sum(early).as_py()
+    os.remove(src / "lineitem.parquet")
+    pq.write_table(lineitem, src / "lineitem.parquet")
+    (delta,) = exp.export_tables_incremental({"lineitem": "l_orderkey"})
+    rows = lineitem.num_rows - first.rows
+    assert delta.rows == rows
+    assert not set(delta.files) & set(first.files)
+    _assert_tight_envelopes(delta, rows)
+
+    exp.partition_by = {"lineitem": ["l_returnflag"]}
+    with pytest.raises(ValueError, match="main.lineitem"):
+        exp.export_table_incremental("main", "lineitem", "l_orderkey")
 
 
 def test_cluster_curve_validation():
@@ -910,6 +966,24 @@ def test_cluster_env_var_parsing():
     }
 
 
+def test_list_flags_replace_their_env_defaults(monkeypatch):
+    """--incremental and --cluster replace INCREMENTAL_TABLES /
+    CLUSTER_TABLES like every other flag overrides its env var; the env
+    value applies only when the flag is absent."""
+    from oracle_parquet_dumper_spark.cli import build_parser
+
+    monkeypatch.setenv("INCREMENTAL_TABLES", "A:id")
+    monkeypatch.setenv("CLUSTER_TABLES", "A:x,y")
+    args = build_parser().parse_args(
+        ["--incremental", "B:ts", "--incremental", "C:n", "--cluster", "B:u,v"]
+    )
+    assert args.incremental == ["B:ts", "C:n"]
+    assert args.cluster == ["B:u,v"]
+    args = build_parser().parse_args([])
+    assert args.incremental == ["A:id"]
+    assert args.cluster == ["A:x,y"]
+
+
 def test_cli_rejects_hilbert_with_wrong_width(tmp_path):
     from oracle_parquet_dumper_spark.cli import main
 
@@ -952,6 +1026,46 @@ def test_export_job_count_and_jobless_validation(spark, source_dir, tmp_path, co
     assert got == 0
     assert [v.table for v in report] == ["NATION", "REGION"]
     assert all(v.ok for v in report), [v.issues for v in report]
+
+
+def test_incremental_compaction_and_clustering_job_counts(spark, tmp_path, count_jobs):
+    """Spark jobs per operation, pinned so a change to the shared write
+    path cannot add one unnoticed.  A delta costs the size sample and
+    the write (the sample alone when up to date); a clustered delta runs
+    the same jobs as a clustered full export."""
+    from oracle_parquet_dumper_spark.exporter import compact_table
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"id": pa.array(range(100), pa.int64()),
+                  "a": pa.array([i % 7 for i in range(100)], pa.int64()),
+                  "b": pa.array([i % 11 for i in range(100)], pa.int64())}),
+        src / "T.parquet",
+    )
+    catalog = ParquetDirectoryCatalog(spark, str(src))
+    catalog.read_table("main", "T")  # schema memo warm, as in the test above
+
+    def exp(out, **kw):
+        return SparkParquetExporter(
+            spark=spark, catalog=catalog, output_path=str(tmp_path / out), **kw
+        )
+
+    clustered = {"cluster_by": {"T": ["a", "b"]}}
+    plain = exp("inc")
+    expected = [
+        ("clustered export", lambda: exp("full", **clustered).export_table("main", "T"), 6),
+        ("first delta", lambda: plain.export_table_incremental("main", "T", "id"), 2),
+        ("up to date", lambda: plain.export_table_incremental("main", "T", "id"), 1),
+        ("clustered delta",
+         lambda: exp("incc", **clustered).export_table_incremental("main", "T", "id"), 6),
+        ("compaction", lambda: compact_table(spark, str(tmp_path / "inc/main/T"), "T"), 6),
+        ("clustered compaction",
+         lambda: compact_table(spark, str(tmp_path / "inc/main/T"), "T", cluster_by=["a", "b"]),
+         8),
+    ]
+    got = {name: count_jobs(fn)[1] for name, fn, _n in expected}
+    assert got == {name: n for name, _fn, n in expected}
 
 
 def _rolled_nation(spark, source_dir, out):

@@ -86,7 +86,7 @@ def test_zorder_tightens_file_ranges_on_both_dims(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from oracle_parquet_dumper_spark.sources.layouts import write_zordered
+    from oracle_parquet_dumper_spark.sources.layouts import curve_clustered
 
     n = 1 << 14
     df = spark.range(n).select(
@@ -95,7 +95,7 @@ def test_zorder_tightens_file_ranges_on_both_dims(spark, tmp_path):
     )
 
     zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lin")
-    write_zordered(df, zpath, ["a", "b"], n_files=16)
+    curve_clustered(df, ["a", "b"], "zorder", n=16).write.mode("overwrite").parquet(zpath)
     (
         df.repartitionByRange(16, "a")
         .sortWithinPartitions("a")
