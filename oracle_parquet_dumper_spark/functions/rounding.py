@@ -25,10 +25,3 @@ _Q6 = Decimal("0.000001")
 def round6(x: float) -> float:
     """Replica of Spark ``F.round(double, 6)`` / DuckDB ``round(x, 6)``."""
     return float(Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP))
-
-
-def dec6(x: float) -> Decimal:
-    """Replica of ``CAST(double AS DECIMAL(25,6))`` — the exact-sum
-    convention: quantize each value, then sum with exact decimal
-    addition (order-independent)."""
-    return Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP)

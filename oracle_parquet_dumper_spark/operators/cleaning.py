@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
@@ -46,19 +47,14 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
 SPAN_TOKENS = 8  # C4 span width (non-overlapping, stride == width)
 
-_TOKS_SQL = "list_filter(string_split(lower(text), ' '), t -> length(t) > 0)"
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
-
-
-def _toks_col():
-    return F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
 
 
 @query(
     "clean_gopher_quality",
     oracle=f"""
     WITH d AS (
-      SELECT doc_id, lower(text) AS lt, {_TOKS_SQL} AS toks
+      SELECT doc_id, lower(text) AS lt, {words_sql()} AS toks
       FROM documents WHERE length(text) > 0
     ),
     m AS (
@@ -89,7 +85,7 @@ def clean_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ratios are integer-counter quotients rounded to 6 places (the
     bit-exactness convention); the keep flag ANDs the gates."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    base = d.select("doc_id", F.lower("text").alias("lt"), _toks_col().alias("toks"))
+    base = d.select("doc_id", F.lower("text").alias("lt"), words().alias("toks"))
     n_words = F.size("toks").cast("long")
     mean_word_len = F.round(
         F.length(F.concat_ws("", F.col("toks"))) * F.lit(1.0) / F.size("toks"), 6
@@ -125,7 +121,7 @@ def clean_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clean_span_freq_dedup",
     oracle=f"""
     WITH docs AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks
+      SELECT doc_id, {words_sql()} AS toks
       FROM documents WHERE length(text) > 0
     ),
     spans AS (
@@ -165,7 +161,7 @@ def clean_span_freq_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     750 GB."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
     base = (
-        d.select("doc_id", _toks_col().alias("toks"))
+        d.select("doc_id", words().alias("toks"))
         .withColumn("n", F.size("toks"))
         .where(F.col("n") >= SPAN_TOKENS)
     )
@@ -202,7 +198,7 @@ def clean_span_freq_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clean_length_band",
     oracle=f"""
     WITH d AS (
-      SELECT doc_id, len({_TOKS_SQL}) AS n_tok
+      SELECT doc_id, len({words_sql()}) AS n_tok
       FROM documents WHERE length(text) > 0
     ),
     dist AS (SELECT n_tok, COUNT(*) AS cnt FROM d GROUP BY n_tok),
@@ -238,7 +234,7 @@ def clean_length_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .where(F.length("text") > 0)
-        .select("doc_id", F.size(_toks_col()).alias("n_tok"))
+        .select("doc_id", F.size(words()).alias("n_tok"))
     )
     dist = d.groupBy("n_tok").agg(F.count(F.lit(1)).alias("cnt"))
     w_cum = W.orderBy("n_tok").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -266,7 +262,7 @@ def clean_length_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     ne AS (SELECT doc_id, text FROM d WHERE length(text) > 0),
     m AS (
       SELECT doc_id, text FROM (
-        SELECT doc_id, text, lower(text) AS lt, {_TOKS_SQL} AS toks FROM ne
+        SELECT doc_id, text, lower(text) AS lt, {words_sql()} AS toks FROM ne
       )
       WHERE len(toks) BETWEEN {MIN_WORDS} AND {MAX_WORDS}
         AND round(length(array_to_string(toks, '')) * 1.0 / len(toks), 6)
@@ -304,7 +300,7 @@ def pipeline_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-row result assembles via union of 1-row aggregates."""
     d = load_table(spark, sf_dir, "documents")
     ne = d.where(F.length("text") > 0)
-    base = ne.select("doc_id", "text", F.lower("text").alias("lt"), _toks_col().alias("toks"))
+    base = ne.select("doc_id", "text", F.lower("text").alias("lt"), words().alias("toks"))
     keep = (
         F.size("toks").cast("long").between(MIN_WORDS, MAX_WORDS)
         & F.round(

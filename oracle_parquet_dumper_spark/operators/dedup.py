@@ -25,6 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
+from oracle_parquet_dumper_spark.functions.tokens import (
+    md5_long,
+    md5_long_sql,
+    shingles,
+    words,
+    words_sql,
+)
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded, cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -45,17 +52,6 @@ MINHASH_P = 2_147_483_647
 _mh_rng = __import__("numpy").random.default_rng(13)
 MINHASH_A = [int(x) for x in _mh_rng.integers(1, MINHASH_P, N_MINHASH)]
 MINHASH_B = [int(x) for x in _mh_rng.integers(0, MINHASH_P, N_MINHASH)]
-
-
-def _md5_long(col) -> "F.Column":
-    """First 15 hex digits of md5 as a 60-bit long — the portable
-    64-bit-ish hash both Spark (conv) and DuckDB ('0x' cast) compute
-    identically."""
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
-
-
-def _md5_long_sql(expr: str) -> str:
-    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def _affine_min_sql(i: int, sh_expr: str) -> str:
@@ -82,9 +78,8 @@ def _participant_shingle_sets(d: DataFrame, pairs: DataFrame) -> DataFrame:
         .union(pairs.select(F.col("b").alias("doc_id")))
         .distinct()
     )
-    return d.join(participants, "doc_id", "left_semi").select(
-        "doc_id", F.array_distinct(F.transform(shingles(F.col("text")), _md5_long)).alias("ss")
-    )
+    ss = F.array_distinct(F.transform(shingles(words()), lambda s: md5_long(s)))
+    return d.join(participants, "doc_id", "left_semi").select("doc_id", ss.alias("ss"))
 
 
 def _minhash_pairs(
@@ -138,43 +133,7 @@ def dedup_exact_multicol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shingles(col, k: int = 3):
-    """Word k-gram shingles as strings, joined with unit-separator \\x1f
-    (cannot occur inside whitespace-split tokens, so 'ab'+'c' != 'a'+'bc').
-    Documents shorter than k words contribute one whole-text shingle."""
-    toks = F.filter(F.split(F.lower(col), " "), lambda t: F.length(t) > 0)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    gram = F.transform(
-        idx, lambda i: F.concat_ws("\x1f", *[F.element_at(toks, i + j) for j in range(k)])
-    )
-    return F.when(n >= k, gram).otherwise(F.array(F.concat_ws("\x1f", toks)))
-
-
-def _seeded_min_hash(shingle_col, seed: int):
-    # NB: the lambda must take exactly one arg — a second arg would be
-    # interpreted by transform() as the array index, not a closure var.
-    a, b = MINHASH_A[seed], MINHASH_B[seed]
-    return F.array_min(
-        F.transform(
-            shingle_col,
-            lambda s: (F.lit(a) * (_md5_long(s) % MINHASH_P) + F.lit(b)) % MINHASH_P,
-        )
-    )
-
-
-def minhash_signature(shingle_col):
-    """N_MINHASH independent min-hashes as one array expression (md5 +
-    affine permutations, same family as ``minhash_signatures_df``).
-
-    WARNING: only for small inputs/tests — Catalyst does NOT common-
-    subexpression-eliminate the shingle array across the N array_min
-    branches, so the shingle computation runs N times per row.  The
-    scalable path is ``minhash_signatures_df`` (explode + min-agg)."""
-    return F.array(*[_seeded_min_hash(shingle_col, i) for i in range(N_MINHASH)])
-
-
-def minhash_signatures_df(docs: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+def minhash_signatures_df(docs: DataFrame) -> DataFrame:
     """Scalable MinHash with ZERO shuffles: signatures are pure per-row
     array expressions, staged so nothing is recomputed.
 
@@ -198,8 +157,7 @@ def minhash_signatures_df(docs: DataFrame, text_col: str = "text", k: int = 3) -
     Documents with no whitespace-delimited tokens (empty or all-space
     text) produce no signature row, matching the exploding formulations
     and the SQL twin (``_minhash_sig_sql``).  Documents shorter than k
-    tokens contribute one whole-text shingle (the ``shingles()``
-    convention)."""
+    tokens contribute one whole-text shingle (``tokens.shingles``)."""
     from oracle_parquet_dumper_spark.sources.tables import split_scan
 
     # r14: the signature build is the dedup family's dominant linear
@@ -207,35 +165,21 @@ def minhash_signatures_df(docs: DataFrame, text_col: str = "text", k: int = 3) -
     # fixture scan plans ONE task — restore scan parallelism adaptively
     # (no-op when the source is already split; see split_scan).
     docs = split_scan(docs, cpu_weight=32)
-    toks = F.filter(F.split(F.lower(text_col), " "), lambda t: F.length(t) > 0)
-    t1 = docs.select("doc_id", toks.alias("toks")).where(F.size("toks") > 0)
+    t1 = docs.select("doc_id", words().alias("toks")).where(F.size("toks") > 0)
     t2 = t1.select("doc_id", minhash_shingle_hashes_from_toks().alias("shm"))
     return minhash_sig_from_shm(t2)
 
 
-def minhash_shingle_hashes_from_toks(toks_col: str = "toks", k: int = 3):
-    """Column: md5 shingle-hash array over a materialized token-array
-    column — stage (2) of ``minhash_signatures_df``, exposed so a
-    caller that must materialize an intermediate (pipeline_curation's
+def minhash_shingle_hashes_from_toks():
+    """Column: md5 shingle-hash array over the materialized token-array
+    column ``toks`` — stage (2) of ``minhash_signatures_df``, exposed so
+    a caller that must materialize an intermediate (pipeline_curation's
     exact-dedup checkpoint) can carry the compact ``shm`` longs instead
     of raw text and re-tokenizing per consumer.  ONE md5 per shingle;
-    documents shorter than k tokens contribute one whole-text shingle
-    (the ``shingles()`` convention)."""
-    n = F.size(toks_col)
-    gram_idx = F.sequence(F.lit(1), n - (k - 1))
-    grams = F.when(
-        n >= k,
-        F.transform(
-            gram_idx,
-            lambda i: F.concat_ws(
-                "\x1f", *[F.element_at(F.col(toks_col), i + j) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws("\x1f", F.col(toks_col))))
-    # ONE md5 per shingle; the 16 'permutations' are affine maps of that
-    # single shingle id — 1 multiply + 2 mods each, exact BIGINT
-    # arithmetic both engines reproduce (a*s < 2^62, see MINHASH_P note).
-    return F.transform(grams, lambda g: _md5_long(g) % MINHASH_P)
+    the 16 'permutations' are affine maps of that single shingle id —
+    1 multiply + 2 mods each, exact BIGINT arithmetic both engines
+    reproduce (a*s < 2^62, see MINHASH_P note)."""
+    return F.transform(shingles("toks"), lambda g: md5_long(g) % MINHASH_P)
 
 
 def minhash_sig_from_shm(t2: DataFrame, shm_col: str = "shm") -> DataFrame:
@@ -303,7 +247,7 @@ def _minhash_sig_sql(source_cte: str = "documents") -> str:
     mh_tok AS (
       SELECT doc_id, generate_subscripts(tl, 1) - 1 AS pos, unnest(tl) AS t
       FROM (SELECT doc_id,
-                   list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS tl
+                   {words_sql()} AS tl
             FROM {source_cte} WHERE length(text) > 0)
     ),
     mh_sh0 AS (
@@ -314,7 +258,7 @@ def _minhash_sig_sql(source_cte: str = "documents") -> str:
     ),
     mh_sh AS MATERIALIZED (
       SELECT doc_id,
-             {_md5_long_sql("concat_ws(chr(31), t, t2, t3)")} AS s
+             {md5_long_sql("concat_ws(chr(31), t, t2, t3)")} AS s
       FROM mh_sh0
       WHERE t3 IS NOT NULL OR (pos = 0 AND t3 IS NULL)
     ),
@@ -412,13 +356,13 @@ def _simhash_oracle() -> str:
     return f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter(string_split(lower(text), ' '), x -> length(x) > 0)) AS t
+             unnest({words_sql()}) AS t
       FROM documents WHERE length(text) > 0
     ),
     h AS (
       SELECT doc_id,
-             CAST(('0x' || substring(md5(t), 1, 8)) AS BIGINT) AS hi,
-             CAST(('0x' || substring(md5(t), 9, 8)) AS BIGINT) AS lo
+             {md5_long_sql('t', 1, 8)} AS hi,
+             {md5_long_sql('t', 9, 8)} AS lo
       FROM tok
     ),
     v AS (
@@ -450,9 +394,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         d.select(
             "doc_id",
-            F.explode(
-                F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-            ).alias("t"),
+            F.explode(words()).alias("t"),
         )
         .select("doc_id", md.alias("md"))
         .select(
@@ -673,7 +615,7 @@ N_NAME_BANDS = N_NAME_HASHES // NAME_ROWS_PER_BAND
 
 
 def _name_hash_sql(j: int) -> str:
-    return f"CAST(('0x' || substring(md5(g || '#{j}'), 1, 15)) AS BIGINT)"
+    return md5_long_sql(f"g || '#{j}'")
 
 
 def _lev_lsh_oracle() -> str:
@@ -755,14 +697,7 @@ def _levenshtein_lsh(spark: SparkSession, sf_dir: str, cap: int | None = None) -
     )
 
     def name_hash(j: int):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("g"), F.lit(f"#{j}")).cast("binary")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-        )
+        return md5_long(F.concat(F.col("g"), F.lit(f"#{j}")))
 
     sig = g.groupBy("c_custkey").agg(
         *[F.min(name_hash(j)).alias(f"h{j}") for j in range(N_NAME_HASHES)]
@@ -1061,15 +996,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WORDS_SQL = "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)"
-
-
 @query(
     "pipeline_curation",
     oracle=f"""
     WITH RECURSIVE quality AS (
       SELECT doc_id, lang, text FROM documents
-      WHERE length(text) > 0 AND len({_WORDS_SQL}) >= 3
+      WHERE length(text) > 0 AND len({words_sql()}) >= 3
     ),
     keep AS (SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY md5(text)),
     exact AS (SELECT q.* FROM quality q WHERE doc_id IN (SELECT doc_id FROM keep)),
@@ -1087,7 +1019,7 @@ _WORDS_SQL = "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)"
       SELECT * FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM nonkeep)
     )
     SELECT lang, COUNT(*) AS n_docs,
-           CAST(SUM(len({_WORDS_SQL})) AS BIGINT) AS token_budget
+           CAST(SUM(len({words_sql()})) AS BIGINT) AS token_budget
     FROM survivors GROUP BY lang ORDER BY lang
     """,
     # lsh tag + band_bits: the near-dup stage is the shared minhash
@@ -1118,7 +1050,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.sources.tables import split_scan
 
     d = split_scan(d, cpu_weight=32)
-    base = d.select("doc_id", "lang", "text", words_col_d(d).alias("toks"))
+    base = d.select("doc_id", "lang", "text", words().alias("toks"))
     quality = base.where((F.length("text") > 0) & (F.size("toks") >= 3))
 
     # 2. exact dedup (keep min doc_id per digest)
@@ -1169,16 +1101,12 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def words_col_d(df: DataFrame):
-    return F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-
-
 @query(
     "split_train_dev_test",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT doc_id,
-             CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
+             {md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100 AS bucket
       FROM documents
     )
     SELECT CASE WHEN bucket < 80 THEN 'train'
@@ -1199,11 +1127,7 @@ def split_train_dev_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reproducible-split requirement for training pipelines.  md5 is
     engine-portable, so the oracle checks the exact assignment."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id").cast("string"), 1, 8) % 100
     assigned = d.select(
         "doc_id",
         F.when(bucket < 80, "train").when(bucket < 90, "dev").otherwise("test").alias("split"),
@@ -1217,9 +1141,9 @@ def split_train_dev_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_bernoulli",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 20
+    WHERE {md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100 < 20
     """,
     tags=("sample", "pipeline"),
 )
@@ -1232,20 +1156,16 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent when cross-engine reproducibility isn't needed (its
     sampler internals are Spark-specific and can't be hash-diffed)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id").cast("string"), 1, 8) % 100
     return d.where(bucket < 20).select("doc_id", "lang")
 
 
 @query(
     "sample_weighted_hash",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT doc_id, lang,
-             CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+             {md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)}
                / 4294967296.0 AS u,
              LEAST(1.0, n_chars / 2000.0) AS w
       FROM documents
@@ -1266,11 +1186,7 @@ def sample_weighted_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across engines and re-ingestions, so exact membership
     is oracle-checked (u and w are identical doubles on both sides)."""
     d = load_table(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_long(F.col("doc_id").cast("string"), 1, 8) / F.lit(4294967296.0)
     w = F.least(F.lit(1.0), F.col("n_chars") / 2000.0)
     return (
         d.where(u < w)
@@ -1456,10 +1372,10 @@ def dedup_label_propagation_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
 
 @query(
     "sample_stratified_hash",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT lang, doc_id,
-             CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
+             {md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100 AS bucket
       FROM documents
     )
     SELECT lang, COUNT(*) AS n_kept, MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
@@ -1477,11 +1393,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, and the assignment is reproducible across re-ingestions, so
     the oracle checks exact membership, not just counts."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id").cast("string"), 1, 8) % 100
     thresh = F.when(F.col("lang") == "en", 10).otherwise(30)
     return (
         d.where(bucket < thresh)
@@ -2211,7 +2123,7 @@ def _sample_pairs(pairs: DataFrame) -> DataFrame:
     """The deterministic 1-in-EVAL_SAMPLE_MOD sample of candidate pairs:
     md5 of 'a:b' — reproducible across runs and engines, no RNG."""
     key = F.concat_ws(":", F.col("a").cast("string"), F.col("b").cast("string"))
-    return pairs.where(_md5_long(key) % EVAL_SAMPLE_MOD == 0)
+    return pairs.where(md5_long(key) % EVAL_SAMPLE_MOD == 0)
 
 
 def _sampled_eval_summary(pairs: DataFrame, scored: DataFrame) -> DataFrame:
@@ -2278,7 +2190,7 @@ def _sampled_eval_summary(pairs: DataFrame, scored: DataFrame) -> DataFrame:
 
 
 _PAIR_KEY_SQL = "CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)"
-_SAMPLE_PRED_SQL = f"{_md5_long_sql(_PAIR_KEY_SQL)} % {EVAL_SAMPLE_MOD} = 0"
+_SAMPLE_PRED_SQL = f"{md5_long_sql(_PAIR_KEY_SQL)} % {EVAL_SAMPLE_MOD} = 0"
 
 
 def _sampled_summary_sql(pairs_cte: str, scored_cte: str) -> str:
@@ -2893,6 +2805,7 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Neyman-allocation stratified sampling ---------------------------------
 
 NEYMAN_BUDGET = 1000  # total sample rows across all strata
+_LINE_KEY_SQL = "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)"
 
 
 @query(
@@ -2935,8 +2848,7 @@ NEYMAN_BUDGET = 1000  # total sample rows across all strata
     ranked AS (
       SELECT flag, l_orderkey, l_linenumber,
              ROW_NUMBER() OVER (PARTITION BY flag
-                 ORDER BY ('0x' || substring(md5(CAST(l_orderkey AS VARCHAR) || '_'
-                     || CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT,
+                 ORDER BY {md5_long_sql(_LINE_KEY_SQL)},
                    l_orderkey, l_linenumber) AS rk
       FROM li
     )
@@ -3015,21 +2927,11 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n"),
         ).alias("n_h"),
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("l_orderkey").cast("string"),
-                    F.lit("_"),
-                    F.col("l_linenumber").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(
+        F.concat(
+            F.col("l_orderkey").cast("string"), F.lit("_"), F.col("l_linenumber").cast("string")
+        )
+    )
     ranked = with_global_index(
         li.select("flag", "l_orderkey", "l_linenumber", h.alias("h")),
         "h",
@@ -3053,7 +2955,7 @@ LEAK_TEST_GE = 90   # md5 bucket >= 90 -> test
 
 def _leak_bucket_sql() -> str:
     return (
-        "CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
+        f"{md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
     )
 
 
@@ -3112,12 +3014,7 @@ def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
 
     def split_bucket(col):
-        return (
-            F.conv(
-                F.substring(F.md5(col.cast("string").cast("binary")), 1, 8), 16, 10
-            ).cast("long")
-            % 100
-        )
+        return md5_long(col.cast("string"), 1, 8) % 100
 
     base = d.select("doc_id", "text", split_bucket(F.col("doc_id")).alias("bucket"))
     tt = base.where(

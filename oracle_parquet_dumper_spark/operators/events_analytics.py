@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -2597,7 +2598,7 @@ def _boot_oracle() -> str:
     ),
     ex AS (
       SELECT b.b, p.cents,
-             ('0x' || substring(md5(CAST(p.event_id AS VARCHAR) || '_' || CAST(b.b AS VARCHAR)), 1, 15))::BIGINT
+             {md5_long_sql("CAST(p.event_id AS VARCHAR) || '_' || CAST(b.b AS VARCHAR)")}
                / 1152921504606846976.0 AS u
       FROM p CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b) b
     ),
@@ -2659,21 +2660,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"),
-                        F.lit("_"),
-                        F.col("b").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat(F.col("event_id").cast("string"), F.lit("_"), F.col("b").cast("string")))
         / F.lit(float(1 << 60))
     )
     w = ex.select(
@@ -3326,10 +3313,7 @@ BLOOM_WORDS = 63  # word width; 1 << 63 overflows DuckDB's BIGINT
 
 
 def _bloom_pos_sql(key_expr: str, lo: int) -> str:
-    return (
-        f"CAST(('0x' || substring(md5(CAST({key_expr} AS VARCHAR)), {lo}, 5)) "
-        f"AS BIGINT) % {BLOOM_M}"
-    )
+    return f"{md5_long_sql(f'CAST({key_expr} AS VARCHAR)', lo, 5)} % {BLOOM_M}"
 
 
 @query(
@@ -3414,10 +3398,7 @@ def events_bloom_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def pos(lo: int):
-        return F.expr(
-            f"CAST(conv(substring(md5(CAST(user_id AS STRING)), {lo}, 5), 16, 10) "
-            f"AS BIGINT) % {BLOOM_M}"
-        )
+        return md5_long(F.col("user_id").cast("string"), lo, 5) % BLOOM_M
 
     hpos = hist.select(pos(1).alias("p1"), pos(6).alias("p2"))
     words = (

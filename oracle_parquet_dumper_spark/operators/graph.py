@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -954,11 +955,8 @@ TRI_SAMPLE_MOD = 4  # keep each undirected edge w.p. 1/4 -> estimate x 64
 
 
 def _tri_sampled_oracle() -> str:
-    keep = (
-        "CAST(('0x' || substring(md5(CAST(LEAST(src, dst) AS VARCHAR) || '_' || "
-        "CAST(GREATEST(src, dst) AS VARCHAR)), 1, 8)) AS BIGINT) "
-        f"% {TRI_SAMPLE_MOD} = 0"
-    )
+    pair = "CAST(LEAST(src, dst) AS VARCHAR) || '_' || CAST(GREATEST(src, dst) AS VARCHAR)"
+    keep = f"{md5_long_sql(pair, 1, 8)} % {TRI_SAMPLE_MOD} = 0"
     return f"""
     WITH su AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS s FROM lineitem),
     edges0 AS MATERIALIZED (
@@ -1025,21 +1023,7 @@ def graph_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushes the predicate into the self-join), and the distinct
     # exchange carries half the old row count.
     keep = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        F.col("src").cast("string"),
-                        F.col("dst").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_long(F.concat_ws("_", F.col("src").cast("string"), F.col("dst").cast("string")), 1, 8)
         % TRI_SAMPLE_MOD
         == 0
     )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.vectors import as_double
+from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -223,9 +224,9 @@ def _bpe_oracle() -> str:
     string order in both engines, so every round is exactly
     reproducible."""
     parts = [
-        """w0 AS (
+        f"""w0 AS (
       SELECT w, COUNT(*) AS freq FROM (
-        SELECT unnest(list_filter(string_split(lower(text), ' '), x -> length(x) > 0)) AS w
+        SELECT unnest({words_sql()}) AS w
         FROM documents WHERE length(text) > 0
       ) GROUP BY w
     )""",
@@ -295,13 +296,13 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts, so the result is exactly reproducible (pinned
     against a pure-Python reference in tests/test_iterative.py)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    words = (
-        d.select(F.explode(F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)).alias("w"))
+    word_freq = (
+        d.select(F.explode(words()).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     vocab = materialize(
-        words.select(
+        word_freq.select(
             "freq",
             F.concat(
                 # split-to-chars keeps a trailing empty (limit -1) — drop it

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
+from oracle_parquet_dumper_spark.functions.tokens import md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -148,10 +149,10 @@ def decode_and_featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 
 @query(
     "mm_image_features",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT doc_id,
-             CAST(('0x' || substring(md5(substring(text, 1, 64)), 1, 8)) AS BIGINT) AS hv
+             {md5_long_sql('substring(text, 1, 64)', 1, 8)} AS hv
       FROM documents
     )
     SELECT doc_id,
@@ -442,9 +443,7 @@ def _embed_component_sql(j: int) -> str:
         "array_to_string(list_slice(list_filter(string_split(text, ''), "
         f"(x, i) -> (i - 1) % {EMBED_DIM} = {j}), 1, 32), '')"
     )
-    return (
-        f"(CAST(('0x' || substring(md5({strided}), 1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0"
-    )
+    return f"({md5_long_sql(strided, 1, 8)} % 2001 - 1000) / 1000.0"
 
 
 def _embed_match_oracle() -> str:

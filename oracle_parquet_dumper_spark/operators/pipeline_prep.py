@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql, words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -44,7 +45,7 @@ NGRAM_N = 8  # contamination n-gram width
     "text_chunk_sliding",
     oracle=f"""
     WITH docs AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS toks
+      SELECT doc_id, {words_sql()} AS toks
       FROM documents WHERE length(text) > 0
     ),
     chunks AS (
@@ -70,7 +71,7 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider than a digest shuffles; at 100 TB chunk payloads would be
     written columnar per shard, not collected."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    toks = words()
     base = d.select("doc_id", toks.alias("toks")).withColumn("n", F.size("toks"))
     starts = base.select(
         "doc_id",
@@ -93,8 +94,8 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH docs AS (
       SELECT doc_id,
-             CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % {PACK_SHARDS} AS shard,
-             len(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS n_tok
+             {md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % {PACK_SHARDS} AS shard,
+             len({words_sql()}) AS n_tok
       FROM documents WHERE length(text) > 0
     ),
     runs AS (
@@ -121,12 +122,8 @@ def pipeline_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition sort that dies at 100 TB, while per-shard windows
     parallelize and each trainer data-loader reads its own shard."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % PACK_SHARDS
-    )
+    toks = words()
+    shard = md5_long(F.col("doc_id").cast("string"), 1, 8) % PACK_SHARDS
     docs = d.select("doc_id", shard.alias("shard"), F.size(toks).cast("long").alias("n_tok"))
     w = W.partitionBy("shard").orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
     runs = docs.withColumn("cum", F.sum("n_tok").over(w))
@@ -142,15 +139,11 @@ def pipeline_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_bucket_sql() -> str:
-    return "CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
+    return f"{md5_long_sql('CAST(doc_id AS VARCHAR)', 1, 8)} % 100"
 
 
 def _split_bucket_col():
-    return (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    return md5_long(F.col("doc_id").cast("string"), 1, 8) % 100
 
 
 @query(
@@ -158,7 +151,7 @@ def _split_bucket_col():
     oracle=f"""
     WITH docs AS (
       SELECT doc_id, {_split_bucket_sql()} AS bucket,
-             list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS toks
+             {words_sql()} AS toks
       FROM documents WHERE length(text) > 0
     ),
     grams AS (
@@ -192,7 +185,7 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by unique-gram count and joins via one hash shuffle —
     or a bloom filter pushed to the test scan)."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    toks = words()
     base = (
         d.select("doc_id", _split_bucket_col().alias("bucket"), toks.alias("toks"))
         .withColumn("n", F.size("toks"))
@@ -308,7 +301,7 @@ def pipeline_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         h.alias("_h"),
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("_hv"),
+        md5_long(F.col("doc_id").cast("string")).alias("_hv"),
     )
     ranked = with_global_index(
         hashed, "_hv", ["_h", "doc_id"], group_cols=["lang"]
@@ -380,7 +373,7 @@ _SHUF_RANGE = (1 << 60) // SHUF_BUCKETS  # md5-60bit hash space per bucket
     oracle=f"""
     WITH h AS (
       SELECT doc_id,
-             CAST(('0x' || substring(md5('{SHUF_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+             {md5_long_sql(f"'{SHUF_SEED}:' || CAST(doc_id AS VARCHAR)")} AS h
       FROM documents
     ),
     idx AS (
@@ -421,15 +414,7 @@ def pipeline_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer/md5 arithmetic: bit-exact across engines, re-dealable by
     changing SHUF_SEED."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{SHUF_SEED}:"), F.col("doc_id").cast("string")).cast("binary")),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long(F.concat(F.lit(f"{SHUF_SEED}:"), F.col("doc_id").cast("string")))
     # integer div, NOT /: h is up to 2^60 and double division loses
     # exactness past 2^53, which would mis-bucket hash-range boundaries
     hb = d.select("doc_id", h.alias("h")).withColumn(
@@ -461,7 +446,7 @@ CARD_SHORT_TOKENS = 50  # "short doc" threshold for the card's ratio
     oracle=f"""
     WITH per_doc AS (
       SELECT doc_id, lang, source, length(text) AS n_chars, md5(text) AS h,
-             len(list_filter(string_split(text, ' '), t -> length(t) > 0)) AS toks
+             len({words_sql(lower=False)}) AS toks
       FROM documents
     )
     SELECT COUNT(*) AS n_docs,
@@ -497,9 +482,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.length("text").cast("long").alias("n_chars"),
         F.md5(F.col("text").cast("binary")).alias("h"),
-        F.size(
-            F.filter(F.split("text", " "), lambda t: F.length(t) > 0)
-        ).cast("long").alias("toks"),
+        F.size(words(lower=False)).cast("long").alias("toks"),
     )
     return per.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -520,11 +503,10 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_token_budget_fill",
-    oracle=r"""
+    oracle=fr"""
     WITH per AS (
       SELECT source,
-             SUM(CAST(len(list_filter(string_split(text, ' '),
-                                      t -> length(t) > 0)) AS BIGINT)) AS tok,
+             SUM(CAST(len({words_sql(lower=False)}) AS BIGINT)) AS tok,
              SUM(CAST(len(regexp_extract_all(lower(text),
                                              '\b(the|a|of|and|to)\b')) AS BIGINT)) AS sh
       FROM documents GROUP BY source
@@ -566,9 +548,7 @@ def pipeline_token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     — bounded by the source catalog, never by data — plus a 1-row
     budget broadcast."""
     d = load_table(spark, sf_dir, "documents")
-    tok = F.size(F.filter(F.split("text", " "), lambda t: F.length(t) > 0)).cast(
-        "long"
-    )
+    tok = F.size(words(lower=False)).cast("long")
     sh = F.size(
         F.regexp_extract_all(F.lower("text"), F.lit(r"\b(the|a|of|and|to)\b"))
     ).cast("long")
@@ -621,7 +601,7 @@ DSIR_TARGET_LANG = "en"
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+             unnest({words_sql()}) AS token
       FROM documents WHERE length(text) > 0
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token),
@@ -674,7 +654,7 @@ def pipeline_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys on the bounded vocabulary — the same skew-safe shape as
     text_perplexity_unigram/tf-idf."""
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    w = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: F.length(t) > 0)
+    w = words()
     toks = d.select("doc_id", "lang", F.explode(w).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     raw = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cr"))
@@ -724,7 +704,7 @@ CURRICULUM_PHASES = 4  # easy -> hard quartiles by token count
     oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS n_tok
+             len({words_sql()}) AS n_tok
       FROM documents WHERE length(text) > 0
     ),
     ranked AS (
@@ -736,7 +716,7 @@ CURRICULUM_PHASES = 4  # easy -> hard quartiles by token count
     phased AS (
       SELECT doc_id, n_tok,
              CAST(({CURRICULUM_PHASES} * idx) // n AS INT) AS phase,
-             ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
+             {md5_long_sql('CAST(doc_id AS VARCHAR)')} AS h
       FROM ranked
     )
     SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok, phase,
@@ -768,9 +748,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.length("text") > 0)
         .select(
             "doc_id",
-            F.size(
-                F.filter(F.split(F.lower(F.col("text")), " "), lambda t: F.length(t) > 0)
-            ).cast("long").alias("n_tok"),
+            F.size(words()).cast("long").alias("n_tok"),
         )
     )
     ranked = with_global_index(d, "n_tok", ["doc_id"])
@@ -782,8 +760,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_tok",
             F.expr(f"CAST(({CURRICULUM_PHASES} * _gidx) div _gn AS INT)").alias("phase"),
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15), 16, 10)
-            .cast("long")
+            md5_long(F.col("doc_id").cast("string"))
             .alias("h"),
         )
     )
@@ -804,8 +781,7 @@ MIX_MAX_EPOCHS = 4   # repeat cap per source (Muennighoff et al. 2023)
     oracle=f"""
     WITH s AS (
       SELECT source,
-             CAST(SUM(len(list_filter(string_split(lower(text), ' '),
-                                       t -> length(t) > 0))) AS BIGINT) AS n_tok
+             CAST(SUM(len({words_sql()})) AS BIGINT) AS n_tok
       FROM documents WHERE length(text) > 0 GROUP BY source
     ),
     t AS (
@@ -861,17 +837,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
     s = materialize(
         d.groupBy("source")
-        .agg(
-            F.sum(
-                F.size(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), " "), lambda t: F.length(t) > 0
-                    )
-                )
-            )
-            .cast("long")
-            .alias("n_tok")
-        )
+        .agg(F.sum(F.size(words())).cast("long").alias("n_tok"))
     )  # <= #sources rows, 3 consumers
     t = s.agg(
         F.sum("n_tok").alias("total"),
@@ -1019,7 +985,7 @@ DP_SCALE_MICRO = 1_000_000  # Laplace b = 1/eps with eps = 1, in micro-units
     ),
     u AS (
       SELECT lang, source, n,
-             CAST(('0x' || substring(md5(lang || '|' || source), 1, 15)) AS BIGINT)
+             {md5_long_sql("lang || '|' || source")}
                / 1152921504606846976.0 AS u01
       FROM c
     )
@@ -1062,11 +1028,7 @@ def pipeline_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "documents").groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    u01 = (
-        F.conv(F.substring(F.md5(F.concat_ws("|", "lang", "source").cast("binary")), 1, 15), 16, 10)
-        .cast("double")
-        / F.lit(1152921504606846976.0)
-    )
+    u01 = md5_long(F.concat_ws("|", "lang", "source")) / F.lit(1152921504606846976.0)
     sign = F.when(u01 < 0.5, F.lit(1)).otherwise(F.lit(-1))
     lap_micro = F.round(
         F.log(

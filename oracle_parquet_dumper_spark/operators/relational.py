@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql, words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import (
     dec_avg,
     dec_avg_sql,
@@ -626,7 +627,7 @@ KMV_K = 64
     oracle=f"""
     WITH h AS (
       SELECT l_returnflag,
-             CAST(('0x' || substring(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT)
+             {md5_long_sql('CAST(l_orderkey AS VARCHAR)')}
                / 1152921504606846976.0 AS u
       FROM lineitem
       GROUP BY l_returnflag, l_orderkey
@@ -668,11 +669,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     # normalize the 60-bit md5 prefix into (0, 1]: u = h / 2^60
-    u = (
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        / F.lit(float(1 << 60))
-    )
+    u = md5_long(F.col("l_orderkey").cast("string")) / F.lit(float(1 << 60))
     h = li.select("l_returnflag", "l_orderkey").distinct().select("l_returnflag", u.alias("u"))
     r = with_global_index(h, "u", ["u"], group_cols=["l_returnflag"])
     est = F.when(F.col("_gn") < KMV_K, F.col("_gn")).otherwise(
@@ -693,11 +690,11 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS MATERIALIZED (
       SELECT DISTINCT CAST(substring(source, 4) AS INT) >= 10 AS side_b, t
       FROM (SELECT source,
-                   unnest(list_filter(string_split(lower(text), ' '), x -> length(x) > 0)) AS t
+                   unnest({words_sql()}) AS t
             FROM documents WHERE length(text) > 0)
     ),
     hs AS MATERIALIZED (SELECT side_b, t,
-                  CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)
+                  {md5_long_sql('t')}
                     / 1152921504606846976.0 AS u
            FROM toks),
     ka AS (SELECT u FROM (SELECT u, ROW_NUMBER() OVER (ORDER BY u) AS rn
@@ -753,16 +750,10 @@ def agg_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     d = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    tok = F.explode(
-        F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-    ).alias("t")
+    tok = F.explode(words()).alias("t")
     side_b = F.substring("source", 4, 10).cast("int") >= 10
     toks = d.select(side_b.alias("side_b"), tok).distinct()
-    u = (
-        F.conv(F.substring(F.md5(F.col("t").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        / F.lit(float(1 << 60))
-    )
+    u = md5_long(F.col("t")) / F.lit(float(1 << 60))
     hs = toks.select("side_b", "t", u.alias("u"))
     ka = hs.where(~F.col("side_b")).select("u").distinct().orderBy("u").limit(KMV_K)
     kb = hs.where(F.col("side_b")).select("u").distinct().orderBy("u").limit(KMV_K)
@@ -2523,9 +2514,8 @@ def _cms_oracle() -> str:
     WITH depths AS (SELECT unnest([0, 1, 2, 3]) AS dep),
     h AS MATERIALIZED (
       SELECT e.user_id, d.dep,
-             CAST(('0x' || substring(md5('cms' || CAST(d.dep AS VARCHAR) || ':'
-                                         || CAST(e.user_id AS VARCHAR)), 1, 15))
-                  AS BIGINT) % {CMS_WIDTH} AS b
+             {md5_long_sql("'cms' || CAST(d.dep AS VARCHAR) || ':' || CAST(e.user_id AS VARCHAR)")}
+                  % {CMS_WIDTH} AS b
       FROM events e CROSS JOIN depths d
     ),
     counters AS (SELECT dep, b, COUNT(*) AS c FROM h GROUP BY dep, b),
@@ -2574,22 +2564,7 @@ def agg_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
 
     def bucket(dep: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"cms{dep}:"), F.col("user_id").cast("string")
-                        ).cast("binary")
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % CMS_WIDTH
-        )
+        return md5_long(F.concat(F.lit(f"cms{dep}:"), F.col("user_id").cast("string"))) % CMS_WIDTH
 
     hashed = ev.select(
         "user_id",
@@ -2637,8 +2612,7 @@ def _hll_oracle() -> str:
     return f"""
     WITH h AS (
       SELECT DISTINCT event_type,
-             CAST(('0x' || substring(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  AS BIGINT) AS hv
+             {md5_long_sql("'hll:' || CAST(user_id AS VARCHAR)")} AS hv
       FROM events
     ),
     jw AS (SELECT event_type, hv % {HLL_M} AS j, hv // {HLL_M} AS w FROM h),
@@ -2704,19 +2678,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast {HLL_M}-row axis, and nothing keyed by user survives past
     the first dedup-aggregate."""
     ev = load_table(spark, sf_dir, "events")
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit("hll:"), F.col("user_id").cast("string")).cast(
-                    "binary"
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_long(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
     h = ev.select("event_type", hv.alias("hv")).distinct()
     # w must be the exact integer quotient: hv is 60 bits, and a double
     # divide would lose bits above 2^53 — `div` keeps it in BIGINT.

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import dec_sum, dec_sum_sql, query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
@@ -679,11 +680,11 @@ def fn_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fn_posexplode_outer",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id,
              CASE WHEN length(text) = 0 THEN NULL
-                  ELSE list_filter(string_split(text, ' '), t -> length(t) > 0) END AS toks
+                  ELSE {words_sql(lower=False)} END AS toks
       FROM documents WHERE doc_id % 25 = 0
     )
     SELECT doc_id,
@@ -702,7 +703,7 @@ def fn_posexplode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 25 == 0)
     toks = F.when(
         F.length("text") > 0,
-        F.filter(F.split(F.col("text"), " "), lambda t: F.length(t) > 0),
+        words(lower=False),
     )
     return d.select("doc_id", toks.alias("toks")).select(
         "doc_id", F.posexplode_outer("toks").alias("pos", "token")
@@ -711,9 +712,9 @@ def fn_posexplode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fn_array_extended",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS toks
+      SELECT doc_id, {words_sql()} AS toks
       FROM documents WHERE doc_id % 25 = 0 AND length(text) > 0
     )
     SELECT doc_id,
@@ -734,7 +735,7 @@ def fn_array_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(
         (F.col("doc_id") % 25 == 0) & (F.length("text") > 0)
     )
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: F.length(x) > 0)
+    toks = words()
     t = d.select("doc_id", toks.alias("toks"))
     return t.select(
         "doc_id",

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -33,24 +34,14 @@ def _docs(spark: SparkSession, sf_dir: str):
 TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def words_col(col: str = "text"):
-    """Whitespace tokens, empties filtered (split of '' yields [''])."""
-    return F.filter(F.split(F.col(col), " "), lambda t: F.length(t) > 0)
-
-
-def words_col_lower(col: str = "text"):
-    """Lower-cased whitespace tokens, empties filtered."""
-    return F.filter(F.split(F.lower(F.col(col)), " "), lambda t: F.length(t) > 0)
-
-
 @query(
     "text_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang,
            length(text) AS n_chars_actual,
-           CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 0)) AS BIGINT) AS n_words,
+           CAST(len({words_sql(lower=False)}) AS BIGINT) AS n_words,
            CAST(length(regexp_replace(text, '[^.!?,;]', '', 'g')) AS BIGINT) AS n_punct,
-           round(length(text) / nullif(len(list_filter(string_split(text, ' '), t -> length(t) > 0)), 0), 6) AS chars_per_word
+           round(length(text) / nullif(len({words_sql(lower=False)}), 0), 6) AS chars_per_word
     FROM documents
     """,
     tags=("text",),
@@ -58,7 +49,7 @@ def words_col_lower(col: str = "text"):
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document surface statistics (char/word/punct counts)."""
     d = _docs(spark, sf_dir)
-    n_words = F.size(words_col()).cast("long")
+    n_words = F.size(words(lower=False)).cast("long")
     return d.select(
         "doc_id",
         "lang",
@@ -73,7 +64,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_count",
     oracle=f"""
     SELECT doc_id,
-           CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 0)) AS BIGINT) AS ws_tokens,
+           CAST(len({words_sql(lower=False)}) AS BIGINT) AS ws_tokens,
            CAST(len(regexp_extract_all(text, '{TOKEN_RE}')) AS BIGINT) AS bpe_ish_tokens
     FROM documents
     """,
@@ -86,7 +77,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     return d.select(
         "doc_id",
-        F.size(words_col()).cast("long").alias("ws_tokens"),
+        F.size(words(lower=False)).cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)).cast("long").alias("bpe_ish_tokens"),
     )
 
@@ -150,10 +141,10 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_score",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT doc_id,
-             CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 0)) AS DOUBLE) AS w,
+             CAST(len({words_sql(lower=False)}) AS DOUBLE) AS w,
              CAST(len(regexp_extract_all(lower(text), '\\b(the|a|of|and|to)\\b')) AS DOUBLE) AS stop_hits,
              CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE) AS punct,
              CAST(length(text) AS DOUBLE) AS c
@@ -172,7 +163,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword density — the Gopher/C4-style heuristic filter family,
     expressed as one pass of column arithmetic."""
     d = _docs(spark, sf_dir)
-    w = F.size(words_col()).cast("double")
+    w = F.size(words(lower=False)).cast("double")
     stop_hits = F.size(
         F.regexp_extract_all(F.lower("text"), F.lit(r"\b(the|a|of|and|to)\b"))
     ).cast("double")
@@ -223,10 +214,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tfidf_topterms",
-    oracle="""
+    oracle=f"""
     WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0 AND length(text) > 0),
     tok AS (
-      SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> length(t) > 0)) AS token
+      SELECT doc_id, unnest({words_sql(lower=False)}) AS token
       FROM docs
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -253,7 +244,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle bounded by vocabulary, not corpus, size."""
     d = _docs(spark, sf_dir)
     docs = d.where((F.col("doc_id") % 20 == 0) & (F.length("text") > 0)).select("doc_id", "text")
-    tok = docs.select("doc_id", F.explode(words_col()).alias("token"))
+    tok = docs.select("doc_id", F.explode(words(lower=False)).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     # corpus size stays IN-PLAN (broadcast 1-row aggregate) — a driver
@@ -288,14 +279,11 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
     "text_stopword_removal",
     oracle=f"""
     SELECT doc_id,
-           CAST(len(list_filter(string_split(lower(text), ' '),
-                                t -> length(t) > 0)) AS BIGINT) AS n_tokens,
-           CAST(len(list_filter(string_split(lower(text), ' '),
-                                t -> length(t) > 0
-                                 AND NOT list_contains({list(STOPWORDS)!r}, t))) AS BIGINT) AS n_content_tokens,
-           array_to_string(list_filter(string_split(lower(text), ' '),
-                                t -> length(t) > 0
-                                 AND NOT list_contains({list(STOPWORDS)!r}, t))[1:5], ' ') AS first_content
+           CAST(len({words_sql()}) AS BIGINT) AS n_tokens,
+           CAST(len(list_filter({words_sql()},
+                                t -> NOT list_contains({list(STOPWORDS)!r}, t))) AS BIGINT) AS n_content_tokens,
+           array_to_string(list_filter({words_sql()},
+                                t -> NOT list_contains({list(STOPWORDS)!r}, t))[1:5], ' ') AS first_content
     FROM documents
     WHERE doc_id % 20 = 0
     """,
@@ -307,7 +295,7 @@ def text_stopword_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     all array expressions, stop list inlined as a literal array (at
     scale: broadcast a stopword table and use array_except)."""
     d = _docs(spark, sf_dir).where(F.col("doc_id") % 20 == 0)
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    toks = words()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     content = F.filter(toks, lambda t: ~F.array_contains(stop_arr, t))
     return d.select(
@@ -386,10 +374,10 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bigram_topk",
-    oracle="""
+    oracle=f"""
     WITH words AS (
       SELECT lang,
-             list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+             {words_sql()} AS w
       FROM documents
     ), bigrams AS (
       SELECT lang,
@@ -425,7 +413,7 @@ def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.operators.global_index import grouped_topk
 
     d = _docs(spark, sf_dir)
-    w = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    w = words()
     n1 = F.greatest(F.size(w) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(w, 1, n1), F.slice(w, 2, n1), lambda a, b: F.concat(a, F.lit(" "), b)
@@ -445,9 +433,9 @@ VOCAB_TOPK = 20
 
 @query(
     "text_perplexity_unigram",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+      SELECT doc_id, unnest({words_sql()}) AS token
       FROM documents WHERE length(text) > 0
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token),
@@ -483,7 +471,7 @@ def text_perplexity_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc result is partition-order independent (bit-exact vs
     DuckDB)."""
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
-    toks = d.select("doc_id", F.explode(words_col_lower()).alias("token"))
+    toks = d.select("doc_id", F.explode(words()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     tot = toks.agg(F.count(F.lit(1)).alias("total"))
@@ -516,7 +504,7 @@ def text_perplexity_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_vocab_coverage",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+      SELECT unnest({words_sql()}) AS token
       FROM documents WHERE length(text) > 0
     ),
     vocab AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token),
@@ -548,7 +536,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     vocab = (
-        d.select(F.explode(words_col_lower()).alias("token"))
+        d.select(F.explode(words()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -580,7 +568,7 @@ PMI_TOP_K = 20
     "text_collocations_pmi",
     oracle=f"""
     WITH words AS (
-      SELECT list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+      SELECT {words_sql()} AS w
       FROM documents
     ),
     toks AS (SELECT unnest(w) AS token FROM words),
@@ -627,7 +615,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (not the corpus); top-k is a
     TakeOrderedAndProject heap, not a global sort."""
     d = _docs(spark, sf_dir)
-    w = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    w = words()
     docs = d.select(w.alias("w"))
     toks = docs.select(F.explode("w").alias("token"))
     uni = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
@@ -665,9 +653,9 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+      SELECT unnest({words_sql()}) AS token
       FROM documents
     ),
     freq AS (SELECT token, COUNT(*) AS f FROM toks GROUP BY token),
@@ -708,7 +696,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts partial-aggregate; the rank window runs over the
     VOCABULARY (sublinear in corpus size); output is a single row."""
     d = _docs(spark, sf_dir)
-    toks = d.select(F.explode(words_col_lower()).alias("token"))
+    toks = d.select(F.explode(words()).alias("token"))
     freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("f"))
     # rank via the distributed global index (two-pass bucket offsets,
     # operators/global_index.py) — the vocabulary is sublinear in corpus
@@ -745,11 +733,11 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_source_vocab_overlap",
-    oracle="""
+    oracle=f"""
     WITH st AS (
       SELECT DISTINCT source, t FROM (
         SELECT source,
-               unnest(list_filter(string_split(lower(text), ' '), x -> length(x) > 0)) AS t
+               unnest({words_sql()}) AS t
         FROM documents
       )
     ),
@@ -785,9 +773,7 @@ def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (
         d.select(
             "source",
-            F.explode(
-                F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-            ).alias("t"),
+            F.explode(words()).alias("t"),
         )
         .distinct()
     )
@@ -837,7 +823,7 @@ _RAKE_STOP_RE = r"\b(the|a|of|and|to|in|is|it)\b"
     pl AS (
       SELECT doc_id,
              list_filter(list_transform(string_split(d, '|'),
-                 p -> list_filter(string_split(p, ' '), t -> length(t) > 0)),
+                 p -> {words_sql('p', lower=False)}),
                  ws -> len(ws) > 0) AS pls
       FROM norm
     ),
@@ -906,7 +892,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrases = F.filter(
         F.transform(
             F.split(delim, "\\|"),
-            lambda p: F.filter(F.split(p, " "), lambda t: F.length(t) > 0),
+            lambda p: words(p, lower=False),
         ),
         lambda ws: F.size(ws) > 0,
     )
@@ -1012,16 +998,13 @@ def _bm25_oracle() -> str:
     return f"""
     WITH dls AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '),
-                 x -> length(x) > 0)) AS dl
+             len({words_sql()}) AS dl
       FROM documents
     ),
     toks AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '),
-                 x -> length(x) > 0)) AS dl,
-             unnest(list_filter(string_split(lower(text), ' '),
-                 x -> length(x) > 0)) AS w
+             len({words_sql()}) AS dl,
+             unnest({words_sql()}) AS w
       FROM documents
     ),
     tf AS (
@@ -1067,7 +1050,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only docs containing query terms, keyed by doc_id; the
     final top-20 is a TakeOrderedAndProject, never a global sort."""
     d = _docs(spark, sf_dir)
-    toks = words_col_lower()
+    toks = words()
     dls = d.select("doc_id", F.size(toks).alias("dl"))
     base = d.select(
         "doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("w")
@@ -1100,10 +1083,10 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_readability_flesch",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT doc_id,
-             CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 0))
+             CAST(len({words_sql(lower=False)})
                   AS BIGINT) AS n_words,
              CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
                   AS BIGINT) AS n_sents,
@@ -1138,7 +1121,7 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     m = d.select(
         "doc_id",
-        F.size(words_col()).cast("long").alias("n_words"),
+        F.size(words(lower=False)).cast("long").alias("n_words"),
         F.greatest(F.lit(1), F.regexp_count("text", F.lit("[.!?]+")))
         .cast("long")
         .alias("n_sents"),
@@ -1158,9 +1141,9 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_chao1_goodturing",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+      SELECT unnest({words_sql()}) AS token
       FROM documents
     ),
     tf AS (SELECT token, COUNT(*) AS c FROM toks GROUP BY token),
@@ -1195,7 +1178,7 @@ def text_chao1_goodturing(spark: SparkSession, sf_dir: str) -> DataFrame:
     state with the identical double expression."""
     d = _docs(spark, sf_dir)
     tf = (
-        d.select(F.explode(words_col_lower()).alias("token"))
+        d.select(F.explode(words()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1238,7 +1221,7 @@ BIGRAM_LAMBDA_PCT = 75  # bigram weight, percent (λ = 0.75)
     "text_perplexity_bigram_interp",
     oracle=f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+      SELECT doc_id, {words_sql()} AS w
       FROM documents WHERE length(text) > 0
     ),
     toks AS (SELECT unnest(w) AS token FROM words),
@@ -1297,7 +1280,7 @@ def text_perplexity_bigram_interp(spark: SparkSession, sf_dir: str) -> DataFrame
     vocabulary, never on raw rows."""
     lam = BIGRAM_LAMBDA_PCT / 100.0
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
-    w = words_col_lower()
+    w = words()
     toks = d.select(F.explode(w).alias("token"))
     uni = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cu"))
     tot = toks.agg(F.count(F.lit(1)).alias("total"))
@@ -1354,7 +1337,7 @@ KN_DISCOUNT = 0.75  # absolute discount d (Kneser-Ney 1995 / Chen-Goodman)
     "text_perplexity_kneser_ney",
     oracle=f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+      SELECT doc_id, {words_sql()} AS w
       FROM documents WHERE length(text) > 0
     ),
     bg AS (
@@ -1415,7 +1398,7 @@ def text_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     four model tables derive from one map-side-combined aggregate and
     every join keys on the bounded bigram/unigram vocabulary."""
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
-    w = words_col_lower()
+    w = words()
     n1 = F.greatest(F.size("w") - 1, F.lit(0))
     docs = d.select("doc_id", w.alias("w")).where(F.size("w") >= 2)
     bg = docs.select(
@@ -1534,10 +1517,10 @@ def text_code_likeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_tokenizer_fertility",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT lang,
-             len(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS n_tok,
+             len({words_sql()}) AS n_tok,
              strlen(text) AS n_bytes
       FROM documents WHERE length(text) > 0
     )
@@ -1570,7 +1553,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     s = d.select(
         "lang",
-        F.size(words_col_lower()).alias("n_tok"),
+        F.size(words()).alias("n_tok"),
         F.octet_length("text").alias("n_bytes"),
     )
     g = s.groupBy("lang").agg(
@@ -1601,7 +1584,7 @@ REP_DUP2G_MAX_MILLI = 400
     oracle=f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+             {words_sql()} AS w
       FROM documents WHERE length(text) > 0
     ), bigrams AS (
       SELECT doc_id,
@@ -1645,7 +1628,7 @@ def text_repetition_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     then two doc-keyed partial aggregates; everything shuffles on
     doc_id, nothing global."""
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
-    w = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    w = words()
     docs = d.select("doc_id", w.alias("w")).where(F.size("w") >= 2)
     n1 = F.greatest(F.size("w") - 1, F.lit(0))
     bg = docs.select(
@@ -1686,7 +1669,7 @@ OOV_MIN_COUNT = 5  # corpus vocabulary = tokens seen >= this many times
     oracle=f"""
     WITH tok AS (
       SELECT source,
-             unnest(list_filter(string_split(lower(text), ' '), t -> length(t) > 0)) AS token
+             unnest({words_sql()}) AS token
       FROM documents WHERE length(text) > 0
     ),
     vocab AS (
@@ -1720,7 +1703,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial to <= #sources rows."""
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     tok = materialize(
-        d.select("source", F.explode(words_col_lower()).alias("token"))
+        d.select("source", F.explode(words()).alias("token"))
     )  # one tokenize pass, two consumers
     vocab = (
         tok.groupBy("token")
@@ -1850,7 +1833,7 @@ MATTR_S = 10  # stride
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split(lower(text), ' '), x -> length(x) > 0) AS tl
+             {words_sql()} AS tl
       FROM documents
     ),
     g AS (SELECT doc_id, len(tl) AS n_tokens, tl FROM t WHERE len(tl) >= {MATTR_W}),
@@ -1892,7 +1875,7 @@ def text_mattr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local fold over window starts; zero shuffles, fully inside
     codegen.  O(n_windows * W) per doc = O(n_tokens * W/S), linear in
     corpus bytes."""
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
+    toks = words()
     t1 = (
         _docs(spark, sf_dir)
         .select("doc_id", toks.alias("toks"))
@@ -1933,8 +1916,7 @@ BURSTINESS_TOP = 30
     oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(string_split(lower(text), ' '),
-                                t -> length(t) > 0)) AS token
+             unnest({words_sql()}) AS token
       FROM documents WHERE length(text) > 0
     ),
     td AS (
@@ -1978,9 +1960,7 @@ def text_burstiness_vmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-        ).alias("token"),
+        F.explode(words()).alias("token"),
     )
     td = toks.groupBy("token", "doc_id").agg(F.count(F.lit(1)).cast("long").alias("c"))
     per = td.groupBy("token").agg(
@@ -2019,7 +1999,7 @@ NOVELTY_BATCH = 50  # docs per ingestion batch (doc_id is arrival order)
     oracle=f"""
     WITH toks AS (
       SELECT doc_id // {NOVELTY_BATCH} AS batch,
-             list_filter(string_split(lower(text), ' '), t -> length(t) > 0) AS w
+             {words_sql()} AS w
       FROM documents WHERE length(text) > 0
     ),
     tg AS (
@@ -2066,7 +2046,7 @@ def text_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).where(F.length("text") > 0)
     toks = d.select(
         F.expr(f"doc_id div {NOVELTY_BATCH}").alias("batch"),
-        F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0).alias("w"),
+        words().alias("w"),
     ).where(F.size("w") >= 3)
     tg = toks.select(
         "batch",

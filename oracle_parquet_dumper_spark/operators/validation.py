@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -251,16 +252,19 @@ def dq_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
+_CANON_SQL = (
+    "concat_ws('|', CAST(o_orderkey AS VARCHAR), "
+    "coalesce(CAST(o_custkey AS VARCHAR), '<null>'), "
+    "coalesce(o_orderstatus, '<null>'), "
+    "coalesce(CAST(o_totalprice AS VARCHAR), '<null>'))"
+)
+
+
 @query(
     "dq_table_checksum",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(('0x' || substring(md5(
-             concat_ws('|', CAST(o_orderkey AS VARCHAR),
-                            coalesce(CAST(o_custkey AS VARCHAR), '<null>'),
-                            coalesce(o_orderstatus, '<null>'),
-                            coalesce(CAST(o_totalprice AS VARCHAR), '<null>'))
-           ), 1, 15)) AS BIGINT)) AS VARCHAR) AS checksum
+           CAST(SUM({md5_long_sql(_CANON_SQL)}) AS VARCHAR) AS checksum
     FROM orders
     """,
     tags=("validation", "agg"),
@@ -283,7 +287,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("o_orderstatus"), sentinel),
         F.coalesce(F.col("o_totalprice").cast("string"), sentinel),
     )
-    row_hash = F.conv(F.substring(F.md5(canon.cast("binary")), 1, 15), 16, 10).cast("long")
+    row_hash = md5_long(canon)
     # 60-bit hashes summed over billions of rows overflow a long; the
     # sum runs in exact DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) and the
     # checksum is emitted as a string — both engines stringify the exact

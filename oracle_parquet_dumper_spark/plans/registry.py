@@ -241,17 +241,5 @@ def dec_one_plus(col: Column | str) -> Column:
     return F.lit(1) + c.cast("decimal(3,2)")
 
 
-def dec_money_sql(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(12,2))"
-
-
-def dec_one_minus_sql(expr: str) -> str:
-    return f"(1 - CAST({expr} AS DECIMAL(3,2)))"
-
-
-def dec_one_plus_sql(expr: str) -> str:
-    return f"(1 + CAST({expr} AS DECIMAL(3,2)))"
-
-
 def dec_avg_sql(expr: str) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / COUNT({expr})"

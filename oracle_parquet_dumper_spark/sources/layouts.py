@@ -91,20 +91,9 @@ def write_bucketed_table(
 # concurrent session mid-scan.  These helpers are the hardened versions
 # both call sites share.
 
-STATE_GC_GRACE_S = 1800.0  # default; OPDS_STATE_GC_GRACE_S overrides
+STATE_GC_GRACE_S = 1800.0  # gc_state_siblings' grace when none is passed
 
 _SUPERSEDED_MARK = ".superseded"
-
-
-def _gc_grace_s(grace_s: float | None) -> float:
-    import os
-
-    if grace_s is not None:
-        return grace_s
-    try:
-        return float(os.environ.get("OPDS_STATE_GC_GRACE_S", ""))
-    except ValueError:
-        return STATE_GC_GRACE_S
 
 
 def promote_state_build(tmp_path: str, path: str, complete) -> None:
@@ -164,13 +153,14 @@ def gc_state_siblings(
     correct for those: nothing reads a tmp dir but its writer, and a
     crashed writer stops touching it).
 
+    ``grace_s`` defaults to ``STATE_GC_GRACE_S``, read at call time.
     Returns the sibling names actually removed; ``on_remove(name)``
     runs for each (catalog deregistration hook)."""
     import os
     import shutil
     import time
 
-    grace = _gc_grace_s(grace_s)
+    grace = STATE_GC_GRACE_S if grace_s is None else grace_s
     now = time.time()
     removed: list[str] = []
     try:
@@ -336,7 +326,12 @@ def curve_clustered(
     """Range-repartition ``df`` on a ``curve`` key over ``cols`` (one
     sampling shuffle into ``n`` partitions, default the shuffle partition
     count), sort within each, drop the key: rolled files come out as
-    disjoint curve-range tiles, tight on every clustered column."""
+    disjoint curve-range tiles, tight on every clustered column.
+
+    The tile boundaries, and so the per-file row counts, are not
+    reproducible across sessions: ``RangePartitioner`` seeds its key
+    sample with the RDD id, which depends on what the session ran
+    before.  The set of rows written is always the same."""
     check_curve(curve, cols)
     key_of, key = (hilbert_key, "_h") if curve == "hilbert" else (zorder_key, "_z")
     keyed = key_of(df, cols)

@@ -10,10 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.operators.dedup import (
-    minhash_signature,
-    shingles,
-)
+from oracle_parquet_dumper_spark.operators.dedup import minhash_signatures_df
 
 
 BASE = (
@@ -34,9 +31,7 @@ def planted(spark):
 
 
 def test_minhash_signature_properties(spark, planted):
-    sig = planted.select(
-        "doc_id", minhash_signature(shingles(F.col("text"))).alias("sig")
-    ).collect()
+    sig = minhash_signatures_df(planted).collect()
     by_id = {r.doc_id: r.sig for r in sig}
     assert all(len(s) == 16 for s in by_id.values())
     # exact dup -> identical signature

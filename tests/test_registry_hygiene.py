@@ -174,3 +174,43 @@ def test_no_new_unreferenced_queries():
     )
     gone = LEGACY_UNREFERENCED - set(REGISTRY)
     assert not gone, f"legacy names no longer registered — prune: {sorted(gone)}"
+
+
+# The tokenize-and-hash policy lives in functions/tokens.py; a raw copy
+# elsewhere can drift from its DuckDB twin unseen, because every fixture
+# document is ASCII and non-null.  The word-split idioms are matched with
+# their one-space delimiter: the character splits (split on '') share the
+# prefix but compute something else and stay inline.
+RAW_TOKEN_HASH_IDIOMS = {
+    "Spark word split": re.compile(r'F\.split\(F\.lower\(.*\), " "\)'),
+    "DuckDB word split": re.compile(r"string_split\(lower\(.*\), ' '\)"),
+    "Spark md5 prefix": re.compile(re.escape("F.conv(F.substring(F.md5(")),
+    "DuckDB md5 prefix": re.compile(re.escape("'0x' || substring(md5(")),
+}
+
+
+def _raw_idiom_hits(src: str) -> list[str]:
+    return [name for name, pat in RAW_TOKEN_HASH_IDIOMS.items() if pat.search(src)]
+
+
+def test_token_hash_policy_written_once():
+    pkg = os.path.join(REPO, "oracle_parquet_dumper_spark")
+    owner = os.path.join(pkg, "functions", "tokens.py")
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if fn.endswith(".py") and path != owner:
+                rel = os.path.relpath(path, REPO)
+                for i, line in enumerate(open(path), 1):
+                    hits += [f"{rel}:{i}: {name}" for name in _raw_idiom_hits(line)]
+    assert not hits, "raw tokenize/hash copies; use functions/tokens.py:\n" + "\n".join(hits)
+    # the rule fires on each raw form it replaces, and not on a char split
+    raw = [
+        'F.filter(F.split(F.lower(F.col("text")), " "), lambda t: F.length(t) > 0)',
+        "list_filter(string_split(lower(text), ' '), x -> length(x) > 0)",
+        'F.conv(F.substring(F.md5(c.cast("binary")), 1, 15), 16, 10).cast("long")',
+        "CAST(('0x' || substring(md5(t), 1, 8)) AS BIGINT)",
+    ]
+    assert [_raw_idiom_hits(s) for s in raw] == [[n] for n in RAW_TOKEN_HASH_IDIOMS]
+    assert _raw_idiom_hits("string_split(lower(text), '')") == []

@@ -8,6 +8,8 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta
 
+from oracle_parquet_dumper_spark.sources import layouts
+
 
 def _write_documents(spark, tmp_path, rows):
     spark.createDataFrame(
@@ -242,7 +244,7 @@ def test_dedup_stored_state_lifecycle(spark, tmp_path, monkeypatch):
 
     # phase 2: with the grace period elapsed (grace=0 here), the NEXT
     # build pass removes the tombstoned sibling
-    monkeypatch.setenv("OPDS_STATE_GC_GRACE_S", "0")
+    monkeypatch.setattr(layouts, "STATE_GC_GRACE_S", 0.0)
     shutil.rmtree(str(tmp_path / "documents.parquet"))
     corpus("gamma")
     assert q(spark, str(tmp_path)).count() > 0
@@ -320,7 +322,7 @@ def test_pagerank_edge_state_lifecycle(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.MonkeyPatch.context() as mp:
-        mp.setenv("OPDS_STATE_GC_GRACE_S", "0")
+        mp.setattr(layouts, "STATE_GC_GRACE_S", 0.0)
         shutil.rmtree(str(tmp_path / "lineitem.parquet"))
         lineitem(200)
         t3 = pagerank_edge_state(spark, str(tmp_path))
