@@ -29,6 +29,7 @@ from oracle_parquet_dumper_spark.functions.tokens import (
     md5_long,
     md5_long_sql,
     shingles,
+    shingles_sql,
     words,
     words_sql,
 )
@@ -237,30 +238,19 @@ def minhash_band_rows(sig: DataFrame, keep_sig: bool = False) -> DataFrame:
 
 def _minhash_sig_sql(source_cte: str = "documents") -> str:
     """SQL twin of ``minhash_signatures_df`` over ``source_cte`` (a
-    relation with doc_id, text): tokenize -> md5 token ids -> window-lead
-    shingles -> md5 shingle ids -> 16 affine min-aggregates.  Returns a
-    CTE body producing (doc_id, h0..h15)."""
+    relation with doc_id, text): tokenize -> shingles -> md5 shingle ids
+    -> 16 affine min-aggregates.  Documents with no tokens get no row,
+    as on the Spark side.  Returns a CTE body producing (doc_id,
+    h0..h15)."""
     mins = ",\n             ".join(
         _affine_min_sql(i, "s") + f" AS h{i}" for i in range(N_MINHASH)
     )
     return f"""
-    mh_tok AS (
-      SELECT doc_id, generate_subscripts(tl, 1) - 1 AS pos, unnest(tl) AS t
-      FROM (SELECT doc_id,
-                   {words_sql()} AS tl
-            FROM {source_cte} WHERE length(text) > 0)
-    ),
-    mh_sh0 AS (
-      SELECT doc_id, pos, t,
-             LEAD(t, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS t2,
-             LEAD(t, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS t3
-      FROM mh_tok
-    ),
     mh_sh AS MATERIALIZED (
-      SELECT doc_id,
-             {md5_long_sql("concat_ws(chr(31), t, t2, t3)")} AS s
-      FROM mh_sh0
-      WHERE t3 IS NOT NULL OR (pos = 0 AND t3 IS NULL)
+      SELECT doc_id, {md5_long_sql("g")} AS s
+      FROM (SELECT doc_id, unnest({shingles_sql("tl")}) AS g
+            FROM (SELECT doc_id, {words_sql()} AS tl FROM {source_cte})
+            WHERE len(tl) > 0)
     ),
     mh_sig AS MATERIALIZED (
       SELECT doc_id,
@@ -1948,11 +1938,7 @@ def _semantic_kmeans_oracle() -> str:
     from oracle_parquet_dumper_spark.operators.iterative import _kmeans_chain
 
     chain, final = _kmeans_chain()
-    cos = (
-        "round(list_dot_product(a.vd, r.rep_vd) / "
-        "(sqrt(list_dot_product(a.vd, a.vd)) * "
-        "sqrt(list_dot_product(r.rep_vd, r.rep_vd))), 6)"
-    )
+    cos = cosine_rounded_sql("a.vd", "r.rep_vd")
     return f"""
     WITH {chain},
     reps AS (

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
 from oracle_parquet_dumper_spark.functions.tokens import md5_long_sql
+from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -461,10 +462,7 @@ def _embed_match_oracle() -> str:
       SELECT label, [{cen}] AS centroid FROM embeddings GROUP BY label
     ),
     scored AS (
-      SELECT e.doc_id, c.label,
-             round(list_dot_product(e.fe, c.centroid) /
-                   (sqrt(list_dot_product(e.fe, e.fe)) *
-                    sqrt(list_dot_product(c.centroid, c.centroid))), 6) AS cos
+      SELECT e.doc_id, c.label, {cosine_rounded_sql('e.fe', 'c.centroid')} AS cos
       FROM emb e CROSS JOIN cen c
     ),
     r AS (

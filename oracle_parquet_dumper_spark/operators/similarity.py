@@ -13,15 +13,18 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.lsh import _bucket_sql, _sign_bit
 from oracle_parquet_dumper_spark.functions.vectors import (
     as_double,
+    cosine_prenormed,
     cosine_rounded,
     cosine_rounded_sql,
     dot,
     dot_sql,
+    norm,
 )
 from oracle_parquet_dumper_spark.plans.registry import dec_sum_sql, query
 from oracle_parquet_dumper_spark.session import materialize
@@ -228,48 +231,195 @@ def _threshold_join_lsh(spark: SparkSession, sf_dir: str, cap: int | None = None
     return pair_cosine(cand, e, "vec_id", "embedding").where(F.col("cos") >= 0.2)
 
 
-def _bucket_expr(vec_col):
-    """Sign-LSH bucket id: concat of sign bits of the ROUNDED <vec,
-    plane_i> dot product (6 digits) — the cross-engine sign convention
-    proven by functions/lsh.py, which makes the bucket assignment (and
-    hence the whole ANN result) reproducible in DuckDB."""
-    bits = [
-        F.when(F.round(dot(vec_col, F.array(*[F.lit(v) for v in plane])), 6) >= 0, "1").otherwise("0")
-        for plane in HYPERPLANES
-    ]
-    return F.concat(*bits)
+# --- k-NN evaluation kit ------------------------------------------------------
+# The blocks every probe and batch k-NN query below is built from, each
+# Spark builder next to its DuckDB twin.  Batch queries score the
+# corpus ``e`` (vec_id, v = the vector as array<double>, nv = its norm;
+# see ``_vectors``) against the query batch ``q`` (qid, qv, nq); a
+# per-query top-k relation is (qid, vec_id, ...) ranked on (cos DESC,
+# vec_id) unless a query orders by something else.
+
+KNN_QUERY_SET_SIZE = 16
 
 
-def _bucket_sql(vec_expr: str) -> str:
-    """DuckDB twin of ``_bucket_expr``, built from the same plane
-    literals (repr round-trips bit-exactly)."""
-    bits = [
-        "CASE WHEN round(list_dot_product("
-        + vec_expr + ", [" + ", ".join(repr(v) for v in plane) + "]::DOUBLE[]), 6) >= 0 "
-        "THEN '1' ELSE '0' END"
-        for plane in HYPERPLANES
+def _bucket(vec: str) -> Column:
+    """8-bit sign-LSH bucket over ``HYPERPLANES``: one band of
+    functions/lsh.py's rounded-dot sign bits, which make the bucket (and
+    hence every ANN result) reproducible in DuckDB."""
+    vec_d = as_double(vec)
+    return F.concat(*[_sign_bit(vec_d, plane) for plane in HYPERPLANES])
+
+
+_BUCKET_SQL = _bucket_sql("embedding::DOUBLE[]", 0, HYPERPLANES, len(HYPERPLANES))
+
+
+def _vectors() -> list[Column]:
+    """``v`` and ``nv`` of the ``embedding`` column, computed once per row."""
+    return [as_double("embedding").alias("v"), norm("embedding").alias("nv")]
+
+
+def _query_batch(e: DataFrame, **cols: str) -> DataFrame:
+    """The capped query batch: the first ``KNN_QUERY_SET_SIZE`` rows of
+    ``e`` whose vec_id is a multiple of 100, as ``qid`` plus each column
+    ``cols[alias]`` of ``e`` under ``alias``.  Capping keeps the
+    broadcast and the scoring cost (one scan x |Q|) constant as the
+    corpus grows."""
+    return (
+        e.where(F.col("vec_id") % 100 == 0)
+        .orderBy("vec_id")
+        .limit(KNN_QUERY_SET_SIZE)
+        .select(F.col("vec_id").alias("qid"), *[F.col(c).alias(a) for a, c in cols.items()])
+    )
+
+
+def _query_batch_sql(cols: str, src: str = "embeddings") -> str:
+    """DuckDB twin of ``_query_batch`` over ``src``; ``cols`` is a select list."""
+    return (
+        f"SELECT vec_id AS qid, {cols} FROM {src} "
+        f"WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}"
+    )
+
+
+def _top_k(df: DataFrame, k: int, rank: str = "rn", order: Column | None = None) -> DataFrame:
+    """The first ``k`` rows of ``df`` per ``qid`` by ``order`` (default
+    ``cos`` descending), ties on vec_id, numbered in column ``rank``."""
+    from pyspark.sql import Window as W
+
+    by = F.col("cos").desc() if order is None else order
+    w = W.partitionBy("qid").orderBy(by, "vec_id")
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _top_k_sql(scored: str, k: int, cols: str = "qid, vec_id", order: str = "cos DESC") -> str:
+    """DuckDB twin of ``_top_k`` over the query ``scored``; the rank is ``rn``."""
+    return f"""SELECT {cols} FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY {order}, vec_id) AS rn
+        FROM ({scored})
+      ) WHERE rn <= {k}"""
+
+
+def _score(pairs: DataFrame) -> DataFrame:
+    """(qid, vec_id, cos) of (corpus, query) pairs: the rounded cosine
+    over the once-per-row double vectors and norms."""
+    return pairs.select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
+
+
+def _truth(e: DataFrame, q: DataFrame, k: int = TOP_K, rank: str = "rn") -> DataFrame:
+    """Exact ground truth: the top ``k`` of every other corpus vector per
+    query by rounded cosine — one scan against the broadcast batch."""
+    return _top_k(_score(e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))), k, rank)
+
+
+def _truth_sql(k: int = TOP_K, cols: str = "qid, vec_id") -> str:
+    """DuckDB twin of ``_truth`` against the CTE ``q`` (qid, qv)."""
+    scored = (
+        f"SELECT q.qid, e.vec_id, {cosine_rounded_sql('e.embedding', 'q.qv')} AS cos "
+        "FROM embeddings e JOIN q ON e.vec_id != q.qid"
+    )
+    return _top_k_sql(scored, k, cols)
+
+
+def _probes(q: DataFrame, *keep: str) -> DataFrame:
+    """Multi-probe set: the ``keep`` columns of ``q`` once per bucket at
+    Hamming distance <= 1 from ``qbucket`` (itself and its 8 one-bit
+    flips), as ``bucket`` — built from the query rows, then broadcast,
+    so the corpus is scanned once."""
+    nbits = len(HYPERPLANES)
+    flips = [
+        F.concat(
+            F.substring("qbucket", 1, i),
+            F.when(F.substring("qbucket", i + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
+            F.substring("qbucket", i + 2, nbits - i - 1),
+        )
+        for i in range(nbits)
     ]
-    return " || ".join(bits)
+    return q.select(*keep, F.explode(F.array(F.col("qbucket"), *flips)).alias("bucket"))
+
+
+# DuckDB twin of ``_probes``, stated as a join predicate.
+_PROBES_SQL = "hamming(b.bucket, q.qbucket) <= 1"
+
+
+def _probe_ann(e: DataFrame, q: DataFrame, rank: str = "rn") -> DataFrame:
+    """Multi-probe sign-LSH answer: the top ``TOP_K`` per query among the
+    corpus rows in its 9 probe buckets (``e`` and ``q`` carry
+    ``bucket``/``qbucket``)."""
+    cand = e.join(F.broadcast(_probes(q, "qid", "qv", "nq")), "bucket")
+    return _top_k(_score(cand.where(F.col("vec_id") != F.col("qid"))), TOP_K, rank)
+
+
+def _probe_ann_sql(cols: str = "qid, vec_id") -> str:
+    """DuckDB twin of ``_probe_ann`` against the CTEs ``b`` (vec_id,
+    embedding, bucket) and ``q`` (qid, qv, qbucket)."""
+    scored = (
+        f"SELECT q.qid, b.vec_id, {cosine_rounded_sql('b.embedding', 'q.qv')} AS cos "
+        f"FROM b JOIN q ON {_PROBES_SQL} AND b.vec_id != q.qid"
+    )
+    return _top_k_sql(scored, TOP_K, cols)
+
+
+def _recall(truth: DataFrame, ann: DataFrame) -> DataFrame:
+    """(qid, n_truth, n_hit, recall_ppm): how many of each query's
+    ``truth`` rows ``ann`` found, recall as exact integer ppm.  Both
+    sides derive from the same scan, so ``truth["qid"] == ann["qid"]``
+    would resolve to ONE expression id and fall into Spark's "trivially
+    true equals predicate" heuristic; the ann keys are renamed instead."""
+    hits = ann.select(F.col("qid").alias("a_qid"), F.col("vec_id").alias("hit_id"))
+    joined = truth.select("qid", "vec_id").join(
+        hits,
+        (F.col("qid") == F.col("a_qid")) & (F.col("vec_id") == F.col("hit_id")),
+        "left",
+    )
+    n_hit = F.count("hit_id")
+    return joined.groupBy("qid").agg(
+        F.count(F.lit(1)).alias("n_truth"),
+        n_hit.alias("n_hit"),
+        F.floor(n_hit * 1000000.0 / F.count(F.lit(1))).cast("long").alias("recall_ppm"),
+    )
+
+
+# DuckDB twin of ``_recall`` over the CTEs ``truth`` and ``ann``.
+_RECALL_SQL = """SELECT t.qid,
+           CAST(COUNT(*) AS BIGINT) AS n_truth,
+           CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
+           CAST(floor(COUNT(a.vec_id) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_ppm
+    FROM truth t LEFT JOIN ann a ON t.qid = a.qid AND t.vec_id = a.vec_id
+    GROUP BY t.qid"""
+
+
+def _probe_oracle(probe: str, tail: str) -> str:
+    """DuckDB twin of the single-query probes: the corpus rows whose
+    bucket satisfies ``probe`` against the query's, scored by rounded
+    cosine, then ``tail`` (a top-k cut or a radius filter)."""
+    return f"""
+    WITH b AS MATERIALIZED (SELECT vec_id, embedding, {_BUCKET_SQL} AS bucket FROM embeddings),
+    q AS (SELECT embedding AS qv, bucket AS qbucket FROM b WHERE vec_id = {QUERY_VEC_ID}),
+    s AS (
+      SELECT b.vec_id, b.bucket, {cosine_rounded_sql('b.embedding', 'q.qv')} AS cos
+      FROM b, q WHERE {probe} AND b.vec_id != {QUERY_VEC_ID}
+    )
+    SELECT * FROM s {tail}
+    """
+
+
+def _multiprobe_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, bucket, cos) of every corpus row in the query vector's 9
+    probe buckets."""
+    e = load_table(spark, sf_dir, "embeddings")
+    bucketed = e.select("vec_id", "embedding", _bucket("embedding").alias("bucket"))
+    q = bucketed.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
+    )
+    return (
+        bucketed.join(F.broadcast(_probes(q, "qvec")), "bucket")
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .select("vec_id", "bucket", cosine_rounded("embedding", "qvec").alias("cos"))
+    )
 
 
 @query(
     "sim_ann_lsh",
-    oracle=f"""
-    WITH b AS MATERIALIZED (
-      SELECT vec_id, embedding::DOUBLE[] AS emb,
-             {{bucket}} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT emb AS qvec, bucket AS qbucket FROM b WHERE vec_id = {QUERY_VEC_ID})
-    SELECT b.vec_id, b.bucket,
-           round(list_dot_product(b.emb, q.qvec) /
-                 (sqrt(list_dot_product(b.emb, b.emb)) *
-                  sqrt(list_dot_product(q.qvec, q.qvec))), 6) AS cos
-    FROM b, q
-    WHERE b.bucket = q.qbucket AND b.vec_id != {QUERY_VEC_ID}
-    ORDER BY cos DESC, vec_id
-    LIMIT {TOP_K}
-    """.replace("{bucket}", _bucket_sql("embedding::DOUBLE[]")),
+    oracle=_probe_oracle("b.bucket = q.qbucket", f"ORDER BY cos DESC, vec_id LIMIT {TOP_K}"),
     tags=("similarity", "lsh"),
     band_bits=8,  # ruled: probe-style, O(N/256) per query
 )
@@ -281,9 +431,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query touches 1/256th of the data; recall is tuned by plane count
     and multi-probe.  Oracle-checked: rounded-dot sign bits make bucket
     assignment engine-portable (the lsh.py convention); recall vs brute
-    force is additionally asserted in tests/test_similarity.py."""
+    force is additionally asserted in
+    tests/test_dedup_similarity.py::test_ann_lsh_recall_vs_bruteforce."""
     e = load_table(spark, sf_dir, "embeddings")
-    bucketed = e.select("vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket"))
+    bucketed = e.select("vec_id", "embedding", _bucket("embedding").alias("bucket"))
     q = bucketed.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
     )
@@ -334,22 +485,7 @@ def sim_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_ann_lsh_multiprobe",
-    oracle=f"""
-    WITH b AS MATERIALIZED (
-      SELECT vec_id, embedding::DOUBLE[] AS emb,
-             {{bucket}} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT emb AS qvec, bucket AS qbucket FROM b WHERE vec_id = {QUERY_VEC_ID})
-    SELECT b.vec_id, b.bucket,
-           round(list_dot_product(b.emb, q.qvec) /
-                 (sqrt(list_dot_product(b.emb, b.emb)) *
-                  sqrt(list_dot_product(q.qvec, q.qvec))), 6) AS cos
-    FROM b, q
-    WHERE hamming(b.bucket, q.qbucket) <= 1 AND b.vec_id != {QUERY_VEC_ID}
-    ORDER BY cos DESC, vec_id
-    LIMIT {TOP_K}
-    """.replace("{bucket}", _bucket_sql("embedding::DOUBLE[]")),
+    oracle=_probe_oracle(_PROBES_SQL, f"ORDER BY cos DESC, vec_id LIMIT {TOP_K}"),
     tags=("similarity", "lsh"),
     band_bits=8,  # ruled: probe-style, 9/256 buckets per query
 )
@@ -368,28 +504,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the same probe set declaratively as hamming(bucket, qbucket)
     <= 1); recall-vs-bruteforce superset of single-probe asserted in
     tests."""
-    e = load_table(spark, sf_dir, "embeddings")
-    nbits = len(HYPERPLANES)
-    bucketed = e.select("vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket"))
-    q = bucketed.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
-    )
-    probes = [F.col("qbucket")] + [
-        F.concat(
-            F.substring("qbucket", 1, i),
-            F.when(F.substring("qbucket", i + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-            F.substring("qbucket", i + 2, nbits - i - 1),
-        )
-        for i in range(nbits)
-    ]
-    probe_df = q.select("qvec", F.explode(F.array(*probes)).alias("bucket"))
-    return (
-        bucketed.join(F.broadcast(probe_df), "bucket")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "bucket", cosine_rounded("embedding", "qvec").alias("cos"))
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(TOP_K)
-    )
+    return _multiprobe_scored(spark, sf_dir).orderBy(F.col("cos").desc(), "vec_id").limit(TOP_K)
 
 
 @query(
@@ -397,10 +512,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (SELECT embedding::DOUBLE[] AS qvec, label AS qcell FROM embeddings
                WHERE vec_id = {QUERY_VEC_ID})
-    SELECT e.vec_id,
-           round(list_dot_product(e.embedding::DOUBLE[], q.qvec) /
-                 (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-                  sqrt(list_dot_product(q.qvec, q.qvec))), 6) AS cos
+    SELECT e.vec_id, {cosine_rounded_sql('e.embedding', 'q.qvec')} AS cos
     FROM embeddings e, q
     WHERE e.label = q.qcell AND e.vec_id != {QUERY_VEC_ID}
     ORDER BY cos DESC, vec_id
@@ -461,10 +573,7 @@ def _quantized_oracle() -> str:
     return f"""
     WITH qv AS (SELECT vec_id, {q8} AS q FROM embeddings),
     one AS (SELECT q AS qq FROM qv WHERE vec_id = {QUERY_VEC_ID})
-    SELECT vec_id,
-           round(list_dot_product(q::DOUBLE[], qq::DOUBLE[]) /
-                 (sqrt(list_dot_product(q::DOUBLE[], q::DOUBLE[])) *
-                  sqrt(list_dot_product(qq::DOUBLE[], qq::DOUBLE[]))), 6) AS qcos
+    SELECT vec_id, {cosine_rounded_sql('q', 'qq')} AS qcos
     FROM qv CROSS JOIN one
     WHERE vec_id != {QUERY_VEC_ID}
     ORDER BY qcos DESC, vec_id
@@ -518,37 +627,13 @@ def sim_topk_quantized_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KNN_QUERY_SET_SIZE = 16
-
-
 def _recall_eval_oracle() -> str:
-    bucket = _bucket_sql("embedding::DOUBLE[]")
     return f"""
-    WITH b AS MATERIALIZED (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-    q AS (SELECT vec_id AS qid, embedding AS qvec, bucket AS qbucket FROM b
-          WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('e.embedding', 'q.qvec')} DESC, e.vec_id) AS rn
-        FROM embeddings e JOIN q ON e.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    ),
-    ann AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, b.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('b.embedding', 'q.qvec')} DESC, b.vec_id) AS rn
-        FROM b JOIN q ON hamming(b.bucket, q.qbucket) <= 1 AND b.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    )
-    SELECT t.qid,
-           CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-           CAST(floor(COUNT(a.vec_id) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_ppm
-    FROM truth t LEFT JOIN ann a ON t.qid = a.qid AND t.vec_id = a.vec_id
-    GROUP BY t.qid
+    WITH b AS MATERIALIZED (SELECT vec_id, embedding, {_BUCKET_SQL} AS bucket FROM embeddings),
+    q AS ({_query_batch_sql("embedding AS qv, bucket AS qbucket", "b")}),
+    truth AS ({_truth_sql()}),
+    ann AS ({_probe_ann_sql()})
+    {_RECALL_SQL}
     """
 
 
@@ -573,103 +658,28 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth pass runs over a sampled slice (ground truth is the expensive
     side — that is the point being measured) while the probe side prunes
     by bucket partition; both sides stay one scan each here."""
-    from pyspark.sql import Window as W
-
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
-
-    nbits = len(HYPERPLANES)
     e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        as_double("embedding").alias("v"),
-        norm("embedding").alias("nv"),
-        _bucket_expr(F.col("embedding")).alias("bucket"),
+        "vec_id", *_vectors(), _bucket("embedding").alias("bucket")
     )
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-            F.col("bucket").alias("qbucket"),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), "vec_id")
-    truth = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    # 9 probe buckets per query (exact + all Hamming-1 flips), broadcast.
-    probes = [F.col("qbucket")] + [
-        F.concat(
-            F.substring("qbucket", 1, i),
-            F.when(F.substring("qbucket", i + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-            F.substring("qbucket", i + 2, nbits - i - 1),
-        )
-        for i in range(nbits)
-    ]
-    probe_df = q.select("qid", "qv", "nq", F.explode(F.array(*probes)).alias("bucket"))
-    ann = (
-        e.join(F.broadcast(probe_df), "bucket")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        # rename the join keys: both sides derive from the same scan, so
-        # truth["qid"] == ann["qid"] would resolve to ONE expression id
-        # and fall into Spark's "trivially true equals predicate"
-        # heuristic — rename instead of relying on it.
-        .select(F.col("qid").alias("a_qid"), F.col("vec_id").alias("hit_id"))
-    )
-    joined = truth.join(
-        ann,
-        (F.col("qid") == F.col("a_qid")) & (F.col("vec_id") == F.col("hit_id")),
-        "left",
-    ).select("qid", "vec_id", "hit_id")
-    n_hit = F.count("hit_id")
-    return joined.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_truth"),
-        n_hit.alias("n_hit"),
-        F.floor(n_hit * 1000000.0 / F.count(F.lit(1))).cast("long").alias("recall_ppm"),
-    )
+    q = _query_batch(e, qv="v", nq="nv", qbucket="bucket")
+    return _recall(_truth(e, q), _probe_ann(e, q))
 
 
 IVF_NPROBE_CELLS = 2  # query cell + next cell, of 10 label cells
 
 
 def _recall_eval_ivf_oracle() -> str:
-    return f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qvec, label AS qcell FROM embeddings
-               WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('e.embedding', 'q.qvec')} DESC, e.vec_id) AS rn
-        FROM embeddings e JOIN q ON e.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    ),
-    ann AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('e.embedding', 'q.qvec')} DESC, e.vec_id) AS rn
-        FROM embeddings e JOIN q
-          ON (e.label = q.qcell OR e.label = (q.qcell + 1) % 10)
-         AND e.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
+    ann = _top_k_sql(
+        f"SELECT q.qid, e.vec_id, {cosine_rounded_sql('e.embedding', 'q.qv')} AS cos "
+        "FROM embeddings e JOIN q ON (e.label = q.qcell OR e.label = (q.qcell + 1) % 10) "
+        "AND e.vec_id != q.qid",
+        TOP_K,
     )
-    SELECT t.qid,
-           CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-           CAST(floor(COUNT(a.vec_id) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_ppm
-    FROM truth t LEFT JOIN ann a ON t.qid = a.qid AND t.vec_id = a.vec_id
-    GROUP BY t.qid
+    return f"""
+    WITH q AS ({_query_batch_sql("embedding AS qv, label AS qcell")}),
+    truth AS ({_truth_sql()}),
+    ann AS ({ann})
+    {_RECALL_SQL}
     """
 
 
@@ -694,76 +704,18 @@ def sim_recall_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     LOW by construction (~nprobe/ncells, since unstructured gaussians
     have no cluster affinity); the eval exists to measure exactly that —
     `tests/test_ann_recall_sf1.py` pins the measured floor at sf1."""
-    from pyspark.sql import Window as W
-
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("v"),
-        norm("embedding").alias("nv"),
-    )
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-            F.col("label").alias("qcell"),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), "vec_id")
-    truth = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    ann = (
-        e.join(
-            F.broadcast(q),
-            ((F.col("label") == F.col("qcell")) | (F.col("label") == (F.col("qcell") + 1) % 10))
-            & (F.col("vec_id") != F.col("qid")),
-        )
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        # rename both join keys: truth and ann derive from the same scan
-        # (see sim_recall_eval's trivially-true-predicate note).
-        .select(F.col("qid").alias("a_qid"), F.col("vec_id").alias("hit_id"))
-    )
-    joined = truth.join(
-        ann,
-        (F.col("qid") == F.col("a_qid")) & (F.col("vec_id") == F.col("hit_id")),
-        "left",
-    ).select("qid", "vec_id", "hit_id")
-    n_hit = F.count("hit_id")
-    return joined.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_truth"),
-        n_hit.alias("n_hit"),
-        F.floor(n_hit * 1000000.0 / F.count(F.lit(1))).cast("long").alias("recall_ppm"),
-    )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", *_vectors())
+    q = _query_batch(e, qv="v", nq="nv", qcell="label")
+    cells = (F.col("label") == F.col("qcell")) | (F.col("label") == (F.col("qcell") + 1) % 10)
+    ann = _top_k(_score(e.join(F.broadcast(q), cells & (F.col("vec_id") != F.col("qid")))), TOP_K)
+    return _recall(_truth(e, q), ann)
 
 
 @query(
     "sim_knn_join",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings
-               WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    scored AS (
-      SELECT q.qid, e.vec_id,
-             {cosine_rounded_sql('e.embedding', 'q.qvec')} AS cos
-      FROM embeddings e JOIN q ON e.vec_id != q.qid
-    )
-    SELECT qid, vec_id, cos, rn FROM (
-      SELECT qid, vec_id, cos,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= 3
+    WITH q AS ({_query_batch_sql("embedding AS qv")})
+    {_truth_sql(3, "qid, vec_id, cos, rn")}
     """,
     tags=("similarity", "join"),
     bench=True,
@@ -771,39 +723,13 @@ def sim_recall_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch k-NN join: top-3 neighbors for every vector in a query set.
 
-    The query set is CAPPED at a fixed size (first KNN_QUERY_SET_SIZE
-    qualifying vec_ids), so both the broadcast size and the scoring cost
-    (one scan x |Q|) stay constant as the base table grows — an
-    unbounded ``vec_id % 100`` set would make scoring O(n^2/100).  For
-    large query sets, prune candidates through the IVF/LSH buckets
-    (sim_ann_lsh / sim_ivf_coarse) before brute-force scoring."""
-    from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
-
-    e = load_table(spark, sf_dir, "embeddings").withColumn("nv", norm("embedding"))
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"), F.col("nv").alias("nq")
-        )
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            cosine_prenormed("embedding", "qvec", "nv", "nq").alias("cos"),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("qid", "vec_id", "cos", F.col("rn").cast("long").alias("rn"))
-    )
+    The query set is the capped batch of ``_query_batch``, so both the
+    broadcast size and the scoring cost stay constant as the base table
+    grows.  For large query sets, prune candidates through the IVF/LSH
+    buckets (sim_ann_lsh / sim_ivf_coarse) before brute-force scoring."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", *_vectors())
+    q = _query_batch(e, qv="v", nq="nv")
+    return _truth(e, q, k=3).select("qid", "vec_id", "cos", F.col("rn").cast("long").alias("rn"))
 
 
 MAXSIM_N_QUERY_VECS = 8
@@ -1278,35 +1204,20 @@ HAMMING_CANDIDATES = 50  # binary-code shortlist size measured for recall
 
 def _recall_eval_hamming_oracle() -> str:
     lo, hi = _sign_word_sql(1), _sign_word_sql(33)
+    ann = _top_k_sql(
+        "SELECT q.qid, b.vec_id, bit_count(xor(b.lo, q.qlo)) + bit_count(xor(b.hi, q.qhi)) AS hd "
+        "FROM b JOIN q ON b.vec_id != q.qid",
+        HAMMING_CANDIDATES,
+        order="hd",
+    )
     return f"""
     WITH b AS MATERIALIZED (
       SELECT vec_id, embedding, {lo} AS lo, {hi} AS hi FROM embeddings
     ),
-    q AS (SELECT vec_id AS qid, embedding AS qvec, lo AS qlo, hi AS qhi FROM b
-          WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('e.embedding', 'q.qvec')} DESC, e.vec_id) AS rn
-        FROM embeddings e JOIN q ON e.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    ),
-    ann AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, b.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY bit_count(xor(b.lo, q.qlo)) + bit_count(xor(b.hi, q.qhi)),
-                            b.vec_id) AS rn
-        FROM b JOIN q ON b.vec_id != q.qid
-      ) WHERE rn <= {HAMMING_CANDIDATES}
-    )
-    SELECT t.qid,
-           CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-           CAST(floor(COUNT(a.vec_id) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_ppm
-    FROM truth t LEFT JOIN ann a ON t.qid = a.qid AND t.vec_id = a.vec_id
-    GROUP BY t.qid
+    q AS ({_query_batch_sql("embedding AS qv, lo AS qlo, hi AS qhi", "b")}),
+    truth AS ({_truth_sql()}),
+    ann AS ({ann})
+    {_RECALL_SQL}
     """
 
 
@@ -1331,55 +1242,18 @@ def sim_recall_eval_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are partitioned by qid; in production the truth side runs
     over a sampled slice — measuring it IS the expensive step this
     query exists to pay once."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        "embedding",
+        *_vectors(),
         _sign_word("embedding", 1).alias("lo"),
         _sign_word("embedding", 33).alias("hi"),
     )
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qvec"),
-            F.col("lo").alias("qlo"),
-            F.col("hi").alias("qhi"),
-        )
-    )
-    joined = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-    tw = W.partitionBy("qid").orderBy(
-        cosine_rounded("embedding", "qvec").desc(), "vec_id"
-    )
-    truth = (
-        joined.withColumn("rn", F.row_number().over(tw))
-        .where(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
+    q = _query_batch(e, qv="v", nq="nv", qlo="lo", qhi="hi")
     hd = F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo"))) + F.bit_count(
         F.col("hi").bitwiseXOR(F.col("qhi"))
     )
-    aw = W.partitionBy("qid").orderBy(hd.asc(), F.col("vec_id").asc())
-    ann = (
-        joined.withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") <= HAMMING_CANDIDATES)
-        .select("qid", F.col("vec_id").alias("hit_id"))
-    )
-    m = truth.join(
-        ann,
-        (truth["qid"] == ann["qid"]) & (truth["vec_id"] == ann["hit_id"]),
-        "left",
-    ).select(truth["qid"].alias("qid"), "vec_id", "hit_id")
-    return m.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_truth"),
-        F.count("hit_id").cast("long").alias("n_hit"),
-        F.floor(F.count("hit_id") * 1000000.0 / F.count(F.lit(1)))
-        .cast("long")
-        .alias("recall_ppm"),
-    )
+    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
+    return _recall(_truth(e, q), _top_k(pairs, HAMMING_CANDIDATES, order=hd.asc()))
 
 
 @query(
@@ -1564,46 +1438,27 @@ MRL_SHORTLIST = 50     # prefix-dim candidates per query fed to the rerank
 
 
 def _mrl_recall_oracle() -> str:
-    full = cosine_rounded_sql("b.v", "q.qv")
-    full_s = cosine_rounded_sql("s.v", "q.qv")
     pre = cosine_rounded_sql(
         f"list_slice(b.v::DOUBLE[], 1, {MRL_PREFIX_DIMS})",
         f"list_slice(q.qv::DOUBLE[], 1, {MRL_PREFIX_DIMS})",
     )
+    short = _top_k_sql(
+        f"SELECT q.qid, b.vec_id, b.v, {pre} AS cos FROM b JOIN q ON b.vec_id != q.qid",
+        MRL_SHORTLIST,
+        "qid, vec_id, v",
+    )
+    ann = _top_k_sql(
+        f"SELECT s.qid, s.vec_id, {cosine_rounded_sql('s.v', 'q.qv')} AS cos "
+        "FROM short s JOIN q ON q.qid = s.qid",
+        TOP_K,
+    )
     return f"""
     WITH b AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM b
-          WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, b.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {full} DESC, b.vec_id) AS rn
-        FROM b JOIN q ON b.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    ),
-    short AS (
-      SELECT qid, vec_id, v FROM (
-        SELECT q.qid, b.vec_id, b.v,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {pre} DESC, b.vec_id) AS rn
-        FROM b JOIN q ON b.vec_id != q.qid
-      ) WHERE rn <= {MRL_SHORTLIST}
-    ),
-    ann AS (
-      SELECT qid, vec_id FROM (
-        SELECT s.qid, s.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY s.qid
-                   ORDER BY {full_s} DESC, s.vec_id) AS rn
-        FROM short s JOIN q ON q.qid = s.qid
-      ) WHERE rn <= {TOP_K}
-    )
-    SELECT t.qid,
-           CAST(COUNT(*) AS BIGINT) AS n_truth,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS n_hit,
-           CAST(floor(COUNT(a.vec_id) * 1000000.0 / COUNT(*)) AS BIGINT) AS recall_ppm
-    FROM truth t LEFT JOIN ann a ON t.qid = a.qid AND t.vec_id = a.vec_id
-    GROUP BY t.qid
+    q AS ({_query_batch_sql("v AS qv", "b")}),
+    truth AS ({_truth_sql()}),
+    short AS ({short}),
+    ann AS ({ann})
+    {_RECALL_SQL}
     """
 
 
@@ -1638,87 +1493,20 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive side by design — it is the thing being evaluated against,
     and at 100 TB it runs over a sampled slice exactly as
     sim_recall_eval documents."""
-    from pyspark.sql import Window as W
+    from oracle_parquet_dumper_spark.functions.vectors import dot_d
 
-    from oracle_parquet_dumper_spark.functions.vectors import (
-        as_double,
-        cosine_prenormed,
-        dot_d,
-        norm,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        as_double("embedding").alias("v"),
-        norm("embedding").alias("nv"),
-    )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", *_vectors())
     e = e.withColumn("v16", F.slice("v", 1, MRL_PREFIX_DIMS)).withColumn(
         "nv16", F.sqrt(dot_d("v16", "v16"))
     )
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-            F.col("v16").alias("qv16"),
-            F.col("nv16").alias("nq16"),
-        )
-    )
+    q = _query_batch(e, qv="v", nq="nv", qv16="v16", nq16="nv16")
+    cos16 = cosine_prenormed("v16", "qv16", "nv16", "nq16").alias("cos16")
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-    w_full = W.partitionBy("qid").orderBy(F.col("cos").desc(), "vec_id")
-    truth = (
-        pairs.select(
-            "qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos")
-        )
-        .withColumn("rn", F.row_number().over(w_full))
-        .where(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    w_pre = W.partitionBy("qid").orderBy(F.col("cos16").desc(), "vec_id")
-    short = (
-        pairs.select(
-            "qid",
-            "vec_id",
-            "v",
-            "nv",
-            cosine_prenormed("v16", "qv16", "nv16", "nq16").alias("cos16"),
-        )
-        .withColumn("rn", F.row_number().over(w_pre))
-        .where(F.col("rn") <= MRL_SHORTLIST)
-        .select("qid", "vec_id", "v", "nv")
-    )
-    ann = (
-        short.join(
-            F.broadcast(q.select("qid", "qv", "nq")), "qid"
-        )
-        .select(
-            "qid",
-            "vec_id",
-            cosine_prenormed("v", "qv", "nv", "nq").alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w_full))
-        .where(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
-    hit = ann.withColumnRenamed("vec_id", "hit_id")
-    return (
-        truth.join(
-            hit,
-            (truth.qid == hit.qid) & (truth.vec_id == hit.hit_id),
-            "left",
-        )
-        .groupBy(truth.qid)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_truth"),
-            F.count("hit_id").cast("long").alias("n_hit"),
-            F.floor(F.count("hit_id") * 1000000.0 / F.count(F.lit(1)))
-            .cast("long")
-            .alias("recall_ppm"),
-        )
-    )
+    short = _top_k(
+        pairs.select("qid", "vec_id", "v", "nv", cos16), MRL_SHORTLIST, order=F.col("cos16").desc()
+    ).select("qid", "vec_id", "v", "nv")
+    ann = _top_k(_score(short.join(F.broadcast(q.select("qid", "qv", "nq")), "qid")), TOP_K)
+    return _recall(_truth(e, q), ann)
 
 
 # --- cosine range search (radius query over LSH probes, r11) ----------------
@@ -1728,23 +1516,7 @@ RANGE_RADIUS = 0.25
 
 @query(
     "sim_range_search_radius",
-    oracle=f"""
-    WITH b AS MATERIALIZED (
-      SELECT vec_id, embedding::DOUBLE[] AS emb,
-             {{bucket}} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT emb AS qvec, bucket AS qbucket FROM b WHERE vec_id = {QUERY_VEC_ID})
-    SELECT b.vec_id, b.bucket,
-           round(list_dot_product(b.emb, q.qvec) /
-                 (sqrt(list_dot_product(b.emb, b.emb)) *
-                  sqrt(list_dot_product(q.qvec, q.qvec))), 6) AS cos
-    FROM b, q
-    WHERE hamming(b.bucket, q.qbucket) <= 1 AND b.vec_id != {QUERY_VEC_ID}
-      AND round(list_dot_product(b.emb, q.qvec) /
-                (sqrt(list_dot_product(b.emb, b.emb)) *
-                 sqrt(list_dot_product(q.qvec, q.qvec))), 6) >= {RANGE_RADIUS}
-    """.replace("{bucket}", _bucket_sql("embedding::DOUBLE[]")),
+    oracle=_probe_oracle(_PROBES_SQL, f"WHERE cos >= {RANGE_RADIUS}"),
     tags=("similarity", "lsh"),
     band_bits=8,  # ruled: probe-style, 9/256 buckets per query
 )
@@ -1773,31 +1545,7 @@ def sim_range_search_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy here would full-shuffle a relation whose size is
     data-dependent (a dense neighborhood at extreme scale); consumers
     wanting ranked output compose a top-k on top."""
-    e = load_table(spark, sf_dir, "embeddings")
-    nbits = len(HYPERPLANES)
-    bucketed = e.select(
-        "vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket")
-    )
-    q = bucketed.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
-    )
-    probes = [F.col("qbucket")] + [
-        F.concat(
-            F.substring("qbucket", 1, i),
-            F.when(F.substring("qbucket", i + 1, 1) == "1", F.lit("0")).otherwise(
-                F.lit("1")
-            ),
-            F.substring("qbucket", i + 2, nbits - i - 1),
-        )
-        for i in range(nbits)
-    ]
-    probe_df = q.select("qvec", F.explode(F.array(*probes)).alias("bucket"))
-    return (
-        bucketed.join(F.broadcast(probe_df), "bucket")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "bucket", cosine_rounded("embedding", "qvec").alias("cos"))
-        .where(F.col("cos") >= RANGE_RADIUS)
-    )
+    return _multiprobe_scored(spark, sf_dir).where(F.col("cos") >= RANGE_RADIUS)
 
 
 # --- kNN majority-vote classification (r11) ---------------------------------
@@ -1889,28 +1637,12 @@ NDCG_IDEAL: int = sum(w * (TOP_K - i) for i, w in enumerate(NDCG_W))
 
 
 def _ndcg_eval_oracle() -> str:
-    bucket = _bucket_sql("embedding::DOUBLE[]")
     w_list = "[" + ", ".join(str(w) for w in NDCG_W) + "]"
     return f"""
-    WITH b AS MATERIALIZED (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-    q AS (SELECT vec_id AS qid, embedding AS qvec, bucket AS qbucket FROM b
-          WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT {KNN_QUERY_SET_SIZE}),
-    truth AS (
-      SELECT qid, vec_id, rn AS tr FROM (
-        SELECT q.qid, e.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('e.embedding', 'q.qvec')} DESC, e.vec_id) AS rn
-        FROM embeddings e JOIN q ON e.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    ),
-    ann AS (
-      SELECT qid, vec_id, rn AS ar FROM (
-        SELECT q.qid, b.vec_id,
-               ROW_NUMBER() OVER (PARTITION BY q.qid
-                   ORDER BY {cosine_rounded_sql('b.embedding', 'q.qvec')} DESC, b.vec_id) AS rn
-        FROM b JOIN q ON hamming(b.bucket, q.qbucket) <= 1 AND b.vec_id != q.qid
-      ) WHERE rn <= {TOP_K}
-    )
+    WITH b AS MATERIALIZED (SELECT vec_id, embedding, {_BUCKET_SQL} AS bucket FROM embeddings),
+    q AS ({_query_batch_sql("embedding AS qv, bucket AS qbucket", "b")}),
+    truth AS ({_truth_sql(cols="qid, vec_id, rn AS tr")}),
+    ann AS ({_probe_ann_sql("qid, vec_id, rn AS ar")})
     SELECT a.qid,
            CAST(COUNT(*) AS BIGINT) AS n_retrieved,
            CAST(COUNT(t.tr) AS BIGINT) AS n_hits,
@@ -1948,59 +1680,13 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     query batch vs one base scan with a per-qid top-k window; ANN side
     probes 9 of 256 buckets per query.  The extra work over recall is
     O(|retrieved|) bookkeeping."""
-    from pyspark.sql import Window as W
-
-    from oracle_parquet_dumper_spark.functions.vectors import (
-        as_double,
-        cosine_prenormed,
-        norm,
-    )
-
-    nbits = len(HYPERPLANES)
     e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        as_double("embedding").alias("v"),
-        norm("embedding").alias("nv"),
-        _bucket_expr(F.col("embedding")).alias("bucket"),
+        "vec_id", *_vectors(), _bucket("embedding").alias("bucket")
     )
-    q = (
-        e.where(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(KNN_QUERY_SET_SIZE)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-            F.col("bucket").alias("qbucket"),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), "vec_id")
-    truth = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("tr", F.row_number().over(w))
-        .where(F.col("tr") <= TOP_K)
-        .select("qid", "vec_id", "tr")
-    )
-    probes = [F.col("qbucket")] + [
-        F.concat(
-            F.substring("qbucket", 1, i),
-            F.when(F.substring("qbucket", i + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-            F.substring("qbucket", i + 2, nbits - i - 1),
-        )
-        for i in range(nbits)
-    ]
-    probe_df = q.select("qid", "qv", "nq", F.explode(F.array(*probes)).alias("bucket"))
-    ann = (
-        e.join(F.broadcast(probe_df), "bucket")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine_prenormed("v", "qv", "nv", "nq").alias("cos"))
-        .withColumn("ar", F.row_number().over(w))
-        .where(F.col("ar") <= TOP_K)
-        # rename join keys: both sides derive from the same scan (see
-        # sim_recall_eval note on the trivially-true-equals heuristic)
-        .select(F.col("qid").alias("a_qid"), F.col("vec_id").alias("hit_id"), "ar")
+    q = _query_batch(e, qv="v", nq="nv", qbucket="bucket")
+    truth = _truth(e, q, rank="tr").select("qid", "vec_id", "tr")
+    ann = _probe_ann(e, q, rank="ar").select(
+        F.col("qid").alias("a_qid"), F.col("vec_id").alias("hit_id"), "ar"
     )
     w_arr = F.array(*[F.lit(x) for x in NDCG_W])
     gain = F.when(

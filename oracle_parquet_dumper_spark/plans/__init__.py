@@ -31,24 +31,3 @@ from oracle_parquet_dumper_spark.operators import (  # noqa: F401,E402
     validation,
     windows,
 )
-
-OPERATOR_MODULES = [
-    cleaning,
-    dedup,
-    events_analytics,
-    graph,
-    iterative,
-    layout_queries,
-    multimodal,
-    pipeline_prep,
-    profiling,
-    relational,
-    scalars,
-    setops,
-    similarity,
-    streaming_batch,
-    text,
-    udfs,
-    validation,
-    windows,
-]

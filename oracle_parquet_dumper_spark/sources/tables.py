@@ -37,11 +37,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables that should always broadcast in joins.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

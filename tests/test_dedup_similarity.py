@@ -42,6 +42,33 @@ def test_minhash_signature_properties(spark, planted):
     assert agree(by_id[1], by_id[3]) <= 0.25
 
 
+def test_minhash_signature_sql_twin_per_document(spark):
+    """The SQL twin gives each document the signature the Spark builder
+    gives it, on the token counts the fixtures never isolate: none, one,
+    two and three words, and a repeated trigram.  Documents without a
+    token get no signature on either side."""
+    import duckdb
+
+    from oracle_parquet_dumper_spark.operators.dedup import N_MINHASH, _minhash_sig_sql
+
+    rows = [
+        (1, ""), (2, "   "), (3, None), (4, "Solo"), (5, "two  words"),
+        (6, "exactly three words"), (7, "a b c a b c a b c d"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: list(r.sig) for r in minhash_signatures_df(docs).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    hs = ", ".join(f"h{i}" for i in range(N_MINHASH))
+    want = {
+        r[0]: list(r[1:])
+        for r in con.sql(f"WITH {_minhash_sig_sql()} SELECT doc_id, {hs} FROM mh_sig").fetchall()
+    }
+    assert sorted(got) == [4, 5, 6, 7]
+    assert got == want
+
+
 def test_minhash_lsh_finds_planted_pair(spark, tmp_path):
     """Run the full LSH query over a directory containing a documents
     table with planted near-dups; the pair (1,2) and the exact pair (1,4)
@@ -95,6 +122,48 @@ def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     # bounds rather than a fixed recall.
     assert len(ann) <= 10
     assert ann  # bucket non-empty: query's own bucket always has neighbors? not guaranteed -> see below
+
+
+def test_knn_join_scores_in_double_precision(spark, tmp_path):
+    """sim_knn_join's cosine matches its oracle where float32 products
+    would not: the neighbour is chosen so that summing the
+    float32-rounded element products moves the 6-digit rounded cosine."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oracle_parquet_dumper_spark.plans import REGISTRY
+    from oracle_parquet_dumper_spark.testing import compare
+
+    def cos(x, q, prod):
+        norms = np.sqrt(sum(float(a) * float(a) for a in x) * sum(float(b) * float(b) for b in q))
+        return round(sum(prod(a, b) for a, b in zip(x, q)) / norms, 6)
+
+    rng = np.random.default_rng(0)
+    q = rng.standard_normal(64).astype(np.float32)
+    for _ in range(5000):
+        x = rng.standard_normal(64).astype(np.float32)
+        exact = cos(x, q, lambda a, b: float(a) * float(b))
+        if exact != cos(x, q, lambda a, b: float(a * b)):  # a * b: float32 product
+            break
+    else:
+        raise AssertionError("no vector found whose float32 cosine rounds differently")
+    table = pa.table({
+        "vec_id": pa.array([0, 1], pa.int64()),
+        "embedding": pa.array([q.tolist(), x.tolist()], pa.list_(pa.float32())),
+        "label": pa.array([0, 0], pa.int32()),
+    })
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(table, path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+
+    spec = REGISTRY["sim_knn_join"]
+    df = spec.fn(spark, str(tmp_path))
+    assert [tuple(r) for r in df.collect()] == [(0, 1, exact, 1)]
+    rep = compare(spec.name, df, con, spec.oracle)
+    assert rep.match, rep.detail
 
 
 def test_ivf_topk_contains_bruteforce_cell_hits(spark, sf_dir):

@@ -214,3 +214,68 @@ def test_token_hash_policy_written_once():
     ]
     assert [_raw_idiom_hits(s) for s in raw] == [[n] for n in RAW_TOKEN_HASH_IDIOMS]
     assert _raw_idiom_hits("string_split(lower(text), '')") == []
+
+
+# The k-NN evaluation kit in operators/similarity.py and the rounded
+# cosine in functions/vectors.py: each idiom below may appear in the
+# package only inside its owner, where the rule must still find it.
+KNN_KIT_IDIOMS = {
+    "Spark query batch": (re.compile(r'F\.col\("vec_id"\) % 100'), "_query_batch"),
+    "DuckDB query batch": (re.compile(r"\bvec_id % 100 = 0"), "_query_batch_sql"),
+    "Hamming-1 flip": (re.compile(re.escape('F.substring("qbucket"')), "_probes"),
+    "rounded cosine SQL": (re.compile(r"round\(list_dot_product\([^)]*\) /"), None),
+}
+
+
+def _knn_idiom_hits(src: str) -> list[str]:
+    return [name for name, (pat, _owner) in KNN_KIT_IDIOMS.items() if pat.search(src)]
+
+
+def test_knn_kit_and_rounded_cosine_written_once():
+    import inspect
+
+    from oracle_parquet_dumper_spark.functions import vectors
+    from oracle_parquet_dumper_spark.operators import similarity
+
+    def span(obj):
+        lines, start = inspect.getsourcelines(obj)
+        rel = os.path.relpath(inspect.getsourcefile(obj), REPO)
+        return rel, range(max(start, 1), max(start, 1) + len(lines))
+
+    owners = {
+        name: span(vectors if owner is None else getattr(similarity, owner))
+        for name, (_pat, owner) in KNN_KIT_IDIOMS.items()
+    }
+    pkg = os.path.join(REPO, "oracle_parquet_dumper_spark")
+    stray, owned = [], set()
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                rel = os.path.relpath(path, REPO)
+                for i, line in enumerate(open(path), 1):
+                    for name in _knn_idiom_hits(line):
+                        file, lines = owners[name]
+                        if rel == file and i in lines:
+                            owned.add(name)
+                        else:
+                            stray.append(f"{rel}:{i}: {name}")
+    assert not stray, "k-NN kit / rounded-cosine copies outside their owner:\n" + "\n".join(stray)
+    assert owned == set(KNN_KIT_IDIOMS)
+    # the rule fires on each raw form it replaces ...
+    raw = [
+        'e.where(F.col("vec_id") % 100 == 0).orderBy("vec_id").limit(KNN_QUERY_SET_SIZE)',
+        "WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT 16",
+        'F.concat(F.substring("qbucket", 1, i), flipped, rest)',
+        "round(list_dot_product(b.emb, q.qvec) / (sqrt(list_dot_product(b.emb, b.emb)) *",
+    ]
+    assert [_knn_idiom_hits(s) for s in raw] == [[n] for n in KNN_KIT_IDIOMS]
+    # ... and not on the expressions that compute something else: the
+    # integer-ppm cosine, the sign bit, and the centroid distance
+    assert _knn_idiom_hits(similarity._mmr_cos_ppm_sql("a", "b")) == []
+    assert _knn_idiom_hits(
+        "CASE WHEN round(list_dot_product(v, [0.5, -1.0]::DOUBLE[]), 6) >= 0 THEN '1' ELSE '0' END"
+    ) == []
+    assert _knn_idiom_hits(
+        "round(list_dot_product(x, x) - 2 * list_dot_product(x, c) + list_dot_product(c, c), 6)"
+    ) == []
