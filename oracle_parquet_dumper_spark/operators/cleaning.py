@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import cents, cents_sql
 from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -483,11 +484,11 @@ def clean_winsorize_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "clean_impute_group_median",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT o_orderstatus,
              CASE WHEN o_orderkey % 7 = 0 THEN NULL
-                  ELSE CAST(FLOOR(o_totalprice * 100) AS BIGINT) END AS c
+                  ELSE {cents_sql('o_totalprice')} END AS c
       FROM orders
     ),
     med AS (
@@ -523,7 +524,7 @@ def clean_impute_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.when(F.col("o_orderkey") % 7 == 0, F.lit(None)).otherwise(
-            F.floor(F.col("o_totalprice") * 100).cast("long")
+            cents("o_totalprice")
         ).alias("c"),
     )
     vc = (
@@ -552,11 +553,11 @@ def clean_impute_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "clean_impute_locf",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT user_id, event_type, ts, event_id,
              CASE WHEN event_id % 5 = 0 THEN NULL
-                  ELSE CAST(FLOOR(value * 100) AS BIGINT) END AS v
+                  ELSE {cents_sql('value')} END AS v
       FROM events
     ),
     f AS (
@@ -594,9 +595,7 @@ def clean_impute_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(
-            F.floor(F.col("value") * 100).cast("long")
-        ).alias("v"),
+        F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(cents("value")).alias("v"),
     )
     w = (
         W.partitionBy("user_id")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
+from oracle_parquet_dumper_spark.functions.rounding import to_double, to_double_sql
 from oracle_parquet_dumper_spark.functions.tokens import (
     md5_long,
     md5_long_sql,
@@ -2810,7 +2811,7 @@ _LINE_KEY_SQL = "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARC
     ),
     wts AS (
       SELECT flag, n,
-             CAST(round(sqrt(CAST(CAST(n * q - s * s AS VARCHAR) AS DOUBLE)) * 1000)
+             CAST(round(sqrt({to_double_sql('n * q - s * s')}) * 1000)
                   AS BIGINT) AS w
       FROM m
     ),
@@ -2883,11 +2884,10 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cents").cast(d38) * F.col("cents")).cast(d38).alias("q"),
         )
     )  # 3-row relation, multiple consumers
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     wts = m.select(
         "flag",
         "n",
-        F.round(F.sqrt(dbl(F.col("n") * F.col("q") - F.col("s") * F.col("s"))) * 1000)
+        F.round(F.sqrt(to_double(F.col("n") * F.col("q") - F.col("s") * F.col("s"))) * 1000)
         .cast("long")
         .alias("w"),
     )

@@ -19,6 +19,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
+    dec6,
+    dec6_sql,
+    dec_sum,
+    dec_sum_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -396,12 +406,12 @@ def events_window_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_rfm_segments",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id,
              MAX(CAST(ts AS DATE)) AS last_day,
              COUNT(*) AS freq,
-             CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS monetary_cents
+             CAST(SUM({cents_sql('value')}) AS BIGINT) AS monetary_cents
       FROM events GROUP BY user_id
     ),
     anchor AS (SELECT MAX(last_day) AS max_day FROM per_user),
@@ -463,7 +473,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("user_id").agg(
             F.max(F.to_date("ts")).alias("last_day"),
             F.count(F.lit(1)).alias("freq"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("monetary_cents"),
         ),
@@ -518,7 +528,7 @@ ZSCORE_MIN_N = 12  # don't score until the window has this many samples
 
 @query(
     "events_attribution_last_touch",
-    oracle="""
+    oracle=f"""
     WITH seq AS (
       SELECT event_type, value,
              last_value(CASE WHEN event_type IN ('click', 'view')
@@ -529,7 +539,7 @@ ZSCORE_MIN_N = 12  # don't score until the window has this many samples
     )
     SELECT COALESCE(touch, 'direct') AS touch_type,
            COUNT(*) AS n_purchases,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS revenue
+           {dec_sum_sql('value')} AS revenue
     FROM seq WHERE event_type = 'purchase'
     GROUP BY 1
     """,
@@ -547,8 +557,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     one string.  At 100 TB this is a sort within user partitions —
     attribution over a year of clickstream stays one exchange."""
     from pyspark.sql import Window as W
-
-    from oracle_parquet_dumper_spark.plans.registry import dec_sum
 
     ev = load_table(spark, sf_dir, "events")
     w = (
@@ -767,7 +775,7 @@ def ts_seasonal_profile_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev AS (
       SELECT strftime(f.cohort_day, '%Y-%m-%d') AS cohort_date,
              date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset,
-             SUM(CAST(e.value AS DECIMAL(25,6))) AS sd
+             SUM({dec6_sql('e.value')}) AS sd
       FROM events e JOIN firsts f ON e.user_id = f.user_id
       WHERE e.event_type = 'purchase'
         AND date_diff('day', f.cohort_day, CAST(e.ts AS DATE))
@@ -775,11 +783,11 @@ def ts_seasonal_profile_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY 1, 2
     )
     SELECT cohort_date, day_offset,
-           CAST(CAST(sd AS VARCHAR(64)) AS DOUBLE) AS revenue,
-           CAST(CAST(SUM(sd) OVER (PARTITION BY cohort_date ORDER BY day_offset
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS VARCHAR(64)) AS DOUBLE) AS cum_revenue
+           {to_double_sql('sd')} AS revenue,
+           {to_double_sql('SUM(sd) OVER w')} AS cum_revenue
     FROM rev
+    WINDOW w AS (PARTITION BY cohort_date ORDER BY day_offset
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
     tags=("agg", "events", "window"),
 )
@@ -813,7 +821,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_date"),
             F.col("day_offset").cast("long").alias("day_offset"),
         )
-        .agg(F.sum(F.col("value").cast("decimal(25,6)")).alias("sd"))
+        .agg(F.sum(dec6("value")).alias("sd"))
     )
     w = (
         W.partitionBy("cohort_date")
@@ -824,7 +832,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cohort_date",
         "day_offset",
         F.col("sd").cast("double").alias("revenue"),
-        F.sum("sd").over(w).cast("double").alias("cum_revenue"),
+        to_double(F.sum("sd").over(w)).alias("cum_revenue"),
     )
 
 
@@ -1057,10 +1065,10 @@ CUPED_VARIANTS = 2  # deterministic assignment: user_id % CUPED_VARIANTS
       SELECT user_id, user_id % {CUPED_VARIANTS} AS variant,
              SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT)
                         < CAST((mn_s + mx_s) // 2 AS BIGINT)
-                      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END) AS x,
+                      THEN {cents_sql('value')} ELSE 0 END) AS x,
              SUM(CASE WHEN CAST(FLOOR(epoch(ts)) AS BIGINT)
                         >= CAST((mn_s + mx_s) // 2 AS BIGINT)
-                      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END) AS y
+                      THEN {cents_sql('value')} ELSE 0 END) AS y
       FROM events CROSS JOIN bounds
       GROUP BY user_id
     ),
@@ -1079,15 +1087,11 @@ CUPED_VARIANTS = 2  # deterministic assignment: user_id % CUPED_VARIANTS
       FROM u GROUP BY variant
     )
     SELECT v.variant, v.n_users,
-           CAST(CAST(v.syv AS VARCHAR) AS DOUBLE) / v.n_users AS mean_post,
-           CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE) AS theta,
-           (CAST(CAST(v.syv AS VARCHAR) AS DOUBLE) / v.n_users)
-             - (CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-                / CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE))
-               * ((CAST(CAST(v.sxv AS VARCHAR) AS DOUBLE) / v.n_users)
-                  - (CAST(CAST(g.sx AS VARCHAR) AS DOUBLE)
-                     / CAST(CAST(g.n AS VARCHAR) AS DOUBLE)))
+           {to_double_sql('v.syv')} / v.n_users AS mean_post,
+           {to_double_sql('n * sxy - sx * sy')} / {to_double_sql('n * sxx - sx * sx')} AS theta,
+           ({to_double_sql('v.syv')} / v.n_users)
+             - ({to_double_sql('n * sxy - sx * sy')} / {to_double_sql('n * sxx - sx * sx')})
+               * (({to_double_sql('v.sxv')} / v.n_users) - ({to_double_sql('g.sx')} / {to_double_sql('g.n')}))
              AS mean_post_cuped
     FROM v CROSS JOIN g
     """,
@@ -1103,14 +1107,13 @@ def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     time range (exact integer epoch-second arithmetic).
 
     Float portability: x and y are exact cents (BIGINT); every moment —
-    n, Sx, Sy, Sxy, Sxx, and the theta numerator/denominator
-    n*Sxy - Sx*Sy / n*Sxx - Sx² — is exact DECIMAL(38,0) (Sxy alone
-    reaches ~3e18 at sf1, and n*Sxy ~3e23 overflows BIGINT, the
-    ts_anomaly_rolling_zscore lesson).  Doubles appear only at the
-    final scalar expression, built from single casts of exact decimals
-    (through VARCHAR — the registry's correctly-rounded-cast
-    convention) combined in an identical op tree on both engines, so
-    the adjusted means are bit-identical.
+    n, Sx, Sy, Sxy, Sxx, and the theta numerator/denominator n*Sxy -
+    Sx*Sy / n*Sxx - Sx² — is exact DECIMAL(38,0) (Sxy alone reaches
+    ~3e18 at sf1, and n*Sxy ~3e23 overflows BIGINT, the
+    ts_anomaly_rolling_zscore lesson).  Doubles appear only at the final
+    scalar expression, built from single ``to_double`` casts of exact
+    decimals (functions/rounding.py) combined in an identical op tree on
+    both engines, so the adjusted means are bit-identical.
 
     Scale shape: one broadcast 1-row time-bounds aggregate; ONE shuffle
     keyed by user_id for the per-user covariate/metric rollup
@@ -1125,17 +1128,13 @@ def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.unix_timestamp("ts")).alias("mx_s"),
     )
     cut = F.expr("(mn_s + mx_s) div 2")
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     u = (
         ev.crossJoin(F.broadcast(bounds))
         .groupBy("user_id")
         .agg(
-            F.sum(
-                F.when(F.unix_timestamp("ts") < cut, cents).otherwise(F.lit(0))
-            ).alias("x"),
-            F.sum(
-                F.when(F.unix_timestamp("ts") >= cut, cents).otherwise(F.lit(0))
-            ).alias("y"),
+            F.sum(F.when(F.unix_timestamp("ts") < cut, vc).otherwise(F.lit(0))).alias("x"),
+            F.sum(F.when(F.unix_timestamp("ts") >= cut, vc).otherwise(F.lit(0))).alias("y"),
         )
         .select(
             (F.col("user_id") % CUPED_VARIANTS).alias("variant"), "x", "y"
@@ -1154,14 +1153,13 @@ def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").cast(d38).alias("sxv"),
         F.sum("y").cast(d38).alias("syv"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     j = v.crossJoin(F.broadcast(g))
-    theta = dbl(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / dbl(
+    theta = to_double(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / to_double(
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    mean_post = dbl(F.col("syv")) / F.col("n_users")
-    xbar_v = dbl(F.col("sxv")) / F.col("n_users")
-    xbar = dbl(F.col("sx")) / dbl(F.col("n"))
+    mean_post = to_double(F.col("syv")) / F.col("n_users")
+    xbar_v = to_double(F.col("sxv")) / F.col("n_users")
+    xbar = to_double(F.col("sx")) / to_double(F.col("n"))
     return j.select(
         F.col("variant").cast("long").alias("variant"),
         "n_users",
@@ -1188,9 +1186,9 @@ TT_CONTROL = "view"
     WITH g AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS s,
-             CAST(SUM(CAST(CAST(FLOOR(value * 100) AS BIGINT) AS DECIMAL(38,0))
-                      * CAST(FLOOR(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS q
+             CAST(SUM({cents_sql('value')}) AS DECIMAL(38,0)) AS s,
+             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))
+                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS q
       FROM events WHERE event_type IN ('{TT_TREAT}', '{TT_CONTROL}')
       GROUP BY event_type
     ),
@@ -1205,12 +1203,10 @@ TT_CONTROL = "view"
     ),
     v AS (
       SELECT n1, n2,
-             CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / n1 AS m1,
-             CAST(CAST(s2 AS VARCHAR) AS DOUBLE) / n2 AS m2,
-             CAST(CAST(n1 * q1 - s1 * s1 AS VARCHAR) AS DOUBLE)
-               / (CAST(n1 AS DOUBLE) * (n1 - 1) * n1) AS v1n,
-             CAST(CAST(n2 * q2 - s2 * s2 AS VARCHAR) AS DOUBLE)
-               / (CAST(n2 AS DOUBLE) * (n2 - 1) * n2) AS v2n
+             {to_double_sql('s1')} / n1 AS m1,
+             {to_double_sql('s2')} / n2 AS m2,
+             {to_double_sql('n1 * q1 - s1 * s1')} / (CAST(n1 AS DOUBLE) * (n1 - 1) * n1) AS v1n,
+             {to_double_sql('n2 * q2 - s2 * s2')} / (CAST(n2 AS DOUBLE) * (n2 - 1) * n2) AS v2n
       FROM m
     )
     SELECT n1 AS n_treat, n2 AS n_control,
@@ -1228,15 +1224,14 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the Welch-Satterthwaite degrees of freedom.
 
     Float portability (the events_cuped_adjusted recipe): the only
-    inputs are EXACT integer moments per group — n, sum of cents,
-    sum of squared cents — carried as DECIMAL(38,0) (sum-of-squares
-    reaches ~2.4e15 at sf1 and the n*q variance numerator ~2.4e21,
-    past BIGINT; the decimal form stays exact to ~1e12 rows).  Doubles
-    appear only in the final scalar expression, each decimal entering
-    through ONE correctly-rounded cast (VARCHAR hop on the DuckDB
-    side, the registry convention), combined in an identical op tree —
-    division, subtraction, sqrt are all IEEE-correctly-rounded, so the
-    t statistic is bit-identical across engines.
+    inputs are EXACT integer moments per group — n, sum of cents, sum of
+    squared cents — carried as DECIMAL(38,0) (sum-of-squares reaches
+    ~2.4e15 at sf1 and the n*q variance numerator ~2.4e21, past BIGINT;
+    the decimal form stays exact to ~1e12 rows).  Doubles appear only in
+    the final scalar expression, each decimal entering through ONE
+    ``to_double`` (functions/rounding.py), combined in an identical op
+    tree — division, subtraction, sqrt are all IEEE-correctly-rounded,
+    so the t statistic is bit-identical across engines.
 
     Scale shape: one scan with the two-type filter pushed to parquet;
     ONE map-side-partial aggregate keyed by event_type (2 groups);
@@ -1246,11 +1241,11 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(TT_TREAT, TT_CONTROL)
     )
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(cents).cast(d38).alias("s"),
-        F.sum(cents.cast(d38) * cents).cast(d38).alias("q"),
+        F.sum(vc).cast(d38).alias("s"),
+        F.sum(vc.cast(d38) * vc).cast(d38).alias("q"),
     )
 
     def pick(t: str, c: str):
@@ -1264,18 +1259,17 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick(TT_CONTROL, "s").alias("s2"),
         pick(TT_CONTROL, "q").alias("q2"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     v = m.select(
         "n1",
         "n2",
-        (dbl(F.col("s1")) / F.col("n1")).alias("m1"),
-        (dbl(F.col("s2")) / F.col("n2")).alias("m2"),
+        (to_double(F.col("s1")) / F.col("n1")).alias("m1"),
+        (to_double(F.col("s2")) / F.col("n2")).alias("m2"),
         (
-            dbl(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
+            to_double(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
             / (F.col("n1").cast("double") * (F.col("n1") - 1) * F.col("n1"))
         ).alias("v1n"),
         (
-            dbl(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
+            to_double(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
             / (F.col("n2").cast("double") * (F.col("n2") - 1) * F.col("n2"))
         ).alias("v2n"),
     )
@@ -1298,10 +1292,10 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_changepoint_cusum",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-             CAST(FLOOR(value * 100) AS BIGINT) AS c
+             {cents_sql('value')} AS c
       FROM events
     ),
     tot AS (
@@ -1323,7 +1317,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_type, CAST(n AS BIGINT) AS n,
            CAST(event_id AS BIGINT) AS cp_event_id,
-           CAST(CAST(d AS VARCHAR) AS DOUBLE) / n AS cusum_abs_per_n
+           {to_double_sql('d')} / n AS cusum_abs_per_n
     FROM r WHERE rk = 1
     """,
     tags=("window", "events", "timeseries", "stats"),
@@ -1362,7 +1356,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ts is TIMESTAMP_NTZ; session TZ is pinned UTC so the cast is
         # the identity instant and unix_micros is well-defined
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.floor(F.col("value") * 100).cast("long").alias("c"),
+        cents("value").alias("c"),
     )
     tot = base.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_ev"),
@@ -1388,9 +1382,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("b.n").alias("n"),
         F.col("b.cp_event_id").alias("cp_event_id"),
-        (F.col("b.d").cast("string").cast("double") / F.col("b.n")).alias(
-            "cusum_abs_per_n"
-        ),
+        (to_double("b.d") / F.col("b.n")).alias("cusum_abs_per_n"),
     )
 
 
@@ -1402,7 +1394,7 @@ KS_B = "view"
     "agg_ks_two_sample",
     oracle=f"""
     WITH f AS (
-      SELECT CAST(FLOOR(value * 100) AS BIGINT) AS c, event_type
+      SELECT {cents_sql('value')} AS c, event_type
       FROM events WHERE event_type IN ('{KS_A}', '{KS_B}')
     ),
     v AS (
@@ -1421,7 +1413,7 @@ KS_B = "view"
       FROM v CROSS JOIN t
     )
     SELECT n1 AS n_a, n2 AS n_b, CAST(c AS BIGINT) AS at_value_cents,
-           CAST(CAST(abs(s) AS VARCHAR) AS DOUBLE) / (CAST(n1 AS DOUBLE) * n2)
+           {to_double_sql('abs(s)')} / (CAST(n1 AS DOUBLE) * n2)
              AS ks_stat
     FROM cum ORDER BY abs(s) DESC, c LIMIT 1
     """,
@@ -1459,9 +1451,9 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(KS_A, KS_B)
     )
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     v = materialize(
-        ev.select(cents.alias("c"), "event_type").groupBy("c").agg(
+        ev.select(vc.alias("c"), "event_type").groupBy("c").agg(
             F.count(F.when(F.col("event_type") == KS_A, 1)).cast("long").alias("d1"),
             F.count(F.when(F.col("event_type") == KS_B, 1)).cast("long").alias("d2"),
         )
@@ -1490,10 +1482,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.n_a").alias("n_a"),
         F.col("b.n_b").alias("n_b"),
         F.col("b.at_value_cents").alias("at_value_cents"),
-        (
-            F.col("b.d").cast("string").cast("double")
-            / (F.col("b.n_a").cast("double") * F.col("b.n_b"))
-        ).alias("ks_stat"),
+        (to_double("b.d") / (F.col("b.n_a").cast("double") * F.col("b.n_b"))).alias("ks_stat"),
     )
 
 
@@ -1501,7 +1490,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_mannwhitney_u",
     oracle=f"""
     WITH f AS (
-      SELECT CAST(FLOOR(value * 100) AS BIGINT) AS c, event_type
+      SELECT {cents_sql('value')} AS c, event_type
       FROM events WHERE event_type IN ('{KS_A}', '{KS_B}')
     ),
     v AS (
@@ -1522,17 +1511,15 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cum
     )
     SELECT n1 AS n_a, n2 AS n_b,
-           (CAST(CAST(two_r1 AS VARCHAR) AS DOUBLE)
-              - CAST(CAST(CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) AS VARCHAR) AS DOUBLE)) / 2
+           ({to_double_sql('two_r1')} - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * (n1 + 1)')}) / 2
              AS u_stat,
-           ((CAST(CAST(two_r1 AS VARCHAR) AS DOUBLE)
-               - CAST(CAST(CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) AS VARCHAR) AS DOUBLE)) / 2
-            - CAST(CAST(CAST(n1 AS DECIMAL(38,0)) * n2 AS VARCHAR) AS DOUBLE) / 2)
-           / sqrt(
-               (CAST(CAST(CAST(n1 AS DECIMAL(38,0)) * n2 AS VARCHAR) AS DOUBLE) / 12)
-               * (CAST(CAST(CAST(n1 + n2 + 1 AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE)
-                  - CAST(CAST(tie_t AS VARCHAR) AS DOUBLE)
-                    / CAST(CAST(CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2 - 1) AS VARCHAR) AS DOUBLE))
+           (({to_double_sql('two_r1')}
+               - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * (n1 + 1)')}) / 2
+            - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * n2')} / 2) / sqrt(
+               ({to_double_sql('CAST(n1 AS DECIMAL(38,0)) * n2')} / 12)
+               * ({to_double_sql('CAST(n1 + n2 + 1 AS DECIMAL(38,0))')}
+                  - {to_double_sql('tie_t')}
+                    / {to_double_sql('CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2 - 1)')})
              ) AS z_stat
     FROM s
     """,
@@ -1548,14 +1535,14 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All-integer rank algebra: over the VALUE-AGGREGATED distribution
     (one row per distinct cents value with per-sample counts d1, d2,
-    pooled d), the midrank of value v is prefix(v) + (d+1)/2, so
-    2*R1 = sum d1 * (2*cumd - d + 1) with cumd the INCLUSIVE pooled
-    running count — exact integers carried in DECIMAL(38,0), like the
-    KS weights.  The tie term sum(d^3 - d) is likewise exact.  Doubles
-    appear only in the final scalar block, each decimal entering
-    through ONE VARCHAR-hop cast, combined in an identical op tree
-    (B^(3/2) is written b*sqrt(b)-style: no pow(), whose rounding is
-    not IEEE-pinned).
+    pooled d), the midrank of value v is prefix(v) + (d+1)/2, so 2*R1 =
+    sum d1 * (2*cumd - d + 1) with cumd the INCLUSIVE pooled running
+    count — exact integers carried in DECIMAL(38,0), like the KS
+    weights.  The tie term sum(d^3 - d) is likewise exact.  Doubles
+    appear only in the final scalar block, each decimal entering through
+    ONE ``to_double``, combined in an identical op tree (B^(3/2) is
+    written b*sqrt(b)-style: no pow(), whose rounding is not
+    IEEE-pinned).
 
     Scale shape: identical to agg_ks_two_sample — one pushed scan, one
     map-side-partial groupBy(cents) bounded by the value domain, the
@@ -1565,13 +1552,12 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(KS_A, KS_B)
     )
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     v = materialize(
-        ev.select(cents.alias("c"), "event_type")
+        ev.select(vc.alias("c"), "event_type")
         .groupBy("c")
         .agg(
             F.count(F.when(F.col("event_type") == KS_A, 1)).cast("long").alias("d1"),
@@ -1591,11 +1577,11 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("tie_t"),
     )
     n1, n2 = F.col("n1"), F.col("n2")
-    u_stat = (dbl(F.col("two_r1")) - dbl((n1.cast(d38) * (n1 + 1)).cast(d38))) / 2
-    n1n2 = dbl((n1.cast(d38) * n2).cast(d38))
+    u_stat = (to_double(F.col("two_r1")) - to_double((n1.cast(d38) * (n1 + 1)).cast(d38))) / 2
+    n1n2 = to_double((n1.cast(d38) * n2).cast(d38))
     var_u = (n1n2 / 12) * (
-        dbl((n1 + n2 + 1).cast(d38))
-        - dbl(F.col("tie_t")) / dbl(((n1 + n2).cast(d38) * (n1 + n2 - 1)).cast(d38))
+        to_double((n1 + n2 + 1).cast(d38))
+        - to_double(F.col("tie_t")) / to_double(((n1 + n2).cast(d38) * (n1 + n2 - 1)).cast(d38))
     )
     return s.select(
         n1.alias("n_a"),
@@ -1662,29 +1648,26 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_moments_skew_kurt",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(CAST(FLOOR(value * 100) AS BIGINT) AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s1,
-             CAST(SUM(CAST(CAST(FLOOR(value * 100) AS BIGINT) AS DECIMAL(38,0))
-                      * CAST(FLOOR(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS s2,
-             CAST(SUM(CAST(CAST(FLOOR(value * 100) AS BIGINT) AS DECIMAL(38,0))
-                      * CAST(FLOOR(value * 100) AS BIGINT)
-                      * CAST(FLOOR(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS s3,
-             CAST(SUM(CAST(CAST(FLOOR(value * 100) AS BIGINT) AS DECIMAL(38,0))
-                      * CAST(FLOOR(value * 100) AS BIGINT)
-                      * CAST(FLOOR(value * 100) AS BIGINT)
-                      * CAST(FLOOR(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS s4
+             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s1,
+             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))
+                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS s2,
+             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0)) * {cents_sql('value')}
+                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS s3,
+             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0)) * {cents_sql('value')}
+                      * {cents_sql('value')} * {cents_sql('value')}) AS DECIMAL(38,0)) AS s4
       FROM events GROUP BY event_type
     ),
     d AS (
       SELECT event_type, n,
              CAST(n AS DOUBLE) AS nd,
-             CAST(CAST(s1 AS VARCHAR) AS DOUBLE) AS f1,
-             CAST(CAST(s2 AS VARCHAR) AS DOUBLE) AS f2,
-             CAST(CAST(s3 AS VARCHAR) AS DOUBLE) AS f3,
-             CAST(CAST(s4 AS VARCHAR) AS DOUBLE) AS f4
+             {to_double_sql('s1')} AS f1,
+             {to_double_sql('s2')} AS f2,
+             {to_double_sql('s3')} AS f3,
+             {to_double_sql('s4')} AS f4
       FROM m
     ),
     c AS (
@@ -1724,19 +1707,18 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE scan, one map-side-partial aggregate keyed by
     event_type; everything after runs on a |types|-row relation."""
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     ev = load_table(spark, sf_dir, "events")
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(cents.cast(d38)).cast(d38).alias("s1"),
-        F.sum(cents.cast(d38) * cents).cast(d38).alias("s2"),
-        F.sum(cents.cast(d38) * cents * cents).cast(d38).alias("s3"),
-        F.sum(cents.cast(d38) * cents * cents * cents).cast(d38).alias("s4"),
+        F.sum(vc.cast(d38)).cast(d38).alias("s1"),
+        F.sum(vc.cast(d38) * vc).cast(d38).alias("s2"),
+        F.sum(vc.cast(d38) * vc * vc).cast(d38).alias("s3"),
+        F.sum(vc.cast(d38) * vc * vc * vc).cast(d38).alias("s4"),
     )
     nd = F.col("n").cast("double")
-    f1, f2, f3, f4 = (dbl(F.col(c)) for c in ("s1", "s2", "s3", "s4"))
+    f1, f2, f3, f4 = (to_double(F.col(c)) for c in ("s1", "s2", "s3", "s4"))
     b = (nd * f2) - (f1 * f1)
     a = ((nd * (nd * f3)) - (3 * ((nd * f1) * f2))) + (2 * ((f1 * f1) * f1))
     c4 = (
@@ -1756,11 +1738,11 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_autocorr_lag1",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT event_type, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(FLOOR(value * 100) AS BIGINT) AS c
+             {cents_sql('value')} AS c
       FROM events
     ),
     p AS (
@@ -1780,9 +1762,9 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM p WHERE x IS NOT NULL GROUP BY event_type
     )
     SELECT event_type, n AS n_pairs,
-           CAST(CAST(CAST(n AS DECIMAL(38,0)) * sxy - sx * sy AS VARCHAR) AS DOUBLE)
-           / (sqrt(CAST(CAST(CAST(n AS DECIMAL(38,0)) * sxx - sx * sx AS VARCHAR) AS DOUBLE))
-              * sqrt(CAST(CAST(CAST(n AS DECIMAL(38,0)) * syy - sy * sy AS VARCHAR) AS DOUBLE)))
+           {to_double_sql('CAST(n AS DECIMAL(38,0)) * sxy - sx * sy')}
+           / (sqrt({to_double_sql('CAST(n AS DECIMAL(38,0)) * sxx - sx * sx')})
+              * sqrt({to_double_sql('CAST(n AS DECIMAL(38,0)) * syy - sy * sy')}))
              AS acf1
     FROM s
     """,
@@ -1794,10 +1776,10 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard first diagnostic for serial dependence (and the term an
     AR(1) fit would estimate).
 
-    Exact carriers: consecutive pairs' moment sums (n, Sx, Sy, Sxy,
-    Sxx, Syy) in DECIMAL(38,0) over exact cents; r is then a fixed
-    IEEE tree with one VARCHAR-hop cast per exact numerator and the
-    denominator written sqrt(a)*sqrt(b) on both engines.
+    Exact carriers: consecutive pairs' moment sums (n, Sx, Sy, Sxy, Sxx,
+    Syy) in DECIMAL(38,0) over exact cents; r is then a fixed IEEE tree
+    with one ``to_double`` per exact numerator and the denominator
+    written sqrt(a)*sqrt(b) on both engines.
 
     Scale shape: the oracle's lag() window PARTITION BY event_type is
     the low-cardinality-partition trap (5 types = 5 tasks forever), so
@@ -1811,13 +1793,12 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.floor(F.col("value") * 100).cast("long").alias("c"),
+        cents("value").alias("c"),
     )
     idx = materialize(
         with_global_index(base, "ts_us", ["event_id"], group_cols=["event_type"])
@@ -1836,9 +1817,9 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("y").cast(d38) * F.col("y")).cast(d38).alias("syy"),
     )
     n = F.col("n")
-    num = dbl((n.cast(d38) * F.col("sxy") - F.col("sx") * F.col("sy")).cast(d38))
-    denx = dbl((n.cast(d38) * F.col("sxx") - F.col("sx") * F.col("sx")).cast(d38))
-    deny = dbl((n.cast(d38) * F.col("syy") - F.col("sy") * F.col("sy")).cast(d38))
+    num = to_double((n.cast(d38) * F.col("sxy") - F.col("sx") * F.col("sy")).cast(d38))
+    denx = to_double((n.cast(d38) * F.col("sxx") - F.col("sx") * F.col("sx")).cast(d38))
+    deny = to_double((n.cast(d38) * F.col("syy") - F.col("sy") * F.col("sy")).cast(d38))
     return s.select(
         "event_type",
         n.alias("n_pairs"),
@@ -2246,7 +2227,7 @@ DID_VARIANTS = 2  # deterministic assignment: user_id % DID_VARIANTS
     WITH p AS (
       SELECT user_id % {DID_VARIANTS} AS treat,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(floor(value * 100) AS BIGINT) AS cents
+             {cents_sql('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ),
     b AS (SELECT MIN(ts_us) AS mn, MAX(ts_us) AS mx FROM p),
@@ -2270,10 +2251,10 @@ DID_VARIANTS = 2  # deterministic assignment: user_id % DID_VARIANTS
     ),
     v AS (
       SELECT n_tp, n_t0, n_cp, n_c0,
-             CAST(CAST(s_tp AS VARCHAR) AS DOUBLE) / n_tp AS m_tp,
-             CAST(CAST(s_t0 AS VARCHAR) AS DOUBLE) / n_t0 AS m_t0,
-             CAST(CAST(s_cp AS VARCHAR) AS DOUBLE) / n_cp AS m_cp,
-             CAST(CAST(s_c0 AS VARCHAR) AS DOUBLE) / n_c0 AS m_c0
+             {to_double_sql('s_tp')} / n_tp AS m_tp,
+             {to_double_sql('s_t0')} / n_t0 AS m_t0,
+             {to_double_sql('s_cp')} / n_cp AS m_cp,
+             {to_double_sql('s_c0')} / n_c0 AS m_c0
       FROM m
     )
     SELECT CAST(n_tp AS BIGINT) AS n_treat_post, CAST(n_t0 AS BIGINT) AS n_treat_pre,
@@ -2299,9 +2280,9 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float portability (events_welch_ttest recipe): only exact integer
     moments per (treat, post) cell — count and DECIMAL(38,0) cents sum —
     reach the final projection; each decimal enters the double world
-    through one correctly-rounded cast (VARCHAR hop in the oracle) and
-    the four means combine in an identical op tree, so did_cents is
-    bit-identical across engines.
+    through one ``to_double`` (functions/rounding.py) and the four means
+    combine in an identical op tree, so did_cents is bit-identical
+    across engines.
 
     Scale shape: pushed event_type filter, one 1-row min/max broadcast,
     ONE map-side-partial aggregate keyed by (treat, post) = 4 groups;
@@ -2313,7 +2294,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = p.select(
         (F.col("user_id") % DID_VARIANTS).alias("treat"),
         ts_us.alias("ts_us"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     b = p.agg(F.min("ts_us").alias("mn"), F.max("ts_us").alias("mx"))
     g = (
@@ -2341,16 +2322,15 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick(0, 1, "s").alias("s_cp"),
         pick(0, 0, "s").alias("s_c0"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     v = m.select(
         "n_tp",
         "n_t0",
         "n_cp",
         "n_c0",
-        (dbl(F.col("s_tp")) / F.col("n_tp")).alias("m_tp"),
-        (dbl(F.col("s_t0")) / F.col("n_t0")).alias("m_t0"),
-        (dbl(F.col("s_cp")) / F.col("n_cp")).alias("m_cp"),
-        (dbl(F.col("s_c0")) / F.col("n_c0")).alias("m_c0"),
+        (to_double(F.col("s_tp")) / F.col("n_tp")).alias("m_tp"),
+        (to_double(F.col("s_t0")) / F.col("n_t0")).alias("m_t0"),
+        (to_double(F.col("s_cp")) / F.col("n_cp")).alias("m_cp"),
+        (to_double(F.col("s_c0")) / F.col("n_c0")).alias("m_c0"),
     )
     return v.select(
         F.col("n_tp").cast("long").alias("n_treat_post"),
@@ -2587,13 +2567,12 @@ def _boot_oracle() -> str:
     wsum = " + ".join(f"CAST(u >= {c!r} AS INT)" for c in BOOT_CDF)
     return f"""
     WITH p AS (
-      SELECT event_id, CAST(floor(value * 100) AS BIGINT) AS cents
+      SELECT event_id, {cents_sql('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ),
     pt AS (
       SELECT COUNT(*) AS n,
-             CAST(CAST(CAST(SUM(cents) AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE)
-               / COUNT(*) AS point_mean_cents
+             {to_double_sql('CAST(SUM(cents) AS DECIMAL(38,0))')} / COUNT(*) AS point_mean_cents
       FROM p
     ),
     ex AS (
@@ -2609,7 +2588,7 @@ def _boot_oracle() -> str:
       FROM w GROUP BY b
     )
     SELECT CAST(b AS INT) AS b, CAST(n_eff AS BIGINT) AS n_eff,
-           CAST(CAST(s AS VARCHAR) AS DOUBLE) / n_eff AS mean_cents,
+           {to_double_sql('s')} / n_eff AS mean_cents,
            point_mean_cents
     FROM g CROSS JOIN pt
     """
@@ -2640,19 +2619,18 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries {BOOT_B} rows per task.
 
     Determinism: weights are exact integers, replicate sums are
-    DECIMAL(38,0), and each mean is one correctly-rounded decimal->
-    double division (VARCHAR hop in the oracle)."""
+    DECIMAL(38,0), and each mean is one ``to_double`` and one
+    division."""
     p = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
-        .select("event_id", F.floor(F.col("value") * 100).cast("long").alias("cents"))
+        .select("event_id", cents("value").alias("cents"))
     )
     pt = p.agg(
         F.count(F.lit(1)).alias("n"),
-        (
-            F.sum("cents").cast("decimal(38,0)").cast("string").cast("double")
-            / F.count(F.lit(1))
-        ).alias("point_mean_cents"),
+        (to_double(F.sum("cents").cast("decimal(38,0)")) / F.count(F.lit(1))).alias(
+            "point_mean_cents"
+        ),
     )
     ex = p.select(
         "cents",
@@ -2677,7 +2655,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.crossJoin(F.broadcast(pt)).select(
         F.col("b").cast("int").alias("b"),
         F.col("n_eff").cast("long").alias("n_eff"),
-        (F.col("s").cast("string").cast("double") / F.col("n_eff")).alias("mean_cents"),
+        (to_double("s") / F.col("n_eff")).alias("mean_cents"),
         "point_mean_cents",
     )
 
@@ -2695,7 +2673,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       SELECT user_id, event_type,
              epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-             CAST(floor(value * 100) AS BIGINT) AS cents
+             {cents_sql('value')} AS cents
       FROM events
     ),
     b AS (SELECT MIN(ts_us) AS mn, MAX(ts_us) AS mx FROM e),
@@ -2722,9 +2700,9 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT decile,
              MAX(CASE WHEN treat = 1 THEN cnt END) AS n_treat,
              MAX(CASE WHEN treat = 0 THEN cnt END) AS n_ctrl,
-             CAST(CAST(MAX(CASE WHEN treat = 1 THEN s END) AS VARCHAR) AS DOUBLE)
+             {to_double_sql('MAX(CASE WHEN treat = 1 THEN s END)')}
                / MAX(CASE WHEN treat = 1 THEN cnt END) AS m_t,
-             CAST(CAST(MAX(CASE WHEN treat = 0 THEN s END) AS VARCHAR) AS DOUBLE)
+             {to_double_sql('MAX(CASE WHEN treat = 0 THEN s END)')}
                / MAX(CASE WHEN treat = 0 THEN cnt END) AS m_c
       FROM g GROUP BY decile
     )
@@ -2754,16 +2732,16 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the user_id tiebreak.
 
     Determinism: score and index are exact integers; response sums are
-    DECIMAL(38,0) entering doubles through one correctly-rounded cast
-    (VARCHAR hop in the oracle); a decile missing one arm yields NULL
-    mean and NULL uplift in both engines identically."""
+    DECIMAL(38,0) entering doubles through one ``to_double``
+    (functions/rounding.py); a decile missing one arm yields NULL mean
+    and NULL uplift in both engines identically."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     b = e.agg(F.min("ts_us").alias("mn"), F.max("ts_us").alias("mx"))
     pre = 2 * F.col("ts_us") < F.col("mn") + F.col("mx")
@@ -2801,13 +2779,11 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pick(t: int, c: str):
         return F.max(F.when(F.col("treat") == t, F.col(c)))
-
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     m = g.groupBy("decile").agg(
         pick(1, "cnt").alias("n_treat"),
         pick(0, "cnt").alias("n_ctrl"),
-        (dbl(pick(1, "s")) / pick(1, "cnt")).alias("m_t"),
-        (dbl(pick(0, "s")) / pick(0, "cnt")).alias("m_c"),
+        (to_double(pick(1, "s")) / pick(1, "cnt")).alias("m_t"),
+        (to_double(pick(0, "s")) / pick(0, "cnt")).alias("m_c"),
     )
     return m.select(
         F.col("decile").cast("int").alias("decile"),
@@ -3020,7 +2996,7 @@ Z_BETA = 0.8416212335729143
     oracle=f"""
     WITH p AS (
       SELECT user_id % {DID_VARIANTS} AS variant,
-             CAST(floor(value * 100) AS BIGINT) AS cents
+             {cents_sql('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ),
     g AS (
@@ -3040,10 +3016,8 @@ Z_BETA = 0.8416212335729143
     ),
     v AS (
       SELECT n1, n2,
-             CAST(CAST(n1 * q1 - s1 * s1 AS VARCHAR) AS DOUBLE)
-               / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS var1,
-             CAST(CAST(n2 * q2 - s2 * s2 AS VARCHAR) AS DOUBLE)
-               / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS var2
+             {to_double_sql('n1 * q1 - s1 * s1')} / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS var1,
+             {to_double_sql('n2 * q2 - s2 * s2')} / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS var2
       FROM m
     )
     SELECT CAST(n1 AS BIGINT) AS n_treat, CAST(n2 AS BIGINT) AS n_ctrl,
@@ -3062,10 +3036,10 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel next to SRM, Welch, CUPED, DiD and uplift deciles.
 
     Float portability: sample variances come from exact DECIMAL(38,0)
-    moments via the (n·q - s²)/(n·(n-1)) identity with one
-    correctly-rounded cast each (events_welch_ttest recipe); the z
-    constants are shortest-repr double literals shared by both
-    engines; the final expression is a single identical op tree.
+    moments via the (n·q - s²)/(n·(n-1)) identity with one ``to_double``
+    each (events_welch_ttest recipe); the z constants are shortest-repr
+    double literals shared by both engines; the final expression is a
+    single identical op tree.
 
     Scale shape: pushed type filter, ONE 2-group map-side-partial
     moment aggregate, then scalar algebra on a 1-row relation."""
@@ -3075,7 +3049,7 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "purchase")
         .select(
             (F.col("user_id") % DID_VARIANTS).alias("variant"),
-            F.floor(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
     )
     g = p.groupBy("variant").agg(
@@ -3095,16 +3069,15 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick(1, "s").alias("s1"),
         pick(0, "s").alias("s2"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     v = m.select(
         "n1",
         "n2",
         (
-            dbl(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
+            to_double(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
             / (F.col("n1").cast("double") * (F.col("n1") - 1))
         ).alias("var1"),
         (
-            dbl(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
+            to_double(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
             / (F.col("n2").cast("double") * (F.col("n2") - 1))
         ).alias("var2"),
     )
@@ -3748,7 +3721,7 @@ RM_DEN = "view"      # denominator event (exposure count)
     WITH per_user AS (
       SELECT user_id, user_id % 2 AS arm,
              CAST(SUM(CASE WHEN event_type = '{RM_NUM}'
-                           THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE 0 END)
+                           THEN {cents_sql('value')} ELSE 0 END)
                   AS DECIMAL(38,0)) AS y,
              CAST(SUM(CASE WHEN event_type = '{RM_DEN}' THEN 1 ELSE 0 END)
                   AS DECIMAL(38,0)) AS nv
@@ -3766,14 +3739,11 @@ RM_DEN = "view"      # denominator event (exposure count)
     ),
     v AS (
       SELECT arm, n,
-             CAST(CAST(sy AS VARCHAR) AS DOUBLE) / CAST(CAST(sn AS VARCHAR) AS DOUBLE) AS r,
-             CAST(CAST(sn AS VARCHAR) AS DOUBLE) / n AS nbar,
-             CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE)
-               / (CAST(n AS DOUBLE) * n * (n - 1)) AS vy,
-             CAST(CAST(n * snn - sn * sn AS VARCHAR) AS DOUBLE)
-               / (CAST(n AS DOUBLE) * n * (n - 1)) AS vn,
-             CAST(CAST(n * syn - sy * sn AS VARCHAR) AS DOUBLE)
-               / (CAST(n AS DOUBLE) * n * (n - 1)) AS vyn
+             {to_double_sql('sy')} / {to_double_sql('sn')} AS r,
+             {to_double_sql('sn')} / n AS nbar,
+             {to_double_sql('n * syy - sy * sy')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vy,
+             {to_double_sql('n * snn - sn * sn')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vn,
+             {to_double_sql('n * syn - sy * sn')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vyn
       FROM m
     )
     SELECT arm, n AS n_users, r AS ratio_cents_per_view,
@@ -3798,8 +3768,8 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
     EXACT per-user integer moments — per-arm n, and the five sums
     SUM(Y), SUM(N), SUM(Y^2), SUM(N^2), SUM(Y*N) carried as
     DECIMAL(38,0) — combined in one identical final op tree, each
-    decimal entering doubles through ONE correctly-rounded cast
-    (VARCHAR hop on DuckDB, the registry convention).
+    decimal entering doubles through ONE ``to_double``
+    (functions/rounding.py).
 
     Scale shape: two map-side-partial aggregates — events -> per-user
     (keyed on user_id, the natural high-cardinality key) -> per-arm
@@ -3810,9 +3780,9 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(RM_NUM, RM_DEN)
     )
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == RM_NUM, cents).otherwise(0))
+        F.sum(F.when(F.col("event_type") == RM_NUM, vc).otherwise(0))
         .cast(d38)
         .alias("y"),
         F.sum(F.when(F.col("event_type") == RM_DEN, 1).otherwise(0))
@@ -3827,23 +3797,22 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
         F.sum(F.col("nv") * F.col("nv")).cast(d38).alias("snn"),
         F.sum(F.col("y") * F.col("nv")).cast(d38).alias("syn"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     nD = F.col("n").cast("double")
     v = m.select(
         "arm",
         "n",
-        (dbl(F.col("sy")) / dbl(F.col("sn"))).alias("r"),
-        (dbl(F.col("sn")) / F.col("n")).alias("nbar"),
+        (to_double(F.col("sy")) / to_double(F.col("sn"))).alias("r"),
+        (to_double(F.col("sn")) / F.col("n")).alias("nbar"),
         (
-            dbl(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+            to_double(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vy"),
         (
-            dbl(F.col("n") * F.col("snn") - F.col("sn") * F.col("sn"))
+            to_double(F.col("n") * F.col("snn") - F.col("sn") * F.col("sn"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vn"),
         (
-            dbl(F.col("n") * F.col("syn") - F.col("sy") * F.col("sn"))
+            to_double(F.col("n") * F.col("syn") - F.col("sy") * F.col("sn"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vyn"),
     )
@@ -4237,10 +4206,8 @@ _PERIODOGRAM_SQL = f"""
     )
     SELECT period_hours, n_hours, total_events,
            CAST(sc AS BIGINT) AS s_cos6, CAST(ss AS BIGINT) AS s_sin6,
-           ((CAST(CAST(sc AS VARCHAR) AS DOUBLE) / {TRIG_SCALE})
-              * (CAST(CAST(sc AS VARCHAR) AS DOUBLE) / {TRIG_SCALE})
-            + (CAST(CAST(ss AS VARCHAR) AS DOUBLE) / {TRIG_SCALE})
-              * (CAST(CAST(ss AS VARCHAR) AS DOUBLE) / {TRIG_SCALE}))
+           (({to_double_sql('sc')} / {TRIG_SCALE}) * ({to_double_sql('sc')} / {TRIG_SCALE})
+            + ({to_double_sql('ss')} / {TRIG_SCALE}) * ({to_double_sql('ss')} / {TRIG_SCALE}))
            / n_hours AS power
     FROM agg ORDER BY period_hours
     """
@@ -4683,7 +4650,7 @@ ATTR_DECAY_SCALE = 1_000_000
     oracle=f"""
     WITH p AS (
       SELECT user_id, event_id AS pid, epoch_us(CAST(ts AS TIMESTAMP)) AS p_us,
-             CAST(FLOOR(value * 100) AS BIGINT) AS cents
+             {cents_sql('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ),
     t AS (
@@ -4744,7 +4711,7 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
         "user_id",
         F.col("event_id").alias("pid"),
         us.alias("p_us"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     t = ev.where(F.col("event_type").isin("click", "view")).select(
         F.col("user_id").alias("t_user"),

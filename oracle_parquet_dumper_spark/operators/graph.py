@@ -10,11 +10,11 @@ shape as ``dedup.connected_components``).  Nothing per-row ever reaches
 the driver; the only driver-visible value is the final top-20 collect by
 the harness.
 
-Cross-engine determinism (the repo's decimal-sum convention,
-plans/registry.py): per-edge contributions are rounded to 12 decimals,
-summed as DECIMAL(25,12) (order-independent), and each round's rank is
-re-rounded — so the SQL twin, which unrolls the loop into chained CTEs,
-is bit-identical to the Spark loop.
+Cross-engine determinism (the decimal-sum convention,
+functions/rounding.py): per-edge contributions are rounded to 12
+decimals, summed as DECIMAL(25,12) (order-independent), and each round's
+rank is re-rounded — so the SQL twin, which unrolls the loop into
+chained CTEs, is bit-identical to the Spark loop.
 
 100 TB notes: the edge list is built per-order (self-join keyed by
 l_orderkey, so pair cost is bounded by order size, never table size) and
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import to_double_sql
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -1057,7 +1058,7 @@ def graph_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Degree assortativity (round 12)
 # ---------------------------------------------------------------------------
 
-_ASSORT_SQL = """
+_ASSORT_SQL = f"""
     WITH su AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS s FROM lineitem),
     edges AS MATERIALIZED (
       SELECT DISTINCT a.s AS src, b.s AS dst
@@ -1079,12 +1080,12 @@ _ASSORT_SQL = """
     ),
     n AS (SELECT CAST(COUNT(DISTINCT src) AS BIGINT) AS n_nodes FROM edges)
     SELECT m_edges, n_nodes,
-           (CAST(m_edges AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-            - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
-           / sqrt((CAST(m_edges AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sx AS VARCHAR) AS DOUBLE))
-                  * (CAST(m_edges AS DOUBLE) * CAST(CAST(syy AS VARCHAR) AS DOUBLE)
-                     - CAST(CAST(sy AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE)))
+           (CAST(m_edges AS DOUBLE) * {to_double_sql('sxy')}
+            - {to_double_sql('sx')} * {to_double_sql('sy')})
+           / sqrt((CAST(m_edges AS DOUBLE) * {to_double_sql('sxx')}
+                   - {to_double_sql('sx')} * {to_double_sql('sx')})
+                  * (CAST(m_edges AS DOUBLE) * {to_double_sql('syy')}
+                     - {to_double_sql('sy')} * {to_double_sql('sy')}))
              AS assortativity
     FROM a CROSS JOIN n
     """
@@ -1109,9 +1110,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: degrees and all five moment sums are exact integers
     carried as DECIMAL (du*dv products stay in DECIMAL(37,0) headroom,
     so the sums never overflow at any SF); each exact sum crosses to
-    double through ONE correctly-rounded cast (the varchar-hop
-    convention on the DuckDB side), and the Pearson formula is then an
-    identical IEEE op tree on both engines.
+    double through ONE ``to_double`` (functions/rounding.py), and the
+    Pearson formula is then an identical IEEE op tree on both engines.
 
     Scale shape: edge build is keyed by l_orderkey (pair count bounded
     by order size — never quadratic in table size); endpoint degrees

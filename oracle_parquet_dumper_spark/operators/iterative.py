@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import to_double, to_double_sql
 from oracle_parquet_dumper_spark.functions.vectors import as_double
 from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
@@ -110,7 +111,7 @@ def _kmeans_chain() -> tuple[str, str]:
         parts.append(assign(r, f"cenarr{r - 1}"))
         parts.append(f"""m{r} AS (
       SELECT cluster, pos,
-             CAST(SUM(CAST(x AS DECIMAL(25,12))) AS DOUBLE) / COUNT(*) AS m
+             {to_double_sql('SUM(CAST(x AS DECIMAL(25,12)))')} / COUNT(*) AS m
       FROM (SELECT cluster, generate_subscripts(vd, 1) - 1 AS pos, unnest(vd) AS x FROM a{r})
       GROUP BY cluster, pos
     )""")
@@ -130,7 +131,7 @@ def _kmeans_oracle() -> str:
     return f"""
     WITH {chain}
     SELECT CAST(cluster AS INT) AS cluster, COUNT(*) AS n_members,
-           round(CAST(SUM(CAST(dist AS DECIMAL(25,12))) AS DOUBLE), 6) AS wcss
+           round({to_double_sql('SUM(CAST(dist AS DECIMAL(25,12)))')}, 6) AS wcss
     FROM {final} GROUP BY cluster
     """
 
@@ -158,7 +159,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # exact decimal sum, then DOUBLE division (not decimal
                 # division — engines disagree on decimal-quotient scale
                 # rules, doubles are IEEE-identical everywhere)
-                (F.sum(F.col("x").cast("decimal(25,12)")).cast("double") / F.count(F.lit(1)))
+                (to_double(F.sum(F.col("x").cast("decimal(25,12)"))) / F.count(F.lit(1)))
                 .alias("m")
             )
             .collect()
@@ -189,7 +190,7 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         final.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
-            F.round(F.sum(F.col("dist").cast("decimal(25,12)")).cast("double"), 6).alias("wcss"),
+            F.round(to_double(F.sum(F.col("dist").cast("decimal(25,12)"))), 6).alias("wcss"),
         )
         .select(F.col("cluster").cast("int").alias("cluster"), "n_members", "wcss")
     )

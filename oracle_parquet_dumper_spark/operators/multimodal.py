@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oracle_parquet_dumper_spark.functions.rounding import dec_sum, dec_sum_sql
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
 from oracle_parquet_dumper_spark.functions.tokens import md5_long_sql
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded_sql
@@ -233,10 +234,10 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_grouped_embed_agg",
-    oracle="""
+    oracle=f"""
     SELECT label,
            COUNT(*) AS n,
-           round(CAST(CAST(SUM(CAST(CAST(embedding[1] AS DOUBLE) AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / COUNT(*), 6) AS centroid_d1
+           round({dec_sum_sql('CAST(embedding[1] AS DOUBLE)')} / COUNT(*), 6) AS centroid_d1
     FROM embeddings
     GROUP BY label
     """,
@@ -249,7 +250,7 @@ def mm_grouped_embed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
-            F.sum(F.element_at("embedding", 1).cast("double").cast("decimal(25,6)")).cast("double")
+            dec_sum(F.element_at("embedding", 1).cast("double"))
             / F.count(F.lit(1)),
             6,
         ).alias("centroid_d1"),
@@ -450,7 +451,7 @@ def _embed_component_sql(j: int) -> str:
 def _embed_match_oracle() -> str:
     fe = "[" + ", ".join(_embed_component_sql(j) for j in range(EMBED_DIM)) + "]"
     cen = ", ".join(
-        f"CAST(CAST(SUM(CAST(CAST(embedding[{j + 1}] AS DOUBLE) AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / COUNT(*)"
+        f"{dec_sum_sql(f'CAST(embedding[{j + 1}] AS DOUBLE)')} / COUNT(*)"
         for j in range(EMBED_DIM)
     )
     return f"""
@@ -499,10 +500,7 @@ def mm_embed_and_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.array(
                 *[
-                    (
-                        F.sum(F.element_at("embedding", i + 1).cast("double").cast("decimal(25,6)")).cast("double")
-                        / F.count(F.lit(1))
-                    )
+                    (dec_sum(F.element_at("embedding", i + 1).cast("double")) / F.count(F.lit(1)))
                     for i in range(EMBED_DIM)
                 ]
             ).alias("centroid")

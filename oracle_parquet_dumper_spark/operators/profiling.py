@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
@@ -128,20 +134,18 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "profile_mutual_information",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT o_orderstatus AS a, o_orderpriority AS b, COUNT(*) AS n FROM orders GROUP BY 1, 2
     ),
     t AS (SELECT CAST(SUM(n) AS DOUBLE) AS total FROM j),
     pa AS (SELECT a, SUM(n) AS na FROM j GROUP BY a),
     pb AS (SELECT b, SUM(n) AS nb FROM j GROUP BY b)
-    SELECT CAST(round(SUM(CAST((j.n / t.total) * ln((j.n / t.total) /
-                 ((pa.na / t.total) * (pb.nb / t.total))) AS DECIMAL(25,12))), 6) AS DOUBLE)
-             AS mi_nats,
+    SELECT {to_double_sql('round(SUM(CAST(term AS DECIMAL(25,12))), 6)')} AS mi_nats,
            CAST(COUNT(*) AS BIGINT) AS n_cells
-    FROM j, t
-    JOIN pa ON j.a = pa.a
-    JOIN pb ON j.b = pb.b
+    FROM (SELECT (j.n / t.total) * ln((j.n / t.total) /
+                 ((pa.na / t.total) * (pb.nb / t.total))) AS term
+          FROM j, t JOIN pa ON j.a = pa.a JOIN pb ON j.b = pb.b)
     """,
     tags=("agg", "profiling", "stats"),
 )
@@ -151,9 +155,9 @@ def profile_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout design use (high MI => one column nearly determines the
     other, so cluster by the finer one).  Cell and marginal counts are
     exact integers; each cell's p*ln(p/(pa*pb)) term is identical IEEE
-    double work in both engines, and the decimal-sum convention makes
-    the reduction order-independent, so MI is oracle-exact to 6
-    digits."""
+    double work in both engines, and the decimal-sum convention
+    (functions/rounding.py) makes the reduction order-independent, so MI
+    is oracle-exact to 6 digits."""
     o = load_table(spark, sf_dir, "orders")
     j = o.groupBy(
         F.col("o_orderstatus").alias("a"), F.col("o_orderpriority").alias("b")
@@ -173,7 +177,7 @@ def profile_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cast the rounded decimal to DOUBLE: a decimal result
             # stringifies as '0.000032' where a double gives '3.2e-05',
             # and the hash compare is string-typed
-            F.round(F.sum(term.cast("decimal(25,12)")), 6).cast("double").alias("mi_nats"),
+            to_double(F.round(F.sum(term.cast("decimal(25,12)")), 6)).alias("mi_nats"),
             F.count(F.lit(1)).cast("long").alias("n_cells"),
         )
     )
@@ -253,9 +257,9 @@ def profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "profile_gini_concentration",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
-      SELECT l_returnflag, CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS c,
+      SELECT l_returnflag, {cents_sql('l_extendedprice')} AS c,
              l_orderkey, l_linenumber
       FROM lineitem
     ),
@@ -289,9 +293,9 @@ def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     li = load_table(spark, sf_dir, "lineitem")
-    cents = li.select(
+    priced = li.select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("c"),
+        cents("l_extendedprice").alias("c"),
         "l_orderkey",
         "l_linenumber",
     )
@@ -308,7 +312,7 @@ def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
     ranked = with_global_index(
-        cents, "c", ["l_orderkey", "l_linenumber"],
+        priced, "c", ["l_orderkey", "l_linenumber"],
         group_cols=["l_returnflag"], idx_col="_gi", n_col="_gin",
     ).select("l_returnflag", "c", (F.col("_gi") + 1).alias("r"))
     # Exact big-integer arithmetic: the rank-weighted sum overflows

@@ -16,19 +16,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql, words, words_sql
-from oracle_parquet_dumper_spark.plans.registry import (
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
+    dec6,
+    dec6_sql,
     dec_avg,
     dec_avg_sql,
     dec_money,
+    dec_money_sql,
     dec_one_minus,
+    dec_one_minus_sql,
     dec_one_plus,
+    dec_one_plus_sql,
+    dec_rate,
+    dec_rate_sql,
     dec_sum,
     dec_sum_sql,
-    query,
+    to_double,
+    to_double_sql,
 )
+from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql, words, words_sql
+from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
+
+# TPC-H revenue terms, exact on both engines (functions/rounding.py)
+_DISC_PRICE_SQL = f"{dec_money_sql('l_extendedprice')} * {dec_one_minus_sql('l_discount')}"
+_DISCOUNT_SQL = f"{dec_money_sql('l_extendedprice')} * {dec_rate_sql('l_discount')}"
+_PROFIT_SQL = (
+    f"{_DISC_PRICE_SQL} - {dec_money_sql('ps_supplycost')}"
+    f" * CAST(l_quantity AS DECIMAL(4,0)) * {dec_rate_sql('0.01')}"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -40,8 +59,8 @@ from oracle_parquet_dumper_spark.sources.tables import load_table
     SELECT l_returnflag, l_linestatus,
            {dec_sum_sql('l_quantity')} AS sum_qty,
            {dec_sum_sql('l_extendedprice')} AS sum_base_price,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS sum_disc_price,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) * (1 + CAST(l_tax AS DECIMAL(3,2)))')} AS sum_charge,
+           {dec_sum_sql(_DISC_PRICE_SQL)} AS sum_disc_price,
+           {dec_sum_sql(f"{_DISC_PRICE_SQL} * {dec_one_plus_sql('l_tax')}")} AS sum_charge,
            {dec_avg_sql('l_quantity')} AS avg_qty,
            {dec_avg_sql('l_extendedprice')} AS avg_price,
            {dec_avg_sql('l_discount')} AS avg_disc,
@@ -264,7 +283,7 @@ INTERVAL_BIN_DAYS = 7   # bin width for the interval equi-join
     oracle=f"""
     WITH span AS (
       SELECT l_orderkey, MAX(l_shipdate) AS last_ship,
-             SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS rev_cents
+             SUM({cents_sql('l_extendedprice')}) AS rev_cents
       FROM lineitem GROUP BY 1
     ),
     iv AS (
@@ -274,7 +293,7 @@ INTERVAL_BIN_DAYS = 7   # bin width for the interval equi-join
     ),
     drev AS (
       SELECT l_shipdate AS d,
-             SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS day_rev
+             SUM({cents_sql('l_extendedprice')}) AS day_rev
       FROM lineitem GROUP BY 1
     ),
     pk AS (
@@ -334,7 +353,7 @@ def join_interval_overlap_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch = F.lit("1970-01-01").cast("date")
     span = li.groupBy("l_orderkey").agg(
         F.max("l_shipdate").alias("last_ship"),
-        F.sum(F.floor(F.col("l_extendedprice") * 100).cast("long")).alias("rev_cents"),
+        F.sum(cents("l_extendedprice")).alias("rev_cents"),
     )
     iv = (
         orders.join(span, orders.o_orderkey == span.l_orderkey)
@@ -348,7 +367,7 @@ def join_interval_overlap_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drev = (
         li.groupBy("l_shipdate")
-        .agg(F.sum(F.floor(F.col("l_extendedprice") * 100).cast("long")).alias("day_rev"))
+        .agg(F.sum(cents("l_extendedprice")).alias("day_rev"))
         .withColumn("yr", F.year("l_shipdate"))
         .withColumn("_negrev", -F.col("day_rev"))
     )
@@ -431,19 +450,17 @@ def agg_basic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_var_stddev",
-    oracle="""
-    SELECT c_mktsegment,
-           COUNT(c_acctbal) AS n,
-           (CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2)) * CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-            - CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-              * CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(c_acctbal))
-           / (COUNT(c_acctbal) - 1) AS var_samp,
-           sqrt((CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2)) * CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-            - CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-              * CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(c_acctbal))
-           / (COUNT(c_acctbal) - 1)) AS stddev_samp
-    FROM customer
-    GROUP BY c_mktsegment
+    oracle=f"""
+    WITH m AS (
+      SELECT c_mktsegment, COUNT(b) AS n,
+             {to_double_sql('SUM(b)')} AS sx, {to_double_sql('SUM(b * b)')} AS sxx
+      FROM (SELECT c_mktsegment, {dec_money_sql('c_acctbal')} AS b FROM customer)
+      GROUP BY c_mktsegment
+    )
+    SELECT c_mktsegment, n,
+           (sxx - sx * sx / n) / (n - 1) AS var_samp,
+           sqrt((sxx - sx * sx / n) / (n - 1)) AS stddev_samp
+    FROM m
     """,
     tags=("agg", "stats"),
 )
@@ -457,10 +474,10 @@ def agg_var_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal casts disagree (found by the sf0.1 cross-engine sweep)."""
     c = load_table(spark, sf_dir, "customer")
     x = F.col("c_acctbal")
-    xd = x.cast("decimal(12,2)")
+    xd = dec_money(x)
     n = F.count(x)
-    sx = F.sum(xd).cast("double")
-    sxx = F.sum(xd * xd).cast("double")
+    sx = to_double(F.sum(xd))
+    sxx = to_double(F.sum(xd * xd))
     var = (sxx - sx * sx / n) / (n - 1)
     return c.groupBy("c_mktsegment").agg(
         n.alias("n"), var.alias("var_samp"), F.sqrt(var).alias("stddev_samp")
@@ -572,10 +589,10 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup/cube; Catalyst expands both to the same Expand node)."""
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
-        """
+        f"""
         SELECT l_returnflag, l_suppkey,
                COUNT(*) AS n,
-               CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS sum_price
+               {dec_sum_sql('l_extendedprice')} AS sum_price
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_suppkey))
         """
@@ -855,7 +872,7 @@ def agg_salted_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "_salt")
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.col("l_extendedprice").cast("decimal(25,6)")).alias("psum"),
+            F.sum(dec6("l_extendedprice")).alias("psum"),
         )
     )
     return phase1.groupBy("l_returnflag").agg(
@@ -872,7 +889,7 @@ INC_AGG_CUTOFF_DAY = 15
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           round(CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE), 6) AS sum_value
+           round({dec_sum_sql('value')}, 6) AS sum_value
     FROM events
     GROUP BY event_type
     """,
@@ -894,7 +911,7 @@ def agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def state(df):
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.col("value").cast("decimal(25,6)")).alias("psum"),
+            F.sum(dec6("value")).alias("psum"),
         )
 
     # NULL-safe split: a NULL ts makes both `day <= c` and `day > c`
@@ -1045,11 +1062,11 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row recomputation)."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderkey, o_totalprice
         FROM orders
         WHERE o_totalprice > (
-          SELECT CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / COUNT(o_totalprice) * 1.5
+          SELECT {dec_avg_sql('o_totalprice')} * 1.5
           FROM orders)
         """
     )
@@ -1222,7 +1239,7 @@ def agg_corr_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q3_shipping_priority",
     oracle=f"""
     SELECT l_orderkey,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS revenue,
+           {dec_sum_sql(_DISC_PRICE_SQL)} AS revenue,
            o_orderdate
     FROM customer
     JOIN orders ON c_custkey = o_custkey
@@ -1259,7 +1276,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q5_local_supplier_volume",
     oracle=f"""
     SELECT n_name,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS revenue
+           {dec_sum_sql(_DISC_PRICE_SQL)} AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -1306,7 +1323,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle=f"""
     SELECT c_custkey, c_name,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS revenue,
+           {dec_sum_sql(_DISC_PRICE_SQL)} AS revenue,
            n_name
     FROM customer
     JOIN orders ON c_custkey = o_custkey
@@ -1351,7 +1368,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(year(l_shipdate) AS BIGINT) AS l_year,
-             CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) AS volume
+             {_DISC_PRICE_SQL} AS volume
       FROM supplier
       JOIN lineitem ON s_suppkey = l_suppkey
       JOIN orders ON o_orderkey = l_orderkey
@@ -1409,7 +1426,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
            / {dec_sum_sql('volume')} AS mkt_share
     FROM (
       SELECT CAST(year(o_orderdate) AS BIGINT) AS l_year,
-             CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) AS volume,
+             {_DISC_PRICE_SQL} AS volume,
              n_name AS supp_nation
       FROM lineitem
       JOIN orders ON o_orderkey = l_orderkey
@@ -1451,8 +1468,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q14_promo_revenue",
     oracle=f"""
     SELECT strftime(l_shipdate, '%Y-%m') AS ym,
-           100.0 * {dec_sum_sql("CASE WHEN p_type = 'PROMO' THEN CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) ELSE 0 END")}
-           / {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS promo_share_pct
+           100.0 * {dec_sum_sql(f"CASE WHEN p_type = 'PROMO' THEN {_DISC_PRICE_SQL} ELSE 0 END")}
+           / {dec_sum_sql(_DISC_PRICE_SQL)} AS promo_share_pct
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
@@ -1504,7 +1521,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(25,6)")).alias("sq"))
+        .agg(F.sum(dec6("l_quantity")).alias("sq"))
         .where(F.col("sq") > 250)
         .select("l_orderkey")
     )
@@ -1551,7 +1568,7 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q19_disjunctive_pushdown",
     oracle=f"""
-    SELECT COUNT(*) AS n, {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS revenue
+    SELECT COUNT(*) AS n, {dec_sum_sql(_DISC_PRICE_SQL)} AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
        OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 35)
@@ -1664,14 +1681,13 @@ def q21_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q22_global_sales_opportunity",
-    oracle="""
+    oracle=f"""
     SELECT cohort, COUNT(*) AS numcust,
-           CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS totacctbal
+           {dec_sum_sql('c_acctbal')} AS totacctbal
     FROM (
       SELECT substring(c_name, 10, 1) AS cohort, c_acctbal, c_custkey
       FROM customer
-      WHERE c_acctbal > (SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)
-                                / COUNT(c_acctbal)
+      WHERE c_acctbal > (SELECT {dec_avg_sql('c_acctbal')}
                          FROM customer WHERE c_acctbal > 0)
         AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     )
@@ -1687,14 +1703,13 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
-        """
+        f"""
         SELECT cohort, COUNT(*) AS numcust,
-               CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS totacctbal
+               {dec_sum_sql('c_acctbal')} AS totacctbal
         FROM (
           SELECT substring(c_name, 10, 1) AS cohort, c_acctbal, c_custkey
           FROM customer
-          WHERE c_acctbal > (SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)
-                                    / COUNT(c_acctbal)
+          WHERE c_acctbal > (SELECT {dec_avg_sql('c_acctbal')}
                              FROM customer WHERE c_acctbal > 0)
             AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         )
@@ -1741,7 +1756,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q6_forecast_revenue",
     oracle=f"""
-    SELECT {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(3,2))')} AS revenue,
+    SELECT {dec_sum_sql(_DISCOUNT_SQL)} AS revenue,
            COUNT(*) AS n
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -1763,7 +1778,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        dec_sum(dec_money("l_extendedprice") * F.col("l_discount").cast("decimal(3,2)")).alias("revenue"),
+        dec_sum(dec_money("l_extendedprice") * dec_rate("l_discount")).alias("revenue"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -1805,7 +1820,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))')} AS total_revenue
+             {dec_sum_sql(_DISC_PRICE_SQL)} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00'
@@ -1868,12 +1883,11 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
-        """
-        SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / 7.0 AS avg_yearly
+        f"""
+        SELECT {dec_sum_sql('l_extendedprice')} / 7.0 AS avg_yearly
         FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#5'
-          AND l_quantity < (SELECT 0.2 * (CAST(CAST(SUM(CAST(l2.l_quantity AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)
-                                          / COUNT(l2.l_quantity))
+          AND l_quantity < (SELECT 0.2 * ({dec_avg_sql('l2.l_quantity')})
                             FROM lineitem l2 WHERE l2.l_partkey = l_partkey)
         """
     )
@@ -1883,14 +1897,11 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (part, supplier) relation from observed lineitem with min price as the
 # supply-cost proxy and summed quantity as availability.  Declared once
 # in SQL so the Spark and DuckDB sides share the exact definition.
-_PARTSUPP_PROXY_SQL = """
+_PARTSUPP_PROXY_SQL = f"""
     partsupp AS (
       SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
              MIN(l_extendedprice) AS ps_supplycost,
-             -- direct decimal->double here (no VARCHAR hop): this SQL is
-             -- shared with spark.sql(), which rejects bare VARCHAR, and
-             -- quantity sums are integral < 2^53 so the cast is exact
-             CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS ps_availqty
+             {dec_sum_sql('l_quantity')} AS ps_availqty
       FROM lineitem GROUP BY l_partkey, l_suppkey
     )
 """
@@ -1956,7 +1967,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PARTSUPP_PROXY_SQL}
     SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) - CAST(ps_supplycost AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(4,0)) * CAST(0.01 AS DECIMAL(3,2))')} AS sum_profit
+           {dec_sum_sql(_PROFIT_SQL)} AS sum_profit
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     JOIN supplier ON s_suppkey = l_suppkey
@@ -1982,7 +1993,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec_money("l_extendedprice") * dec_one_minus("l_discount")
         - dec_money("ps_supplycost")
         * F.col("l_quantity").cast("decimal(4,0)")
-        * F.lit(0.01).cast("decimal(3,2)")
+        * dec_rate(F.lit(0.01))
     )
     return (
         li.join(p, li.l_partkey == p.p_partkey)  # growing dims: AQE decides
@@ -2004,14 +2015,14 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_PARTSUPP_PROXY_SQL}
     SELECT ps_partkey AS p_key,
-           CAST(CAST(SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS stock_value
+           {dec_sum_sql('ps_supplycost * ps_availqty')} AS stock_value
     FROM partsupp
     JOIN supplier ON s_suppkey = ps_suppkey
     JOIN nation ON s_nationkey = n_nationkey
     WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
     GROUP BY ps_partkey
-    HAVING SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6)))
-         > (SELECT SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6))) * 0.002
+    HAVING SUM({dec6_sql('ps_supplycost * ps_availqty')})
+         > (SELECT SUM({dec6_sql('ps_supplycost * ps_availqty')}) * 0.002
             FROM partsupp
             JOIN supplier ON s_suppkey = ps_suppkey
             JOIN nation ON s_nationkey = n_nationkey
@@ -2031,14 +2042,14 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH {_PARTSUPP_PROXY_SQL}
         SELECT ps_partkey AS p_key,
-               CAST(CAST(SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS stock_value
+               {dec_sum_sql('ps_supplycost * ps_availqty')} AS stock_value
         FROM partsupp
         JOIN supplier ON s_suppkey = ps_suppkey
         JOIN nation ON s_nationkey = n_nationkey
         WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
         GROUP BY ps_partkey
-        HAVING SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6)))
-             > (SELECT SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(25,6))) * 0.002
+        HAVING SUM({dec6_sql('ps_supplycost * ps_availqty')})
+             > (SELECT SUM({dec6_sql('ps_supplycost * ps_availqty')}) * 0.002
                 FROM partsupp
                 JOIN supplier ON s_suppkey = ps_suppkey
                 JOIN nation ON s_nationkey = n_nationkey
@@ -2093,7 +2104,7 @@ def q12_priority_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND s_suppkey IN (
         SELECT ps_suppkey FROM partsupp
         WHERE ps_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
-          AND ps_availqty > (SELECT 0.5 * CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)
+          AND ps_availqty > (SELECT 0.5 * {dec_sum_sql('l_quantity')}
                              FROM lineitem
                              WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
                                AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00')
@@ -2118,7 +2129,7 @@ def q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND s_suppkey IN (
             SELECT ps_suppkey FROM partsupp
             WHERE ps_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'PROMO')
-              AND ps_availqty > (SELECT 0.5 * CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)
+              AND ps_availqty > (SELECT 0.5 * {dec_sum_sql('l_quantity')}
                                  FROM lineitem
                                  WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
                                    AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00')
@@ -2239,9 +2250,9 @@ def agg_mode_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_weighted_avg",
     oracle=f"""
     SELECT l_returnflag,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(3,2))')} AS sum_weighted,
+           {dec_sum_sql(_DISCOUNT_SQL)} AS sum_weighted,
            {dec_sum_sql('l_extendedprice')} AS sum_weight,
-           {dec_sum_sql('CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(3,2))')} / {dec_sum_sql('l_extendedprice')}
+           {dec_sum_sql(_DISCOUNT_SQL)} / {dec_sum_sql('l_extendedprice')}
              AS wavg_discount
     FROM lineitem
     GROUP BY l_returnflag
@@ -2253,7 +2264,7 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — order-independent, so bit-exact across engines.  One
     map-side-combining hash aggregate; no second pass."""
     li = load_table(spark, sf_dir, "lineitem")
-    sw = dec_sum(dec_money("l_extendedprice") * F.col("l_discount").cast("decimal(3,2)"))
+    sw = dec_sum(dec_money("l_extendedprice") * dec_rate("l_discount"))
     tw = dec_sum("l_extendedprice")
     return li.groupBy("l_returnflag").agg(
         sw.alias("sum_weighted"),
@@ -2358,10 +2369,10 @@ def agg_sketch_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_weighted_percentile_exact",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT l_returnflag, l_quantity,
-             CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS wt,
+             {cents_sql('l_extendedprice')} AS wt,
              l_orderkey, l_linenumber
       FROM lineitem
     ),
@@ -2417,7 +2428,7 @@ def agg_weighted_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame
         li.select(
             "l_returnflag",
             "l_quantity",
-            F.floor(F.col("l_extendedprice") * 100).cast("long").alias("wt"),
+            cents("l_extendedprice").alias("wt"),
         )
         .groupBy("l_returnflag", "l_quantity")
         .agg(F.sum("wt").alias("wt"))
@@ -2459,7 +2470,7 @@ def join_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
+               {dec_sum_sql('o_totalprice')} AS total_price
         FROM orders
         WHERE o_custkey NOT IN (SELECT nullif(c_custkey, -1) FROM customer
                                 WHERE c_acctbal < 0)
@@ -2724,7 +2735,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_chi_square_independence",
-    oracle="""
+    oracle=f"""
     WITH cells AS MATERIALIZED (
       SELECT o_orderpriority AS priority, o_orderstatus AS status,
              CAST(COUNT(*) AS BIGINT) AS n_obs
@@ -2735,8 +2746,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells),
     e AS (
       SELECT priority, status, COALESCE(n_obs, 0) AS n_obs, n_row, n_col,
-             CAST(CAST(CAST(n_row AS DECIMAL(38,0)) * n_col AS VARCHAR) AS DOUBLE)
-               / n_tot AS expected
+             {to_double_sql('CAST(n_row AS DECIMAL(38,0)) * n_col')} / n_tot AS expected
       FROM r CROSS JOIN c
       LEFT JOIN cells USING (priority, status)
       CROSS JOIN t
@@ -2756,11 +2766,11 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contrib column; summing IEEE doubles in engine-defined order is
     the one non-portable step, so the cells stay unsummed).
 
-    Float portability: counts are exact BIGINT; the row x col product
-    is DECIMAL(38,0) (BIGINT overflows at ~3e9 rows per margin) and
-    enters the double world through ONE correctly-rounded cast (the
-    VARCHAR-hop convention); expected and contrib are then identical
-    IEEE op trees on both engines.
+    Float portability: counts are exact BIGINT; the row x col product is
+    DECIMAL(38,0) (BIGINT overflows at ~3e9 rows per margin) and enters
+    the double world through ONE ``to_double`` (functions/rounding.py);
+    expected and contrib are then identical IEEE op trees on both
+    engines.
 
     Zero cells: groupBy yields only OBSERVED cells, but the chi-square
     table needs every (row level, col level) combination — an empty
@@ -2820,7 +2830,7 @@ BAND_TOP = 20
     oracle=f"""
     WITH s AS (
       SELECT s_suppkey, s_nationkey,
-             CAST(FLOOR(s_acctbal * 100) AS BIGINT) AS bal
+             {cents_sql('s_acctbal')} AS bal
       FROM supplier
     )
     SELECT a.s_suppkey AS supp_a, b.s_suppkey AS supp_b,
@@ -2862,7 +2872,7 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_nationkey",
-        F.floor(F.col("s_acctbal") * 100).cast("long").alias("bal"),
+        cents("s_acctbal").alias("bal"),
     )
     bucket = F.floor(F.col("bal") / F.lit(float(BAND_CENTS))).cast("long")
     left = s.select(
@@ -2898,11 +2908,11 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_covariance_matrix",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT CAST(FLOOR(l_quantity) AS BIGINT) AS q,
-             CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS p,
-             CAST(FLOOR(l_discount * 100) AS BIGINT) AS d
+             {cents_sql('l_extendedprice')} AS p,
+             {cents_sql('l_discount')} AS d
       FROM lineitem
     ),
     s AS (
@@ -2919,17 +2929,17 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM b
     )
     SELECT n,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * sqq - sq * sq AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqq - sq * sq')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_qty,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * spp - sp * sp AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * spp - sp * sp')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_price,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * sdd - sd * sd AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sdd - sd * sd')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_disc,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * sqp - sq * sp AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqp - sq * sp')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_qty_price,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * sqd - sq * sd AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqd - sq * sd')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_qty_disc,
-      CAST(CAST(CAST(n AS DECIMAL(38,0)) * spd - sp * sd AS VARCHAR) AS DOUBLE)
+      {to_double_sql('CAST(n AS DECIMAL(38,0)) * spd - sp * sd')}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_price_disc
     FROM s
     """,
@@ -2938,23 +2948,21 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full 3x3 sample covariance matrix of (quantity, price cents,
     discount pct) over lineitem in ONE pass: every entry derives from
-    the 9 exact DECIMAL(38,0) cross-moment sums via
-    cov(X,Y) = (n*Sxy - Sx*Sy) / (n*(n-1)) — the n-scaled form that
-    never materializes a mean, so the only doubles are one VARCHAR-hop
-    cast per exact numerator and a fixed divide tree (identical both
-    engines).  Spp*n stays inside DECIMAL(38,0) to ~1e11 rows at
-    1e7-cent prices.
+    the 9 exact DECIMAL(38,0) cross-moment sums via cov(X,Y) = (n*Sxy -
+    Sx*Sy) / (n*(n-1)) — the n-scaled form that never materializes a
+    mean, so the only doubles are one ``to_double`` per exact numerator
+    and a fixed divide tree (identical both engines).  Spp*n stays
+    inside DECIMAL(38,0) to ~1e11 rows at 1e7-cent prices.
 
     Scale shape: ONE scan, ONE map-side-partial aggregate to a single
     9-sum row — the textbook all-reduce; nothing downstream touches
     data rows.  This is agg_corr_regr generalized from a single pair to
     the moment matrix a multivariate OLS/PCA step consumes."""
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     li = load_table(spark, sf_dir, "lineitem")
     q = F.floor(F.col("l_quantity")).cast("long")
-    p = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    d = F.floor(F.col("l_discount") * 100).cast("long")
+    p = cents("l_extendedprice")
+    d = cents("l_discount")
     b = li.select(q.alias("q"), p.alias("p"), d.alias("d"))
 
     def msum(x, y):
@@ -2976,7 +2984,7 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = n.cast("double") * (n - 1)
 
     def cov(sxy, sx, sy):
-        return dbl((n.cast(d38) * F.col(sxy) - F.col(sx) * F.col(sy)).cast(d38)) / den
+        return to_double((n.cast(d38) * F.col(sxy) - F.col(sx) * F.col(sy)).cast(d38)) / den
 
     return s.select(
         "n",
@@ -3001,11 +3009,11 @@ def _det3_sql(a, b, c, d, e, f, g, h, i):
 
 
 def _ols2_oracle() -> str:
-    mom = """
+    mom = f"""
     WITH b AS (
       SELECT CAST(FLOOR(l_quantity) AS BIGINT) AS q,
-             CAST(FLOOR(l_discount * 100) AS BIGINT) AS d,
-             CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS p
+             {cents_sql('l_discount')} AS d,
+             {cents_sql('l_extendedprice')} AS p
       FROM lineitem
     ),
     s AS (
@@ -3023,20 +3031,20 @@ def _ols2_oracle() -> str:
     f AS (
       SELECT n,
              CAST(n AS DOUBLE) AS nn,
-             CAST(CAST(sq AS VARCHAR) AS DOUBLE) AS q1,
-             CAST(CAST(sd AS VARCHAR) AS DOUBLE) AS d1,
-             CAST(CAST(sp AS VARCHAR) AS DOUBLE) AS p1,
-             CAST(CAST(sqq AS VARCHAR) AS DOUBLE) AS qq,
-             CAST(CAST(sdd AS VARCHAR) AS DOUBLE) AS dd,
-             CAST(CAST(sqd AS VARCHAR) AS DOUBLE) AS qd,
-             CAST(CAST(sqp AS VARCHAR) AS DOUBLE) AS qp,
-             CAST(CAST(sdp AS VARCHAR) AS DOUBLE) AS dp
+             {to_double_sql('sq')} AS q1,
+             {to_double_sql('sd')} AS d1,
+             {to_double_sql('sp')} AS p1,
+             {to_double_sql('sqq')} AS qq,
+             {to_double_sql('sdd')} AS dd,
+             {to_double_sql('sqd')} AS qd,
+             {to_double_sql('sqp')} AS qp,
+             {to_double_sql('sdp')} AS dp
       FROM s
     )
     SELECT n,
-           {det0} / {detA} AS beta_intercept_cents,
-           {det1} / {detA} AS beta_per_qty_cents,
-           {det2} / {detA} AS beta_per_disc_pct_cents
+           {{det0}} / {{detA}} AS beta_intercept_cents,
+           {{det1}} / {{detA}} AS beta_per_qty_cents,
+           {{det2}} / {{detA}} AS beta_per_disc_pct_cents
     FROM f
     """
     detA = _det3_sql("nn", "q1", "d1", "q1", "qq", "qd", "d1", "qd", "dd")
@@ -3059,7 +3067,7 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: the normal-equation matrix entries are the exact
     DECIMAL(38,0) moment sums; each enters the double world through ONE
-    VARCHAR-hop cast, and the four 3x3 determinants are a SINGLE
+    ``to_double``, and the four 3x3 determinants are a SINGLE
     explicitly-parenthesized IEEE tree emitted by the same helper for
     both engines (_det3_sql / the Column builder here) — deterministic
     cross-engine, while integer determinants would overflow any fixed
@@ -3070,12 +3078,11 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the classic 'ML on moments' pattern: the shuffle cost of a
     d-feature OLS is O(d^2) doubles per partition, independent of rows."""
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_quantity")).cast("long").alias("q"),
-        F.floor(F.col("l_discount") * 100).cast("long").alias("d"),
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("p"),
+        cents("l_discount").alias("d"),
+        cents("l_extendedprice").alias("p"),
     )
 
     def msum(x, y):
@@ -3095,14 +3102,14 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = s.select(
         "n",
         F.col("n").cast("double").alias("nn"),
-        dbl(F.col("sq")).alias("q1"),
-        dbl(F.col("sd")).alias("d1"),
-        dbl(F.col("sp")).alias("p1"),
-        dbl(F.col("sqq")).alias("qq"),
-        dbl(F.col("sdd")).alias("dd"),
-        dbl(F.col("sqd")).alias("qd"),
-        dbl(F.col("sqp")).alias("qp"),
-        dbl(F.col("sdp")).alias("dp"),
+        to_double(F.col("sq")).alias("q1"),
+        to_double(F.col("sd")).alias("d1"),
+        to_double(F.col("sp")).alias("p1"),
+        to_double(F.col("sqq")).alias("qq"),
+        to_double(F.col("sdd")).alias("dd"),
+        to_double(F.col("sqd")).alias("qd"),
+        to_double(F.col("sqp")).alias("qp"),
+        to_double(F.col("sdp")).alias("dp"),
     )
 
     def det3(a, b_, c, d, e, ff, g, h, i):
@@ -3133,7 +3140,7 @@ WINSOR_HI = 0.95
     oracle=f"""
     WITH w AS (
       SELECT o_orderstatus AS status,
-             CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+             {cents_sql('o_totalprice')} AS cents
       FROM orders
     ),
     q AS (
@@ -3182,7 +3189,7 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     vc = materialize(
         o.groupBy("status", "cents")
@@ -3360,10 +3367,10 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_theil_decomposition",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT c.c_mktsegment AS segment,
-             CAST(FLOOR(o.o_totalprice * 100) AS BIGINT) AS cents
+             {cents_sql('o.o_totalprice')} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     g AS (
@@ -3378,7 +3385,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms AS (
       SELECT x.segment, cents,
              CAST(round(ln(CAST(cents AS DOUBLE) * CAST(g.ng AS DOUBLE)
-                           / CAST(CAST(g.xg AS VARCHAR) AS DOUBLE)) * 1000000)
+                           / {to_double_sql('g.xg')}) * 1000000)
                   AS BIGINT) AS t
       FROM x JOIN g ON x.segment = g.segment
     ),
@@ -3389,10 +3396,8 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT g.segment, g.ng AS n_orders,
            CAST((1000000 * g.xg) // tot.xt AS BIGINT) AS share_ppm,
-           CAST(CAST(w.num AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(g.xg AS VARCHAR) AS DOUBLE) / 1000000 AS theil_within,
-           ln(CAST(CAST(g.xg * tot.n AS VARCHAR) AS DOUBLE)
-              / CAST(CAST(tot.xt * g.ng AS VARCHAR) AS DOUBLE)) AS between_term
+           {to_double_sql('w.num')} / {to_double_sql('g.xg')} / 1000000 AS theil_within,
+           ln({to_double_sql('g.xg * tot.n')} / {to_double_sql('tot.xt * g.ng')}) AS between_term
     FROM g JOIN within w ON g.segment = w.segment CROSS JOIN tot
     ORDER BY g.segment
     """,
@@ -3409,11 +3414,11 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     query emits each group's pieces.
 
     Determinism: cents are exact BIGINT, group/global sums exact
-    DECIMAL(38,0).  Each row's ln enters through the single-ln
-    micro-nat convention (one correctly-rounded double ln, integerized
-    at 1e-6) so the per-group weighted sums are exact integer folds —
-    order-free; the final per-group divides and the between-term ln
-    are single IEEE ops over VARCHAR-hopped exact decimals (the
+    DECIMAL(38,0).  Each row's ln enters through the single-ln micro-nat
+    convention (one correctly-rounded double ln, integerized at 1e-6) so
+    the per-group weighted sums are exact integer folds — order-free;
+    the final per-group divides and the between-term ln are single IEEE
+    ops over ``to_double``-converted exact decimals (the
     events_welch_ttest recipe).  ln arguments (cents * ng, xg * n) stay
     below 2^53 through ~sf100 — exact in a double; past that the
     micro-nat terms would need a decimal pre-scale.
@@ -3429,7 +3434,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d38 = "decimal(38,0)"
     x = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("c_mktsegment").alias("segment"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     g = x.groupBy("segment").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
@@ -3438,7 +3443,6 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = g.agg(
         F.sum("ng").cast("long").alias("n"), F.sum("xg").cast(d38).alias("xt")
     )
-    dbl = lambda col: col.cast("string").cast("double")  # noqa: E731
     terms = x.join(F.broadcast(g), "segment").select(
         "segment",
         "cents",
@@ -3446,7 +3450,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.log(
                 F.col("cents").cast("double")
                 * F.col("ng").cast("double")
-                / dbl(F.col("xg"))
+                / to_double(F.col("xg"))
             )
             * 1000000
         )
@@ -3463,11 +3467,9 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "segment",
             F.col("ng").alias("n_orders"),
             F.expr("CAST((1000000 * xg) div xt AS BIGINT)").alias("share_ppm"),
-            (dbl(F.col("num")) / dbl(F.col("xg")) / F.lit(1000000.0)).alias(
-                "theil_within"
-            ),
+            (to_double("num") / to_double("xg") / F.lit(1000000.0)).alias("theil_within"),
             F.log(
-                dbl(F.col("xg") * F.col("n")) / dbl(F.col("xt") * F.col("ng"))
+                to_double(F.col("xg") * F.col("n")) / to_double(F.col("xt") * F.col("ng"))
             ).alias("between_term"),
         )
         .orderBy("segment")
@@ -3556,28 +3558,24 @@ def agg_rate_shrinkage_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "agg_herfindahl_concentration",
-    oracle="""
+    oracle=f"""
     WITH cust AS (
       SELECT o_orderpriority AS priority, o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DECIMAL(18,4)) AS c
+             CAST(SUM({dec6_sql('o_totalprice')}) AS DECIMAL(18,4)) AS c
       FROM orders GROUP BY 1, 2
     )
     SELECT priority,
            CAST(COUNT(*) AS BIGINT) AS n_custs,
-           CAST(CAST(SUM(c) AS VARCHAR) AS DOUBLE) AS total_rev,
+           {to_double_sql('SUM(c)')} AS total_rev,
            -- c is cast to width 19 (not 18) ONLY to force DuckDB's int128
            -- multiply path: at width <= 18 DuckDB 1.0 multiplies the int64
            -- payloads and overflows at runtime (seen at sf0.01); the
            -- (19,4)x(19,4) product is DECIMAL(38,8), same values as
            -- Spark's (18,4)x(18,4) -> (37,8)
-           CAST(CAST(SUM(CAST(c AS DECIMAL(19,4)) * CAST(c AS DECIMAL(19,4)))
-                     AS VARCHAR) AS DOUBLE)
-             / (CAST(CAST(SUM(c) AS VARCHAR) AS DOUBLE)
-                * CAST(CAST(SUM(c) AS VARCHAR) AS DOUBLE)) AS hhi,
-           CAST(CAST(SUM(CAST(c AS DECIMAL(19,4)) * CAST(c AS DECIMAL(19,4)))
-                     AS VARCHAR) AS DOUBLE)
-             / (CAST(CAST(SUM(c) AS VARCHAR) AS DOUBLE)
-                * CAST(CAST(SUM(c) AS VARCHAR) AS DOUBLE)) * COUNT(*) AS hhi_norm
+           {to_double_sql('SUM(CAST(c AS DECIMAL(19,4)) * CAST(c AS DECIMAL(19,4)))')}
+             / ({to_double_sql('SUM(c)')} * {to_double_sql('SUM(c)')}) AS hhi,
+           {to_double_sql('SUM(CAST(c AS DECIMAL(19,4)) * CAST(c AS DECIMAL(19,4)))')}
+             / ({to_double_sql('SUM(c)')} * {to_double_sql('SUM(c)')}) * COUNT(*) AS hhi_norm
     FROM cust GROUP BY priority ORDER BY priority
     """,
     tags=("agg", "stats"),
@@ -3594,8 +3592,7 @@ def agg_herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists.  Per-customer totals are exact decimals (2-decimal money);
     the (18,4) recast is exact (values have ≤2 decimals, far below the
     14-digit headroom) and keeps c·c inside DECIMAL(37,8).  Both exact
-    sums cross to double once (varchar hop on DuckDB), then one
-    division.
+    sums cross to double once (``to_double``), then one division.
 
     Scale shape: two-level aggregation — map-side partial groupBy on
     (priority, custkey), then a bounded-domain (5-priority) rollup;
@@ -3605,7 +3602,7 @@ def agg_herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = o.groupBy(
         F.col("o_orderpriority").alias("priority"), "o_custkey"
     ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
+        F.sum(dec6("o_totalprice"))
         .cast("decimal(18,4)")
         .alias("c")
     )
@@ -3636,8 +3633,8 @@ def _wls2_oracle() -> str:
     WITH b AS (
       SELECT CAST(1 + l_suppkey % 4 AS BIGINT) AS w,
              CAST(FLOOR(l_quantity) AS BIGINT) AS q,
-             CAST(FLOOR(l_discount * 100) AS BIGINT) AS d,
-             CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS p
+             {cents_sql('l_discount')} AS d,
+             {cents_sql('l_extendedprice')} AS p
       FROM lineitem
     ),
     s AS (
@@ -3655,15 +3652,15 @@ def _wls2_oracle() -> str:
     ),
     f AS (
       SELECT n,
-             CAST(CAST(sw AS VARCHAR) AS DOUBLE) AS w0,
-             CAST(CAST(swq AS VARCHAR) AS DOUBLE) AS q1,
-             CAST(CAST(swd AS VARCHAR) AS DOUBLE) AS d1,
-             CAST(CAST(swp AS VARCHAR) AS DOUBLE) AS p1,
-             CAST(CAST(swqq AS VARCHAR) AS DOUBLE) AS qq,
-             CAST(CAST(swdd AS VARCHAR) AS DOUBLE) AS dd,
-             CAST(CAST(swqd AS VARCHAR) AS DOUBLE) AS qd,
-             CAST(CAST(swqp AS VARCHAR) AS DOUBLE) AS qp,
-             CAST(CAST(swdp AS VARCHAR) AS DOUBLE) AS dp
+             {to_double_sql('sw')} AS w0,
+             {to_double_sql('swq')} AS q1,
+             {to_double_sql('swd')} AS d1,
+             {to_double_sql('swp')} AS p1,
+             {to_double_sql('swqq')} AS qq,
+             {to_double_sql('swdd')} AS dd,
+             {to_double_sql('swqd')} AS qd,
+             {to_double_sql('swqp')} AS qp,
+             {to_double_sql('swdp')} AS dp
       FROM s
     )
     SELECT n,
@@ -3697,13 +3694,12 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE scan, ONE map-side-partial aggregate to a single
     row; O(d²) doubles per partition regardless of rows."""
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         (F.lit(1) + F.col("l_suppkey") % 4).cast("long").alias("w"),
         F.floor(F.col("l_quantity")).cast("long").alias("q"),
-        F.floor(F.col("l_discount") * 100).cast("long").alias("d"),
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("p"),
+        cents("l_discount").alias("d"),
+        cents("l_extendedprice").alias("p"),
     )
 
     def wsum(*cols):
@@ -3726,15 +3722,15 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f = s.select(
         "n",
-        dbl(F.col("sw")).alias("w0"),
-        dbl(F.col("swq")).alias("q1"),
-        dbl(F.col("swd")).alias("d1"),
-        dbl(F.col("swp")).alias("p1"),
-        dbl(F.col("swqq")).alias("qq"),
-        dbl(F.col("swdd")).alias("dd"),
-        dbl(F.col("swqd")).alias("qd"),
-        dbl(F.col("swqp")).alias("qp"),
-        dbl(F.col("swdp")).alias("dp"),
+        to_double(F.col("sw")).alias("w0"),
+        to_double(F.col("swq")).alias("q1"),
+        to_double(F.col("swd")).alias("d1"),
+        to_double(F.col("swp")).alias("p1"),
+        to_double(F.col("swqq")).alias("qq"),
+        to_double(F.col("swdd")).alias("dd"),
+        to_double(F.col("swqd")).alias("qd"),
+        to_double(F.col("swqp")).alias("qp"),
+        to_double(F.col("swdp")).alias("dp"),
     )
 
     def det3(a, b_, c, d, e, ff, g, h, i):
@@ -3760,7 +3756,7 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "agg_spearman_rank_corr",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT l_returnflag,
              2 * RANK() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
@@ -3780,12 +3776,12 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM r GROUP BY 1
     )
     SELECT l_returnflag, n,
-           (CAST(n AS DOUBLE) * CAST(CAST(sqp AS VARCHAR) AS DOUBLE)
-            - CAST(CAST(sq AS VARCHAR) AS DOUBLE) * CAST(CAST(sp AS VARCHAR) AS DOUBLE))
-           / sqrt((CAST(n AS DOUBLE) * CAST(CAST(sqq AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(sq AS VARCHAR) AS DOUBLE) * CAST(CAST(sq AS VARCHAR) AS DOUBLE))
-                  * (CAST(n AS DOUBLE) * CAST(CAST(spp AS VARCHAR) AS DOUBLE)
-                     - CAST(CAST(sp AS VARCHAR) AS DOUBLE) * CAST(CAST(sp AS VARCHAR) AS DOUBLE)))
+           (CAST(n AS DOUBLE) * {to_double_sql('sqp')}
+            - {to_double_sql('sq')} * {to_double_sql('sp')})
+           / sqrt((CAST(n AS DOUBLE) * {to_double_sql('sqq')}
+                   - {to_double_sql('sq')} * {to_double_sql('sq')})
+                  * (CAST(n AS DOUBLE) * {to_double_sql('spp')}
+                     - {to_double_sql('sp')} * {to_double_sql('sp')}))
              AS spearman_rho
     FROM s ORDER BY l_returnflag
     """,
@@ -3807,9 +3803,9 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a 5th-digit cross-engine drift in sqp; mid-ranks remove the
     permutation dependence instead of chasing a unique key).
 
-    Determinism: rank moments are exact DECIMAL(38,0) sums (rq·rp ~
-    n², so BIGINT sums overflow one decade past sf1); each crosses to
-    double once (varchar hop), then the Pearson-on-ranks formula is one
+    Determinism: rank moments are exact DECIMAL(38,0) sums (rq·rp ~ n²,
+    so BIGINT sums overflow one decade past sf1); each crosses to double
+    once (``to_double``), then the Pearson-on-ranks formula is one
     shared IEEE tree.
 
     Scale shape — the first draft was a scale-killer and the decade
@@ -3828,7 +3824,6 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice", "l_orderkey", "l_linenumber"
     )
@@ -3864,10 +3859,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "n",
         (
-            (nd * dbl(F.col("sqp")) - dbl(F.col("sq")) * dbl(F.col("sp")))
+            (nd * to_double(F.col("sqp")) - to_double(F.col("sq")) * to_double(F.col("sp")))
             / F.sqrt(
-                (nd * dbl(F.col("sqq")) - dbl(F.col("sq")) * dbl(F.col("sq")))
-                * (nd * dbl(F.col("spp")) - dbl(F.col("sp")) * dbl(F.col("sp")))
+                (nd * to_double(F.col("sqq")) - to_double(F.col("sq")) * to_double(F.col("sq")))
+                * (nd * to_double(F.col("spp")) - to_double(F.col("sp")) * to_double(F.col("sp")))
             )
         ).alias("spearman_rho"),
     ).orderBy("l_returnflag")

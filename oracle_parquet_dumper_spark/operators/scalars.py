@@ -16,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import dec_sum, dec_sum_sql
 from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
-from oracle_parquet_dumper_spark.plans.registry import dec_sum, dec_sum_sql, query
+from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
 

@@ -17,6 +17,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.lsh import _bucket_sql, _sign_bit
+from oracle_parquet_dumper_spark.functions.rounding import (
+    dec_sum,
+    dec_sum_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.functions.vectors import (
     as_double,
     cosine_prenormed,
@@ -26,7 +32,7 @@ from oracle_parquet_dumper_spark.functions.vectors import (
     dot_sql,
     norm,
 )
-from oracle_parquet_dumper_spark.plans.registry import dec_sum_sql, query
+from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
@@ -770,7 +776,6 @@ def sim_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension (multi-vector retrieval scoring used by late-interaction
     retrievers over multimodal/token embeddings)."""
     from oracle_parquet_dumper_spark.functions.vectors import as_double, cosine_prenormed, norm
-    from oracle_parquet_dumper_spark.plans.registry import dec_sum
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "label",
@@ -995,7 +1000,7 @@ def _pq_oracle() -> str:
     ),
     lut AS ({lut_branches})
     SELECT c.vec_id,
-           CAST(CAST(SUM(CAST(l.d AS DECIMAL(25,12))) AS VARCHAR) AS DOUBLE)
+           {to_double_sql('SUM(CAST(l.d AS DECIMAL(25,12)))')}
              AS adc_dist
     FROM codes c JOIN lut l ON l.s = c.s AND l.j = c.code
     GROUP BY c.vec_id
@@ -1025,7 +1030,8 @@ def sim_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine determinism: encode argmin is MIN over (distance,
     codeword) structs (ties to the lowest index); every distance is an
     explicit left-associated sum of squared diffs built identically in
-    both engines; the ADC total uses the decimal-sum convention, so the
+    both engines; the ADC total is an exact decimal sum crossing to
+    double through one ``to_double`` (functions/rounding.py), so the
     final doubles — and hence the top-{TOP_K} cut — are bit-identical.
 
     Scale shape: the codebook and the query vector are bounded model
@@ -1258,7 +1264,7 @@ def sim_recall_eval_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_centroid_classify",
-    oracle="""
+    oracle=f"""
     WITH comp AS (
       SELECT label,
              unnest(range(1, len(embedding) + 1)) AS i,
@@ -1267,7 +1273,7 @@ def sim_recall_eval_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     cg AS (
       SELECT label, i,
-             round(CAST(SUM(CAST(e AS DECIMAL(38,18))) AS DOUBLE) / COUNT(*), 6) AS c
+             round({to_double_sql('SUM(CAST(e AS DECIMAL(38,18)))')} / COUNT(*), 6) AS c
       FROM comp GROUP BY label, i
     ),
     cent AS (
@@ -1318,7 +1324,7 @@ def sim_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = e.select("label", F.posexplode("embedding").alias("i", "v"))
     cg = comp.groupBy("label", "i").agg(
         F.round(
-            F.sum(F.col("v").cast("decimal(38,18)")).cast("double")
+            to_double(F.sum(F.col("v").cast("decimal(38,18)")))
             / F.count(F.lit(1)),
             6,
         ).alias("c")
@@ -1348,7 +1354,7 @@ def sim_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_within_class_cohesion",
-    oracle="""
+    oracle=f"""
     WITH comp AS (
       SELECT label,
              unnest(range(1, len(embedding) + 1)) AS i,
@@ -1357,18 +1363,17 @@ def sim_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sv AS (
       SELECT label, i,
-             round(CAST(SUM(CAST(e AS DECIMAL(38,18))) AS DOUBLE), 6) AS s
+             round({to_double_sql('SUM(CAST(e AS DECIMAL(38,18)))')}, 6) AS s
       FROM comp GROUP BY label, i
     ),
     svec AS (
       SELECT label, list(s ORDER BY i) AS svec FROM sv GROUP BY label
     ),
     q AS (
-      SELECT label, COUNT(*) AS n,
-             CAST(SUM(CAST(
-               list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])
-             AS DECIMAL(38,12))) AS DOUBLE) AS qsum
-      FROM embeddings GROUP BY label
+      SELECT label, COUNT(*) AS n, {to_double_sql('SUM(CAST(qq AS DECIMAL(38,12)))')} AS qsum
+      FROM (SELECT label, list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS qq
+            FROM embeddings)
+      GROUP BY label
     )
     SELECT CAST(q.label AS BIGINT) AS label, CAST(n AS BIGINT) AS n,
            round((list_dot_product(svec, svec) - qsum) / (n * (n - 1)), 6)
@@ -1398,9 +1403,7 @@ def sim_within_class_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     comp = e.select("label", F.posexplode("embedding").alias("i", "v"))
     sv = comp.groupBy("label", "i").agg(
-        F.round(F.sum(F.col("v").cast("decimal(38,18)")).cast("double"), 6).alias(
-            "s"
-        )
+        F.round(to_double(F.sum(F.col("v").cast("decimal(38,18)"))), 6).alias("s")
     )
     svec = sv.groupBy("label").agg(
         F.transform(
@@ -1410,7 +1413,7 @@ def sim_within_class_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     xd = e.select("label", as_double("embedding").alias("xd"))
     q = xd.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dot("xd", "xd").cast("decimal(38,12)")).cast("double").alias("qsum"),
+        to_double(F.sum(dot("xd", "xd").cast("decimal(38,12)"))).alias("qsum"),
     )
     return (
         q.join(F.broadcast(svec), "label")

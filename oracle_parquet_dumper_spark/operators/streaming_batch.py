@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import cents_sql, dec_sum_sql, to_double_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 from oracle_parquet_dumper_spark.streaming.ops import (
@@ -18,10 +19,10 @@ from oracle_parquet_dumper_spark.streaming.ops import (
 
 @query(
     "stream_tumbling_counts",
-    oracle="""
+    oracle=f"""
     SELECT time_bucket(INTERVAL '6 hours', CAST(ts AS TIMESTAMP)) AS window_start,
            event_type, COUNT(*) AS n,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) AS sum_value
+           {dec_sum_sql('value')} AS sum_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -139,10 +140,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_static_enrich",
-    oracle="""
+    oracle=f"""
     WITH n AS (SELECT COUNT(*) AS nc FROM customer)
     SELECT c.c_mktsegment, COUNT(*) AS n_events,
-           round(CAST(CAST(SUM(CAST(e.value AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE), 6) AS total_value
+           round({dec_sum_sql('e.value')}, 6) AS total_value
     FROM events e
     CROSS JOIN n
     JOIN customer c ON c.c_custkey = e.user_id % n.nc + 1
@@ -197,31 +198,30 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_drift_mean_shift",
-    oracle="""
+    oracle=f"""
     WITH ref AS (
       SELECT event_type, COUNT(*) AS rn,
              CAST(SUM(cents) AS DECIMAL(38,0)) AS rs,
              CAST(SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS DECIMAL(38,0)) AS rq
-      FROM (SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS cents FROM events)
+      FROM (SELECT event_type, {cents_sql('value')} AS cents FROM events)
       GROUP BY event_type
     ),
     r2 AS (
       SELECT event_type,
-             CAST(CAST(rs AS VARCHAR) AS DOUBLE) / rn AS ref_mean_cents,
-             sqrt(CAST(CAST(rn * rq - rs * rs AS VARCHAR) AS DOUBLE)) / rn AS ref_sd_cents
+             {to_double_sql('rs')} / rn AS ref_mean_cents,
+             sqrt({to_double_sql('rn * rq - rs * rs')}) / rn AS ref_sd_cents
       FROM ref
     ),
     w AS (
       SELECT time_bucket(INTERVAL '6 hours', CAST(ts AS TIMESTAMP)) AS window_start,
              event_type, COUNT(*) AS n,
-             CAST(SUM(CAST(floor(value * 100) AS BIGINT)) AS DECIMAL(38,0)) AS s
+             CAST(SUM({cents_sql('value')}) AS DECIMAL(38,0)) AS s
       FROM events GROUP BY 1, 2
     )
     SELECT w.window_start, w.event_type, CAST(w.n AS BIGINT) AS n,
-           CAST(CAST(w.s AS VARCHAR) AS DOUBLE) / w.n AS mean_cents,
+           {to_double_sql('w.s')} / w.n AS mean_cents,
            r2.ref_mean_cents, r2.ref_sd_cents,
-           (CAST(CAST(w.s AS VARCHAR) AS DOUBLE) / w.n - r2.ref_mean_cents)
-             / r2.ref_sd_cents AS shift
+           ({to_double_sql('w.s')} / w.n - r2.ref_mean_cents) / r2.ref_sd_cents AS shift
     FROM w JOIN r2 ON r2.event_type = w.event_type
     """,
     tags=("streaming", "window", "stats", "drift"),

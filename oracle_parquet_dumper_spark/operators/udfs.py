@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oracle_parquet_dumper_spark.functions.rounding import dec_money_sql, to_double_sql
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -145,7 +146,7 @@ def normalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas kernel: z-score prices within the group.  The group
     moments are EXACT decimal sums — order-independent, unlike
     ``prices.mean()``, whose float accumulation depends on shuffle
-    arrival order.  The square is an exact DECIMAL(12,2) x DECIMAL(12,2)
+    arrival order.  The square is an exact ``dec_money`` x ``dec_money``
     product (extendedprice is 2-decimal data, so the cast is exact and
     tie-free) — a double x*x cast to decimal can land on a 7-digit
     rounding tie where Spark and DuckDB disagree (the agg_var_stddev
@@ -174,14 +175,13 @@ def normalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
 @query(
     "udf_apply_in_pandas",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT l_returnflag,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sxx,
+             {to_double_sql('SUM(p)')} AS sx,
+             {to_double_sql('SUM(p * p)')} AS sxx,
              COUNT(*) AS n
-      FROM lineitem
+      FROM (SELECT l_returnflag, {dec_money_sql('l_extendedprice')} AS p FROM lineitem)
       GROUP BY l_returnflag
     )
     SELECT l.l_returnflag, l.l_orderkey, l.l_linenumber,

@@ -31,6 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -300,9 +306,9 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_benford_leading_digit",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
-      SELECT CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS c FROM orders
+      SELECT {cents_sql('o_totalprice')} AS c FROM orders
       WHERE o_totalprice > 0
     ),
     d AS (
@@ -327,8 +333,8 @@ def dq_benford_leading_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     log10/pow arithmetic (libm-dependent).  One scan, one 9-row partial
     aggregate; the total is an in-plan broadcast 1-row aggregate."""
     o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
-    cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    d = o.select(F.substring(cents.cast("string"), 1, 1).cast("long").alias("digit"))
+    tc = cents("o_totalprice")
+    d = o.select(F.substring(tc.cast("string"), 1, 1).cast("long").alias("digit"))
     t = d.agg(F.count(F.lit(1)).alias("total"))
     return (
         d.crossJoin(F.broadcast(t))
@@ -445,7 +451,7 @@ _DIFF_DIGEST_SQL = (
     oracle=f"""
     WITH base AS (
       SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate,
-             CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents
+             {cents_sql('o_totalprice')} AS cents
       FROM orders
     ),
     old AS (
@@ -495,7 +501,7 @@ def dq_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderstatus",
         "o_orderdate",
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
 
     def dig(df: DataFrame) -> Column:
@@ -827,7 +833,7 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_reconciliation_orders_lineitem",
-    oracle="""
+    oracle=f"""
     WITH li AS (
       SELECT l_orderkey,
              CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * (1 + l_tax)
@@ -836,8 +842,7 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     j AS (
       SELECT o.o_orderstatus AS status,
-             ABS(CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)
-                 - COALESCE(li.li_cents, 0)) AS diff_cents
+             ABS({cents_sql('o.o_totalprice')} - COALESCE(li.li_cents, 0)) AS diff_cents
       FROM orders o LEFT JOIN li ON o.o_orderkey = li.l_orderkey
     )
     SELECT status, CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -888,10 +893,7 @@ def dq_reconciliation_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataF
     o = load_table(spark, sf_dir, "orders")
     j = o.join(li, o.o_orderkey == li.l_orderkey, "left").select(
         F.col("o_orderstatus").alias("status"),
-        F.abs(
-            F.floor(F.col("o_totalprice") * 100).cast("long")
-            - F.coalesce(F.col("li_cents"), F.lit(0))
-        ).alias("diff_cents"),
+        F.abs(cents("o_totalprice") - F.coalesce(F.col("li_cents"), F.lit(0))).alias("diff_cents"),
     )
     return (
         j.groupBy("status")
@@ -914,9 +916,9 @@ EMD_PACK = 1 << 31  # packs (cntA, cntB) into one weight: w = cntA*PACK + cntB
 
 @query(
     "dq_drift_emd_numeric",
-    oracle="""
+    oracle=f"""
     WITH v AS (
-      SELECT CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents,
+      SELECT {cents_sql('o_totalprice')} AS cents,
              CAST(SUM(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
              CAST(SUM(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
       FROM orders GROUP BY 1
@@ -930,9 +932,8 @@ EMD_PACK = 1 << 31  # packs (cntA, cntB) into one weight: w = cntA*PACK + cntB
     ),
     t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM v)
     SELECT t.na AS n_a, t.nb AS n_b,
-           CAST(CAST(CAST(SUM(CAST(ABS(cuma * t.nb - cumb * t.na) AS HUGEINT)
-                               * (nxt - cents)) AS HUGEINT) AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(CAST(t.na AS HUGEINT) * t.nb AS VARCHAR) AS DOUBLE)
+           {to_double_sql('CAST(SUM(CAST(ABS(cuma * t.nb - cumb * t.na) AS HUGEINT) * (nxt - cents)) AS HUGEINT)')}
+             / {to_double_sql('CAST(t.na AS HUGEINT) * t.nb')}
              AS emd_cents
     FROM c CROSS JOIN t WHERE nxt IS NOT NULL
     GROUP BY t.na, t.nb
@@ -951,8 +952,8 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: over the value-aggregated domain, EMD = sum_v
     |cumA(v)*nB - cumB(v)*nA| * gap(v) / (nA*nB) — an integer rational
-    (HUGEINT / DECIMAL(38,0) numerator, one VARCHAR-hopped double
-    divide at the end).  No binning, no float accumulation.
+    (HUGEINT / DECIMAL(38,0) numerator, one ``to_double`` and one divide
+    at the end).  No binning, no float accumulation.
 
     Scale shape: ONE fold to the value domain (cents -> conditional
     counts, map-side partial), then the two-pass global-index
@@ -973,7 +974,7 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     v = (
         o.select(
-            F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
             (F.col("o_orderkey") % 2).alias("side"),
         )
         .groupBy("cents")
@@ -1041,7 +1042,6 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("term"),
         )
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     return (
         terms.groupBy("na", "nb")
         .agg(F.sum("term").cast(d38).alias("emd_num"))
@@ -1049,8 +1049,8 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("na").alias("n_a"),
             F.col("nb").alias("n_b"),
             (
-                dbl(F.col("emd_num"))
-                / dbl((F.col("na").cast(d38) * F.col("nb")).cast(d38))
+                to_double(F.col("emd_num"))
+                / to_double((F.col("na").cast(d38) * F.col("nb")).cast(d38))
             ).alias("emd_cents"),
         )
     )
@@ -1079,8 +1079,7 @@ def _cramers_pair_sql(idx: int, table: str, rcol: str, ccol: str) -> str:
     t{idx} AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells{idx}),
     e{idx} AS (
       SELECT rl, cl, COALESCE(n_obs, 0) AS n_obs, n_row, n_col, n_tot,
-             CAST(CAST(CAST(n_row AS DECIMAL(38,0)) * n_col AS VARCHAR) AS DOUBLE)
-               / n_tot AS expected
+             {to_double_sql('CAST(n_row AS DECIMAL(38,0)) * n_col')} / n_tot AS expected
       FROM r{idx} CROSS JOIN c{idx}
       LEFT JOIN cells{idx} USING (rl, cl)
       CROSS JOIN t{idx}
@@ -1216,7 +1215,7 @@ MAHAL_TOP = 20
     oracle=f"""
     WITH b AS (
       SELECT CAST(FLOOR(l_quantity) AS BIGINT) AS q,
-             CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS p
+             {cents_sql('l_extendedprice')} AS p
       FROM lineitem
     ),
     s AS (
@@ -1230,17 +1229,17 @@ MAHAL_TOP = 20
     ),
     m AS (
       SELECT n,
-             CAST(CAST(sq AS VARCHAR) AS DOUBLE) / n AS mq,
-             CAST(CAST(sp AS VARCHAR) AS DOUBLE) / n AS mp,
-             CAST(CAST(sqq AS VARCHAR) AS DOUBLE) / n
-               - (CAST(CAST(sq AS VARCHAR) AS DOUBLE) / n)
-                 * (CAST(CAST(sq AS VARCHAR) AS DOUBLE) / n) AS cxx,
-             CAST(CAST(spp AS VARCHAR) AS DOUBLE) / n
-               - (CAST(CAST(sp AS VARCHAR) AS DOUBLE) / n)
-                 * (CAST(CAST(sp AS VARCHAR) AS DOUBLE) / n) AS cyy,
-             CAST(CAST(sqp AS VARCHAR) AS DOUBLE) / n
-               - (CAST(CAST(sq AS VARCHAR) AS DOUBLE) / n)
-                 * (CAST(CAST(sp AS VARCHAR) AS DOUBLE) / n) AS cxy
+             {to_double_sql('sq')} / n AS mq,
+             {to_double_sql('sp')} / n AS mp,
+             {to_double_sql('sqq')} / n
+               - ({to_double_sql('sq')} / n)
+                 * ({to_double_sql('sq')} / n) AS cxx,
+             {to_double_sql('spp')} / n
+               - ({to_double_sql('sp')} / n)
+                 * ({to_double_sql('sp')} / n) AS cyy,
+             {to_double_sql('sqp')} / n
+               - ({to_double_sql('sq')} / n)
+                 * ({to_double_sql('sp')} / n) AS cxy
       FROM s
     )
     SELECT q AS quantity, p AS price_cents,
@@ -1274,11 +1273,10 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, TakeOrdered for the top-k — no global sort, no second
     data-sized shuffle."""
     d38 = "decimal(38,0)"
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_quantity")).cast("long").alias("q"),
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("p"),
+        cents("l_extendedprice").alias("p"),
     )
     s = b.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1290,19 +1288,19 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = s.select(
         "n",
-        (dbl(F.col("sq")) / F.col("n")).alias("mq"),
-        (dbl(F.col("sp")) / F.col("n")).alias("mp"),
+        (to_double(F.col("sq")) / F.col("n")).alias("mq"),
+        (to_double(F.col("sp")) / F.col("n")).alias("mp"),
         (
-            dbl(F.col("sqq")) / F.col("n")
-            - (dbl(F.col("sq")) / F.col("n")) * (dbl(F.col("sq")) / F.col("n"))
+            to_double(F.col("sqq")) / F.col("n")
+            - (to_double(F.col("sq")) / F.col("n")) * (to_double(F.col("sq")) / F.col("n"))
         ).alias("cxx"),
         (
-            dbl(F.col("spp")) / F.col("n")
-            - (dbl(F.col("sp")) / F.col("n")) * (dbl(F.col("sp")) / F.col("n"))
+            to_double(F.col("spp")) / F.col("n")
+            - (to_double(F.col("sp")) / F.col("n")) * (to_double(F.col("sp")) / F.col("n"))
         ).alias("cyy"),
         (
-            dbl(F.col("sqp")) / F.col("n")
-            - (dbl(F.col("sq")) / F.col("n")) * (dbl(F.col("sp")) / F.col("n"))
+            to_double(F.col("sqp")) / F.col("n")
+            - (to_double(F.col("sq")) / F.col("n")) * (to_double(F.col("sp")) / F.col("n"))
         ).alias("cxy"),
     )
     dx = F.col("q") - F.col("mq")

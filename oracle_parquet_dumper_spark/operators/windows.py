@@ -13,6 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
+    dec6,
+    dec6_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 
@@ -93,14 +101,13 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_running_sum",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
-           CAST(SUM(CAST(value AS DECIMAL(25,6)))
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
-           CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_n
+           {to_double_sql(f"SUM({dec6_sql('value')}) OVER w")} AS running_value,
+           CAST(COUNT(*) OVER w AS BIGINT) AS running_n
     FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
     tags=("window", "events"),
 )
@@ -116,21 +123,19 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "user_id",
         "event_id",
-        F.sum(F.col("value").cast("decimal(25,6)")).over(w).cast("double").alias("running_value"),
+        to_double(F.sum(dec6("value")).over(w)).alias("running_value"),
         F.count(F.lit(1)).over(w).cast("long").alias("running_n"),
     )
 
 
 @query(
     "window_moving_avg",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
-           CAST(SUM(CAST(value AS DECIMAL(25,6)))
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-           / COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_avg3
+           {to_double_sql(f"SUM({dec6_sql('value')}) OVER w")} / COUNT(*) OVER w AS mov_avg3
     FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
     """,
     tags=("window", "events"),
 )
@@ -141,10 +146,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "user_id",
         "event_id",
-        (
-            F.sum(F.col("value").cast("decimal(25,6)")).over(w).cast("double")
-            / F.count(F.lit(1)).over(w)
-        ).alias("mov_avg3"),
+        (to_double(F.sum(dec6("value")).over(w)) / F.count(F.lit(1)).over(w)).alias("mov_avg3"),
     )
 
 
@@ -279,13 +281,13 @@ def window_percent_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_range_numeric",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_acctbal,
-           CAST(COUNT(*) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
-                               RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING) AS BIGINT) AS n_neighbors,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(25,6))) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
-                               RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING) AS DOUBLE) AS near_balance
+           CAST(COUNT(*) OVER w AS BIGINT) AS n_neighbors,
+           {to_double_sql(f"SUM({dec6_sql('c_acctbal')}) OVER w")} AS near_balance
     FROM customer
+    WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal
+                 RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING)
     """,
     tags=("window", "range"),
 )
@@ -299,7 +301,7 @@ def window_range_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_acctbal",
         F.count(F.lit(1)).over(w).cast("long").alias("n_neighbors"),
-        F.sum(F.col("c_acctbal").cast("decimal(25,6)")).over(w).cast("double").alias("near_balance"),
+        to_double(F.sum(dec6("c_acctbal")).over(w)).alias("near_balance"),
     )
 
 
@@ -721,11 +723,10 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_range_time",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
            CAST(COUNT(*) OVER w AS BIGINT) AS n_last_hour,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(25,6))) OVER w AS VARCHAR(64))
-                AS DOUBLE) AS sum_last_hour
+           {to_double_sql(f"SUM({dec6_sql('value')}) OVER w")} AS sum_last_hour
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
                  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
@@ -757,19 +758,19 @@ def window_range_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.count(F.lit(1)).over(w).cast("long").alias("n_last_hour"),
-        F.sum(F.col("value").cast("decimal(25,6)")).over(w).cast("double").alias("sum_last_hour"),
+        to_double(F.sum(dec6("value")).over(w)).alias("sum_last_hour"),
     )
 
 
 @query(
     "window_rolling_slope",
-    oracle="""
+    oracle=f"""
     WITH xy AS (
       SELECT user_id, event_id, ts,
              date_diff('second',
                        MIN(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id),
                        CAST(ts AS TIMESTAMP)) AS x,
-             CAST(FLOOR(value * 100) AS BIGINT) AS y
+             {cents_sql('value')} AS y
       FROM events
     ),
     s AS (
@@ -821,7 +822,7 @@ def window_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp("ts") - F.min(F.unix_timestamp("ts")).over(anchor)).alias(
             "x"
         ),
-        F.floor(F.col("value") * 100).cast("long").alias("y"),
+        cents("value").alias("y"),
     )
     w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-7, W.currentRow)
     s = xy.select(
@@ -848,10 +849,10 @@ EWMA_K = 8  # trailing window; weights 2^-(0..7), integer-scaled by 2^7
 
 @query(
     "window_ewma_truncated",
-    oracle="""
+    oracle=f"""
     WITH x AS (
       SELECT user_id, event_id, ts,
-             CAST(FLOOR(value * 100) AS BIGINT) AS c
+             {cents_sql('value')} AS c
       FROM events
     ),
     l AS (
@@ -908,7 +909,7 @@ def window_ewma_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.floor(F.col("value") * 100).cast("long").alias("c"),
+        cents("value").alias("c"),
     )
     lags = [F.lag("c", k).over(w).alias(f"c{k}") for k in range(1, EWMA_K)]
     l = x.select("user_id", "event_id", "c", *lags)
@@ -991,7 +992,7 @@ def _holt_case_sql() -> str:
     oracle=f"""
     WITH x AS (
       SELECT user_id, event_id, ts,
-             CAST(FLOOR(value * 100) AS BIGINT) AS c
+             {cents_sql('value')} AS c
       FROM events
     ),
     l AS (
@@ -1036,7 +1037,7 @@ def window_holt_linear_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.floor(F.col("value") * 100).cast("long").alias("c"),
+        cents("value").alias("c"),
     )
     lags = [F.lag("c", k).over(w).alias(f"c{k}") for k in range(1, EWMA_K)]
     l = x.select("user_id", "event_id", "c", *lags)
@@ -1149,10 +1150,10 @@ def window_peak_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT user_id, event_id, ts,
-             CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT))
+             CAST(SUM({cents_sql('value')})
                   OVER (PARTITION BY user_id ORDER BY ts, event_id
                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
       FROM events
@@ -1204,7 +1205,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.sum(F.floor(F.col("value") * 100).cast("long")).over(cw).cast("long").alias("cum"),
+        F.sum(cents("value")).over(cw).cast("long").alias("cum"),
     )
     mw = (
         W.partitionBy("user_id")
@@ -1488,7 +1489,7 @@ CORR_WIN = 8
     oracle=f"""
     WITH g AS (
       SELECT user_id, event_id,
-             CAST(FLOOR(value * 100) AS BIGINT) AS y,
+             {cents_sql('value')} AS y,
              COALESCE(date_diff('microsecond',
                         lag(ts) OVER (PARTITION BY user_id ORDER BY event_id),
                         ts) // 1000000, 0) AS x
@@ -1541,7 +1542,7 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = ev.select(
         "user_id",
         "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("y"),
+        cents("value").alias("y"),
         F.coalesce(
             F.expr(
                 "timestampdiff(MICROSECOND,"
@@ -1588,9 +1589,9 @@ HAMPEL_MAD_FLOOR = 50  # cents; flat windows would otherwise flag everything
     "window_hampel_despike",
     oracle=f"""
     WITH g AS (
-      SELECT user_id, event_id, CAST(FLOOR(value * 100) AS BIGINT) AS v,
+      SELECT user_id, event_id, {cents_sql('value')} AS v,
              ROW_NUMBER() OVER w AS rn,
-             list(CAST(FLOOR(value * 100) AS BIGINT)) OVER (
+             list({cents_sql('value')}) OVER (
                PARTITION BY user_id ORDER BY event_id
                ROWS BETWEEN {HAMPEL_WIN - 1} PRECEDING AND CURRENT ROW) AS win
       FROM events
@@ -1638,9 +1639,9 @@ def window_hampel_despike(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = ev.select(
         "user_id",
         "event_id",
-        F.floor(F.col("value") * 100).cast("long").alias("v"),
+        cents("value").alias("v"),
         F.row_number().over(wo).alias("rn"),
-        F.collect_list(F.floor(F.col("value") * 100).cast("long")).over(wf).alias("win"),
+        F.collect_list(cents("value")).over(wf).alias("win"),
     )
     med = F.element_at(F.array_sort("win"), mid)
     m = g.where(F.col("rn") >= HAMPEL_WIN).select(
@@ -1677,7 +1678,7 @@ BOLL_K = 2.0  # band half-width in standard deviations
     oracle=f"""
     WITH cents AS (
       SELECT user_id, event_id, ts,
-             CAST(FLOOR(value * 100) AS BIGINT) AS v
+             {cents_sql('value')} AS v
       FROM events
     ),
     framed AS (
@@ -1721,18 +1722,18 @@ def window_bollinger_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed sort window, frame state O({BOLL_W})
     per row; no join, no second shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    cents = ev.select(
+    vals = ev.select(
         "user_id",
         "event_id",
         "ts",
-        F.floor(F.col("value") * 100).cast("long").alias("v"),
+        cents("value").alias("v"),
     )
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(-BOLL_W, -1)
     )
-    framed = cents.select(
+    framed = vals.select(
         "user_id",
         "event_id",
         "v",

@@ -6,19 +6,6 @@ plus (when SQL-expressible) an ANSI-SQL oracle string that DuckDB runs on
 the same parquet tables.  ``__spark_entry__.py``, ``tests/`` and
 ``bench.py`` all iterate this registry, so coverage, correctness checks,
 and benchmarks can never drift apart.
-
-Float determinism note: the driver compares an order-insensitive value
-hash, so floating-point aggregates must be *bit-identical* between Spark
-and DuckDB.  Summing doubles is order-dependent; summing decimals is not.
-``dec_sum_sql``/``dec_sum`` therefore cast to DECIMAL(25,6) before SUM and
-back to DOUBLE after — both engines then produce the same IEEE double.
-
-The SQL side converts decimal->double THROUGH VARCHAR: DuckDB's direct
-decimal->double cast divides the int128 payload by 10^scale in floating
-point (two roundings), which goes 1 ulp off the correctly-rounded value
-once sums reach ~17 significant digits (seen at sf1), while Java's
-BigDecimal.doubleValue and DuckDB's strtod are both correctly rounded —
-so the string hop is what makes the two engines agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -26,8 +13,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
@@ -188,58 +174,3 @@ def all_oracles() -> dict[str, str]:
 
 def bench_queries() -> dict[str, QuerySpec]:
     return {name: spec for name, spec in REGISTRY.items() if spec.bench}
-
-
-# ---------------------------------------------------------------------------
-# Bit-exact float aggregation helpers (shared Spark/SQL conventions)
-# ---------------------------------------------------------------------------
-
-def dec_sum(col: Column | str) -> Column:
-    """Order-independent SUM over doubles: decimal-sum, then back to double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("decimal(25,6)")).cast("double")
-
-
-def dec_avg(col: Column | str) -> Column:
-    """Order-independent AVG: exact decimal sum divided by count, in double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("decimal(25,6)")).cast("double") / F.count(c)
-
-
-def dec_sum_sql(expr: str) -> str:
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)"
-
-
-# ---------------------------------------------------------------------------
-# Exact-decimal PRODUCT terms (for revenue-style Σ price*(1-disc)*(1+tax))
-#
-# dec_sum makes the SUM order-independent, but when its argument is a
-# product of doubles the per-row double->decimal cast itself is not
-# portable: Spark rounds the double's SHORTEST DECIMAL REPR
-# (BigDecimal.valueOf) while DuckDB rounds the binary value, so about
-# one row in millions casts one 6th-decimal ulp apart (first seen as a
-# 1-ulp sum_charge divergence at sf1).  The monetary/rate columns are
-# 2-decimal-clean, so the portable form captures each FACTOR exactly in
-# a small decimal and multiplies in decimal arithmetic — exact on both
-# engines, with precisions kept far below the 38-digit clamp.
-# ---------------------------------------------------------------------------
-
-def dec_money(col: Column | str) -> Column:
-    """Exact DECIMAL(12,2) capture of a 2-decimal money column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(12,2)")
-
-
-def dec_one_minus(col: Column | str) -> Column:
-    """(1 - rate) as an exact small decimal (rate is 2-decimal-clean)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lit(1) - c.cast("decimal(3,2)")
-
-
-def dec_one_plus(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lit(1) + c.cast("decimal(3,2)")
-
-
-def dec_avg_sql(expr: str) -> str:
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE) / COUNT({expr})"

@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from oracle_parquet_dumper_spark.functions.rounding import cents, dec_sum, to_double
+
+
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -66,7 +69,7 @@ def tumbling_counts(events: DataFrame, width: str = "6 hours", watermark: str = 
         .groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias("sum_value"),
+            dec_sum("value").alias("sum_value"),
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
     )
@@ -173,9 +176,7 @@ def enrich_with_dimension(
     )
     return enriched.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(25,6)")).cast("double"), 6).alias(
-            "total_value"
-        ),
+        F.round(dec_sum("value"), 6).alias("total_value"),
     )
 
 
@@ -219,18 +220,17 @@ def drift_reference(events_batch: DataFrame) -> DataFrame:
     table maintained by the batch layer; here it derives from the same
     fixture so the stream==batch contract stays checkable."""
     d38 = "decimal(38,0)"
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     g = events_batch.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("rn"),
-        F.sum(cents).cast(d38).alias("rs"),
-        F.sum(cents.cast(d38) * cents).cast(d38).alias("rq"),
+        F.sum(vc).cast(d38).alias("rs"),
+        F.sum(vc.cast(d38) * vc).cast(d38).alias("rq"),
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
     return g.select(
         "event_type",
-        (dbl(F.col("rs")) / F.col("rn")).alias("ref_mean_cents"),
+        (to_double(F.col("rs")) / F.col("rn")).alias("ref_mean_cents"),
         (
-            F.sqrt(dbl(F.col("rn") * F.col("rq") - F.col("rs") * F.col("rs")))
+            F.sqrt(to_double(F.col("rn") * F.col("rq") - F.col("rs") * F.col("rs")))
             / F.col("rn")
         ).alias("ref_sd_cents"),
     )
@@ -253,20 +253,19 @@ def drift_mean_shift(
     first() — one watermarked state store keyed by (window, type), no
     post-aggregation join restrictions."""
     d38 = "decimal(38,0)"
-    cents = F.floor(F.col("value") * 100).cast("long")
+    vc = cents("value")
     enriched = events.join(F.broadcast(reference), "event_type")
     g = (
         enriched.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents).cast(d38).alias("s"),
+            F.sum(vc).cast(d38).alias("s"),
             F.first("ref_mean_cents").alias("ref_mean_cents"),
             F.first("ref_sd_cents").alias("ref_sd_cents"),
         )
     )
-    dbl = lambda c: c.cast("string").cast("double")  # noqa: E731
-    mean_w = dbl(F.col("s")) / F.col("n")
+    mean_w = to_double(F.col("s")) / F.col("n")
     return g.select(
         F.col("w.start").alias("window_start"),
         "event_type",
@@ -274,7 +273,7 @@ def drift_mean_shift(
         mean_w.alias("mean_cents"),
         "ref_mean_cents",
         "ref_sd_cents",
-        ((dbl(F.col("s")) / F.col("n") - F.col("ref_mean_cents")) / F.col("ref_sd_cents")).alias(
+        ((to_double("s") / F.col("n") - F.col("ref_mean_cents")) / F.col("ref_sd_cents")).alias(
             "shift"
         ),
     )

@@ -2,8 +2,8 @@
 
 Mirrors the driver's check (row-count + schema + order-insensitive value
 hash): columns sorted by name, rows sorted, values compared *exactly* —
-floats must be bit-identical, which the decimal-sum convention in
-``plans.registry`` guarantees for aggregates.
+floats must be bit-identical, which the float-portability policy in
+``functions/rounding.py`` guarantees for aggregates.
 """
 
 from __future__ import annotations

@@ -279,3 +279,68 @@ def test_knn_kit_and_rounded_cosine_written_once():
     assert _knn_idiom_hits(
         "round(list_dot_product(x, x) - 2 * list_dot_product(x, c) + list_dot_product(c, c), 6)"
     ) == []
+
+
+# The float-portability policy lives in functions/rounding.py: each idiom
+# below may appear in the package only there.  A raw copy elsewhere can
+# drift from its twin unseen: DuckDB's direct decimal -> double cast goes
+# 1 ulp off only once the decimal's integer payload passes 2^53, which
+# most fixture values never reach.  The Spark string hop and a decimal
+# SUM cast straight to DOUBLE are written nowhere, the owner included.
+FLOAT_POLICY_IDIOMS = {
+    "SQL VARCHAR hop": re.compile(r"AS VARCHAR(\(\d+\))?\)\s*AS DOUBLE\)", re.I),
+    "Spark string hop": re.compile(re.escape('.cast("string").cast("double")')),
+    "SQL cents": re.compile(r"CAST\(floor\([\w.{}]+ \* 100\) AS BIGINT\)", re.I),
+    "Spark cents": re.compile(r"F\.floor\(.* \* 100\)"),
+    "DECIMAL(25,6) capture": re.compile(r"decimal\(25, ?6\)", re.I),
+    "money capture": re.compile(r"decimal\(12, ?2\)", re.I),
+    "rate capture": re.compile(r"decimal\(3, ?2\)", re.I),
+    "SQL decimal SUM without hop": re.compile(
+        r"CAST\(SUM\((?:(?!VARCHAR).)*DECIMAL\((?:(?!VARCHAR).)*\) AS DOUBLE\)", re.I
+    ),
+}
+NOWHERE = {"Spark string hop", "SQL decimal SUM without hop"}
+
+
+def _float_idiom_hits(src: str) -> list[str]:
+    return [name for name, pat in FLOAT_POLICY_IDIOMS.items() if pat.search(src)]
+
+
+def test_float_policy_written_once():
+    pkg = os.path.join(REPO, "oracle_parquet_dumper_spark")
+    owner = os.path.join(pkg, "functions", "rounding.py")
+    stray, owned = [], set()
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                rel = os.path.relpath(path, REPO)
+                for i, line in enumerate(open(path), 1):
+                    for name in _float_idiom_hits(line):
+                        if path == owner and name not in NOWHERE:
+                            owned.add(name)
+                        else:
+                            stray.append(f"{rel}:{i}: {name}")
+    assert not stray, "raw float-policy copies; use functions/rounding.py:\n" + "\n".join(stray)
+    assert owned == set(FLOAT_POLICY_IDIOMS) - NOWHERE
+    # the rule fires on each raw form it replaces ...
+    raw = [
+        "CAST(CAST(n * q - s * s AS VARCHAR) AS DOUBLE)",
+        'dbl = lambda c: c.cast("string").cast("double")',
+        "CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)",
+        'F.floor(F.col("value") * 100).cast("long")',
+        'F.sum(F.col("value").cast("decimal(25,6)")).alias("psum")',
+        "CAST(l_extendedprice AS DECIMAL(12,2))",
+        'F.col("l_discount").cast("decimal(3,2)")',
+        "round(CAST(SUM(CAST(e AS DECIMAL(38,18))) AS DOUBLE), 6) AS s",
+    ]
+    assert [_float_idiom_hits(s) for s in raw] == [[n] for n in FLOAT_POLICY_IDIOMS]
+    # ... and not on what computes something else: the export checksum,
+    # DECIMAL(38,0) integer moments, and a plain integer-to-double cast
+    assert _float_idiom_hits('F.sum(row_hash.cast("decimal(38,0)")).cast("string")') == []
+    assert _float_idiom_hits("CAST(SUM(CAST(c AS DECIMAL(38,0)) * c) AS DECIMAL(38,0)) AS q") == []
+    assert _float_idiom_hits("F.sum(vc.cast(d38) * vc).cast(d38)") == []
+    assert _float_idiom_hits("CAST(n AS DOUBLE) * sxy") == []
+    # the hopped decimal SUM is one idiom, not two
+    hopped = "CAST(CAST(SUM(CAST(v AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)"
+    assert _float_idiom_hits(hopped) == ["SQL VARCHAR hop", "DECIMAL(25,6) capture"]
