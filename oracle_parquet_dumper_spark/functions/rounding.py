@@ -1,7 +1,7 @@
-"""The float-portability policy: each Spark ``Column`` builder next to
-its DuckDB SQL-text twin, plus ``round6`` for Python kernels.
+"""The numeric-portability policy: each Spark ``Column`` builder next
+to its DuckDB SQL-text twin, plus ``round6`` for Python kernels.
 
-Every float a query returns must be bit-identical between Spark and
+Every number a query returns must be bit-identical between Spark and
 DuckDB, and operators and oracle strings get that only from these
 helpers (tests/test_registry_hygiene.py fails on a raw copy elsewhere):
 
@@ -21,6 +21,17 @@ helpers (tests/test_registry_hygiene.py fails on a raw copy elsewhere):
   product cast per row to DECIMAL(25,6) is not portable: Spark rounds
   the shortest decimal repr, DuckDB the binary value.
 - ``cents``: integer cents for the exact integer-moment queries.
+- ``int128``/``exact_sum``/``exact_dot``/``comoment``: the exact
+  integer-moment rule.  Sums of integers (cents, counts, ranks) and of
+  their products run in DECIMAL(38,0), cast BEFORE summing: Spark's
+  ANSI ``SUM(BIGINT)`` raises past 2^63 where DuckDB's widens to
+  HUGEINT, so a sum-then-cast is not portable.  The numerator
+  ``n*Sxy - Sx*Sy`` (``comoment``; the variance numerator when y = x)
+  stays exact and enters the double world through ONE ``to_double``.
+  NULL terms are skipped; an empty input sums to NULL.  DuckDB spells
+  the type DECIMAL(38,0) too, except where it needs ``//`` or ``<<``:
+  those are defined on HUGEINT only (``//`` on a DECIMAL returns
+  DOUBLE), hence ``hugeint_sql``.
 - ``round6``: Python replica of ``round(x, 6)``, HALF_UP on the
   shortest repr in Spark and half-away-from-zero in DuckDB, where
   Python's banker's ``round`` differs (the tie 221/128 = 1.7265625).
@@ -129,6 +140,58 @@ def dec_one_plus(c: Column | str) -> Column:
 def dec_one_plus_sql(e: str) -> str:
     """DuckDB twin of ``dec_one_plus``, parenthesised."""
     return f"(1 + {dec_rate_sql(e)})"
+
+
+def int128(c: Column | str) -> Column:
+    """Exact 128-bit integer: DECIMAL(38,0), overflow raises."""
+    return _col(c).cast("decimal(38,0)")
+
+
+def int128_sql(e: str) -> str:
+    """SQL twin of ``int128``, in DuckDB and Spark SQL alike."""
+    return f"CAST({e} AS DECIMAL(38,0))"
+
+
+def hugeint_sql(e: str) -> str:
+    """DuckDB twin of ``int128`` for integer ``//`` and ``<<``, which
+    DuckDB defines on HUGEINT but not on DECIMAL(38,0)."""
+    return f"CAST({e} AS HUGEINT)"
+
+
+def exact_dot(c: Column | str, *factors: Column | str) -> Column:
+    """Exact SUM of ``c * f1 * f2 ...``: ``c`` widened first, so every
+    product and the sum stay in DECIMAL(38,0)."""
+    term = int128(c)
+    for f in factors:
+        term = term * _col(f)
+    return F.sum(term)
+
+
+def exact_dot_sql(e: str, *factors: str) -> str:
+    """DuckDB twin of ``exact_dot``."""
+    return f"SUM({' * '.join([int128_sql(e), *factors])})"
+
+
+def exact_sum(c: Column | str) -> Column:
+    """Exact integer SUM in DECIMAL(38,0), cast before summing."""
+    return exact_dot(c)
+
+
+def exact_sum_sql(e: str) -> str:
+    """DuckDB twin of ``exact_sum``."""
+    return exact_dot_sql(e)
+
+
+def comoment(n: Column | str, sxy: Column | str, sx: Column | str, sy: Column | str | None = None) -> Column:
+    """Exact co-moment numerator ``n*Sxy - Sx*Sy`` from exact sums (the
+    variance numerator ``n*Sxx - Sx^2`` when ``sy`` is omitted)."""
+    sx = _col(sx)
+    return int128(n) * _col(sxy) - sx * (sx if sy is None else _col(sy))
+
+
+def comoment_sql(n: str, sxy: str, sx: str, sy: str | None = None) -> str:
+    """DuckDB twin of ``comoment``, parenthesised."""
+    return f"({int128_sql(n)} * {sxy} - {sx} * {sx if sy is None else sy})"
 
 
 def cents(c: Column | str) -> Column:

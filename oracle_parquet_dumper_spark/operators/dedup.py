@@ -25,7 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
-from oracle_parquet_dumper_spark.functions.rounding import to_double, to_double_sql
+from oracle_parquet_dumper_spark.functions.rounding import (
+    comoment,
+    comoment_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    hugeint_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.functions.tokens import (
     md5_long,
     md5_long_sql,
@@ -48,7 +58,7 @@ N_BANDS = 4  # 4 rows/band -> s-curve threshold ~ (1/4)^(1/4) ~ 0.71
 # permutations are affine universal hashes (a*x + b) mod p over the
 # 31-bit Mersenne prime — products stay under 2^62, so the arithmetic
 # is exact in BIGINT on both engines (ANSI long overflow would throw on
-# Spark; DuckDB would upcast to HUGEINT and diverge).  Seeded constants
+# Spark; DuckDB would upcast to 128 bits and diverge).  Seeded constants
 # (SURVEY.md §7: seeded randomness only).
 MINHASH_P = 2_147_483_647
 _mh_rng = __import__("numpy").random.default_rng(13)
@@ -333,17 +343,15 @@ def _simhash_oracle() -> str:
     """SQL twin of dedup_simhash: the 64-bit token hash is md5 split
     into two 32-bit halves (both engines parse 8 hex digits exactly);
     vote sums and the sign-threshold assembly mirror the Spark
-    expressions term for term, with the HUGEINT two's-complement fold
+    expressions term for term, with a 128-bit two's-complement fold
     for the sign bit."""
     votes = ",\n             ".join(
         f"SUM(CASE WHEN (({'lo' if i < 32 else 'hi'} >> {i if i < 32 else i - 32}) & 1) = 1 "
         f"THEN 1 ELSE -1 END) AS b{i}"
         for i in range(64)
     )
-    terms = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN CAST(1 AS HUGEINT) << {i} ELSE CAST(0 AS HUGEINT) END)"
-        for i in range(64)
-    )
+    one, zero = hugeint_sql("1"), hugeint_sql("0")
+    terms = " + ".join(f"(CASE WHEN b{i} > 0 THEN {one} << {i} ELSE {zero} END)" for i in range(64))
     return f"""
     WITH tok AS (
       SELECT doc_id,
@@ -362,9 +370,9 @@ def _simhash_oracle() -> str:
       FROM h GROUP BY doc_id
     )
     SELECT doc_id,
-           CAST(CASE WHEN hu >= CAST(1 AS HUGEINT) << 63
-                     THEN hu - (CAST(1 AS HUGEINT) << 64) ELSE hu END AS BIGINT) AS simhash
-    FROM (SELECT doc_id, CAST({terms} AS HUGEINT) AS hu FROM v)
+           CAST(CASE WHEN hu >= {one} << 63
+                     THEN hu - ({one} << 64) ELSE hu END AS BIGINT) AS simhash
+    FROM (SELECT doc_id, {hugeint_sql(terms)} AS hu FROM v)
     """
 
 
@@ -2805,13 +2813,13 @@ _LINE_KEY_SQL = "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARC
     ),
     m AS (
       SELECT flag, COUNT(*) AS n,
-             CAST(SUM(cents) AS DECIMAL(38,0)) AS s,
-             CAST(SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS DECIMAL(38,0)) AS q
+             {exact_sum_sql('cents')} AS s,
+             {exact_dot_sql('cents', 'cents')} AS q
       FROM li GROUP BY flag
     ),
     wts AS (
       SELECT flag, n,
-             CAST(round(sqrt({to_double_sql('n * q - s * s')}) * 1000)
+             CAST(round(sqrt({to_double_sql(comoment_sql('n', 'q', 's'))}) * 1000)
                   AS BIGINT) AS w
       FROM m
     ),
@@ -2854,7 +2862,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness end to end: N_h·σ_h = sqrt(N_h·Σx² - (Σx)²) — the
     identity keeps the allocation weight a SINGLE sqrt over exact
-    DECIMAL(38,0) moments, integerized to milli-units; the budget
+    integer moments (``comoment``), integerized to milli-units; the budget
     split is the all-integer largest-remainder method
     (window_largest_remainder_alloc's shape) over the <= #strata
     relation, capped at N_h; and membership is the deterministic
@@ -2875,19 +2883,18 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    d38 = "decimal(38,0)"
     m = materialize(
         li.groupBy("flag")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum("cents").cast(d38).alias("s"),
-            F.sum(F.col("cents").cast(d38) * F.col("cents")).cast(d38).alias("q"),
+            exact_sum("cents").alias("s"),
+            exact_dot("cents", "cents").alias("q"),
         )
     )  # 3-row relation, multiple consumers
     wts = m.select(
         "flag",
         "n",
-        F.round(F.sqrt(to_double(F.col("n") * F.col("q") - F.col("s") * F.col("s"))) * 1000)
+        F.round(F.sqrt(to_double(comoment("n", "q", "s"))) * 1000)
         .cast("long")
         .alias("w"),
     )

@@ -22,10 +22,19 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.rounding import (
     cents,
     cents_sql,
+    comoment,
+    comoment_sql,
     dec6,
     dec6_sql,
     dec_sum,
     dec_sum_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    hugeint_sql,
+    int128,
+    int128_sql,
     to_double,
     to_double_sql,
 )
@@ -634,18 +643,18 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats AS (
       SELECT user_id, event_id, value, v,
              COUNT(*) OVER w AS n,
-             SUM(CAST(v AS HUGEINT)) OVER w AS s,
-             SUM(CAST(v AS HUGEINT) * v) OVER w AS ssq
+             SUM({hugeint_sql('v')}) OVER w AS s,
+             SUM({hugeint_sql('v')} * v) OVER w AS ssq
       FROM cents
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN {ZSCORE_WIN} PRECEDING AND 1 PRECEDING)
     )
     SELECT user_id, event_id, value, n AS n_win,
-           CAST((1000 * (n - 1) * (n * CAST(v AS HUGEINT) - s) * (n * CAST(v AS HUGEINT) - s))
+           CAST((1000 * (n - 1) * (n * {hugeint_sql('v')} - s) * (n * {hugeint_sql('v')} - s))
              // nullif(n * (n * ssq - s * s), 0) AS BIGINT) AS z2_milli
     FROM stats
     WHERE n >= {ZSCORE_MIN_N}
-      AND (n - 1) * (n * CAST(v AS HUGEINT) - s) * (n * CAST(v AS HUGEINT) - s)
+      AND (n - 1) * (n * {hugeint_sql('v')} - s) * (n * {hugeint_sql('v')} - s)
             > 9 * n * (n * ssq - s * s)
     """,
     tags=("window", "timeseries", "dq"),
@@ -658,8 +667,8 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All-integer formulation: values become cents, and |v - mean| >
     3*std is cross-multiplied into (n-1)(nv-s)^2 > 9n(n*ssq - s^2).
-    The quadratic terms are computed in 128-bit integers — DECIMAL(38,0)
-    on Spark, HUGEINT on DuckDB — because the z2_milli numerator
+    The quadratic terms are computed in 128-bit integers (``int128``)
+    because the z2_milli numerator
     1000(n-1)(nv-s)^2 reaches ~3.5e7 * v_cents^2 at a 20-row window and
     would overflow BIGINT for values around $10k vs a calm window (under
     ANSI mode a hard failure, not silent corruption); in 128-bit the
@@ -675,7 +684,6 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     v = F.round(F.col("value") * 100).cast("long")
-    d38 = "decimal(38,0)"
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -687,11 +695,11 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         v.alias("v"),
         F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(v.cast(d38)).over(w).alias("s"),
-        F.sum((v.cast(d38) * v).cast(d38)).over(w).alias("ssq"),
+        exact_sum(v).over(w).alias("s"),
+        exact_dot(v, v).over(w).alias("ssq"),
     )
     n, s, ssq = F.col("n"), F.col("s"), F.col("ssq")
-    dv = F.col("v").cast(d38)
+    dv = int128("v")
     dev2 = (n * dv - s) * (n * dv - s)
     var_n = n * (n * ssq - s * s)
     return (
@@ -702,8 +710,8 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             n.alias("n_win"),
             F.expr(
-                f"CAST((1000 * (n - 1) * (n * CAST(v AS {d38}) - s) * (n * CAST(v AS {d38}) - s)) "
-                f"div nullif(n * (n * ssq - s * s), CAST(0 AS {d38})) AS BIGINT)"
+                f"CAST((1000 * (n - 1) * (n * {int128_sql('v')} - s) * (n * {int128_sql('v')} - s)) "
+                f"div nullif(n * (n * ssq - s * s), {int128_sql('0')}) AS BIGINT)"
             ).alias("z2_milli"),
         )
     )
@@ -1073,27 +1081,31 @@ CUPED_VARIANTS = 2  # deterministic assignment: user_id % CUPED_VARIANTS
       GROUP BY user_id
     ),
     g AS (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(x) AS DECIMAL(38,0)) AS sx,
-             CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-             CAST(SUM(CAST(x AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS sxy,
-             CAST(SUM(CAST(x AS DECIMAL(38,0)) * x) AS DECIMAL(38,0)) AS sxx
+      SELECT COUNT(*) AS n,
+             {exact_sum_sql('x')} AS sx,
+             {exact_sum_sql('y')} AS sy,
+             {exact_dot_sql('x', 'y')} AS sxy,
+             {exact_dot_sql('x', 'x')} AS sxx
       FROM u
     ),
     v AS (
       SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_users,
-             CAST(SUM(x) AS DECIMAL(38,0)) AS sxv,
-             CAST(SUM(y) AS DECIMAL(38,0)) AS syv
+             {exact_sum_sql('x')} AS sxv,
+             {exact_sum_sql('y')} AS syv
       FROM u GROUP BY variant
     )
     SELECT v.variant, v.n_users,
            {to_double_sql('v.syv')} / v.n_users AS mean_post,
-           {to_double_sql('n * sxy - sx * sy')} / {to_double_sql('n * sxx - sx * sx')} AS theta,
+           g.theta,
            ({to_double_sql('v.syv')} / v.n_users)
-             - ({to_double_sql('n * sxy - sx * sy')} / {to_double_sql('n * sxx - sx * sx')})
+             - g.theta
                * (({to_double_sql('v.sxv')} / v.n_users) - ({to_double_sql('g.sx')} / {to_double_sql('g.n')}))
              AS mean_post_cuped
-    FROM v CROSS JOIN g
+    FROM v CROSS JOIN (
+      SELECT *, {to_double_sql(comoment_sql('n', 'sxy', 'sx', 'sy'))}
+                / {to_double_sql(comoment_sql('n', 'sxx', 'sx'))} AS theta
+      FROM g
+    ) g
     """,
     tags=("agg", "events", "stats", "experiment"),
 )
@@ -1108,7 +1120,7 @@ def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float portability: x and y are exact cents (BIGINT); every moment —
     n, Sx, Sy, Sxy, Sxx, and the theta numerator/denominator n*Sxy -
-    Sx*Sy / n*Sxx - Sx² — is exact DECIMAL(38,0) (Sxy alone reaches
+    Sx*Sy / n*Sxx - Sx² — is an exact 128-bit integer (Sxy alone reaches
     ~3e18 at sf1, and n*Sxy ~3e23 overflows BIGINT, the
     ts_anomaly_rolling_zscore lesson).  Doubles appear only at the final
     scalar expression, built from single ``to_double`` casts of exact
@@ -1140,23 +1152,20 @@ def events_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % CUPED_VARIANTS).alias("variant"), "x", "y"
         )
     )
-    d38 = "decimal(38,0)"
     g = u.agg(
-        F.count(F.lit(1)).cast(d38).alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
+        F.count(F.lit(1)).alias("n"),
+        exact_sum("x").alias("sx"),
+        exact_sum("y").alias("sy"),
+        exact_dot("x", "y").alias("sxy"),
+        exact_dot("x", "x").alias("sxx"),
     )
     v = u.groupBy("variant").agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("x").cast(d38).alias("sxv"),
-        F.sum("y").cast(d38).alias("syv"),
+        exact_sum("x").alias("sxv"),
+        exact_sum("y").alias("syv"),
     )
     j = v.crossJoin(F.broadcast(g))
-    theta = to_double(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / to_double(
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    theta = to_double(comoment("n", "sxy", "sx", "sy")) / to_double(comoment("n", "sxx", "sx"))
     mean_post = to_double(F.col("syv")) / F.col("n_users")
     xbar_v = to_double(F.col("sxv")) / F.col("n_users")
     xbar = to_double(F.col("sx")) / to_double(F.col("n"))
@@ -1186,9 +1195,8 @@ TT_CONTROL = "view"
     WITH g AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM({cents_sql('value')}) AS DECIMAL(38,0)) AS s,
-             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))
-                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS q
+             {exact_sum_sql(cents_sql('value'))} AS s,
+             {exact_dot_sql(cents_sql('value'), cents_sql('value'))} AS q
       FROM events WHERE event_type IN ('{TT_TREAT}', '{TT_CONTROL}')
       GROUP BY event_type
     ),
@@ -1205,8 +1213,8 @@ TT_CONTROL = "view"
       SELECT n1, n2,
              {to_double_sql('s1')} / n1 AS m1,
              {to_double_sql('s2')} / n2 AS m2,
-             {to_double_sql('n1 * q1 - s1 * s1')} / (CAST(n1 AS DOUBLE) * (n1 - 1) * n1) AS v1n,
-             {to_double_sql('n2 * q2 - s2 * s2')} / (CAST(n2 AS DOUBLE) * (n2 - 1) * n2) AS v2n
+             {to_double_sql(comoment_sql('n1', 'q1', 's1'))} / (CAST(n1 AS DOUBLE) * (n1 - 1) * n1) AS v1n,
+             {to_double_sql(comoment_sql('n2', 'q2', 's2'))} / (CAST(n2 AS DOUBLE) * (n2 - 1) * n2) AS v2n
       FROM m
     )
     SELECT n1 AS n_treat, n2 AS n_control,
@@ -1225,7 +1233,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float portability (the events_cuped_adjusted recipe): the only
     inputs are EXACT integer moments per group — n, sum of cents, sum of
-    squared cents — carried as DECIMAL(38,0) (sum-of-squares reaches
+    squared cents — carried as exact 128-bit sums (sum-of-squares reaches
     ~2.4e15 at sf1 and the n*q variance numerator ~2.4e21, past BIGINT;
     the decimal form stays exact to ~1e12 rows).  Doubles appear only in
     the final scalar expression, each decimal entering through ONE
@@ -1237,15 +1245,14 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-side-partial aggregate keyed by event_type (2 groups);
     everything after runs on a 2-row relation folded to 1 row.  No
     window, no join, no Python."""
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(TT_TREAT, TT_CONTROL)
     )
     vc = cents("value")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(vc).cast(d38).alias("s"),
-        F.sum(vc.cast(d38) * vc).cast(d38).alias("q"),
+        exact_sum(vc).alias("s"),
+        exact_dot(vc, vc).alias("q"),
     )
 
     def pick(t: str, c: str):
@@ -1265,11 +1272,11 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (to_double(F.col("s1")) / F.col("n1")).alias("m1"),
         (to_double(F.col("s2")) / F.col("n2")).alias("m2"),
         (
-            to_double(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
+            to_double(comoment("n1", "q1", "s1"))
             / (F.col("n1").cast("double") * (F.col("n1") - 1) * F.col("n1"))
         ).alias("v1n"),
         (
-            to_double(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
+            to_double(comoment("n2", "q2", "s2"))
             / (F.col("n2").cast("double") * (F.col("n2") - 1) * F.col("n2"))
         ).alias("v2n"),
     )
@@ -1305,7 +1312,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     cum AS (
       SELECT b.event_type, b.event_id, t.n,
-             SUM(CAST(t.n AS DECIMAL(38,0)) * b.c - t.t)
+             SUM({int128_sql('t.n')} * b.c - t.t)
                OVER (PARTITION BY b.event_type ORDER BY b.ts_us, b.event_id) AS s
       FROM base b JOIN tot t USING (event_type)
     ),
@@ -1333,7 +1340,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_{{i<=k}} (n*c_i - T) = n*(C_k - k*T/n) with c in exact cents,
     T the per-type total.  Per-row terms fit BIGINT to ~1e12 rows
     (n*c <= 1e12 * 5e4 cents) but the RUNNING SUM reaches ~n*max|term|,
-    so it accumulates in DECIMAL(38,0) — exact at any realistic scale.
+    so it accumulates in 128 bits (``int128``) — exact at any realistic scale.
     The one double (|S|/n, the mean-shift magnitude in cents) enters
     through a single correctly-rounded cast on both engines.
 
@@ -1348,7 +1355,6 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, never a second window."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
@@ -1363,7 +1369,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("long").alias("t"),
     )
     j = base.join(F.broadcast(tot), "event_type").withColumn(
-        "w", (F.col("n_ev").cast(d38) * F.col("c") - F.col("t")).cast(d38)
+        "w", int128("n_ev") * F.col("c") - F.col("t")
     )
     idx = with_global_index(
         j, "ts_us", ["event_id"], group_cols=["event_type"], weight_col="w"
@@ -1408,8 +1414,7 @@ KS_B = "view"
     ),
     cum AS (
       SELECT v.c, t.n1, t.n2,
-             SUM(CAST(t.n2 AS DECIMAL(38,0)) * v.d1
-                 - CAST(t.n1 AS DECIMAL(38,0)) * v.d2) OVER (ORDER BY v.c) AS s
+             SUM({int128_sql('t.n2')} * v.d1 - {int128_sql('t.n1')} * v.d2) OVER (ORDER BY v.c) AS s
       FROM v CROSS JOIN t
     )
     SELECT n1 AS n_a, n2 AS n_b, CAST(c AS BIGINT) AS at_value_cents,
@@ -1430,7 +1435,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = n2*d1 - n1*d2 over the VALUE-AGGREGATED distribution (one row
     per distinct cents value — ties between the samples are handled
     exactly, because the ECDF step at a tied value completes before the
-    difference is evaluated).  Weights are DECIMAL(38,0) (n2*d1 can
+    difference is evaluated).  Weights are 128-bit ``int128`` (n2*d1 can
     pass BIGINT at ~1e10 rows); the single double is the final
     D / (n1*n2) division, identical op tree both engines.
 
@@ -1447,7 +1452,6 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of four re-derivations (the lsh.py band convention)."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(KS_A, KS_B)
     )
@@ -1462,9 +1466,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d1").cast("long").alias("n1"), F.sum("d2").cast("long").alias("n2")
     )
     j = v.crossJoin(F.broadcast(t)).withColumn(
-        "w",
-        (F.col("n2").cast(d38) * F.col("d1") - F.col("n1").cast(d38) * F.col("d2"))
-        .cast(d38),
+        "w", int128("n2") * F.col("d1") - int128("n1") * F.col("d2")
     )
     idx = with_global_index(j, "c", ["c"], weight_col="w")
     best = idx.agg(
@@ -1506,20 +1508,20 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s AS (
       SELECT CAST(SUM(d1) AS BIGINT) AS n1, CAST(SUM(d2) AS BIGINT) AS n2,
-             CAST(SUM(CAST(d1 AS DECIMAL(38,0)) * (2 * cumd - d + 1)) AS DECIMAL(38,0)) AS two_r1,
-             CAST(SUM(CAST(d AS DECIMAL(38,0)) * d * d - d) AS DECIMAL(38,0)) AS tie_t
+             {exact_dot_sql('d1', '(2 * cumd - d + 1)')} AS two_r1,
+             {exact_dot_sql('d', 'd', 'd')} - {exact_sum_sql('d')} AS tie_t
       FROM cum
     )
     SELECT n1 AS n_a, n2 AS n_b,
-           ({to_double_sql('two_r1')} - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * (n1 + 1)')}) / 2
+           ({to_double_sql('two_r1')} - {to_double_sql(int128_sql('n1') + ' * (n1 + 1)')}) / 2
              AS u_stat,
            (({to_double_sql('two_r1')}
-               - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * (n1 + 1)')}) / 2
-            - {to_double_sql('CAST(n1 AS DECIMAL(38,0)) * n2')} / 2) / sqrt(
-               ({to_double_sql('CAST(n1 AS DECIMAL(38,0)) * n2')} / 12)
-               * ({to_double_sql('CAST(n1 + n2 + 1 AS DECIMAL(38,0))')}
+               - {to_double_sql(int128_sql('n1') + ' * (n1 + 1)')}) / 2
+            - {to_double_sql(int128_sql('n1') + ' * n2')} / 2) / sqrt(
+               ({to_double_sql(int128_sql('n1') + ' * n2')} / 12)
+               * ({to_double_sql(int128_sql('n1 + n2 + 1'))}
                   - {to_double_sql('tie_t')}
-                    / {to_double_sql('CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2 - 1)')})
+                    / {to_double_sql(int128_sql('n1 + n2') + ' * (n1 + n2 - 1)')})
              ) AS z_stat
     FROM s
     """,
@@ -1537,7 +1539,7 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row per distinct cents value with per-sample counts d1, d2,
     pooled d), the midrank of value v is prefix(v) + (d+1)/2, so 2*R1 =
     sum d1 * (2*cumd - d + 1) with cumd the INCLUSIVE pooled running
-    count — exact integers carried in DECIMAL(38,0), like the KS
+    count — exact integers carried in 128 bits, like the KS
     weights.  The tie term sum(d^3 - d) is likewise exact.  Doubles
     appear only in the final scalar block, each decimal entering through
     ONE ``to_double``, combined in an identical op tree (B^(3/2) is
@@ -1551,7 +1553,6 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is allowlisted like KS), then a 1-row fold."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(KS_A, KS_B)
     )
@@ -1569,19 +1570,15 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = idx.agg(
         F.sum("d1").cast("long").alias("n1"),
         F.sum("d2").cast("long").alias("n2"),
-        F.sum(
-            F.col("d1").cast(d38) * (2 * F.col("cumd") - F.col("d") + 1)
-        ).cast(d38).alias("two_r1"),
-        F.sum(F.col("d").cast(d38) * F.col("d") * F.col("d") - F.col("d"))
-        .cast(d38)
-        .alias("tie_t"),
+        exact_dot("d1", 2 * F.col("cumd") - F.col("d") + 1).alias("two_r1"),
+        (exact_dot("d", "d", "d") - exact_sum("d")).alias("tie_t"),
     )
     n1, n2 = F.col("n1"), F.col("n2")
-    u_stat = (to_double(F.col("two_r1")) - to_double((n1.cast(d38) * (n1 + 1)).cast(d38))) / 2
-    n1n2 = to_double((n1.cast(d38) * n2).cast(d38))
+    u_stat = (to_double(F.col("two_r1")) - to_double(int128(n1) * (n1 + 1))) / 2
+    n1n2 = to_double(int128(n1) * n2)
     var_u = (n1n2 / 12) * (
-        to_double((n1 + n2 + 1).cast(d38))
-        - to_double(F.col("tie_t")) / to_double(((n1 + n2).cast(d38) * (n1 + n2 - 1)).cast(d38))
+        to_double(int128(n1 + n2 + 1))
+        - to_double(F.col("tie_t")) / to_double(int128(n1 + n2) * (n1 + n2 - 1))
     )
     return s.select(
         n1.alias("n_a"),
@@ -1649,17 +1646,15 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "agg_moments_skew_kurt",
     oracle=f"""
-    WITH m AS (
+    WITH e AS (SELECT event_type, {cents_sql('value')} AS c FROM events),
+    m AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s1,
-             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0))
-                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS s2,
-             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0)) * {cents_sql('value')}
-                      * {cents_sql('value')}) AS DECIMAL(38,0)) AS s3,
-             CAST(SUM(CAST({cents_sql('value')} AS DECIMAL(38,0)) * {cents_sql('value')}
-                      * {cents_sql('value')} * {cents_sql('value')}) AS DECIMAL(38,0)) AS s4
-      FROM events GROUP BY event_type
+             {exact_sum_sql('c')} AS s1,
+             {exact_dot_sql('c', 'c')} AS s2,
+             {exact_dot_sql('c', 'c', 'c')} AS s3,
+             {exact_dot_sql('c', 'c', 'c', 'c')} AS s4
+      FROM e GROUP BY event_type
     ),
     d AS (
       SELECT event_type, n,
@@ -1697,7 +1692,7 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     cancel exactly between numerator and denominator, so no central
     moments are ever formed).
 
-    Exact carriers are the POWER SUMS (DECIMAL(38,0): S4 <= n*c^4
+    Exact carriers are the POWER SUMS (``exact_dot``: S4 <= n*c^4
     stays exact to ~1e13 rows at c <= 56k cents); A, B, C are then a
     FIXED explicitly-parenthesized IEEE tree over the four one-cast
     doubles — deterministic cross-engine (every op is a correctly-
@@ -1708,14 +1703,13 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE scan, one map-side-partial aggregate keyed by
     event_type; everything after runs on a |types|-row relation."""
     vc = cents("value")
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events")
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(vc.cast(d38)).cast(d38).alias("s1"),
-        F.sum(vc.cast(d38) * vc).cast(d38).alias("s2"),
-        F.sum(vc.cast(d38) * vc * vc).cast(d38).alias("s3"),
-        F.sum(vc.cast(d38) * vc * vc * vc).cast(d38).alias("s4"),
+        exact_sum(vc).alias("s1"),
+        exact_dot(vc, vc).alias("s2"),
+        exact_dot(vc, vc, vc).alias("s3"),
+        exact_dot(vc, vc, vc, vc).alias("s4"),
     )
     nd = F.col("n").cast("double")
     f1, f2, f3, f4 = (to_double(F.col(c)) for c in ("s1", "s2", "s3", "s4"))
@@ -1754,17 +1748,17 @@ def agg_moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sy,
-             CAST(SUM(CAST(x AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS sxy,
-             CAST(SUM(CAST(x AS DECIMAL(38,0)) * x) AS DECIMAL(38,0)) AS sxx,
-             CAST(SUM(CAST(y AS DECIMAL(38,0)) * y) AS DECIMAL(38,0)) AS syy
+             {exact_sum_sql('x')} AS sx,
+             {exact_sum_sql('y')} AS sy,
+             {exact_dot_sql('x', 'y')} AS sxy,
+             {exact_dot_sql('x', 'x')} AS sxx,
+             {exact_dot_sql('y', 'y')} AS syy
       FROM p WHERE x IS NOT NULL GROUP BY event_type
     )
     SELECT event_type, n AS n_pairs,
-           {to_double_sql('CAST(n AS DECIMAL(38,0)) * sxy - sx * sy')}
-           / (sqrt({to_double_sql('CAST(n AS DECIMAL(38,0)) * sxx - sx * sx')})
-              * sqrt({to_double_sql('CAST(n AS DECIMAL(38,0)) * syy - sy * sy')}))
+           {to_double_sql(comoment_sql('n', 'sxy', 'sx', 'sy'))}
+           / (sqrt({to_double_sql(comoment_sql('n', 'sxx', 'sx'))})
+              * sqrt({to_double_sql(comoment_sql('n', 'syy', 'sy'))}))
              AS acf1
     FROM s
     """,
@@ -1777,7 +1771,7 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     AR(1) fit would estimate).
 
     Exact carriers: consecutive pairs' moment sums (n, Sx, Sy, Sxy, Sxx,
-    Syy) in DECIMAL(38,0) over exact cents; r is then a fixed IEEE tree
+    Syy) as exact 128-bit sums over exact cents; r is then a fixed IEEE tree
     with one ``to_double`` per exact numerator and the denominator
     written sqrt(a)*sqrt(b) on both engines.
 
@@ -1788,11 +1782,10 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     index once, materialize, then self-join (type, i) to
     (type, i+1) — a shuffle on the high-cardinality (type, index) key —
     and one map-side-partial aggregate.  Bound: n*Sxy stays inside
-    DECIMAL(38,0) to ~1e9 rows/type at c <= 56k cents; past that the
+    38 digits to ~1e9 rows/type at c <= 56k cents; past that the
     engine raises (ANSI), never corrupts."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_type",
@@ -1810,16 +1803,16 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = prev.join(nxt, ["event_type", "i"])
     s = pairs.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("x").cast(d38)).cast(d38).alias("sx"),
-        F.sum(F.col("y").cast(d38)).cast(d38).alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).cast(d38).alias("sxy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).cast(d38).alias("syy"),
+        exact_sum("x").alias("sx"),
+        exact_sum("y").alias("sy"),
+        exact_dot("x", "y").alias("sxy"),
+        exact_dot("x", "x").alias("sxx"),
+        exact_dot("y", "y").alias("syy"),
     )
     n = F.col("n")
-    num = to_double((n.cast(d38) * F.col("sxy") - F.col("sx") * F.col("sy")).cast(d38))
-    denx = to_double((n.cast(d38) * F.col("sxx") - F.col("sx") * F.col("sx")).cast(d38))
-    deny = to_double((n.cast(d38) * F.col("syy") - F.col("sy") * F.col("sy")).cast(d38))
+    num = to_double(comoment(n, "sxy", "sx", "sy"))
+    denx = to_double(comoment(n, "sxx", "sx"))
+    deny = to_double(comoment(n, "syy", "sy"))
     return s.select(
         "event_type",
         n.alias("n_pairs"),
@@ -1972,7 +1965,7 @@ def events_conversion_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataF
 
 @query(
     "events_bot_regularity",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT user_id,
              epoch_us(CAST(ts AS TIMESTAMP))
@@ -1982,8 +1975,8 @@ def events_conversion_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataF
     ),
     a AS (
       SELECT user_id, COUNT(*) AS n,
-             SUM(CAST(gap_us AS HUGEINT)) AS s,
-             SUM(CAST(gap_us AS HUGEINT) * gap_us) AS ssq
+             SUM({hugeint_sql('gap_us')}) AS s,
+             SUM({hugeint_sql('gap_us')} * gap_us) AS ssq
       FROM g WHERE gap_us IS NOT NULL
       GROUP BY user_id HAVING COUNT(*) >= 12
     )
@@ -2007,7 +2000,7 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     interaction logs before they poison engagement-weighted sampling.
 
     cv^2 = n(n*ssq - s^2) / ((n-1) s^2) on exact microsecond gaps, all
-    in 128-bit integers (DECIMAL(38,0) / HUGEINT — s^2 reaches ~1e32 for
+    in 128-bit integers (s^2 reaches ~1e32 for
     month-long spans) with one integer division to milli units, so both
     engines agree bit-for-bit; s = 0 (all gaps zero) is the perfectly
     regular degenerate flagged directly.
@@ -2015,19 +2008,17 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the lag window and the moment aggregate are both keyed
     by user_id (map-side partial for the latter); nothing global."""
     ev = load_table(spark, sf_dir, "events")
-    d38 = "decimal(38,0)"
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     g = ev.select(
         "user_id", (ts_us - F.lag(ts_us).over(w)).alias("gap_us")
     ).where(F.col("gap_us").isNotNull())
-    gap38 = F.col("gap_us").cast(d38)
     a = (
         g.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(gap38).alias("s"),
-            F.sum((gap38 * F.col("gap_us")).cast(d38)).alias("ssq"),
+            exact_sum("gap_us").alias("s"),
+            exact_dot("gap_us", "gap_us").alias("ssq"),
         )
         .where(F.col("n") >= 12)
     )
@@ -2037,7 +2028,7 @@ def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(s div n AS BIGINT)").alias("mean_gap_us"),
         F.expr(
             "CAST((1000 * n * (n * ssq - s * s)) "
-            "div nullif((n - 1) * s * s, CAST(0 AS decimal(38,0))) AS BIGINT)"
+            f"div nullif((n - 1) * s * s, {int128_sql('0')}) AS BIGINT)"
         ).alias("cv2_milli"),
         F.when(F.col("s") == 0, F.lit(True))
         .otherwise(
@@ -2235,7 +2226,7 @@ DID_VARIANTS = 2  # deterministic assignment: user_id % DID_VARIANTS
       SELECT treat,
              CASE WHEN 2 * ts_us >= mn + mx THEN 1 ELSE 0 END AS post,
              COUNT(*) AS n,
-             CAST(SUM(cents) AS DECIMAL(38,0)) AS s
+             {exact_sum_sql('cents')} AS s
       FROM p CROSS JOIN b GROUP BY 1, 2
     ),
     m AS (
@@ -2278,7 +2269,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     1994 shape).
 
     Float portability (events_welch_ttest recipe): only exact integer
-    moments per (treat, post) cell — count and DECIMAL(38,0) cents sum —
+    moments per (treat, post) cell — count and exact cents sum —
     reach the final projection; each decimal enters the double world
     through one ``to_double`` (functions/rounding.py) and the four means
     combine in an identical op tree, so did_cents is bit-identical
@@ -2288,7 +2279,6 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-side-partial aggregate keyed by (treat, post) = 4 groups;
     everything after runs on a 4-row relation folded to 1 row.  No
     window, no data-sized join, no Python."""
-    d38 = "decimal(38,0)"
     p = load_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     p = p.select(
@@ -2306,7 +2296,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .groupBy("treat", "post")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").cast(d38).alias("s"))
+        .agg(F.count(F.lit(1)).alias("n"), exact_sum("cents").alias("s"))
     )
 
     def pick(t: int, post: int, c: str):
@@ -2572,7 +2562,7 @@ def _boot_oracle() -> str:
     ),
     pt AS (
       SELECT COUNT(*) AS n,
-             {to_double_sql('CAST(SUM(cents) AS DECIMAL(38,0))')} / COUNT(*) AS point_mean_cents
+             {to_double_sql(exact_sum_sql('cents'))} / COUNT(*) AS point_mean_cents
       FROM p
     ),
     ex AS (
@@ -2584,7 +2574,7 @@ def _boot_oracle() -> str:
     w AS (SELECT b, cents, {wsum} AS w FROM ex),
     g AS (
       SELECT b, SUM(w) AS n_eff,
-             CAST(SUM(w * cents) AS DECIMAL(38,0)) AS s
+             {exact_dot_sql('w', 'cents')} AS s
       FROM w GROUP BY b
     )
     SELECT CAST(b AS INT) AS b, CAST(n_eff AS BIGINT) AS n_eff,
@@ -2619,7 +2609,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries {BOOT_B} rows per task.
 
     Determinism: weights are exact integers, replicate sums are
-    DECIMAL(38,0), and each mean is one ``to_double`` and one
+    exact (``exact_dot``), and each mean is one ``to_double`` and one
     division."""
     p = (
         load_table(spark, sf_dir, "events")
@@ -2628,9 +2618,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pt = p.agg(
         F.count(F.lit(1)).alias("n"),
-        (to_double(F.sum("cents").cast("decimal(38,0)")) / F.count(F.lit(1))).alias(
-            "point_mean_cents"
-        ),
+        (to_double(exact_sum("cents")) / F.count(F.lit(1))).alias("point_mean_cents"),
     )
     ex = p.select(
         "cents",
@@ -2650,7 +2638,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = w.groupBy("b").agg(
         F.sum("w").alias("n_eff"),
-        F.sum(F.col("w") * F.col("cents")).cast("decimal(38,0)").alias("s"),
+        exact_dot("w", "cents").alias("s"),
     )
     return g.crossJoin(F.broadcast(pt)).select(
         F.col("b").cast("int").alias("b"),
@@ -2681,8 +2669,8 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id,
              SUM(CASE WHEN event_type = 'view' AND 2 * ts_us < mn + mx
                       THEN 1 ELSE 0 END) AS score,
-             CAST(SUM(CASE WHEN event_type = 'purchase' AND 2 * ts_us >= mn + mx
-                           THEN cents ELSE 0 END) AS DECIMAL(38,0)) AS resp
+             {exact_sum_sql("CASE WHEN event_type = 'purchase' AND 2 * ts_us >= mn + mx "
+                            "THEN cents ELSE 0 END")} AS resp
       FROM e CROSS JOIN b GROUP BY user_id
     ),
     r AS (
@@ -2693,7 +2681,7 @@ def agg_bootstrap_poisson_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     g AS (
       SELECT (10 * idx) // n AS decile, treat, COUNT(*) AS cnt,
-             CAST(SUM(resp) AS DECIMAL(38,0)) AS s
+             {exact_sum_sql('resp')} AS s
       FROM r GROUP BY 1, 2
     ),
     m AS (
@@ -2732,7 +2720,7 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the user_id tiebreak.
 
     Determinism: score and index are exact integers; response sums are
-    DECIMAL(38,0) entering doubles through one ``to_double``
+    exact (``exact_sum``), entering doubles through one ``to_double``
     (functions/rounding.py); a decile missing one arm yields NULL mean
     and NULL uplift in both engines identically."""
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
@@ -2752,12 +2740,7 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when((F.col("event_type") == "view") & pre, 1).otherwise(0)
             ).alias("score"),
-            F.sum(
-                F.when((F.col("event_type") == "purchase") & ~pre, F.col("cents")).otherwise(
-                    0
-                )
-            )
-            .cast("decimal(38,0)")
+            exact_sum(F.when((F.col("event_type") == "purchase") & ~pre, F.col("cents")).otherwise(0))
             .alias("resp"),
         )
         .withColumn("neg_score", -F.col("score"))
@@ -2774,7 +2757,7 @@ def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "resp",
         )
         .groupBy("decile", "treat")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("resp").cast("decimal(38,0)").alias("s"))
+        .agg(F.count(F.lit(1)).alias("cnt"), exact_sum("resp").alias("s"))
     )
 
     def pick(t: int, c: str):
@@ -3001,8 +2984,8 @@ Z_BETA = 0.8416212335729143
     ),
     g AS (
       SELECT variant, COUNT(*) AS n,
-             CAST(SUM(cents) AS DECIMAL(38,0)) AS s,
-             CAST(SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS DECIMAL(38,0)) AS q
+             {exact_sum_sql('cents')} AS s,
+             {exact_dot_sql('cents', 'cents')} AS q
       FROM p GROUP BY variant
     ),
     m AS (
@@ -3016,8 +2999,8 @@ Z_BETA = 0.8416212335729143
     ),
     v AS (
       SELECT n1, n2,
-             {to_double_sql('n1 * q1 - s1 * s1')} / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS var1,
-             {to_double_sql('n2 * q2 - s2 * s2')} / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS var2
+             {to_double_sql(comoment_sql('n1', 'q1', 's1'))} / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS var1,
+             {to_double_sql(comoment_sql('n2', 'q2', 's2'))} / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS var2
       FROM m
     )
     SELECT CAST(n1 AS BIGINT) AS n_treat, CAST(n2 AS BIGINT) AS n_ctrl,
@@ -3035,7 +3018,7 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     see the effect size we care about?"), completing the experiment
     panel next to SRM, Welch, CUPED, DiD and uplift deciles.
 
-    Float portability: sample variances come from exact DECIMAL(38,0)
+    Float portability: sample variances come from exact integer
     moments via the (n·q - s²)/(n·(n-1)) identity with one ``to_double``
     each (events_welch_ttest recipe); the z constants are shortest-repr
     double literals shared by both engines; the final expression is a
@@ -3043,7 +3026,6 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pushed type filter, ONE 2-group map-side-partial
     moment aggregate, then scalar algebra on a 1-row relation."""
-    d38 = "decimal(38,0)"
     p = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
@@ -3054,8 +3036,8 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = p.groupBy("variant").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("cents").cast(d38).alias("s"),
-        F.sum(F.col("cents").cast(d38) * F.col("cents")).cast(d38).alias("q"),
+        exact_sum("cents").alias("s"),
+        exact_dot("cents", "cents").alias("q"),
     )
 
     def pick(t: int, c: str):
@@ -3073,11 +3055,11 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n1",
         "n2",
         (
-            to_double(F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1"))
+            to_double(comoment("n1", "q1", "s1"))
             / (F.col("n1").cast("double") * (F.col("n1") - 1))
         ).alias("var1"),
         (
-            to_double(F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
+            to_double(comoment("n2", "q2", "s2"))
             / (F.col("n2").cast("double") * (F.col("n2") - 1))
         ).alias("var2"),
     )
@@ -3720,30 +3702,27 @@ RM_DEN = "view"      # denominator event (exposure count)
     oracle=f"""
     WITH per_user AS (
       SELECT user_id, user_id % 2 AS arm,
-             CAST(SUM(CASE WHEN event_type = '{RM_NUM}'
-                           THEN {cents_sql('value')} ELSE 0 END)
-                  AS DECIMAL(38,0)) AS y,
-             CAST(SUM(CASE WHEN event_type = '{RM_DEN}' THEN 1 ELSE 0 END)
-                  AS DECIMAL(38,0)) AS nv
+             {exact_sum_sql(f"CASE WHEN event_type = '{RM_NUM}' THEN {cents_sql('value')} ELSE 0 END")} AS y,
+             {exact_sum_sql(f"CASE WHEN event_type = '{RM_DEN}' THEN 1 ELSE 0 END")} AS nv
       FROM events WHERE event_type IN ('{RM_NUM}', '{RM_DEN}')
       GROUP BY user_id
     ),
     m AS (
       SELECT arm, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(y) AS DECIMAL(38,0)) AS sy,
-             CAST(SUM(nv) AS DECIMAL(38,0)) AS sn,
-             CAST(SUM(y * y) AS DECIMAL(38,0)) AS syy,
-             CAST(SUM(nv * nv) AS DECIMAL(38,0)) AS snn,
-             CAST(SUM(y * nv) AS DECIMAL(38,0)) AS syn
+             {exact_sum_sql('y')} AS sy,
+             {exact_sum_sql('nv')} AS sn,
+             {exact_dot_sql('y', 'y')} AS syy,
+             {exact_dot_sql('nv', 'nv')} AS snn,
+             {exact_dot_sql('y', 'nv')} AS syn
       FROM per_user GROUP BY arm
     ),
     v AS (
       SELECT arm, n,
              {to_double_sql('sy')} / {to_double_sql('sn')} AS r,
              {to_double_sql('sn')} / n AS nbar,
-             {to_double_sql('n * syy - sy * sy')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vy,
-             {to_double_sql('n * snn - sn * sn')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vn,
-             {to_double_sql('n * syn - sy * sn')} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vyn
+             {to_double_sql(comoment_sql('n', 'syy', 'sy'))} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vy,
+             {to_double_sql(comoment_sql('n', 'snn', 'sn'))} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vn,
+             {to_double_sql(comoment_sql('n', 'syn', 'sy', 'sn'))} / (CAST(n AS DOUBLE) * n * (n - 1)) AS vyn
       FROM m
     )
     SELECT arm, n AS n_users, r AS ratio_cents_per_view,
@@ -3766,8 +3745,8 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
 
     Float portability (the events_welch_ttest recipe): all inputs are
     EXACT per-user integer moments — per-arm n, and the five sums
-    SUM(Y), SUM(N), SUM(Y^2), SUM(N^2), SUM(Y*N) carried as
-    DECIMAL(38,0) — combined in one identical final op tree, each
+    SUM(Y), SUM(N), SUM(Y^2), SUM(N^2), SUM(Y*N) carried as exact
+    128-bit sums — combined in one identical final op tree, each
     decimal entering doubles through ONE ``to_double``
     (functions/rounding.py).
 
@@ -3776,26 +3755,21 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
     (2 groups); no window, no join, no Python.  At 100 TB the per-user
     fold is the only real shuffle and it is exactly the metric's
     clustering unit."""
-    d38 = "decimal(38,0)"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(RM_NUM, RM_DEN)
     )
     vc = cents("value")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == RM_NUM, vc).otherwise(0))
-        .cast(d38)
-        .alias("y"),
-        F.sum(F.when(F.col("event_type") == RM_DEN, 1).otherwise(0))
-        .cast(d38)
-        .alias("nv"),
+        exact_sum(F.when(F.col("event_type") == RM_NUM, vc).otherwise(0)).alias("y"),
+        exact_sum(F.when(F.col("event_type") == RM_DEN, 1).otherwise(0)).alias("nv"),
     )
     m = per_user.groupBy((F.col("user_id") % 2).alias("arm")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast(d38).alias("sy"),
-        F.sum("nv").cast(d38).alias("sn"),
-        F.sum(F.col("y") * F.col("y")).cast(d38).alias("syy"),
-        F.sum(F.col("nv") * F.col("nv")).cast(d38).alias("snn"),
-        F.sum(F.col("y") * F.col("nv")).cast(d38).alias("syn"),
+        exact_sum("y").alias("sy"),
+        exact_sum("nv").alias("sn"),
+        exact_dot("y", "y").alias("syy"),
+        exact_dot("nv", "nv").alias("snn"),
+        exact_dot("y", "nv").alias("syn"),
     )
     nD = F.col("n").cast("double")
     v = m.select(
@@ -3804,15 +3778,15 @@ def events_ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFr
         (to_double(F.col("sy")) / to_double(F.col("sn"))).alias("r"),
         (to_double(F.col("sn")) / F.col("n")).alias("nbar"),
         (
-            to_double(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+            to_double(comoment("n", "syy", "sy"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vy"),
         (
-            to_double(F.col("n") * F.col("snn") - F.col("sn") * F.col("sn"))
+            to_double(comoment("n", "snn", "sn"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vn"),
         (
-            to_double(F.col("n") * F.col("syn") - F.col("sy") * F.col("sn"))
+            to_double(comoment("n", "syn", "sy", "sn"))
             / (nD * F.col("n") * (F.col("n") - 1))
         ).alias("vyn"),
     )
@@ -4328,7 +4302,7 @@ def events_engagement_concentration(spark: SparkSession, sf_dir: str) -> DataFra
     Exact integers end to end: per-user counts, a (count DESC, user_id)
     rank + running sum INSIDE each event_type partition, tier cutoffs
     by floor division, and a ppm share by integer floor division in
-    DECIMAL(38,0) (cum*1e6 wraps BIGINT past ~9.2e12 events per type —
+    128 bits (cum*1e6 wraps BIGINT past ~9.2e12 events per type —
     the same headroom widening profile_gini_concentration carries;
     ADVICE r12) — no float anywhere, bit-exact oracle.
 
@@ -4407,10 +4381,10 @@ def events_engagement_concentration(spark: SparkSession, sf_dir: str) -> DataFra
             "total_events",
             F.col("cum").cast("long").alias("events_from_top"),
             # widen BEFORE the multiply: cum*1e6 wraps int64 past ~9.2e12
-            # events per type; DECIMAL(38,0) `div` truncates toward zero
-            # exactly like DuckDB's hugeint `//` on the non-negative
+            # events per type; a decimal `div` truncates toward zero
+            # exactly like DuckDB's 128-bit `//` on the non-negative
             # operands here (probed r12, memory gotcha)
-            F.expr("CAST(cum AS DECIMAL(38,0)) * 1000000 div total_events")
+            F.expr(f"{int128_sql('cum')} * 1000000 div total_events")
             .cast("long")
             .alias("share_ppm"),
         )
@@ -4675,7 +4649,7 @@ ATTR_DECAY_SCALE = 1_000_000
     SELECT COALESCE(touch_type, 'direct') AS touch_type,
            CAST(COUNT(*) AS BIGINT) AS n_credits,
            CAST(SUM(CASE WHEN touch_type IS NULL THEN cents
-                         ELSE CAST(cents AS HUGEINT) * w // tw END)
+                         ELSE {hugeint_sql('cents')} * w // tw END)
                 AS BIGINT) AS credited_cents
     FROM c GROUP BY 1 ORDER BY touch_type
     """,
@@ -4746,7 +4720,7 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count(F.lit(1)).cast("long").alias("n_credits"),
             F.sum(
                 F.when(F.col("touch_type").isNull(), F.col("cents")).otherwise(
-                    F.expr("CAST(cents AS DECIMAL(38,0)) * w div tw")
+                    F.expr(f"{int128_sql('cents')} * w div tw")
                 )
             )
             .cast("long")

@@ -25,7 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from oracle_parquet_dumper_spark.functions.rounding import dec_sum, dec_sum_sql
+from oracle_parquet_dumper_spark.functions.rounding import dec_sum, dec_sum_sql, hugeint_sql
 from oracle_parquet_dumper_spark.functions.rounding import round6 as _round6
 from oracle_parquet_dumper_spark.functions.tokens import md5_long_sql
 from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded_sql
@@ -325,14 +325,14 @@ def payload_dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ),
     p AS (
       SELECT doc_id,
-             CAST(CASE WHEN hu >= CAST(1 AS HUGEINT) << 63
-                       THEN hu - (CAST(1 AS HUGEINT) << 64) ELSE hu END AS BIGINT) AS phash
+             CAST(CASE WHEN hu >= {hugeint_sql('1')} << 63
+                       THEN hu - ({hugeint_sql('1')} << 64) ELSE hu END AS BIGINT) AS phash
       FROM (
         SELECT doc_id,
-               CAST(list_sum(list_transform(range(0, 64),
+               list_sum(list_transform(range(0, 64),
                     i -> CASE WHEN regs[i+1] > regs[i+2]
-                              THEN CAST(1 AS HUGEINT) << i
-                              ELSE CAST(0 AS HUGEINT) END)) AS HUGEINT) AS hu
+                              THEN {hugeint_sql('1')} << i
+                              ELSE {hugeint_sql('0')} END)) AS hu
         FROM r
       )
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import hugeint_sql, int128_sql
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql, words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -789,13 +790,13 @@ MIX_MAX_EPOCHS = 4   # repeat cap per source (Muennighoff et al. 2023)
     ),
     terms0 AS (
       SELECT source, n_tok, total,
-             CAST((CAST(1000000 AS HUGEINT) * n_tok) // total AS BIGINT) AS share_ppm,
+             CAST(({hugeint_sql('1000000')} * n_tok) // total AS BIGINT) AS share_ppm,
              CAST(round(1000000 * sqrt(CAST(n_tok AS DOUBLE)) / z) AS BIGINT) AS w_ppm
       FROM s CROSS JOIN t
     ),
     terms AS (
       SELECT source, n_tok, share_ppm, w_ppm,
-             CAST((CAST(w_ppm AS HUGEINT) * ({MIX_BUDGET_MULT} * total))
+             CAST(({hugeint_sql('w_ppm')} * ({MIX_BUDGET_MULT} * total))
                   // 1000000 AS BIGINT) AS target_tok
       FROM terms0
     ),
@@ -849,13 +850,11 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_tok",
             "total",
-            # DECIMAL(38,0) intermediates: 1e6 * n_tok and w_ppm * budget
+            # 128-bit intermediates: 1e6 * n_tok and w_ppm * budget
             # overflow BIGINT once the corpus passes ~9e12 tokens (real at
             # 100 TB); div on decimals is exact floor division, matching
-            # the oracle's HUGEINT `//` bit-for-bit (ADVICE r8).
-            F.expr(
-                "CAST((CAST(1000000 AS DECIMAL(38,0)) * n_tok) div total AS BIGINT)"
-            ).alias("share_ppm"),
+            # the oracle's 128-bit `//` bit-for-bit (ADVICE r8).
+            F.expr(f"CAST(({int128_sql('1000000')} * n_tok) div total AS BIGINT)").alias("share_ppm"),
             F.round(
                 F.lit(1000000) * F.sqrt(F.col("n_tok").cast("double")) / F.col("z")
             )
@@ -868,7 +867,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share_ppm",
             "w_ppm",
             F.expr(
-                "CAST((CAST(w_ppm AS DECIMAL(38,0)) * "
+                f"CAST(({int128_sql('w_ppm')} * "
                 f"({MIX_BUDGET_MULT} * total)) div 1000000 AS BIGINT)"
             ).alias("target_tok"),
         )

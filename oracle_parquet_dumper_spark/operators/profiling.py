@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.rounding import (
     cents,
     cents_sql,
+    exact_dot,
+    exact_sum,
     to_double,
     to_double_sql,
 )
@@ -93,13 +95,13 @@ def profile_columns_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "profile_key_skew",
-    oracle="""
+    oracle=f"""
     WITH k AS (SELECT l_orderkey, COUNT(*) AS n FROM lineitem GROUP BY l_orderkey),
     s AS (
       SELECT COUNT(*) AS n_keys,
              CAST(SUM(n) AS BIGINT) AS n_rows,
              CAST(MAX(n) AS BIGINT) AS max_per_key,
-             round(CAST(SUM(n) AS DOUBLE) / COUNT(*), 6) AS avg_per_key
+             round({to_double_sql('SUM(n)')} / COUNT(*), 6) AS avg_per_key
       FROM k
     )
     SELECT n_keys, n_rows, max_per_key, avg_per_key,
@@ -138,7 +140,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH j AS (
       SELECT o_orderstatus AS a, o_orderpriority AS b, COUNT(*) AS n FROM orders GROUP BY 1, 2
     ),
-    t AS (SELECT CAST(SUM(n) AS DOUBLE) AS total FROM j),
+    t AS (SELECT {to_double_sql('SUM(n)')} AS total FROM j),
     pa AS (SELECT a, SUM(n) AS na FROM j GROUP BY a),
     pb AS (SELECT b, SUM(n) AS nb FROM j GROUP BY b)
     SELECT {to_double_sql('round(SUM(CAST(term AS DECIMAL(25,12))), 6)')} AS mi_nats,
@@ -317,16 +319,16 @@ def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_returnflag", "c", (F.col("_gi") + 1).alias("r"))
     # Exact big-integer arithmetic: the rank-weighted sum overflows
     # BIGINT one decade up (r*c ~ 1e11 summed over millions of rows), so
-    # everything accumulates in DECIMAL(38,0) — and the final floor
+    # everything accumulates exactly (``exact_dot``) — and the final floor
     # division is made EXACT by subtracting the modulo first (a decimal
     # divide of an exactly-divisible pair has no rounding to diverge
-    # from DuckDB's hugeint // floor division; the numerator is
+    # from DuckDB's 128-bit // floor division; the numerator is
     # non-negative by the Chebyshev sum inequality, so % == mod).
     agg = ranked.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("c").cast("long").alias("total_cents"),
-        F.expr("sum(CAST(r AS DECIMAL(38,0)) * c)").alias("s1"),
-        F.expr("sum(CAST(c AS DECIMAL(38,0)))").alias("s0"),
+        exact_dot("r", "c").alias("s1"),
+        exact_sum("c").alias("s0"),
     )
     num = F.expr("(2 * s1 - (n + 1) * s0) * 1000000")
     den = F.expr("n * s0")

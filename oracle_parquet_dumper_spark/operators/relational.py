@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.rounding import (
     cents,
     cents_sql,
+    comoment,
+    comoment_sql,
     dec6,
     dec6_sql,
     dec_avg,
@@ -33,6 +35,13 @@ from oracle_parquet_dumper_spark.functions.rounding import (
     dec_rate_sql,
     dec_sum,
     dec_sum_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    hugeint_sql,
+    int128,
+    int128_sql,
     to_double,
     to_double_sql,
 )
@@ -1152,22 +1161,25 @@ def agg_bool_bit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_corr_regr",
-    oracle="""
-    WITH agg AS (
+    oracle=f"""
+    WITH xy AS (
+      SELECT c_mktsegment, c_custkey AS x, CAST(round(c_acctbal * 100) AS BIGINT) AS y FROM customer
+    ),
+    agg AS (
       SELECT c_mktsegment, COUNT(*) AS n,
-             SUM(CAST(c_custkey AS HUGEINT)) AS sx,
-             SUM(CAST(round(c_acctbal * 100) AS HUGEINT)) AS sy,
-             SUM(CAST(c_custkey AS HUGEINT) * CAST(round(c_acctbal * 100) AS HUGEINT)) AS sxy,
-             SUM(CAST(c_custkey AS HUGEINT) * CAST(c_custkey AS HUGEINT)) AS sxx,
-             SUM(CAST(round(c_acctbal * 100) AS HUGEINT) * CAST(round(c_acctbal * 100) AS HUGEINT)) AS syy
-      FROM customer GROUP BY c_mktsegment
+             {exact_sum_sql('x')} AS sx,
+             {exact_sum_sql('y')} AS sy,
+             {exact_dot_sql('x', 'y')} AS sxy,
+             {exact_dot_sql('x', 'x')} AS sxx,
+             {exact_dot_sql('y', 'y')} AS syy
+      FROM xy GROUP BY c_mktsegment
     ),
     m AS (
       SELECT c_mktsegment, n,
-             CAST(n * sxy - sx * sy AS DOUBLE) AS a,
-             CAST(n * sxx - sx * sx AS DOUBLE) AS b,
-             CAST(n * syy - sy * sy AS DOUBLE) AS c,
-             CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
+             {to_double_sql(comoment_sql('n', 'sxy', 'sx', 'sy'))} AS a,
+             {to_double_sql(comoment_sql('n', 'sxx', 'sx'))} AS b,
+             {to_double_sql(comoment_sql('n', 'syy', 'sy'))} AS c,
+             {to_double_sql('sx')} AS sxd, {to_double_sql('sy')} AS syd
       FROM agg
     )
     SELECT c_mktsegment,
@@ -1197,9 +1209,9 @@ def agg_corr_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fix removes floats from the aggregation entirely: c_custkey is
     integral, c_acctbal has exact cents (round(y*100) is integral, and
     integral doubles cast exactly on both engines), so n, Σx, Σy, Σxy,
-    Σx², Σy² are exact integers (DECIMAL(38,0) in Spark, HUGEINT in
-    DuckDB — headroom to x~1e11 per row and ~1e9 rows per group).  The
-    textbook identities n·Σxy − ΣxΣy etc. are then computed EXACTLY (no
+    Σx², Σy² are exact integers (``exact_sum``/``exact_dot`` — headroom
+    to x~1e11 per row and ~1e9 rows per group).  The textbook
+    identities n·Σxy − ΣxΣy (``comoment``) are then computed EXACTLY (no
     cancellation — this beats the two-pass centered form, which still
     pays a per-row double product), cast once to double, and combined
     with identical IEEE /,*,sqrt — bit-identical outputs with no
@@ -1207,22 +1219,21 @@ def agg_corr_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the engines stringify differently.  Single pass, partial
     aggregation, 5-row result."""
     c = load_table(spark, sf_dir, "customer")
-    xc = F.col("c_custkey").cast("decimal(38,0)")
-    yc = F.round(F.col("c_acctbal") * 100).cast("decimal(38,0)")
+    x, y = F.col("c_custkey"), F.round(F.col("c_acctbal") * 100).cast("long")
     agg = c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(xc).alias("sx"),
-        F.sum(yc).alias("sy"),
-        F.sum(xc * yc).alias("sxy"),
-        F.sum(xc * xc).alias("sxx"),
-        F.sum(yc * yc).alias("syy"),
+        exact_sum(x).alias("sx"),
+        exact_sum(y).alias("sy"),
+        exact_dot(x, y).alias("sxy"),
+        exact_dot(x, x).alias("sxx"),
+        exact_dot(y, y).alias("syy"),
     )
     n = F.col("n")
-    a = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    b = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    cc = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
+    a = to_double(comoment(n, "sxy", "sx", "sy"))
+    b = to_double(comoment(n, "sxx", "sx"))
+    cc = to_double(comoment(n, "syy", "sy"))
+    sxd = to_double("sx")
+    syd = to_double("sy")
     m = agg.select("c_mktsegment", n, a.alias("a"), b.alias("b"), cc.alias("c"),
                    sxd.alias("sxd"), syd.alias("syd"))
     slope = F.col("a") / F.col("b") / 100.0
@@ -2746,7 +2757,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells),
     e AS (
       SELECT priority, status, COALESCE(n_obs, 0) AS n_obs, n_row, n_col,
-             {to_double_sql('CAST(n_row AS DECIMAL(38,0)) * n_col')} / n_tot AS expected
+             {to_double_sql(int128_sql('n_row') + ' * n_col')} / n_tot AS expected
       FROM r CROSS JOIN c
       LEFT JOIN cells USING (priority, status)
       CROSS JOIN t
@@ -2767,7 +2778,7 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one non-portable step, so the cells stay unsummed).
 
     Float portability: counts are exact BIGINT; the row x col product is
-    DECIMAL(38,0) (BIGINT overflows at ~3e9 rows per margin) and enters
+    an exact 128-bit ``int128`` (BIGINT overflows at ~3e9 rows per margin) and enters
     the double world through ONE ``to_double`` (functions/rounding.py);
     expected and contrib are then identical IEEE op trees on both
     engines.
@@ -2783,7 +2794,6 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) is lazily materialized, so the three margin re-reads
     cost nothing, and every join after the scan is a broadcast over
     <= 15 rows.  No reference counterpart (main.py:144-146)."""
-    d38 = "decimal(38,0)"
     o = load_table(spark, sf_dir, "orders")
     cells = materialize(
         o.groupBy(
@@ -2795,12 +2805,7 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = cells.groupBy("priority").agg(F.sum("n_obs").cast("long").alias("n_row"))
     c = cells.groupBy("status").agg(F.sum("n_obs").cast("long").alias("n_col"))
     t = cells.agg(F.sum("n_obs").cast("long").alias("n_tot"))
-    expected = (
-        (F.col("n_row").cast(d38) * F.col("n_col")).cast(d38)
-        .cast("string")
-        .cast("double")
-        / F.col("n_tot")
-    )
+    expected = to_double(int128("n_row") * F.col("n_col")) / F.col("n_tot")
     e = (
         r.crossJoin(F.broadcast(c))
         .join(F.broadcast(cells), ["priority", "status"], "left")
@@ -2917,29 +2922,29 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sq,
-             CAST(SUM(CAST(p AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sp,
-             CAST(SUM(CAST(d AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sd,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * q) AS DECIMAL(38,0)) AS sqq,
-             CAST(SUM(CAST(p AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS spp,
-             CAST(SUM(CAST(d AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS sdd,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS sqp,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS sqd,
-             CAST(SUM(CAST(p AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS spd
+             {exact_sum_sql('q')} AS sq,
+             {exact_sum_sql('p')} AS sp,
+             {exact_sum_sql('d')} AS sd,
+             {exact_dot_sql('q', 'q')} AS sqq,
+             {exact_dot_sql('p', 'p')} AS spp,
+             {exact_dot_sql('d', 'd')} AS sdd,
+             {exact_dot_sql('q', 'p')} AS sqp,
+             {exact_dot_sql('q', 'd')} AS sqd,
+             {exact_dot_sql('p', 'd')} AS spd
       FROM b
     )
     SELECT n,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqq - sq * sq')}
+      {to_double_sql(comoment_sql('n', 'sqq', 'sq'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_qty,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * spp - sp * sp')}
+      {to_double_sql(comoment_sql('n', 'spp', 'sp'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_price,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sdd - sd * sd')}
+      {to_double_sql(comoment_sql('n', 'sdd', 'sd'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS var_disc,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqp - sq * sp')}
+      {to_double_sql(comoment_sql('n', 'sqp', 'sq', 'sp'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_qty_price,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * sqd - sq * sd')}
+      {to_double_sql(comoment_sql('n', 'sqd', 'sq', 'sd'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_qty_disc,
-      {to_double_sql('CAST(n AS DECIMAL(38,0)) * spd - sp * sd')}
+      {to_double_sql(comoment_sql('n', 'spd', 'sp', 'sd'))}
         / (CAST(n AS DOUBLE) * (n - 1)) AS cov_price_disc
     FROM s
     """,
@@ -2948,43 +2953,38 @@ def join_band_closest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full 3x3 sample covariance matrix of (quantity, price cents,
     discount pct) over lineitem in ONE pass: every entry derives from
-    the 9 exact DECIMAL(38,0) cross-moment sums via cov(X,Y) = (n*Sxy -
+    the 9 exact cross-moment sums (``exact_dot``) via cov(X,Y) = (n*Sxy -
     Sx*Sy) / (n*(n-1)) — the n-scaled form that never materializes a
     mean, so the only doubles are one ``to_double`` per exact numerator
     and a fixed divide tree (identical both engines).  Spp*n stays
-    inside DECIMAL(38,0) to ~1e11 rows at 1e7-cent prices.
+    inside 38 digits to ~1e11 rows at 1e7-cent prices.
 
     Scale shape: ONE scan, ONE map-side-partial aggregate to a single
     9-sum row — the textbook all-reduce; nothing downstream touches
     data rows.  This is agg_corr_regr generalized from a single pair to
     the moment matrix a multivariate OLS/PCA step consumes."""
-    d38 = "decimal(38,0)"
     li = load_table(spark, sf_dir, "lineitem")
     q = F.floor(F.col("l_quantity")).cast("long")
     p = cents("l_extendedprice")
     d = cents("l_discount")
     b = li.select(q.alias("q"), p.alias("p"), d.alias("d"))
-
-    def msum(x, y):
-        return F.sum(F.col(x).cast(d38) * F.col(y)).cast(d38)
-
     s = b.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("q").cast(d38)).cast(d38).alias("sq"),
-        F.sum(F.col("p").cast(d38)).cast(d38).alias("sp"),
-        F.sum(F.col("d").cast(d38)).cast(d38).alias("sd"),
-        msum("q", "q").alias("sqq"),
-        msum("p", "p").alias("spp"),
-        msum("d", "d").alias("sdd"),
-        msum("q", "p").alias("sqp"),
-        msum("q", "d").alias("sqd"),
-        msum("p", "d").alias("spd"),
+        exact_sum("q").alias("sq"),
+        exact_sum("p").alias("sp"),
+        exact_sum("d").alias("sd"),
+        exact_dot("q", "q").alias("sqq"),
+        exact_dot("p", "p").alias("spp"),
+        exact_dot("d", "d").alias("sdd"),
+        exact_dot("q", "p").alias("sqp"),
+        exact_dot("q", "d").alias("sqd"),
+        exact_dot("p", "d").alias("spd"),
     )
     n = F.col("n")
     den = n.cast("double") * (n - 1)
 
     def cov(sxy, sx, sy):
-        return to_double((n.cast(d38) * F.col(sxy) - F.col(sx) * F.col(sy)).cast(d38)) / den
+        return to_double(comoment(n, sxy, sx, sy)) / den
 
     return s.select(
         "n",
@@ -3018,14 +3018,14 @@ def _ols2_oracle() -> str:
     ),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sq,
-             CAST(SUM(CAST(d AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sd,
-             CAST(SUM(CAST(p AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sp,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * q) AS DECIMAL(38,0)) AS sqq,
-             CAST(SUM(CAST(d AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS sdd,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS sqd,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS sqp,
-             CAST(SUM(CAST(d AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS sdp
+             {exact_sum_sql('q')} AS sq,
+             {exact_sum_sql('d')} AS sd,
+             {exact_sum_sql('p')} AS sp,
+             {exact_dot_sql('q', 'q')} AS sqq,
+             {exact_dot_sql('d', 'd')} AS sdd,
+             {exact_dot_sql('q', 'd')} AS sqd,
+             {exact_dot_sql('q', 'p')} AS sqp,
+             {exact_dot_sql('d', 'p')} AS sdp
       FROM b
     ),
     f AS (
@@ -3066,7 +3066,7 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment-matrix consumer agg_covariance_matrix's docstring promises.
 
     Exactness: the normal-equation matrix entries are the exact
-    DECIMAL(38,0) moment sums; each enters the double world through ONE
+    integer moment sums (``exact_dot``); each enters the double world through ONE
     ``to_double``, and the four 3x3 determinants are a SINGLE
     explicitly-parenthesized IEEE tree emitted by the same helper for
     both engines (_det3_sql / the Column builder here) — deterministic
@@ -3077,27 +3077,22 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums to a single row; the solve is scalar arithmetic on that row.
     This is the classic 'ML on moments' pattern: the shuffle cost of a
     d-feature OLS is O(d^2) doubles per partition, independent of rows."""
-    d38 = "decimal(38,0)"
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_quantity")).cast("long").alias("q"),
         cents("l_discount").alias("d"),
         cents("l_extendedprice").alias("p"),
     )
-
-    def msum(x, y):
-        return F.sum(F.col(x).cast(d38) * F.col(y)).cast(d38)
-
     s = b.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("q").cast(d38)).cast(d38).alias("sq"),
-        F.sum(F.col("d").cast(d38)).cast(d38).alias("sd"),
-        F.sum(F.col("p").cast(d38)).cast(d38).alias("sp"),
-        msum("q", "q").alias("sqq"),
-        msum("d", "d").alias("sdd"),
-        msum("q", "d").alias("sqd"),
-        msum("q", "p").alias("sqp"),
-        msum("d", "p").alias("sdp"),
+        exact_sum("q").alias("sq"),
+        exact_sum("d").alias("sd"),
+        exact_sum("p").alias("sp"),
+        exact_dot("q", "q").alias("sqq"),
+        exact_dot("d", "d").alias("sdd"),
+        exact_dot("q", "d").alias("sqd"),
+        exact_dot("q", "p").alias("sqp"),
+        exact_dot("d", "p").alias("sdp"),
     )
     f = s.select(
         "n",
@@ -3152,10 +3147,10 @@ WINSOR_HI = 0.95
     SELECT w.status,
            CAST(COUNT(*) AS BIGINT) AS n,
            p05, p95,
-           CAST((1000 * SUM(CAST(LEAST(GREATEST(cents, p05), p95) AS HUGEINT)))
+           CAST((1000 * SUM({hugeint_sql('LEAST(GREATEST(cents, p05), p95)')}))
                 // COUNT(*) AS BIGINT) AS winsorized_mean_milli,
            CAST((1000 * SUM(CASE WHEN cents BETWEEN p05 AND p95
-                                 THEN CAST(cents AS HUGEINT) ELSE 0 END))
+                                 THEN {hugeint_sql('cents')} ELSE 0 END))
                 // SUM(CASE WHEN cents BETWEEN p05 AND p95 THEN 1 ELSE 0 END)
                 AS BIGINT) AS trimmed_mean_milli
     FROM w JOIN q USING (status)
@@ -3176,7 +3171,7 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     global-index rank (the registry-wide ban on percentile() buffer
     aggregates — per-task state is a bucket of DISTINCT cent values,
     never raw rows; quantile bucketer, since money is heavy-tailed);
-    means stay INTEGER all the way (HUGEINT/DECIMAL(38,0) sums — a
+    means stay INTEGER all the way (exact 128-bit sums — a
     BIGINT cents sum overflows past ~9e13 rows — and milli-unit floor
     division), so rows are bit-identical across engines with no double
     anywhere.
@@ -3209,16 +3204,13 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         disc={"p05": WINSOR_LO, "p95": WINSOR_HI},
         bucketer="quantile",
     ).select("status", F.col("p05").cast("long").alias("p05"), F.col("p95").cast("long").alias("p95"))
-    d38 = "decimal(38,0)"
     j = vc.join(F.broadcast(q), "status")
     clamped = F.least(F.greatest(F.col("cents"), F.col("p05")), F.col("p95"))
     inside = F.col("cents").between(F.col("p05"), F.col("p95"))
     agg = j.groupBy("status", "p05", "p95").agg(
         F.sum("_w").cast("long").alias("n"),
-        F.sum((clamped * F.col("_w")).cast(d38)).cast(d38).alias("s_w"),
-        F.sum(F.when(inside, (F.col("cents") * F.col("_w")).cast(d38)).otherwise(F.lit(0).cast(d38)))
-        .cast(d38)
-        .alias("s_t"),
+        exact_dot(clamped, "_w").alias("s_w"),
+        exact_dot(F.when(inside, F.col("cents")).otherwise(0), "_w").alias("s_t"),
         F.sum(F.when(inside, F.col("_w")).otherwise(0)).cast("long").alias("n_t"),
     )
     return agg.select(
@@ -3375,11 +3367,11 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     g AS (
       SELECT segment, CAST(COUNT(*) AS BIGINT) AS ng,
-             CAST(SUM(cents) AS HUGEINT) AS xg
+             {hugeint_sql('SUM(cents)')} AS xg
       FROM x GROUP BY segment
     ),
     tot AS (
-      SELECT CAST(SUM(ng) AS BIGINT) AS n, CAST(SUM(xg) AS HUGEINT) AS xt
+      SELECT CAST(SUM(ng) AS BIGINT) AS n, {hugeint_sql('SUM(xg)')} AS xt
       FROM g
     ),
     terms AS (
@@ -3390,7 +3382,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM x JOIN g ON x.segment = g.segment
     ),
     within AS (
-      SELECT segment, CAST(SUM(CAST(cents AS DECIMAL(38,0)) * t) AS DECIMAL(38,0))
+      SELECT segment, {exact_dot_sql('cents', 't')}
                AS num
       FROM terms GROUP BY segment
     )
@@ -3414,7 +3406,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     query emits each group's pieces.
 
     Determinism: cents are exact BIGINT, group/global sums exact
-    DECIMAL(38,0).  Each row's ln enters through the single-ln micro-nat
+    128-bit integers (``exact_sum``).  Each row's ln enters through the single-ln micro-nat
     convention (one correctly-rounded double ln, integerized at 1e-6) so
     the per-group weighted sums are exact integer folds — order-free;
     the final per-group divides and the between-term ln are single IEEE
@@ -3431,17 +3423,16 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-lint's allow-pattern."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    d38 = "decimal(38,0)"
     x = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("c_mktsegment").alias("segment"),
         cents("o_totalprice").alias("cents"),
     )
     g = x.groupBy("segment").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
-        F.sum("cents").cast(d38).alias("xg"),
+        exact_sum("cents").alias("xg"),
     )
     tot = g.agg(
-        F.sum("ng").cast("long").alias("n"), F.sum("xg").cast(d38).alias("xt")
+        F.sum("ng").cast("long").alias("n"), exact_sum("xg").alias("xt")
     )
     terms = x.join(F.broadcast(g), "segment").select(
         "segment",
@@ -3458,7 +3449,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t"),
     )
     within = terms.groupBy("segment").agg(
-        F.sum(F.col("cents").cast(d38) * F.col("t")).cast(d38).alias("num")
+        exact_dot("cents", "t").alias("num")
     )
     return (
         g.join(within, "segment")
@@ -3491,12 +3482,12 @@ EB_TOP = 20
       FROM lineitem GROUP BY l_suppkey
     ),
     tot AS (
-      SELECT CAST(SUM(n) AS HUGEINT) AS nn, CAST(SUM(x) AS HUGEINT) AS xx
+      SELECT {hugeint_sql('SUM(n)')} AS nn, {hugeint_sql('SUM(x)')} AS xx
       FROM per
     )
     SELECT l_suppkey, n, x,
            CAST((1000000 * x) // n AS BIGINT) AS raw_ppm,
-           CAST((1000000 * (CAST(x AS HUGEINT) * nn + {EB_M} * xx))
+           CAST((1000000 * ({hugeint_sql('x')} * nn + {EB_M} * xx))
                 // (nn * (n + {EB_M})) AS BIGINT) AS shrunk_ppm
     FROM per CROSS JOIN tot
     ORDER BY shrunk_ppm DESC, l_suppkey
@@ -3516,15 +3507,14 @@ def agg_rate_shrinkage_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully EXACT: substituting p0 = X/N makes the shrunk rate the
     integer rational (x*N + M*X) / (N*(n + M)), integerized once as
     ppm by decimal floor-division — no floats anywhere, so the ranking
-    and the tie-break (suppkey) are bit-deterministic.  DECIMAL(38,0)
-    keeps x*N exact past BIGINT at large SF.
+    and the tie-break (suppkey) are bit-deterministic.  128-bit
+    integers keep x*N exact past BIGINT at large SF.
 
     Scale shape: one map-side-partial fold per supplier (the natural
     key), a 1-row global fold broadcast back (bounded, the 1-row-
     aggregate allow-pattern), a row-local rational, and a top-k heap
     (TakeOrderedAndProject) — no global sort of the supplier
     relation."""
-    d38 = "decimal(38,0)"
     per = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")
@@ -3535,7 +3525,7 @@ def agg_rate_shrinkage_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x"),
         )
     )
-    tot = per.agg(F.sum("n").cast(d38).alias("nn"), F.sum("x").cast(d38).alias("xx"))
+    tot = per.agg(exact_sum("n").alias("nn"), exact_sum("x").alias("xx"))
     return (
         per.crossJoin(F.broadcast(tot))
         .select(
@@ -3544,7 +3534,7 @@ def agg_rate_shrinkage_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x",
             F.expr("CAST((1000000 * x) div n AS BIGINT)").alias("raw_ppm"),
             F.expr(
-                f"CAST((1000000 * (CAST(x AS DECIMAL(38,0)) * nn + {EB_M} * xx))"
+                f"CAST((1000000 * ({int128_sql('x')} * nn + {EB_M} * xx))"
                 f" div (nn * (n + {EB_M})) AS BIGINT)"
             ).alias("shrunk_ppm"),
         )
@@ -3639,15 +3629,15 @@ def _wls2_oracle() -> str:
     ),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sw,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * q) AS DECIMAL(38,0)) AS swq,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * d) AS DECIMAL(38,0)) AS swd,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS swp,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * q * q) AS DECIMAL(38,0)) AS swqq,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * d * d) AS DECIMAL(38,0)) AS swdd,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * q * d) AS DECIMAL(38,0)) AS swqd,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * q * p) AS DECIMAL(38,0)) AS swqp,
-             CAST(SUM(CAST(w AS DECIMAL(38,0)) * d * p) AS DECIMAL(38,0)) AS swdp
+             {exact_sum_sql('w')} AS sw,
+             {exact_dot_sql('w', 'q')} AS swq,
+             {exact_dot_sql('w', 'd')} AS swd,
+             {exact_dot_sql('w', 'p')} AS swp,
+             {exact_dot_sql('w', 'q', 'q')} AS swqq,
+             {exact_dot_sql('w', 'd', 'd')} AS swdd,
+             {exact_dot_sql('w', 'q', 'd')} AS swqd,
+             {exact_dot_sql('w', 'q', 'p')} AS swqp,
+             {exact_dot_sql('w', 'd', 'p')} AS swdp
       FROM b
     ),
     f AS (
@@ -3684,8 +3674,8 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments-then-Cramer architecture: the weighted normal equations
     (X'WX)β = X'Wy need exactly the nine w-weighted moment sums.
 
-    Exactness: integer weights keep every moment an exact DECIMAL(38,0)
-    sum (a fractional weight would reintroduce order-dependent float
+    Exactness: integer weights keep every moment an exact integer
+    sum (``exact_dot``; a fractional weight would reintroduce order-dependent float
     accumulation); each crosses to double once, and the 3x3
     determinants share the explicitly-parenthesized tree of _det3_sql.
     Setting w ≡ 1 reduces every output to agg_ols_two_features —
@@ -3693,7 +3683,6 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE scan, ONE map-side-partial aggregate to a single
     row; O(d²) doubles per partition regardless of rows."""
-    d38 = "decimal(38,0)"
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         (F.lit(1) + F.col("l_suppkey") % 4).cast("long").alias("w"),
@@ -3702,23 +3691,17 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents("l_extendedprice").alias("p"),
     )
 
-    def wsum(*cols):
-        e = F.col("w").cast(d38)
-        for c in cols:
-            e = e * F.col(c)
-        return F.sum(e).cast(d38)
-
     s = b.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        wsum().alias("sw"),
-        wsum("q").alias("swq"),
-        wsum("d").alias("swd"),
-        wsum("p").alias("swp"),
-        wsum("q", "q").alias("swqq"),
-        wsum("d", "d").alias("swdd"),
-        wsum("q", "d").alias("swqd"),
-        wsum("q", "p").alias("swqp"),
-        wsum("d", "p").alias("swdp"),
+        exact_sum("w").alias("sw"),
+        exact_dot("w", "q").alias("swq"),
+        exact_dot("w", "d").alias("swd"),
+        exact_dot("w", "p").alias("swp"),
+        exact_dot("w", "q", "q").alias("swqq"),
+        exact_dot("w", "d", "d").alias("swdd"),
+        exact_dot("w", "q", "d").alias("swqd"),
+        exact_dot("w", "q", "p").alias("swqp"),
+        exact_dot("w", "d", "p").alias("swdp"),
     )
     f = s.select(
         "n",
@@ -3768,11 +3751,11 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT l_returnflag,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(rq AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sq,
-             CAST(SUM(CAST(rp AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sp,
-             CAST(SUM(CAST(rq AS DECIMAL(38,0)) * rp) AS DECIMAL(38,0)) AS sqp,
-             CAST(SUM(CAST(rq AS DECIMAL(38,0)) * rq) AS DECIMAL(38,0)) AS sqq,
-             CAST(SUM(CAST(rp AS DECIMAL(38,0)) * rp) AS DECIMAL(38,0)) AS spp
+             {exact_sum_sql('rq')} AS sq,
+             {exact_sum_sql('rp')} AS sp,
+             {exact_dot_sql('rq', 'rp')} AS sqp,
+             {exact_dot_sql('rq', 'rq')} AS sqq,
+             {exact_dot_sql('rp', 'rp')} AS spp
       FROM r GROUP BY 1
     )
     SELECT l_returnflag, n,
@@ -3803,7 +3786,7 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a 5th-digit cross-engine drift in sqp; mid-ranks remove the
     permutation dependence instead of chasing a unique key).
 
-    Determinism: rank moments are exact DECIMAL(38,0) sums (rq·rp ~ n²,
+    Determinism: rank moments are exact integer sums (rq·rp ~ n²,
     so BIGINT sums overflow one decade past sf1); each crosses to double
     once (``to_double``), then the Pearson-on-ranks formula is one
     shared IEEE tree.
@@ -3823,7 +3806,6 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice", "l_orderkey", "l_linenumber"
     )
@@ -3848,11 +3830,11 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = r.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("rq").cast(d38)).cast(d38).alias("sq"),
-        F.sum(F.col("rp").cast(d38)).cast(d38).alias("sp"),
-        F.sum(F.col("rq").cast(d38) * F.col("rp")).cast(d38).alias("sqp"),
-        F.sum(F.col("rq").cast(d38) * F.col("rq")).cast(d38).alias("sqq"),
-        F.sum(F.col("rp").cast(d38) * F.col("rp")).cast(d38).alias("spp"),
+        exact_sum("rq").alias("sq"),
+        exact_sum("rp").alias("sp"),
+        exact_dot("rq", "rp").alias("sqp"),
+        exact_dot("rq", "rq").alias("sqq"),
+        exact_dot("rp", "rp").alias("spp"),
     )
     nd = F.col("n").cast("double")
     return s.select(

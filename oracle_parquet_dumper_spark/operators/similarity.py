@@ -20,6 +20,8 @@ from oracle_parquet_dumper_spark.functions.lsh import _bucket_sql, _sign_bit
 from oracle_parquet_dumper_spark.functions.rounding import (
     dec_sum,
     dec_sum_sql,
+    hugeint_sql,
+    int128_sql,
     to_double,
     to_double_sql,
 )
@@ -1716,7 +1718,7 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "sim_silhouette_simplified",
-    oracle="""
+    oracle=f"""
     WITH q6 AS (
       SELECT vec_id, label,
              list_transform(embedding::DOUBLE[],
@@ -1749,17 +1751,16 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sil AS (
       SELECT label,
              CASE WHEN greatest(a6, b6) <= 0 THEN 0
-                  -- HUGEINT before *1e6: micro-unit² squared-L2 reaches
+                  -- 128 bits before *1e6: micro-unit² squared-L2 reaches
                   -- ~4e12 for unit-norm vectors (only ~2x int64 headroom
                   -- under the multiply) — mirror the Spark side's
-                  -- DECIMAL(38,0) widening instead of riding the edge
-                  -- (ADVICE r12)
-                  ELSE CAST(b6 - a6 AS HUGEINT) * 1000000 // greatest(a6, b6) END AS s_ppm
+                  -- widening instead of riding the edge (ADVICE r12)
+                  ELSE {hugeint_sql('b6 - a6')} * 1000000 // greatest(a6, b6) END AS s_ppm
       FROM ab
     )
     SELECT CAST(label AS BIGINT) AS label,
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(s_ppm) AS DOUBLE) / COUNT(*) AS mean_silhouette_ppm,
+           {to_double_sql('SUM(s_ppm)')} / COUNT(*) AS mean_silhouette_ppm,
            CAST(SUM(CASE WHEN s_ppm < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
     FROM sil GROUP BY label ORDER BY label
     """,
@@ -1824,8 +1825,7 @@ def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s_ppm = F.when(F.greatest("a6", "b6") <= 0, F.lit(0).cast("long")).otherwise(
         F.expr(
-            "CAST(CAST(b6 - a6 AS DECIMAL(38,0)) * 1000000"
-            " div greatest(a6, b6) AS BIGINT)"
+            f"CAST({int128_sql('b6 - a6')} * 1000000 div greatest(a6, b6) AS BIGINT)"
         )
     )
     return (

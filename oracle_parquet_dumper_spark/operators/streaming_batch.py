@@ -7,7 +7,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.functions.rounding import cents_sql, dec_sum_sql, to_double_sql
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents_sql,
+    comoment_sql,
+    dec_sum_sql,
+    exact_dot_sql,
+    exact_sum_sql,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.sources.tables import load_table
 from oracle_parquet_dumper_spark.streaming.ops import (
@@ -201,21 +208,21 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ref AS (
       SELECT event_type, COUNT(*) AS rn,
-             CAST(SUM(cents) AS DECIMAL(38,0)) AS rs,
-             CAST(SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS DECIMAL(38,0)) AS rq
+             {exact_sum_sql('cents')} AS rs,
+             {exact_dot_sql('cents', 'cents')} AS rq
       FROM (SELECT event_type, {cents_sql('value')} AS cents FROM events)
       GROUP BY event_type
     ),
     r2 AS (
       SELECT event_type,
              {to_double_sql('rs')} / rn AS ref_mean_cents,
-             sqrt({to_double_sql('rn * rq - rs * rs')}) / rn AS ref_sd_cents
+             sqrt({to_double_sql(comoment_sql('rn', 'rq', 'rs'))}) / rn AS ref_sd_cents
       FROM ref
     ),
     w AS (
       SELECT time_bucket(INTERVAL '6 hours', CAST(ts AS TIMESTAMP)) AS window_start,
              event_type, COUNT(*) AS n,
-             CAST(SUM({cents_sql('value')}) AS DECIMAL(38,0)) AS s
+             {exact_sum_sql(cents_sql('value'))} AS s
       FROM events GROUP BY 1, 2
     )
     SELECT w.window_start, w.event_type, CAST(w.n AS BIGINT) AS n,

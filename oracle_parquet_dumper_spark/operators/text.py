@@ -9,10 +9,22 @@ stays in whole-stage codegen; there is no Python in any per-row loop.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from oracle_parquet_dumper_spark.functions.rounding import (
+    comoment,
+    comoment_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    hugeint_sql,
+    int128_sql,
+)
 from oracle_parquet_dumper_spark.functions.tokens import words, words_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -669,13 +681,14 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     m AS (
       SELECT COUNT(*) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
+             {exact_sum_sql('x')} AS sx, {exact_sum_sql('y')} AS sy,
+             {exact_dot_sql('x', 'y')} AS sxy,
+             {exact_dot_sql('x', 'x')} AS sxx
       FROM pts
     )
     SELECT n AS vocab_size,
-           CAST((n * sxy - sx * sy) * 1000000 // (n * sxx - sx * sx) AS BIGINT)
+           CAST({hugeint_sql(comoment_sql('n', 'sxy', 'sx', 'sy'))} * 1000000
+                // {hugeint_sql(comoment_sql('n', 'sxx', 'sx'))} AS BIGINT)
              AS zipf_slope_micro
     FROM m
     """,
@@ -689,8 +702,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: each ln integerizes to micro-nats per (rank, freq)
     point BEFORE any sum (the perplexity convention), the regression
-    moments accumulate exactly in DECIMAL(38,0)/HUGEINT (x*y products
-    overflow BIGINT at large vocabularies), and the slope is one integer
+    moments accumulate exactly (``exact_dot``: x*y products overflow
+    BIGINT at large vocabularies), and the slope is one integer
     floor division — made exact on the Spark side by subtracting the
     modulo first (the profile_gini_concentration trick).  Scale shape:
     token counts partial-aggregate; the rank window runs over the
@@ -712,13 +725,13 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr("sum(CAST(x AS DECIMAL(38,0)))").alias("sx"),
-        F.expr("sum(CAST(y AS DECIMAL(38,0)))").alias("sy"),
-        F.expr("sum(CAST(x AS DECIMAL(38,0)) * y)").alias("sxy"),
-        F.expr("sum(CAST(x AS DECIMAL(38,0)) * x)").alias("sxx"),
+        exact_sum("x").alias("sx"),
+        exact_sum("y").alias("sy"),
+        exact_dot("x", "y").alias("sxy"),
+        exact_dot("x", "x").alias("sxx"),
     )
-    num = F.expr("(n * sxy - sx * sy) * 1000000")
-    den = F.expr("n * sxx - sx * sx")
+    num = comoment("n", "sxy", "sx", "sy") * 1000000
+    den = comoment("n", "sxx", "sx")
     # num is negative (slope < 0); measured: DuckDB's integer // rounds
     # toward ZERO here, and Spark's % is the truncated modulo (sign of
     # the dividend), so (num - num % den) / den is the matching
@@ -942,10 +955,10 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_TERMS = ("dup", "vector", "spark")
 
 
-def _bm25_step_exprs(h128: str, idiv: str) -> list[tuple[str, str]]:
+def _bm25_step_exprs(H: Callable[[str], str], idiv: str) -> list[tuple[str, str]]:
     """Ordered (column, SQL) steps computing the BM25 per-(doc,term)
     score from columns tf, dl, df, n_docs, corpus_len — ONE generator
-    emits both engines' SQL (``h128`` is the 128-bit cast template,
+    emits both engines' SQL (``H`` is the 128-bit cast builder,
     ``idiv`` the integer-division operator), so the arithmetic cannot
     drift between Spark and DuckDB.
 
@@ -960,10 +973,6 @@ def _bm25_step_exprs(h128: str, idiv: str) -> list[tuple[str, str]]:
     tf*(k1+1) / (tf + k1*(1-b + b*dl/avgdl)) with avgdl = L/N becomes
     the single integer fraction 44*tf*L / (20*tf*L + 6*L + 18*dl*N),
     emitted in ppm."""
-
-    def H(x: str) -> str:
-        return h128.format(x)
-
     return [
         ("u", "2 * n_docs + 2"),
         ("v", "2 * df + 1"),
@@ -988,7 +997,7 @@ def _bm25_step_exprs(h128: str, idiv: str) -> list[tuple[str, str]]:
 
 def _bm25_oracle() -> str:
     terms = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    steps = _bm25_step_exprs("CAST({} AS HUGEINT)", "//")
+    steps = _bm25_step_exprs(hugeint_sql, "//")
     chain, prev = [], "j"
     for i, (col, sql) in enumerate(steps):
         name = f"x{i}"
@@ -1064,7 +1073,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dl").cast("long").alias("corpus_len"),
     )
     j = tf.join(F.broadcast(dfr), "w").crossJoin(F.broadcast(corp))
-    for col, sql in _bm25_step_exprs("CAST({} AS DECIMAL(38,0))", "div"):
+    for col, sql in _bm25_step_exprs(int128_sql, "div"):
         j = j.withColumn(col, F.expr(sql))
     per = j.groupBy("doc_id").agg(
         F.max("dl").alias("n_tokens"),

@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.rounding import (
     cents,
     cents_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    int128,
+    int128_sql,
     to_double,
     to_double_sql,
 )
@@ -295,12 +301,12 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row_hash = md5_long(canon)
     # 60-bit hashes summed over billions of rows overflow a long; the
-    # sum runs in exact DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) and the
+    # sum runs exact in 128 bits (``exact_sum``) and the
     # checksum is emitted as a string — both engines stringify the exact
     # integer identically.
     return o.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(row_hash.cast("decimal(38,0)")).cast("string").alias("checksum"),
+        exact_sum(row_hash).cast("string").alias("checksum"),
     )
 
 
@@ -932,8 +938,8 @@ EMD_PACK = 1 << 31  # packs (cntA, cntB) into one weight: w = cntA*PACK + cntB
     ),
     t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM v)
     SELECT t.na AS n_a, t.nb AS n_b,
-           {to_double_sql('CAST(SUM(CAST(ABS(cuma * t.nb - cumb * t.na) AS HUGEINT) * (nxt - cents)) AS HUGEINT)')}
-             / {to_double_sql('CAST(t.na AS HUGEINT) * t.nb')}
+           {to_double_sql(exact_dot_sql('ABS(cuma * t.nb - cumb * t.na)', '(nxt - cents)'))}
+             / {to_double_sql(int128_sql('t.na') + ' * t.nb')}
              AS emd_cents
     FROM c CROSS JOIN t WHERE nxt IS NOT NULL
     GROUP BY t.na, t.nb
@@ -952,7 +958,7 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: over the value-aggregated domain, EMD = sum_v
     |cumA(v)*nB - cumB(v)*nA| * gap(v) / (nA*nB) — an integer rational
-    (HUGEINT / DECIMAL(38,0) numerator, one ``to_double`` and one divide
+    (``exact_dot`` numerator, one ``to_double`` and one divide
     at the end).  No binning, no float accumulation.
 
     Scale shape: ONE fold to the value domain (cents -> conditional
@@ -970,7 +976,6 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from oracle_parquet_dumper_spark.operators.global_index import with_global_index
 
-    d38 = "decimal(38,0)"
     o = load_table(spark, sf_dir, "orders")
     v = (
         o.select(
@@ -1031,26 +1036,19 @@ def dq_drift_emd_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "na",
             "nb",
-            (
-                F.abs(
-                    F.col("cuma").cast(d38) * F.col("nb")
-                    - F.col("cumb").cast(d38) * F.col("na")
-                )
-                * (F.col("nxt") - F.col("cents"))
-            )
-            .cast(d38)
-            .alias("term"),
+            F.abs(int128("cuma") * F.col("nb") - int128("cumb") * F.col("na")).alias("cross"),
+            (F.col("nxt") - F.col("cents")).alias("gap"),
         )
     )
     return (
         terms.groupBy("na", "nb")
-        .agg(F.sum("term").cast(d38).alias("emd_num"))
+        .agg(exact_dot("cross", "gap").alias("emd_num"))
         .select(
             F.col("na").alias("n_a"),
             F.col("nb").alias("n_b"),
             (
                 to_double(F.col("emd_num"))
-                / to_double((F.col("na").cast(d38) * F.col("nb")).cast(d38))
+                / to_double(int128("na") * F.col("nb"))
             ).alias("emd_cents"),
         )
     )
@@ -1079,7 +1077,7 @@ def _cramers_pair_sql(idx: int, table: str, rcol: str, ccol: str) -> str:
     t{idx} AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells{idx}),
     e{idx} AS (
       SELECT rl, cl, COALESCE(n_obs, 0) AS n_obs, n_row, n_col, n_tot,
-             {to_double_sql('CAST(n_row AS DECIMAL(38,0)) * n_col')} / n_tot AS expected
+             {to_double_sql(int128_sql('n_row') + ' * n_col')} / n_tot AS expected
       FROM r{idx} CROSS JOIN c{idx}
       LEFT JOIN cells{idx} USING (rl, cl)
       CROSS JOIN t{idx}
@@ -1133,15 +1131,13 @@ def dq_association_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells), DuckDB list_reduce over list(... ORDER BY rl, cl); a left
     fold from 0.0 and a first-element fold agree exactly because
     0.0 + x == x in IEEE.  Counts, margins and expected follow the
-    chi-square query's conventions (DECIMAL(38,0) margin product, one
+    chi-square query's conventions (exact 128-bit margin product, one
     correctly-rounded double crossing).
 
     Scale shape (per pair): one map-side-partial groupBy on the two
     bounded-domain columns, then margins/grid/fold over ≤15-row
     relations — the grid join sides are checkpointed bounded
     aggregates, declared in QUERY_BOUNDED_DOMAIN_COLS."""
-    d38 = "decimal(38,0)"
-
     def pair(table: str, rcol: str, ccol: str, name: str) -> DataFrame:
         df = load_table(spark, sf_dir, table)
         cells = materialize(
@@ -1151,12 +1147,7 @@ def dq_association_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = cells.groupBy("rl").agg(F.sum("n_obs").cast("long").alias("n_row"))
         c = cells.groupBy("cl").agg(F.sum("n_obs").cast("long").alias("n_col"))
         t = cells.agg(F.sum("n_obs").cast("long").alias("n_tot"))
-        expected = (
-            (F.col("n_row").cast(d38) * F.col("n_col")).cast(d38)
-            .cast("string")
-            .cast("double")
-            / F.col("n_tot")
-        )
+        expected = to_double(int128("n_row") * F.col("n_col")) / F.col("n_tot")
         diff = F.col("n_obs").cast("double") - F.col("expected")
         e = (
             r.crossJoin(F.broadcast(c))
@@ -1220,11 +1211,11 @@ MAHAL_TOP = 20
     ),
     s AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(q AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sq,
-             CAST(SUM(CAST(p AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sp,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * q) AS DECIMAL(38,0)) AS sqq,
-             CAST(SUM(CAST(p AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS spp,
-             CAST(SUM(CAST(q AS DECIMAL(38,0)) * p) AS DECIMAL(38,0)) AS sqp
+             {exact_sum_sql('q')} AS sq,
+             {exact_sum_sql('p')} AS sp,
+             {exact_dot_sql('q', 'q')} AS sqq,
+             {exact_dot_sql('p', 'p')} AS spp,
+             {exact_dot_sql('q', 'p')} AS sqp
       FROM b
     ),
     m AS (
@@ -1261,7 +1252,7 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     fences (dq_anomaly_mad) cannot see.  d² = Δᵀ Σ⁻¹ Δ with the 2x2
     inverse in closed form.
 
-    Determinism: the five moments are exact DECIMAL(38,0) sums crossing
+    Determinism: the five moments are exact integer sums crossing
     to double once; means/covariances/d² are then one shared IEEE tree,
     so per-row d² is bit-identical cross-engine.  The top-{MAHAL_TOP}
     boundary is safe without a unique tiebreak because the OUTPUT is
@@ -1272,7 +1263,6 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition), the 1-row model broadcast back, one row-local scoring
     pass, TakeOrdered for the top-k — no global sort, no second
     data-sized shuffle."""
-    d38 = "decimal(38,0)"
     li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_quantity")).cast("long").alias("q"),
@@ -1280,11 +1270,11 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = b.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("q").cast(d38)).cast(d38).alias("sq"),
-        F.sum(F.col("p").cast(d38)).cast(d38).alias("sp"),
-        F.sum(F.col("q").cast(d38) * F.col("q")).cast(d38).alias("sqq"),
-        F.sum(F.col("p").cast(d38) * F.col("p")).cast(d38).alias("spp"),
-        F.sum(F.col("q").cast(d38) * F.col("p")).cast(d38).alias("sqp"),
+        exact_sum("q").alias("sq"),
+        exact_sum("p").alias("sp"),
+        exact_dot("q", "q").alias("sqq"),
+        exact_dot("p", "p").alias("spp"),
+        exact_dot("q", "p").alias("sqp"),
     )
     m = s.select(
         "n",

@@ -16,8 +16,14 @@ from pyspark.sql import functions as F
 from oracle_parquet_dumper_spark.functions.rounding import (
     cents,
     cents_sql,
+    comoment,
+    comoment_sql,
     dec6,
     dec6_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
     to_double,
     to_double_sql,
 )
@@ -776,18 +782,19 @@ def window_range_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT user_id, event_id,
              COUNT(*)   OVER w AS n,
-             SUM(x)     OVER w AS sx,
-             SUM(y)     OVER w AS sy,
-             SUM(x * y) OVER w AS sxy,
-             SUM(x * x) OVER w AS sxx
+             {exact_sum_sql('x')} OVER w AS sx,
+             {exact_sum_sql('y')} OVER w AS sy,
+             {exact_dot_sql('x', 'y')} OVER w AS sxy,
+             {exact_dot_sql('x', 'x')} OVER w AS sxx
       FROM xy
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
     )
     SELECT user_id, event_id,
            CAST(n AS BIGINT) AS n_pts,
-           CASE WHEN n * sxx - sx * sx > 0
-                THEN CAST(n * sxy - sx * sy AS DOUBLE) / (n * sxx - sx * sx)
+           CASE WHEN {comoment_sql('n', 'sxx', 'sx')} > 0
+                THEN {to_double_sql(comoment_sql('n', 'sxy', 'sx', 'sy'))}
+                     / {to_double_sql(comoment_sql('n', 'sxx', 'sx'))}
            END AS slope_cents_per_s
     FROM s
     """,
@@ -800,19 +807,16 @@ def window_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     you, since an average is blind to direction.
 
     All-integer accumulation: x = seconds since the user's first event
-    (BIGINT; anchoring per-user keeps x small so every windowed moment
-    — sx, sy, sxy, sxx and the slope numerator/denominator — stays
-    exact in 64 bits: |num| <= n*max(x)*n*max(y) ~ 9e12 at the fixture,
-    and ~5e17 even for a decade-long user at $10k values), and ONE IEEE
-    divide at the end — the repo's float-portability convention, so the
-    DuckDB twin is bit-identical.  A constant-time window (all x equal,
+    (BIGINT, anchored per user to keep it small), exact windowed moments
+    (``exact_sum``/``exact_dot``) and slope numerator/denominator
+    (``comoment``), each entering the double world through ONE
+    ``to_double``, and ONE IEEE divide at the end — the repo's
+    float-portability convention, so the DuckDB twin is bit-identical.  A constant-time window (all x equal,
     e.g. same-second burst) has zero denominator -> NULL slope.
 
     Scale: one (user) shuffle shared by the anchor window and the
     rolling frame; the 8-row ROWS frame is O(1) state per row in both
-    engines' streaming window operators.  For multi-decade spans at
-    dollar scales beyond ~$100k, widen the moment sums to
-    DECIMAL(38,0) (the ts_anomaly_rolling_zscore convention)."""
+    engines' streaming window operators."""
     ev = load_table(spark, sf_dir, "events")
     anchor = W.partitionBy("user_id")
     xy = ev.select(
@@ -829,18 +833,18 @@ def window_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("x").over(w).alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).over(w).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).alias("sxx"),
+        exact_sum("x").over(w).alias("sx"),
+        exact_sum("y").over(w).alias("sy"),
+        exact_dot("x", "y").over(w).alias("sxy"),
+        exact_dot("x", "x").over(w).alias("sxx"),
     )
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
+    den = comoment("n", "sxx", "sx")
+    num = comoment("n", "sxy", "sx", "sy")
     return s.select(
         "user_id",
         "event_id",
         F.col("n").cast("long").alias("n_pts"),
-        F.when(den > 0, num.cast("double") / den).alias("slope_cents_per_s"),
+        F.when(den > 0, to_double(num) / to_double(den)).alias("slope_cents_per_s"),
     )
 
 

@@ -20,7 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from oracle_parquet_dumper_spark.functions.rounding import cents, dec_sum, to_double
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    comoment,
+    dec_sum,
+    exact_dot,
+    exact_sum,
+    to_double,
+)
 
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
@@ -214,23 +221,22 @@ def ohlc_tumbling(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 def drift_reference(events_batch: DataFrame) -> DataFrame:
     """Static per-type reference profile for the drift monitor: exact
-    integer moments (count, cents sum, cents sum-of-squares as
-    DECIMAL(38,0) — the events_welch_ttest recipe) folded to mean and
+    integer moments (count, cents sum, cents sum-of-squares, exact
+    128-bit sums — the events_welch_ttest recipe) folded to mean and
     population sd in double.  In production this is a stored profile
     table maintained by the batch layer; here it derives from the same
     fixture so the stream==batch contract stays checkable."""
-    d38 = "decimal(38,0)"
     vc = cents("value")
     g = events_batch.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("rn"),
-        F.sum(vc).cast(d38).alias("rs"),
-        F.sum(vc.cast(d38) * vc).cast(d38).alias("rq"),
+        exact_sum(vc).alias("rs"),
+        exact_dot(vc, vc).alias("rq"),
     )
     return g.select(
         "event_type",
         (to_double(F.col("rs")) / F.col("rn")).alias("ref_mean_cents"),
         (
-            F.sqrt(to_double(F.col("rn") * F.col("rq") - F.col("rs") * F.col("rs")))
+            F.sqrt(to_double(comoment("rn", "rq", "rs")))
             / F.col("rn")
         ).alias("ref_sd_cents"),
     )
@@ -252,7 +258,6 @@ def drift_mean_shift(
     reference scalars ride through the single stateful aggregate as
     first() — one watermarked state store keyed by (window, type), no
     post-aggregation join restrictions."""
-    d38 = "decimal(38,0)"
     vc = cents("value")
     enriched = events.join(F.broadcast(reference), "event_type")
     g = (
@@ -260,7 +265,7 @@ def drift_mean_shift(
         .groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(vc).cast(d38).alias("s"),
+            exact_sum(vc).alias("s"),
             F.first("ref_mean_cents").alias("ref_mean_cents"),
             F.first("ref_sd_cents").alias("ref_sd_cents"),
         )

@@ -15,6 +15,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from oracle_parquet_dumper_spark.functions.rounding import dec6_sql, dec_sum_sql, to_double_sql
 from oracle_parquet_dumper_spark.testing import compare
 
 SMOKE_DIR = "/root/testdata/sf0.001"
@@ -71,7 +72,7 @@ def fuzz_query(draw) -> str:
     measure = draw(st.sampled_from(NUM_COLS))
     return (
         f"SELECT {g}, COUNT(*) AS n, "
-        f"CAST(SUM(CAST({measure} AS DECIMAL(25,6))) AS DOUBLE) AS total "
+        f"{dec_sum_sql(measure)} AS total "
         f"FROM lineitem WHERE {pred} GROUP BY {g}"
     )
 
@@ -110,7 +111,7 @@ def fuzz_join_query(draw) -> str:
     g = draw(st.sampled_from(["o_orderstatus", "o_orderpriority"]))
     return (
         f"SELECT {g}, COUNT(*) AS n, COUNT(l_orderkey) AS n_items, "
-        f"CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS total_qty "
+        f"{dec_sum_sql('l_quantity')} AS total_qty "
         f"FROM orders {jt} (SELECT * FROM lineitem WHERE {pred}) li "
         f"ON o_orderkey = li.l_orderkey GROUP BY {g}"
     )
@@ -155,7 +156,7 @@ def fuzz_window_query(draw) -> str:
                 "RANK()",
                 "DENSE_RANK()",
                 "CAST(COUNT(*) OVER w AS BIGINT)",
-                "CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) OVER w AS DOUBLE)",
+                to_double_sql(f"SUM({dec6_sql('l_quantity')}) OVER w"),
                 "LAG(l_quantity) OVER w",
                 "LEAD(l_quantity, 2) OVER w",
             ]

@@ -287,11 +287,12 @@ def test_knn_kit_and_rounded_cosine_written_once():
 # 1 ulp off only once the decimal's integer payload passes 2^53, which
 # most fixture values never reach.  The Spark string hop and a decimal
 # SUM cast straight to DOUBLE are written nowhere, the owner included.
+# Each pattern matches across line breaks: the source is scanned whole.
 FLOAT_POLICY_IDIOMS = {
     "SQL VARCHAR hop": re.compile(r"AS VARCHAR(\(\d+\))?\)\s*AS DOUBLE\)", re.I),
-    "Spark string hop": re.compile(re.escape('.cast("string").cast("double")')),
-    "SQL cents": re.compile(r"CAST\(floor\([\w.{}]+ \* 100\) AS BIGINT\)", re.I),
-    "Spark cents": re.compile(r"F\.floor\(.* \* 100\)"),
+    "Spark string hop": re.compile(r'\.cast\("string"\)\s*\.cast\("double"\)'),
+    "SQL cents": re.compile(r"CAST\(floor\([\w.{}]+\s*\*\s*100\)\s*AS BIGINT\)", re.I),
+    "Spark cents": re.compile(r"F\.floor\(.*\s\*\s*100\)"),
     "DECIMAL(25,6) capture": re.compile(r"decimal\(25, ?6\)", re.I),
     "money capture": re.compile(r"decimal\(12, ?2\)", re.I),
     "rate capture": re.compile(r"decimal\(3, ?2\)", re.I),
@@ -306,21 +307,30 @@ def _float_idiom_hits(src: str) -> list[str]:
     return [name for name, pat in FLOAT_POLICY_IDIOMS.items() if pat.search(src)]
 
 
-def test_float_policy_written_once():
+def _policy_copies(idioms: dict[str, re.Pattern], nowhere: set[str]) -> tuple[list[str], set[str]]:
+    """(copies outside functions/rounding.py as "file:line: idiom", the
+    idioms its owner holds); a copy in the owner of a ``nowhere`` idiom
+    counts as outside."""
     pkg = os.path.join(REPO, "oracle_parquet_dumper_spark")
     owner = os.path.join(pkg, "functions", "rounding.py")
     stray, owned = [], set()
     for root, _dirs, files in os.walk(pkg):
-        for fn in files:
+        for fn in sorted(files):
             if fn.endswith(".py"):
                 path = os.path.join(root, fn)
-                rel = os.path.relpath(path, REPO)
-                for i, line in enumerate(open(path), 1):
-                    for name in _float_idiom_hits(line):
-                        if path == owner and name not in NOWHERE:
+                src = open(path).read()
+                for name, pat in idioms.items():
+                    for m in pat.finditer(src):
+                        if path == owner and name not in nowhere:
                             owned.add(name)
                         else:
-                            stray.append(f"{rel}:{i}: {name}")
+                            line = src.count("\n", 0, m.start()) + 1
+                            stray.append(f"{os.path.relpath(path, REPO)}:{line}: {name}")
+    return stray, owned
+
+
+def test_float_policy_written_once():
+    stray, owned = _policy_copies(FLOAT_POLICY_IDIOMS, NOWHERE)
     assert not stray, "raw float-policy copies; use functions/rounding.py:\n" + "\n".join(stray)
     assert owned == set(FLOAT_POLICY_IDIOMS) - NOWHERE
     # the rule fires on each raw form it replaces ...
@@ -335,6 +345,8 @@ def test_float_policy_written_once():
         "round(CAST(SUM(CAST(e AS DECIMAL(38,18))) AS DOUBLE), 6) AS s",
     ]
     assert [_float_idiom_hits(s) for s in raw] == [[n] for n in FLOAT_POLICY_IDIOMS]
+    # ... also when split over lines (the chi-square expected-count hop)
+    assert _float_idiom_hits('x.cast(d38)\n    .cast("string")\n    .cast("double")') == ["Spark string hop"]
     # ... and not on what computes something else: the export checksum,
     # DECIMAL(38,0) integer moments, and a plain integer-to-double cast
     assert _float_idiom_hits('F.sum(row_hash.cast("decimal(38,0)")).cast("string")') == []
@@ -344,3 +356,36 @@ def test_float_policy_written_once():
     # the hopped decimal SUM is one idiom, not two
     hopped = "CAST(CAST(SUM(CAST(v AS DECIMAL(25,6))) AS VARCHAR(64)) AS DOUBLE)"
     assert _float_idiom_hits(hopped) == ["SQL VARCHAR hop", "DECIMAL(25,6) capture"]
+
+
+# The exact integer-moment policy (functions/rounding.py: int128,
+# exact_sum, exact_dot, comoment and their DuckDB twins) is the only
+# place the 128-bit integer type is spelled.  DECIMAL(38,18) and
+# DECIMAL(38,12) are NOT this rule: they are the fixed-point vector
+# sums of operators/similarity.py, so the pattern stops at scale 0.
+MOMENT_POLICY_IDIOMS = {
+    "DECIMAL(38,0)": re.compile(r"decimal\(\s*38\s*,\s*0\s*\)", re.I),
+    "d38 local": re.compile(r"\bd38\b"),
+    "HUGEINT": re.compile(r"\bhugeint\b", re.I),
+}
+MOMENT_NOWHERE = {"d38 local"}
+
+
+def _moment_idiom_hits(src: str) -> list[str]:
+    return [name for name, pat in MOMENT_POLICY_IDIOMS.items() if pat.search(src)]
+
+
+def test_moment_policy_written_once():
+    stray, owned = _policy_copies(MOMENT_POLICY_IDIOMS, MOMENT_NOWHERE)
+    assert not stray, "raw integer-moment copies; use functions/rounding.py:\n" + "\n".join(stray)
+    assert owned == set(MOMENT_POLICY_IDIOMS) - MOMENT_NOWHERE
+    # the rule fires on each raw form it replaces, across line breaks ...
+    raw = [
+        "CAST(SUM(CAST(cents AS DECIMAL(38, 0))\n * cents) AS DECIMAL(38,0)) AS q",
+        'd38 = "decimal(38,0)"',
+        "SUM(CAST(v AS hugeint) * v) OVER w",
+    ]
+    assert [_moment_idiom_hits(s) for s in raw] == [["DECIMAL(38,0)"], ["DECIMAL(38,0)", "d38 local"], ["HUGEINT"]]
+    # ... and not on the fixed-point vector sums or the owner's builder names
+    assert _moment_idiom_hits("SUM(CAST(e AS DECIMAL(38,18))), CAST(x AS DECIMAL(38,12))") == []
+    assert _moment_idiom_hits("hugeint_sql('1') << 63") == []

@@ -100,6 +100,78 @@ def test_money_and_rate_capture_twin(spark, duck):
     assert got[0]["charge"] == 0.275094  # 0.29 * 0.93 * 1.02, exact
 
 
+
+# Exact integer moments: each builder against its DuckDB twin on a sum
+# past 2^63 (BIGINT overflow), a co-moment past 2^53 (a double would
+# round), NULL terms (skipped) and empty input (NULL in both engines).
+BIG = 2**62 + 1
+MOMENT_ROWS = {
+    "past_2^63": [(BIG, 3), (BIG, 5), (BIG + 2, -7)],
+    "past_2^53": [(123456789, 987654321), (-98765431, 12345679), (555555557, -314159265)],
+    "nulls": [(None, 4), (6, None), (None, None), (10, -3), (-7, 2)],
+    "empty": [],
+}
+
+
+def _moment_twins(spark, duck, rows, spark_expr, sql):
+    got = spark.createDataFrame(rows, "x BIGINT, y BIGINT").agg(spark_expr.alias("m")).first()[0]
+    vals = ", ".join(
+        "(" + ", ".join("NULL" if v is None else f"CAST({v} AS BIGINT)" for v in row) + ")"
+        for row in rows or [(None, None)]
+    )
+    want = duck.sql(
+        f"SELECT {sql} FROM (VALUES {vals}) t(x, y){'' if rows else ' WHERE false'}"
+    ).fetchall()[0][0]
+    return got, want
+
+
+def _exact(rows, f):
+    terms = [f(x, y) for x, y in rows if x is not None and y is not None]
+    return sum(terms) if terms else None
+
+
+@pytest.mark.parametrize("case", sorted(MOMENT_ROWS))
+def test_exact_sum_twin(spark, duck, case):
+    from pyspark.sql import functions as F
+
+    rows = MOMENT_ROWS[case]
+    got, want = _moment_twins(spark, duck, rows, r.exact_sum("x"), r.exact_sum_sql("x"))
+    xs = [x for x, _ in rows if x is not None]
+    assert got == want == (sum(xs) if xs else None)
+    if case == "past_2^63":
+        # why the cast comes first: Spark's ANSI SUM(BIGINT) overflows
+        # where DuckDB's widens to HUGEINT
+        with pytest.raises(Exception, match="(?i)overflow"):
+            spark.createDataFrame(rows, "x BIGINT, y BIGINT").agg(F.sum("x").cast("decimal(38,0)")).collect()
+
+
+@pytest.mark.parametrize("case", sorted(MOMENT_ROWS))
+def test_exact_dot_twin(spark, duck, case):
+    rows = MOMENT_ROWS[case]
+    got, want = _moment_twins(spark, duck, rows, r.exact_dot("x", "y", "y"), r.exact_dot_sql("x", "y", "y"))
+    assert got == want == _exact(rows, lambda x, y: x * y * y)
+
+
+@pytest.mark.parametrize("case", sorted(MOMENT_ROWS))
+def test_comoment_twin(spark, duck, case):
+    from pyspark.sql import functions as F
+
+    rows = MOMENT_ROWS[case]
+    got, want = _moment_twins(
+        spark, duck, rows,
+        r.to_double(r.comoment(F.count("x"), r.exact_dot("x", "y"), r.exact_sum("x"), r.exact_sum("y"))),
+        r.to_double_sql(r.comoment_sql("COUNT(x)", r.exact_dot_sql("x", "y"), r.exact_sum_sql("x"), r.exact_sum_sql("y"))),
+    )
+    assert _bits([got]) == _bits([want])
+    if case == "empty":
+        assert got is None
+        return
+    xs, ys = [x for x, _ in rows if x is not None], [y for _, y in rows if y is not None]
+    exact = len(xs) * _exact(rows, lambda x, y: x * y) - sum(xs) * sum(ys)
+    assert got == float(exact)  # one correct rounding of the exact numerator
+    if case == "past_2^53":
+        assert abs(exact) > 2**53 and float(exact) != exact
+
 def test_cents_twin(spark, duck):
     from pyspark.sql import functions as F
 
