@@ -20,7 +20,13 @@ helpers (tests/test_registry_hygiene.py fails on a raw copy elsewhere):
   capture 2-decimal columns exactly before multiplying.  A double
   product cast per row to DECIMAL(25,6) is not portable: Spark rounds
   the shortest decimal repr, DuckDB the binary value.
-- ``cents``: integer cents for the exact integer-moment queries.
+- ``cents``/``cents_py``: a 2-decimal amount as integer cents, ROUNDED
+  to nearest: ``x * 100`` of a 2-decimal double lands within an ulp of
+  the integer on either side (0.29 * 100 = 28.999999999999996), so a
+  floor is one cent low on ~5% of fixture amounts.  The products are
+  never near a half, where Spark (HALF_UP on the shortest repr) and
+  DuckDB (half away from zero on the binary value) could differ; the
+  Python replica rounds like Spark.
 - ``int128``/``exact_sum``/``exact_dot``/``comoment``: the exact
   integer-moment rule.  Sums of integers (cents, counts, ranks) and of
   their products run in DECIMAL(38,0), cast BEFORE summing: Spark's
@@ -55,6 +61,12 @@ _Q6 = Decimal("0.000001")
 def round6(x: float) -> float:
     """Replica of Spark ``F.round(double, 6)`` / DuckDB ``round(x, 6)``."""
     return float(Decimal(repr(float(x))).quantize(_Q6, ROUND_HALF_UP))
+
+
+def cents_py(x: float) -> int:
+    """Python replica of ``cents``: HALF_UP on the shortest repr of the
+    double ``x * 100``, as Spark's ``round``."""
+    return int(Decimal(repr(float(x) * 100)).quantize(Decimal(1), ROUND_HALF_UP))
 
 
 def _col(c: Column | str) -> Column:
@@ -195,18 +207,10 @@ def comoment_sql(n: str, sxy: str, sx: str, sy: str | None = None) -> str:
 
 
 def cents(c: Column | str) -> Column:
-    """BIGINT ``floor(x * 100)``: a 2-decimal amount in integer cents.
-
-    Ruling: this truncates, one cent low whenever ``x * 100`` lands just
-    below an integer (0.29 * 100 = 28.999999999999996).  At sf0.01 floor
-    differs from round on 3,341 of 60,000 ``l_extendedprice``, 708 of
-    15,000 ``o_totalprice``, 593 of 10,000 ``events.value`` and 13 of
-    100 ``s_acctbal`` values.  Both engines truncate alike, so no hash
-    shows it (strict xfail in tests/test_rounding.py); rounding instead
-    changes every cents query and ``stateful.math_floor_cents``."""
-    return F.floor(_col(c) * 100).cast("long")
+    """BIGINT ``round(x * 100)``: a 2-decimal amount in integer cents."""
+    return F.round(_col(c) * 100).cast("long")
 
 
 def cents_sql(e: str) -> str:
     """DuckDB twin of ``cents``."""
-    return f"CAST(floor({e} * 100) AS BIGINT)"
+    return f"CAST(round({e} * 100) AS BIGINT)"

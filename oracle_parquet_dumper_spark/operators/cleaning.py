@@ -348,10 +348,10 @@ def pipeline_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "clean_target_encode_loo",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_orderkey, o_orderpriority,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS c
+             {cents_sql('o_totalprice')} AS c
       FROM orders
     ),
     g AS (
@@ -382,7 +382,7 @@ def clean_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     g = o.groupBy("o_orderpriority").agg(
         F.sum("c").alias("s"), F.count(F.lit(1)).alias("n")
@@ -402,10 +402,10 @@ def clean_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "clean_winsorize_scale",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_orderkey, o_orderpriority,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS c
+             {cents_sql('o_totalprice')} AS c
       FROM orders
     ),
     r AS (
@@ -452,7 +452,7 @@ def clean_winsorize_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+        cents("o_totalprice").alias("c"),
     )
     idx = with_global_index(o, "c", ["o_orderkey"], bucketer="quantile")
 

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.functions.lsh import band_pairs, pair_cosine, pair_sides
 from oracle_parquet_dumper_spark.functions.rounding import (
+    cents,
+    cents_sql,
     comoment,
     comoment_sql,
     exact_dot,
@@ -2808,7 +2810,7 @@ _LINE_KEY_SQL = "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARC
     oracle=f"""
     WITH li AS (
       SELECT l_returnflag AS flag, l_orderkey, l_linenumber,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+             {cents_sql('l_extendedprice')} AS cents
       FROM lineitem
     ),
     m AS (
@@ -2881,7 +2883,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         "l_orderkey",
         "l_linenumber",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     m = materialize(
         li.groupBy("flag")

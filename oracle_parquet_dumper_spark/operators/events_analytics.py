@@ -637,7 +637,7 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cents AS (
       SELECT user_id, event_id, ts, value,
-             CAST(round(value * 100) AS BIGINT) AS v
+             {cents_sql('value')} AS v
       FROM events
     ),
     stats AS (
@@ -683,7 +683,7 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     ev = load_table(spark, sf_dir, "events")
-    v = F.round(F.col("value") * 100).cast("long")
+    v = cents("value")
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -719,10 +719,10 @@ def ts_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal_profile_mad",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
       SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
-             CAST(round(value * 100) AS BIGINT) AS v
+             {cents_sql('value')} AS v
       FROM events
     ),
     base AS (
@@ -752,15 +752,15 @@ def ts_seasonal_profile_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-fact shuffle; at 100 TB both passes are map-side against the
     profile."""
     ev = load_table(spark, sf_dir, "events")
-    cents = ev.select(
+    cv = ev.select(
         "event_type",
         F.hour("ts").cast("long").alias("hr"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
+        cents("value").alias("v"),
     )
-    base = cents.groupBy("event_type", "hr").agg(
+    base = cv.groupBy("event_type", "hr").agg(
         F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")
     )
-    j = cents.join(F.broadcast(base), ["event_type", "hr"])
+    j = cv.join(F.broadcast(base), ["event_type", "hr"])
     return (
         j.groupBy("event_type", F.col("hr").alias("hour_of_day"), "s", "n")
         .agg(F.sum(F.abs(F.col("n") * F.col("v") - F.col("s"))).alias("t"))
@@ -2150,13 +2150,13 @@ def events_markov_top1_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_halflife_engagement",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS tmax FROM events
     ),
     d AS (
       SELECT user_id,
-             (1000 * CAST(round(value * 100) AS BIGINT))
+             (1000 * {cents_sql('value')})
                // (CAST(1 AS BIGINT) << CAST(least(
                     (tmax - epoch_us(CAST(ts AS TIMESTAMP)))
                       // 604800000000, 40) AS INT)) AS dv
@@ -2191,7 +2191,7 @@ def events_halflife_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.crossJoin(F.broadcast(b)).select(
         "user_id",
         F.expr(
-            "(1000 * CAST(round(value * 100) AS BIGINT))"
+            f"(1000 * {cents_sql('value')})"
             " div shiftleft(CAST(1 AS BIGINT),"
             " CAST(least((tmax - unix_micros(CAST(ts AS TIMESTAMP)))"
             " div 604800000000L, 40L) AS INT))"

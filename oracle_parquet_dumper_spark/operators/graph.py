@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.functions.rounding import to_double_sql
+from oracle_parquet_dumper_spark.functions.rounding import cents_py, to_double_sql
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -129,7 +129,7 @@ def _pagerank_rounds(
     relation ``edges_deg``, starting from uniform integer rank mass on
     the ``src`` column of ``nodes``; ``n1`` is the 1-row node count
     ``nn``.  Each round's ranks are materialized eagerly."""
-    d_num = int(round(damping * 100))  # 0.85 -> 85, exact integer damping
+    d_num = cents_py(damping)  # 0.85 -> 85, exact integer damping
     ranks = nodes.crossJoin(F.broadcast(n1)).select(
         F.col("src").alias("node"), F.expr(f"{PR_SCALE} div nn").alias("r")
     )
@@ -169,7 +169,7 @@ def _pagerank_oracle() -> str:
     sweep's memory budget and any reasonable runtime.  Materializing is
     the SQL analog of the Spark loop's pre-bucketed round-invariant
     edge relation."""
-    d_num = int(round(PR_DAMPING * 100))
+    d_num = cents_py(PR_DAMPING)
     rounds = []
     prev = "r0"
     for i in range(1, PR_ITERS + 1):

@@ -1163,7 +1163,7 @@ def agg_bool_bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_corr_regr",
     oracle=f"""
     WITH xy AS (
-      SELECT c_mktsegment, c_custkey AS x, CAST(round(c_acctbal * 100) AS BIGINT) AS y FROM customer
+      SELECT c_mktsegment, c_custkey AS x, {cents_sql('c_acctbal')} AS y FROM customer
     ),
     agg AS (
       SELECT c_mktsegment, COUNT(*) AS n,
@@ -1207,8 +1207,7 @@ def agg_corr_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
        value, so one row in millions casts differently.
 
     The fix removes floats from the aggregation entirely: c_custkey is
-    integral, c_acctbal has exact cents (round(y*100) is integral, and
-    integral doubles cast exactly on both engines), so n, Σx, Σy, Σxy,
+    integral, c_acctbal has exact cents (``cents``), so n, Σx, Σy, Σxy,
     Σx², Σy² are exact integers (``exact_sum``/``exact_dot`` — headroom
     to x~1e11 per row and ~1e9 rows per group).  The textbook
     identities n·Σxy − ΣxΣy (``comoment``) are then computed EXACTLY (no
@@ -1219,7 +1218,7 @@ def agg_corr_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the engines stringify differently.  Single pass, partial
     aggregation, 5-row result."""
     c = load_table(spark, sf_dir, "customer")
-    x, y = F.col("c_custkey"), F.round(F.col("c_acctbal") * 100).cast("long")
+    x, y = F.col("c_custkey"), cents("c_acctbal")
     agg = c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
         exact_sum(x).alias("sx"),

@@ -669,7 +669,7 @@ MED_WIN = 15  # trailing frame: 14 preceding + current
     oracle=f"""
     WITH cents AS (
       SELECT user_id, event_id, ts, value,
-             CAST(round(value * 100) AS BIGINT) AS v
+             {cents_sql('value')} AS v
       FROM events
     ),
     framed AS (
@@ -703,7 +703,7 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact sort only if the frame itself grew unbounded — a FIXED
     trailing frame stays exact at any corpus size.)"""
     ev = load_table(spark, sf_dir, "events")
-    v = F.round(F.col("value") * 100).cast("long")
+    v = cents("value")
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1243,9 +1243,9 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_skyline_pareto",
-    oracle="""
+    oracle=f"""
     WITH p AS (
-      SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents, p_size
+      SELECT p_partkey, {cents_sql('p_retailprice')} AS price_cents, p_size
       FROM part
     ),
     w AS (
@@ -1279,7 +1279,7 @@ def window_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the same sweep with one global RANGE window."""
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
+        cents("p_retailprice").alias("price_cents"),
         "p_size",
     )
     bounds = p.agg(
@@ -1326,12 +1326,12 @@ def window_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_largest_remainder_alloc",
-    oracle="""
+    oracle=f"""
     WITH li AS (
-      SELECT l_orderkey, l_linenumber, CAST(round(l_extendedprice * 100) AS BIGINT) AS wc
+      SELECT l_orderkey, l_linenumber, {cents_sql('l_extendedprice')} AS wc
       FROM lineitem
     ),
-    o AS (SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS t FROM orders),
+    o AS (SELECT o_orderkey, {cents_sql('o_totalprice')} AS t FROM orders),
     j AS (
       SELECT l_orderkey, l_linenumber, wc, t,
              SUM(wc) OVER (PARTITION BY l_orderkey) AS wsum
@@ -1368,11 +1368,11 @@ def window_largest_remainder_alloc(spark: SparkSession, sf_dir: str) -> DataFram
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("wc"),
+        cents("l_extendedprice").alias("wc"),
     )
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("t"),
+        cents("o_totalprice").alias("t"),
     )
     ow = W.partitionBy("l_orderkey")
     j = li.join(o, "l_orderkey").withColumn("wsum", F.sum("wc").over(ow))
@@ -1408,8 +1408,8 @@ CLAMP_HI = 100_000  # cents
     WITH RECURSIVE rows_ AS (
       SELECT user_id, event_id,
              CASE WHEN event_type IN ('purchase', 'signup')
-                  THEN CAST(round(value * 100) AS BIGINT)
-                  ELSE -CAST(round(value * 100) AS BIGINT) END AS delta,
+                  THEN {cents_sql('value')}
+                  ELSE -{cents_sql('value')} END AS delta,
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
       FROM events
     ),
@@ -1459,7 +1459,7 @@ def window_clamped_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        (sign * F.round(F.col("value") * 100).cast("long")).alias("delta"),
+        (sign * cents("value")).alias("delta"),
     )
 
     def fold(pdf):

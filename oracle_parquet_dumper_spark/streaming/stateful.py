@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from oracle_parquet_dumper_spark.functions.rounding import cents_py
+
 # Ship the stateful kernels by value (see operators/multimodal.py): the
 # Python workers must not need this package on their import path.
 import sys as _sys
@@ -93,7 +95,7 @@ def rolling_anomaly_kernel(key, pdfs, state):
     out = {k: [] for k in ("user_id", "event_id", "value", "n_win", "z2_milli")}
     pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts", "event_id"])
     for row in pdf.itertuples():
-        v = int(round(row.value * 100))
+        v = cents_py(row.value)
         # invariant: ring is trimmed to the last ANOMALY_WIN entries at
         # the end of every iteration (and state restores already-trimmed
         # rings), so the whole ring IS the trailing window.
@@ -163,7 +165,7 @@ def ewma_kernel(key, pdfs, state):
     pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts", "event_id"])
     top = 1 << (EWMA_K - 1)
     for row in pdf.itertuples():
-        c = math_floor_cents(row.value)
+        c = cents_py(row.value)
         num, den = c * top, top
         for k, prev in enumerate(reversed(ring[-(EWMA_K - 1):]), start=1):
             w = 1 << (EWMA_K - 1 - k)
@@ -176,14 +178,6 @@ def ewma_kernel(key, pdfs, state):
         ring = ring[-(EWMA_K - 1):]
     state.update((ring,))
     yield pd.DataFrame(out)
-
-
-def math_floor_cents(value: float) -> int:
-    """floor(value * 100) exactly as Spark's FLOOR(value * 100) — IEEE
-    multiply then floor (NOT decimal re-rounding)."""
-    import math
-
-    return int(math.floor(value * 100))
 
 
 def ewma_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -231,7 +225,7 @@ def holt_kernel(key, pdfs, state):
     out = {k: [] for k in ("user_id", "event_id", "holt_forecast_cents")}
     pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts", "event_id"])
     for row in pdf.itertuples():
-        c = math_floor_cents(row.value)
+        c = cents_py(row.value)
         window = (ring + [c])[-EWMA_K:]
         lvl, trd = Fraction(window[0]), Fraction(0)
         for y in window[1:]:

@@ -285,8 +285,10 @@ def test_knn_kit_and_rounded_cosine_written_once():
 # below may appear in the package only there.  A raw copy elsewhere can
 # drift from its twin unseen: DuckDB's direct decimal -> double cast goes
 # 1 ulp off only once the decimal's integer payload passes 2^53, which
-# most fixture values never reach.  The Spark string hop and a decimal
-# SUM cast straight to DOUBLE are written nowhere, the owner included.
+# most fixture values never reach.  The Spark string hop, a decimal SUM
+# cast straight to DOUBLE and truncating cents (one cent low whenever
+# x * 100 lands just below an integer) are written nowhere, the owner
+# included.
 # Each pattern matches across line breaks: the source is scanned whole.
 FLOAT_POLICY_IDIOMS = {
     "SQL VARCHAR hop": re.compile(r"AS VARCHAR(\(\d+\))?\)\s*AS DOUBLE\)", re.I),
@@ -300,7 +302,7 @@ FLOAT_POLICY_IDIOMS = {
         r"CAST\(SUM\((?:(?!VARCHAR).)*DECIMAL\((?:(?!VARCHAR).)*\) AS DOUBLE\)", re.I
     ),
 }
-NOWHERE = {"Spark string hop", "SQL decimal SUM without hop"}
+NOWHERE = {"Spark string hop", "SQL cents", "Spark cents", "SQL decimal SUM without hop"}
 
 
 def _float_idiom_hits(src: str) -> list[str]:
@@ -363,10 +365,12 @@ def test_float_policy_written_once():
 # place the 128-bit integer type is spelled.  DECIMAL(38,18) and
 # DECIMAL(38,12) are NOT this rule: they are the fixed-point vector
 # sums of operators/similarity.py, so the pattern stops at scale 0.
+# Integer cents, the moments' usual input, are ``cents``/``cents_py``.
 MOMENT_POLICY_IDIOMS = {
     "DECIMAL(38,0)": re.compile(r"decimal\(\s*38\s*,\s*0\s*\)", re.I),
     "d38 local": re.compile(r"\bd38\b"),
     "HUGEINT": re.compile(r"\bhugeint\b", re.I),
+    "inline cents round": re.compile(r"\bround\(\s*[\w.\"(){}]+?\s*\*\s*100\s*\)"),
 }
 MOMENT_NOWHERE = {"d38 local"}
 
@@ -384,8 +388,15 @@ def test_moment_policy_written_once():
         "CAST(SUM(CAST(cents AS DECIMAL(38, 0))\n * cents) AS DECIMAL(38,0)) AS q",
         'd38 = "decimal(38,0)"',
         "SUM(CAST(v AS hugeint) * v) OVER w",
+        'F.round(F.col("value") * 100).cast("long")',
     ]
-    assert [_moment_idiom_hits(s) for s in raw] == [["DECIMAL(38,0)"], ["DECIMAL(38,0)", "d38 local"], ["HUGEINT"]]
-    # ... and not on the fixed-point vector sums or the owner's builder names
+    assert [_moment_idiom_hits(s) for s in raw] == [
+        ["DECIMAL(38,0)"], ["DECIMAL(38,0)", "d38 local"], ["HUGEINT"], ["inline cents round"]
+    ]
+    for cents in ("CAST(round(value * 100) AS BIGINT)", "v = int(round(row.value * 100))"):
+        assert _moment_idiom_hits(cents) == ["inline cents round"]
+    # ... and not on the fixed-point vector sums, the owner's builder
+    # names, or a rounding to other units
     assert _moment_idiom_hits("SUM(CAST(e AS DECIMAL(38,18))), CAST(x AS DECIMAL(38,12))") == []
     assert _moment_idiom_hits("hugeint_sql('1') << 63") == []
+    assert _moment_idiom_hits("F.round(F.log(F.col('r')) * 1000000), round(x * 1000)") == []

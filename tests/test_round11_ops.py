@@ -590,8 +590,10 @@ def test_rolling_corr_planted(spark, tmp_path):
     by_user = {}
     for r in got:
         by_user.setdefault(r.user_id, []).append(r.corr8)
-    # exact expectation replayed in Python with the SAME cent flooring
+    # exact expectation replayed in Python with the SAME cent rounding
     import math
+
+    from oracle_parquet_dumper_spark.functions.rounding import cents_py
 
     def corr(pairs):
         n = len(pairs)
@@ -607,13 +609,13 @@ def test_rolling_corr_planted(spark, tmp_path):
         vals = [
             (x / 100.0 if sign > 0 else (500 - x) / 100.0) for x in xs
         ]
-        ys = [math.floor(v * 100) for v in vals]
+        ys = [cents_py(v) for v in vals]
         pts = list(zip(xs, ys))
         expect = [corr(pts[0:8]), corr(pts[1:9])]
         assert len(by_user[uid]) == 2
         for gotc, expc in zip(by_user[uid], expect):
             assert abs(gotc - expc) < 1e-12
-        # and the directional contract holds despite cent flooring
+        # and the directional contract holds
         assert all((c > 0.99) if sign > 0 else (c < -0.99) for c in by_user[uid])
 
 

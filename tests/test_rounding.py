@@ -182,12 +182,10 @@ def test_cents_twin(spark, duck):
     want = [row[0] for row in duck.sql(
         f"SELECT {r.cents_sql('x')} FROM (VALUES {vals}) t(i, x) ORDER BY i"
     ).fetchall()]
-    assert got == want
-    assert got[2] == 28  # the truncation ruling: both engines floor 28.999999999999996
+    assert got == want == [None if v is None else r.cents_py(v) for v in values]
     assert df.select(r.cents(F.lit(12.5))).first()[0] == 1250
 
 
-@pytest.mark.xfail(strict=True, reason="cents truncates: floor(0.29 * 100) = 28 (ruling in rounding.cents)")
 def test_cents_rounds_to_nearest(spark):
     from pyspark.sql import functions as F
 
