@@ -2743,27 +2743,76 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def contingency_table(df: DataFrame, rcol: str, ccol: str) -> DataFrame:
+    """The zero-filled contingency grid of two bounded-domain columns:
+    one row per (rl, cl) level pair with n_obs, the margins n_row and
+    n_col, the total n_tot, the expected count n_row*n_col/n_tot and the
+    chi-square contribution (o-e)^2/e.
+
+    Counts are exact BIGINT; the margin product is an ``int128`` (BIGINT
+    overflows at ~3e9 rows per margin) entering the double world through
+    ONE ``to_double``, so expected and contrib are identical IEEE op
+    trees on both engines.  groupBy yields only OBSERVED cells, but an
+    empty cell still contributes its full expected count, so the grid
+    is row-margin x col-margin with counts left-joined back as 0.  The
+    cell relation is materialized (three margin re-reads) and every
+    join is a broadcast of a bounded aggregate."""
+    cells = materialize(
+        df.groupBy(F.col(rcol).alias("rl"), F.col(ccol).alias("cl"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
+    )
+    r = cells.groupBy("rl").agg(F.sum("n_obs").cast("long").alias("n_row"))
+    c = cells.groupBy("cl").agg(F.sum("n_obs").cast("long").alias("n_col"))
+    t = cells.agg(F.sum("n_obs").cast("long").alias("n_tot"))
+    expected = to_double(int128("n_row") * F.col("n_col")) / F.col("n_tot")
+    diff = F.col("n_obs").cast("double") - F.col("expected")
+    return (
+        r.crossJoin(F.broadcast(c))
+        .join(F.broadcast(cells), ["rl", "cl"], "left")
+        .crossJoin(F.broadcast(t))
+        .select(
+            "rl",
+            "cl",
+            F.coalesce(F.col("n_obs"), F.lit(0)).cast("long").alias("n_obs"),
+            "n_row",
+            "n_col",
+            "n_tot",
+            expected.alias("expected"),
+        )
+        .withColumn("contrib", diff * diff / F.col("expected"))
+    )
+
+
+def contingency_table_sql(idx: int | str, table: str, rcol: str, ccol: str) -> str:
+    """DuckDB twin of ``contingency_table``: the CTE chain ending in
+    ``e{idx}``, suffixed with ``idx`` so several tables share one flat
+    WITH."""
+    return f"""
+    cells{idx} AS MATERIALIZED (
+      SELECT {rcol} AS rl, {ccol} AS cl, CAST(COUNT(*) AS BIGINT) AS n_obs
+      FROM {table} GROUP BY 1, 2
+    ),
+    r{idx} AS (SELECT rl, CAST(SUM(n_obs) AS BIGINT) AS n_row FROM cells{idx} GROUP BY 1),
+    c{idx} AS (SELECT cl, CAST(SUM(n_obs) AS BIGINT) AS n_col FROM cells{idx} GROUP BY 1),
+    t{idx} AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells{idx}),
+    x{idx} AS (
+      SELECT rl, cl, COALESCE(n_obs, 0) AS n_obs, n_row, n_col, n_tot,
+             {to_double_sql(int128_sql('n_row') + ' * n_col')} / n_tot AS expected
+      FROM r{idx} CROSS JOIN c{idx}
+      LEFT JOIN cells{idx} USING (rl, cl)
+      CROSS JOIN t{idx}
+    ),
+    e{idx} AS (
+      SELECT *, (CAST(n_obs AS DOUBLE) - expected) * (CAST(n_obs AS DOUBLE) - expected)
+                  / expected AS contrib
+      FROM x{idx}
+    )"""
+
+
 @query(
     "agg_chi_square_independence",
-    oracle=f"""
-    WITH cells AS MATERIALIZED (
-      SELECT o_orderpriority AS priority, o_orderstatus AS status,
-             CAST(COUNT(*) AS BIGINT) AS n_obs
-      FROM orders GROUP BY 1, 2
-    ),
-    r AS (SELECT priority, CAST(SUM(n_obs) AS BIGINT) AS n_row FROM cells GROUP BY 1),
-    c AS (SELECT status, CAST(SUM(n_obs) AS BIGINT) AS n_col FROM cells GROUP BY 1),
-    t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells),
-    e AS (
-      SELECT priority, status, COALESCE(n_obs, 0) AS n_obs, n_row, n_col,
-             {to_double_sql(int128_sql('n_row') + ' * n_col')} / n_tot AS expected
-      FROM r CROSS JOIN c
-      LEFT JOIN cells USING (priority, status)
-      CROSS JOIN t
-    )
-    SELECT priority, status, n_obs, n_row, n_col, expected,
-           (CAST(n_obs AS DOUBLE) - expected) * (CAST(n_obs AS DOUBLE) - expected)
-             / expected AS contrib
+    oracle="WITH " + contingency_table_sql("", "orders", "o_orderpriority", "o_orderstatus") + """
+    SELECT rl AS priority, cl AS status, n_obs, n_row, n_col, expected, contrib
     FROM e
     """,
     tags=("agg", "stats", "experiment"),
@@ -2776,17 +2825,8 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contrib column; summing IEEE doubles in engine-defined order is
     the one non-portable step, so the cells stay unsummed).
 
-    Float portability: counts are exact BIGINT; the row x col product is
-    an exact 128-bit ``int128`` (BIGINT overflows at ~3e9 rows per margin) and enters
-    the double world through ONE ``to_double`` (functions/rounding.py);
-    expected and contrib are then identical IEEE op trees on both
-    engines.
-
-    Zero cells: groupBy yields only OBSERVED cells, but the chi-square
-    table needs every (row level, col level) combination — an empty
-    cell still contributes its full expected count.  The grid is
-    rebuilt as row-margin x col-margin (which enumerate exactly the
-    observed levels) with counts left-joined back and coalesced to 0.
+    The grid, its margins, expected counts and contributions come from
+    ``contingency_table`` (shared with dq_association_cramers_v).
 
     Scale shape: ONE scan with a map-side-partial groupBy on the two
     key columns; the cell relation (|priorities| x |statuses| = 15
@@ -2794,34 +2834,9 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost nothing, and every join after the scan is a broadcast over
     <= 15 rows.  No reference counterpart (main.py:144-146)."""
     o = load_table(spark, sf_dir, "orders")
-    cells = materialize(
-        o.groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.col("o_orderstatus").alias("status"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    )
-    r = cells.groupBy("priority").agg(F.sum("n_obs").cast("long").alias("n_row"))
-    c = cells.groupBy("status").agg(F.sum("n_obs").cast("long").alias("n_col"))
-    t = cells.agg(F.sum("n_obs").cast("long").alias("n_tot"))
-    expected = to_double(int128("n_row") * F.col("n_col")) / F.col("n_tot")
-    e = (
-        r.crossJoin(F.broadcast(c))
-        .join(F.broadcast(cells), ["priority", "status"], "left")
-        .crossJoin(F.broadcast(t))
-        .select(
-            "priority",
-            "status",
-            F.coalesce(F.col("n_obs"), F.lit(0)).cast("long").alias("n_obs"),
-            "n_row",
-            "n_col",
-            expected.alias("expected"),
-        )
-    )
-    diff = F.col("n_obs").cast("double") - F.col("expected")
-    return e.select(
-        "priority", "status", "n_obs", "n_row", "n_col", "expected",
-        (diff * diff / F.col("expected")).alias("contrib"),
+    return contingency_table(o, "o_orderpriority", "o_orderstatus").select(
+        F.col("rl").alias("priority"), F.col("cl").alias("status"),
+        "n_obs", "n_row", "n_col", "expected", "contrib",
     )
 
 

@@ -44,6 +44,7 @@ from oracle_parquet_dumper_spark.functions.rounding import (
     to_double_sql,
 )
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
+from oracle_parquet_dumper_spark.operators.relational import contingency_table, contingency_table_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table
@@ -1067,30 +1068,12 @@ def _cramers_pair_sql(idx: int, table: str, rcol: str, ccol: str) -> str:
     list_reduce — the exact same sequential fold as the Spark side's
     aggregate() over an array_sort'ed collect_list, so the otherwise
     order-dependent double sum is bit-identical."""
-    return f"""
-    cells{idx} AS MATERIALIZED (
-      SELECT {rcol} AS rl, {ccol} AS cl, CAST(COUNT(*) AS BIGINT) AS n_obs
-      FROM {table} GROUP BY 1, 2
-    ),
-    r{idx} AS (SELECT rl, CAST(SUM(n_obs) AS BIGINT) AS n_row FROM cells{idx} GROUP BY 1),
-    c{idx} AS (SELECT cl, CAST(SUM(n_obs) AS BIGINT) AS n_col FROM cells{idx} GROUP BY 1),
-    t{idx} AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_tot FROM cells{idx}),
-    e{idx} AS (
-      SELECT rl, cl, COALESCE(n_obs, 0) AS n_obs, n_row, n_col, n_tot,
-             {to_double_sql(int128_sql('n_row') + ' * n_col')} / n_tot AS expected
-      FROM r{idx} CROSS JOIN c{idx}
-      LEFT JOIN cells{idx} USING (rl, cl)
-      CROSS JOIN t{idx}
-    ),
+    return contingency_table_sql(idx, table, rcol, ccol) + f""",
     s{idx} AS (
       SELECT MAX(n_tot) AS n,
              CAST(COUNT(DISTINCT rl) AS BIGINT) AS nr,
              CAST(COUNT(DISTINCT cl) AS BIGINT) AS nc,
-             list_reduce(
-               list((CAST(n_obs AS DOUBLE) - expected)
-                    * (CAST(n_obs AS DOUBLE) - expected) / expected
-                    ORDER BY rl, cl),
-               (acc, v) -> acc + v) AS chi2
+             list_reduce(list(contrib ORDER BY rl, cl), (acc, v) -> acc + v) AS chi2
       FROM e{idx}
     )"""
 
@@ -1130,38 +1113,15 @@ def dq_association_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     an array_sort'ed collect_list (bounded: the grid is ≤ r·c ≤ 15
     cells), DuckDB list_reduce over list(... ORDER BY rl, cl); a left
     fold from 0.0 and a first-element fold agree exactly because
-    0.0 + x == x in IEEE.  Counts, margins and expected follow the
-    chi-square query's conventions (exact 128-bit margin product, one
-    correctly-rounded double crossing).
+    0.0 + x == x in IEEE.  The grid is ``contingency_table``, shared
+    with agg_chi_square_independence.
 
     Scale shape (per pair): one map-side-partial groupBy on the two
     bounded-domain columns, then margins/grid/fold over ≤15-row
     relations — the grid join sides are checkpointed bounded
     aggregates, declared in QUERY_BOUNDED_DOMAIN_COLS."""
     def pair(table: str, rcol: str, ccol: str, name: str) -> DataFrame:
-        df = load_table(spark, sf_dir, table)
-        cells = materialize(
-            df.groupBy(F.col(rcol).alias("rl"), F.col(ccol).alias("cl"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-        )
-        r = cells.groupBy("rl").agg(F.sum("n_obs").cast("long").alias("n_row"))
-        c = cells.groupBy("cl").agg(F.sum("n_obs").cast("long").alias("n_col"))
-        t = cells.agg(F.sum("n_obs").cast("long").alias("n_tot"))
-        expected = to_double(int128("n_row") * F.col("n_col")) / F.col("n_tot")
-        diff = F.col("n_obs").cast("double") - F.col("expected")
-        e = (
-            r.crossJoin(F.broadcast(c))
-            .join(F.broadcast(cells), ["rl", "cl"], "left")
-            .crossJoin(F.broadcast(t))
-            .select(
-                "rl",
-                "cl",
-                F.coalesce(F.col("n_obs"), F.lit(0)).cast("long").alias("n_obs"),
-                "n_tot",
-                expected.alias("expected"),
-            )
-            .select("rl", "cl", "n_tot", (diff * diff / F.col("expected")).alias("contrib"))
-        )
+        e = contingency_table(load_table(spark, sf_dir, table), rcol, ccol)
         s = e.agg(
             F.max("n_tot").alias("n"),
             F.countDistinct("rl").cast("long").alias("r_levels"),

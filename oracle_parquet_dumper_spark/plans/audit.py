@@ -418,8 +418,8 @@ QUERY_BOUNDED_DOMAIN_COLS: dict[str, dict[str, str]] = {
         "priority": "5 (o_orderpriority alias)",
     },
     "agg_chi_square_independence": {
-        "status": "3 (o_orderstatus alias)",
-        "priority": "5 (o_orderpriority alias)",
+        "rl": "5 (o_orderpriority alias)",
+        "cl": "3 (o_orderstatus alias)",
     },
     "dq_association_cramers_v": {
         "rl": "row-level alias (o_orderpriority 5 / l_returnflag 3)",
