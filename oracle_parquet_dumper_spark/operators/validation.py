@@ -1178,21 +1178,13 @@ MAHAL_TOP = 20
              {exact_dot_sql('q', 'p')} AS sqp
       FROM b
     ),
-    m AS (
-      SELECT n,
-             {to_double_sql('sq')} / n AS mq,
-             {to_double_sql('sp')} / n AS mp,
-             {to_double_sql('sqq')} / n
-               - ({to_double_sql('sq')} / n)
-                 * ({to_double_sql('sq')} / n) AS cxx,
-             {to_double_sql('spp')} / n
-               - ({to_double_sql('sp')} / n)
-                 * ({to_double_sql('sp')} / n) AS cyy,
-             {to_double_sql('sqp')} / n
-               - ({to_double_sql('sq')} / n)
-                 * ({to_double_sql('sp')} / n) AS cxy
+    m0 AS (
+      SELECT n, {to_double_sql('sq')} / n AS mq, {to_double_sql('sp')} / n AS mp,
+             {to_double_sql('sqq')} / n AS mqq, {to_double_sql('spp')} / n AS mpp,
+             {to_double_sql('sqp')} / n AS mqp
       FROM s
-    )
+    ),
+    m AS (SELECT n, mq, mp, mqq - mq * mq AS cxx, mpp - mp * mp AS cyy, mqp - mq * mp AS cxy FROM m0)
     SELECT q AS quantity, p AS price_cents,
            ((q - mq) * (q - mq) * cyy
             - 2 * (q - mq) * (p - mp) * cxy
@@ -1236,22 +1228,16 @@ def dq_outliers_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dot("p", "p").alias("spp"),
         exact_dot("q", "p").alias("sqp"),
     )
+    def mean(c: str) -> Column:
+        return to_double(c) / F.col("n")
+
     m = s.select(
         "n",
-        (to_double(F.col("sq")) / F.col("n")).alias("mq"),
-        (to_double(F.col("sp")) / F.col("n")).alias("mp"),
-        (
-            to_double(F.col("sqq")) / F.col("n")
-            - (to_double(F.col("sq")) / F.col("n")) * (to_double(F.col("sq")) / F.col("n"))
-        ).alias("cxx"),
-        (
-            to_double(F.col("spp")) / F.col("n")
-            - (to_double(F.col("sp")) / F.col("n")) * (to_double(F.col("sp")) / F.col("n"))
-        ).alias("cyy"),
-        (
-            to_double(F.col("sqp")) / F.col("n")
-            - (to_double(F.col("sq")) / F.col("n")) * (to_double(F.col("sp")) / F.col("n"))
-        ).alias("cxy"),
+        mean("sq").alias("mq"),
+        mean("sp").alias("mp"),
+        (mean("sqq") - mean("sq") * mean("sq")).alias("cxx"),
+        (mean("spp") - mean("sp") * mean("sp")).alias("cyy"),
+        (mean("sqp") - mean("sq") * mean("sp")).alias("cxy"),
     )
     dx = F.col("q") - F.col("mq")
     dy = F.col("p") - F.col("mp")
