@@ -1189,26 +1189,37 @@ TT_TREAT = "purchase"
 TT_CONTROL = "view"
 
 
+def _two_arm_moments(p: DataFrame, treat, control) -> DataFrame:
+    """One row (n1, s1, q1, n2, s2, q2): count, exact sum and exact sum
+    of squares of ``p.x`` where ``p.arm`` is ``treat`` (1) or ``control``
+    (2) — the inputs of every two-sample variance here."""
+    g = p.groupBy("arm").agg(
+        F.count(F.lit(1)).alias("n"), exact_sum("x").alias("s"), exact_dot("x", "x").alias("q")
+    )
+    arms = ((1, treat), (2, control))
+    return g.agg(*[F.max(F.when(F.col("arm") == a, F.col(c))).alias(f"{c}{i}") for i, a in arms for c in "nsq"])
+
+
+def _two_arm_moments_sql(p: str, treat: str, control: str) -> str:
+    """DuckDB twin of ``_two_arm_moments`` over relation ``p``: CTEs
+    ``g`` and ``m``, the latter the one-row result."""
+    arms = ((1, treat), (2, control))
+    picks = ", ".join(f"MAX(CASE WHEN arm = {a} THEN {c} END) AS {c}{i}" for i, a in arms for c in "nsq")
+    return f"""g AS (
+      SELECT arm, COUNT(*) AS n, {exact_sum_sql('x')} AS s, {exact_dot_sql('x', 'x')} AS q
+      FROM {p} GROUP BY arm
+    ),
+    m AS (SELECT {picks} FROM g)"""
+
+
 @query(
     "events_welch_ttest",
     oracle=f"""
-    WITH g AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             {exact_sum_sql(cents_sql('value'))} AS s,
-             {exact_dot_sql(cents_sql('value'), cents_sql('value'))} AS q
+    WITH p AS (
+      SELECT event_type AS arm, {cents_sql('value')} AS x
       FROM events WHERE event_type IN ('{TT_TREAT}', '{TT_CONTROL}')
-      GROUP BY event_type
     ),
-    m AS (
-      SELECT MAX(CASE WHEN event_type = '{TT_TREAT}' THEN n END) AS n1,
-             MAX(CASE WHEN event_type = '{TT_TREAT}' THEN s END) AS s1,
-             MAX(CASE WHEN event_type = '{TT_TREAT}' THEN q END) AS q1,
-             MAX(CASE WHEN event_type = '{TT_CONTROL}' THEN n END) AS n2,
-             MAX(CASE WHEN event_type = '{TT_CONTROL}' THEN s END) AS s2,
-             MAX(CASE WHEN event_type = '{TT_CONTROL}' THEN q END) AS q2
-      FROM g
-    ),
+    {_two_arm_moments_sql('p', f"'{TT_TREAT}'", f"'{TT_CONTROL}'")},
     v AS (
       SELECT n1, n2,
              {to_double_sql('s1')} / n1 AS m1,
@@ -1248,24 +1259,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin(TT_TREAT, TT_CONTROL)
     )
-    vc = cents("value")
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        exact_sum(vc).alias("s"),
-        exact_dot(vc, vc).alias("q"),
-    )
-
-    def pick(t: str, c: str):
-        return F.max(F.when(F.col("event_type") == t, F.col(c)))
-
-    m = g.agg(
-        pick(TT_TREAT, "n").alias("n1"),
-        pick(TT_TREAT, "s").alias("s1"),
-        pick(TT_TREAT, "q").alias("q1"),
-        pick(TT_CONTROL, "n").alias("n2"),
-        pick(TT_CONTROL, "s").alias("s2"),
-        pick(TT_CONTROL, "q").alias("q2"),
-    )
+    m = _two_arm_moments(ev.select(F.col("event_type").alias("arm"), cents("value").alias("x")), TT_TREAT, TT_CONTROL)
     v = m.select(
         "n1",
         "n2",
@@ -2978,25 +2972,10 @@ Z_BETA = 0.8416212335729143
     "events_power_mde",
     oracle=f"""
     WITH p AS (
-      SELECT user_id % {DID_VARIANTS} AS variant,
-             {cents_sql('value')} AS cents
+      SELECT user_id % {DID_VARIANTS} AS arm, {cents_sql('value')} AS x
       FROM events WHERE event_type = 'purchase'
     ),
-    g AS (
-      SELECT variant, COUNT(*) AS n,
-             {exact_sum_sql('cents')} AS s,
-             {exact_dot_sql('cents', 'cents')} AS q
-      FROM p GROUP BY variant
-    ),
-    m AS (
-      SELECT MAX(CASE WHEN variant = 1 THEN n END) AS n1,
-             MAX(CASE WHEN variant = 0 THEN n END) AS n2,
-             MAX(CASE WHEN variant = 1 THEN q END) AS q1,
-             MAX(CASE WHEN variant = 0 THEN q END) AS q2,
-             MAX(CASE WHEN variant = 1 THEN s END) AS s1,
-             MAX(CASE WHEN variant = 0 THEN s END) AS s2
-      FROM g
-    ),
+    {_two_arm_moments_sql('p', '1', '0')},
     v AS (
       SELECT n1, n2,
              {to_double_sql(comoment_sql('n1', 'q1', 's1'))} / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS var1,
@@ -3029,28 +3008,9 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
-        .select(
-            (F.col("user_id") % DID_VARIANTS).alias("variant"),
-            cents("value").alias("cents"),
-        )
+        .select((F.col("user_id") % DID_VARIANTS).alias("arm"), cents("value").alias("x"))
     )
-    g = p.groupBy("variant").agg(
-        F.count(F.lit(1)).alias("n"),
-        exact_sum("cents").alias("s"),
-        exact_dot("cents", "cents").alias("q"),
-    )
-
-    def pick(t: int, c: str):
-        return F.max(F.when(F.col("variant") == t, F.col(c)))
-
-    m = g.agg(
-        pick(1, "n").alias("n1"),
-        pick(0, "n").alias("n2"),
-        pick(1, "q").alias("q1"),
-        pick(0, "q").alias("q2"),
-        pick(1, "s").alias("s1"),
-        pick(0, "s").alias("s2"),
-    )
+    m = _two_arm_moments(p, 1, 0)
     v = m.select(
         "n1",
         "n2",
