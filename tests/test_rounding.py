@@ -143,6 +143,7 @@ def test_exact_sum_twin(spark, duck, case):
         # where DuckDB's widens to HUGEINT
         with pytest.raises(Exception, match="(?i)overflow"):
             spark.createDataFrame(rows, "x BIGINT, y BIGINT").agg(F.sum("x").cast("decimal(38,0)")).collect()
+        assert _moment_twins(spark, duck, rows, r.exact_sum("x"), "CAST(SUM(x) AS DECIMAL(38,0))")[1] == sum(xs)
 
 
 @pytest.mark.parametrize("case", sorted(MOMENT_ROWS))
