@@ -11,7 +11,7 @@ columns, text analysis) needed at 100 TB scale.
 Layout
 ------
 - ``session``     : SparkSession builder tuned for the target cluster.
-- ``sources``     : Parquet / JDBC / CSV / JSON readers, catalog listing.
+- ``sources``     : Parquet readers, storage layouts, Python data sources.
 - ``exporter``    : export-parity core (reference ``main.py:31-263``).
 - ``operators``   : relational + LLM-pipeline operators, registered as
                     named queries.

@@ -52,7 +52,6 @@ from pyspark.sql import functions as F
 
 from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog, eligible_fields
 from oracle_parquet_dumper_spark.sources.layouts import check_curve, curve_clustered
-from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust
 
 logger = logging.getLogger(__name__)
 
@@ -527,42 +526,6 @@ class SparkParquetExporter:
                 )
         logger.info("Exported all schemas in %.4f s", time.perf_counter() - t_all)
         return results
-
-
-@dataclass
-class SchemaDrift:
-    added: list[str]
-    removed: list[str]
-    retyped: list[str]  # "name: old -> new"
-
-    @property
-    def changed(self) -> bool:
-        return bool(self.added or self.removed or self.retyped)
-
-
-def schema_drift(old, new) -> SchemaDrift:
-    """Diff two Spark StructTypes by column name + type.  The
-    export-validation primitive: run it between the source's current
-    schema and the last export's parquet footer schema to catch columns
-    appearing, vanishing, or changing type before (not after) a 100 TB
-    re-export is launched."""
-    o = {f.name: f.dataType.simpleString() for f in old.fields}
-    n = {f.name: f.dataType.simpleString() for f in new.fields}
-    return SchemaDrift(
-        added=sorted(set(n) - set(o)),
-        removed=sorted(set(o) - set(n)),
-        retyped=sorted(f"{c}: {o[c]} -> {n[c]}" for c in set(o) & set(n) if o[c] != n[c]),
-    )
-
-
-def check_export_drift(
-    spark: SparkSession, catalog, schema: str, table: str, exported_path: str
-) -> SchemaDrift:
-    """Drift between the catalog's CURRENT schema for a table and what an
-    earlier export wrote (read from parquet footers — metadata only)."""
-    current = catalog.read_table(schema, table).schema
-    previous = read_parquet_robust(spark, exported_path).schema
-    return schema_drift(previous, current)
 
 
 def compact_table(

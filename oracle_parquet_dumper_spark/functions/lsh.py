@@ -55,56 +55,6 @@ PLANES_WIDE: list[list[float]] = [
 ]
 
 
-MIN_BITS_PER_BAND = 4
-MAX_BITS_PER_BAND = 16  # 64k buckets/band — past any single-table need
-DEFAULT_TARGET_OCCUPANCY = 64  # expected rows per (band, bucket)
-
-
-def capacity_bits(
-    n_rows: int, target_occupancy: int = DEFAULT_TARGET_OCCUPANCY
-) -> int:
-    """Bits per band for a corpus of ``n_rows`` — SCALING.md's measured
-    capacity rule, ``bits ~ log2(n / target_occupancy)``, as code.
-
-    Banded-LSH pair cost is bounded by bucket occupancy (~n/2^bits per
-    band), so candidate pairs grow ~n^2/4^bits: a FIXED bits choice is
-    quadratic in disguise (the 4-bit config measured 23.5x wall-clock
-    for 10x data at sf1; re-bucketing to 8 bits measured 3.3x).  Treat
-    bits like a partition count — re-derive it as the corpus grows:
-
-        bits = capacity_bits(df.count())        # or a catalog rowcount
-        bands = banded_buckets(df, id, vec, planes_for(bits), bits)
-
-    Clamped to [MIN_BITS_PER_BAND, MAX_BITS_PER_BAND]; occupancy is
-    the expected verification fan-in per bucket (recall rides the banded
-    s-curve 1-(1-p^r)^B, so larger corpora trade a little recall for
-    boundedness — pin it with a recall regression test, as
-    tests/test_ann_recall_sf1.py does for the registered configs)."""
-    import math
-
-    if n_rows <= 0:
-        return MIN_BITS_PER_BAND
-    bits = math.ceil(math.log2(max(n_rows / target_occupancy, 1.0)))
-    return max(MIN_BITS_PER_BAND, min(MAX_BITS_PER_BAND, bits))
-
-
-def planes_for(bits: int, dim: int = DIM, n_bands: int = N_SIGN_BANDS) -> list[list[float]]:
-    """Seeded hyperplane set for ``n_bands`` bands of ``bits`` bits.
-    Reproduces the registered sets exactly (seed 7 for 4-bit, 11 for
-    8-bit — the seeds the DuckDB oracle generators bake in), so a
-    capacity-driven re-bucket at one of those widths stays
-    oracle-checkable; other widths get their own deterministic seed."""
-    if bits == BITS_PER_BAND:
-        return PLANES
-    if bits == WIDE_BITS_PER_BAND:
-        return PLANES_WIDE
-    rng = np.random.default_rng(1000 + bits)
-    return [
-        [round(float(x), 6) for x in rng.standard_normal(dim)]
-        for _ in range(n_bands * bits)
-    ]
-
-
 def _sign_bit(vec_d: Column, plane: list[float]) -> Column:
     """'1'/'0' from the sign of the rounded <vec, plane> dot product.
     ``vec_d`` must already be array<double> (hoist the cast with

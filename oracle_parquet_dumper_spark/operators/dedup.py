@@ -554,8 +554,8 @@ def dedup_embedding_cosine_narrow_demo(spark: SparkSession, sf_dir: str) -> Data
     pairs grow ~n^2/256: SCALING.md measured 23.5x wall-clock for 10x
     data at sf1 (~50M exact verifications), while the 8-bit flagship
     ``dedup_embedding_cosine_lsh`` measured 3.3x on the same decade.
-    Bits per band must scale ~log2(n / target_occupancy) — see
-    ``functions.lsh.capacity_bits``.  Still oracle-checked (the SQL twin
+    Bits per band must scale ~log2(n / target_occupancy) (SCALING.md's
+    capacity rule).  Still oracle-checked (the SQL twin
     regenerates the same seeded planes), and its denser candidate set is
     what keeps the small-SF fixture oracle rich (268 pairs at sf0.01)."""
     from oracle_parquet_dumper_spark.functions.lsh import banded_buckets
@@ -1545,7 +1545,7 @@ def _emb_lsh_wide_oracle() -> str:
     tags=("dedup", "embedding", "lsh", "flagship"),
     bench=True,
     band_bits=8,
-    capped_occupancy=True,  # capacity-scaled: functions.lsh.capacity_bits
+    capped_occupancy=True,  # capacity-scaled: 8 bits per band (SCALING.md)
 )
 def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup detection blocked by banded sign-LSH — the
@@ -1556,7 +1556,7 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded LSH is bounded by bucket occupancy (~n/2^bits per band), so
     candidate pairs grow ~n^2/4^bits — the bits knob must scale
     ~log2(n / target_occupancy) exactly like a partition count
-    (``functions.lsh.capacity_bits`` derives it from corpus size).
+    (SCALING.md's capacity rule derives it from corpus size).
     SCALING.md measured the decade sf0.1 -> sf1: this 8-bit config 3.3x
     for 10x data; the 4-bit config it replaced 23.5x (~50M exact
     verifications) — that one survives as the demo-tagged, bench-barred

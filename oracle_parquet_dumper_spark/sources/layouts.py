@@ -1,12 +1,6 @@
-"""Storage layouts for scale: hive-partitioned datasets and bucketed
-tables (SURVEY.md §2 Part B sources row; SCALING.md co-location story).
-
-Two layouts turn the engine's biggest shuffles into metadata operations:
-
-- **Hive partitioning** (``partitionBy`` directories): predicates on the
-  partition column prune whole directories at planning time — the scan
-  never lists, let alone reads, the excluded partitions.  The right
-  layout for low-cardinality routing columns (lang, source, dt).
+"""Storage layouts for scale: bucketed tables and space-filling-curve
+clustering (SURVEY.md §2 Part B sources row; SCALING.md co-location
+story).
 
 - **Bucketing** (``bucketBy`` + ``saveAsTable``): rows are pre-hashed
   into a fixed bucket count on the join/agg key, so a join of two
@@ -14,7 +8,11 @@ Two layouts turn the engine's biggest shuffles into metadata operations:
   exchange on either side — the shuffle happened once at write time and
   is amortized over every subsequent join.  The right layout for the
   huge fact-fact joins (orders x lineitem) that dominate 100 TB plans.
-  ``tests/test_layouts.py`` asserts the exchange-free plan.
+  ``tests/test_bucketing.py`` asserts the exchange-free plan.
+
+- **Curve clustering** (Hilbert / Z-order range repartition): every
+  written file gets a tight min/max envelope on several columns at
+  once, so row-group and file statistics skip on each of them.
 
 The reference (main.py:110-189) always writes one flat directory per
 table; both layouts here are Part B extensions over its sink.
@@ -23,40 +21,6 @@ table; both layouts here are Part B extensions over its sink.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    compression: str = "zstd",
-    mode: str = "overwrite",
-) -> None:
-    """Hive-partitioned parquet dataset: one directory level per
-    partition column value.  Keep partition columns low-cardinality —
-    each distinct tuple is a directory and at least one file; a
-    high-cardinality partition column is the small-files anti-pattern."""
-    (
-        df.write.mode(mode)
-        .option("compression", compression)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def read_partitioned(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Read a hive-partitioned dataset.  Filters on partition columns
-    become ``PartitionFilters`` in the scan (directory pruning);
-    ``basePath`` semantics and partition-column typing follow Spark's
-    defaults (partition values parse as strings unless
-    ``spark.sql.sources.partitionColumnTypeInference.enabled``)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(path)
 
 
 def write_bucketed_table(
@@ -294,17 +258,6 @@ def ensure_bucketed_state(
         f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
     )
     return table
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: str) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key.  With
-    bucketing aligned this plans as a SortMergeJoin whose children are
-    bare bucketed scans — zero Exchange nodes (asserted in
-    tests/test_layouts.py); the only remaining cost is the per-bucket
-    sort, which ``sort_col`` at write time also removes.  The merge hint
-    pins the fact-fact shape (at fixture scale size stats would pick a
-    broadcast and never exercise the bucketing)."""
-    return spark.table(left_table).hint("merge").join(spark.table(right_table), on)
 
 
 # --- Space-filling-curve clustering (multi-dimensional file skipping) -------

@@ -150,7 +150,7 @@ def read_parquet_robust(spark: SparkSession, path: str) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Keep this the single scan entry point so a
-    future switch to a catalog/Delta/iceberg source is one-line."""
+    switch to another table source is one line."""
     return read_parquet_robust(spark, table_path(sf_dir, name))
 
 

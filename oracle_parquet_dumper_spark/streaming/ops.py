@@ -10,8 +10,10 @@ correctness contract (incremental view maintenance of the same plan).
 
 Scale notes: watermarks bound state; tumbling/sliding windows keyed by
 (window, type) shard across executors; session windows use Spark's
-native session_window state merging; dedup-in-stream keeps only keys
-within the watermark horizon (dropDuplicatesWithinWatermark).
+native session_window state merging.  Dedup-in-stream (``stream_dedup``)
+is a global ``dropDuplicates`` on (user_id, event_type): its state holds
+every distinct pair for the life of the query, because the watermark
+column is not part of the key.
 """
 
 from __future__ import annotations
@@ -114,8 +116,15 @@ def session_windows(
 
 
 def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """In-stream exact dedup on (user_id, event_type): state is bounded
-    by the watermark horizon."""
+    """In-stream exact dedup on (user_id, event_type): one event per pair
+    survives, as in the batch twin ``stream_dedup_pairs``.
+
+    ``ts`` is not a dedup key, so the watermark never evicts a pair:
+    state grows with the number of distinct pairs (on the events
+    fixture the dedupe operator ends with ``numRowsTotal`` equal to the
+    distinct-pair count and ``numRowsRemoved`` 0).  Eviction would need
+    ``dropDuplicatesWithinWatermark``, which only drops repeats inside
+    the horizon and so is not the batch twin's global dedup."""
     return events.withWatermark("ts", watermark).dropDuplicates(["user_id", "event_type"])
 
 

@@ -697,47 +697,6 @@ def test_dedup_incremental_planted_verdicts(spark, tmp_path):
     assert (rows[21].verdict, rows[21].matched_id) == ("novel", None)
 
 
-def test_capacity_bits_rule():
-    """SCALING.md's capacity rule as code: bits ~ log2(n/occupancy),
-    clamped, monotone in n — and it reproduces the two registered
-    configs (4-bit demo scale, 8-bit flagship scale)."""
-    from oracle_parquet_dumper_spark.functions.lsh import (
-        MAX_BITS_PER_BAND,
-        MIN_BITS_PER_BAND,
-        capacity_bits,
-    )
-
-    assert capacity_bits(0) == MIN_BITS_PER_BAND
-    assert capacity_bits(1_000) == MIN_BITS_PER_BAND  # sf0.01-ish corpus
-    assert capacity_bits(16_000) == 8  # sf1-ish corpus -> the flagship's banding
-    assert capacity_bits(10**12) == MAX_BITS_PER_BAND  # clamped at the top
-    # monotone non-decreasing in n
-    prev = 0
-    for n in (1, 100, 10_000, 10**6, 10**9, 10**12):
-        b = capacity_bits(n)
-        assert b >= prev
-        prev = b
-    # occupancy knob moves bits the right way
-    assert capacity_bits(10**6, target_occupancy=16) >= capacity_bits(
-        10**6, target_occupancy=256
-    )
-
-
-def test_planes_for_reproduces_registered_sets():
-    from oracle_parquet_dumper_spark.functions.lsh import (
-        N_SIGN_BANDS,
-        PLANES,
-        PLANES_WIDE,
-        planes_for,
-    )
-
-    assert planes_for(4) is PLANES
-    assert planes_for(8) is PLANES_WIDE
-    six = planes_for(6)
-    assert len(six) == N_SIGN_BANDS * 6 and len(six[0]) == 64
-    assert six == planes_for(6)  # deterministic
-
-
 def test_dedup_incremental_stored_matches_recompute(spark, sf_dir, tmp_path):
     """The stored-state admission path returns byte-identical verdicts
     to the per-batch recompute variant, and its plan proves the corpus

@@ -450,33 +450,6 @@ def test_compact_table_merges_small_files(spark, tmp_path):
     assert got == {(i, f"row{i}") for i in range(50)}
 
 
-def test_schema_drift_detection(spark, tmp_path):
-    """Drift report catches added, removed, and retyped columns between
-    an old export's footers and the source's current schema."""
-    from oracle_parquet_dumper_spark.exporter import check_export_drift, schema_drift
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pq.write_table(
-        pa.table({"id": pa.array([1], pa.int64()), "v": pa.array(["a"])}),
-        src / "T.parquet",
-    )
-    exported = tmp_path / "exported"
-    spark.createDataFrame(
-        [(1, 1.5, "x")], "id long, gone double, v string"
-    ).write.parquet(str(exported))
-
-    cat = ParquetDirectoryCatalog(spark, str(src))
-    drift = check_export_drift(spark, cat, "main", "T", str(exported))
-    assert drift.changed
-    assert drift.added == [] and drift.removed == ["gone"] and drift.retyped == []
-
-    old = spark.createDataFrame([(1,)], "id int").schema
-    new = spark.createDataFrame([(1,)], "id bigint").schema
-    assert schema_drift(old, new).retyped == ["id: int -> bigint"]
-    assert not schema_drift(new, new).changed
-
-
 def _mini_src(tmp_path, n=3):
     src = tmp_path / "src"
     src.mkdir()

@@ -1,79 +1,8 @@
-"""Storage-layout tests: partition pruning and exchange-free bucketed
-joins — the two write-time layouts that delete read-time shuffles."""
+"""Space-filling-curve layout tests: Z-order and Hilbert keys give every
+file a tight envelope on several columns at once.  Bucketed joins are
+covered in ``tests/test_bucketing.py``."""
 
 from __future__ import annotations
-
-from oracle_parquet_dumper_spark.sources import load_table
-from oracle_parquet_dumper_spark.sources.layouts import (
-    bucketed_join,
-    read_partitioned,
-    write_bucketed_table,
-    write_partitioned,
-)
-
-
-def _executed(df) -> str:
-    # Run an action on the df's OWN queryExecution so AQE finalizes the
-    # plan we inspect (a noop write executes a different QE).
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_partitioned_write_prunes_directories(spark, smoke_sf_dir, tmp_path):
-    docs = load_table(spark, smoke_sf_dir, "documents")
-    out = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, out, ["lang"])
-
-    langs = {r.lang for r in docs.select("lang").distinct().collect()}
-    assert (tmp_path / "docs_by_lang" / "lang=en").is_dir()
-
-    back = read_partitioned(spark, out)
-    assert back.count() == docs.count()
-
-    filtered = back.where("lang = 'en'").select("doc_id")
-    plan = _executed(filtered)
-    # The lang predicate must be a partition filter (directory pruning),
-    # not a data filter evaluated per row-group.
-    assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
-    en_rows = docs.where("lang = 'en'").count()
-    assert filtered.count() == en_rows and en_rows > 0
-    assert len(langs) > 1  # pruning actually excluded something
-
-
-def test_bucketed_join_has_no_exchange(spark, smoke_sf_dir, tmp_path):
-    orders = load_table(spark, smoke_sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    li = load_table(spark, smoke_sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    try:
-        write_bucketed_table(
-            orders, "orders_b", str(tmp_path / "orders_b"), "o_orderkey", 8,
-            sort_col="o_orderkey",
-        )
-        write_bucketed_table(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "lineitem_b", str(tmp_path / "lineitem_b"), "o_orderkey", 8,
-            sort_col="o_orderkey",
-        )
-        joined = bucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey")
-        plan = _executed(joined)
-        # Both sides read pre-bucketed files: the join must plan with
-        # ZERO shuffles (the point of paying the bucket shuffle at
-        # write time).
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert "SelectedBucketsCount" in plan
-
-        # Same rows as the plain (shuffling) join.
-        expect = orders.join(
-            li, orders.o_orderkey == li.l_orderkey
-        ).count()
-        assert joined.count() == expect > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
 def test_zorder_tightens_file_ranges_on_both_dims(spark, tmp_path):

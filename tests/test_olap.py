@@ -1,21 +1,24 @@
-"""OLAP session over exported output: export with the reference layout,
-attach the export directory, and query it with SQL — the full
-ingest-then-query loop the reference splits across two systems."""
+"""Export-then-query over exported output: export with the reference
+layout, register each exported table as a view, and query it with SQL —
+the full ingest-then-query loop the reference splits across two
+systems."""
 
 from __future__ import annotations
 
+import os
+
 from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog
 from oracle_parquet_dumper_spark.exporter import SparkParquetExporter, exporter
-from oracle_parquet_dumper_spark.olap import OlapSession
+from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust
 
 
 def test_export_then_query_roundtrip(spark, smoke_sf_dir, tmp_path):
     out = str(tmp_path / "warehouse")
     exporter(spark, smoke_sf_dir, out, table_name_include_pattern="nation|region")
-    olap = OlapSession(spark)
-    names = olap.attach_dir(out)
-    assert names == ["main_nation", "main_region"]
-    got = olap.sql(
+    assert sorted(os.listdir(f"{out}/main")) == ["nation", "region"]
+    for table in ("nation", "region"):
+        read_parquet_robust(spark, f"{out}/main/{table}").createOrReplaceTempView(f"main_{table}")
+    got = spark.sql(
         """
         SELECT r_name, COUNT(*) AS n_nations
         FROM main_nation JOIN main_region ON n_regionkey = r_regionkey
@@ -24,14 +27,6 @@ def test_export_then_query_roundtrip(spark, smoke_sf_dir, tmp_path):
     ).collect()
     assert sum(r.n_nations for r in got) == 25
     assert len(got) == 5
-
-
-def test_attach_fixture_dir(spark, smoke_sf_dir):
-    olap = OlapSession(spark)
-    names = olap.attach_dir(smoke_sf_dir)
-    assert "lineitem" in names and "embeddings" in names
-    n = olap.sql("SELECT COUNT(*) AS n FROM region").collect()[0].n
-    assert n == 5
 
 
 def test_exporter_catalog_introspection(spark, smoke_sf_dir):

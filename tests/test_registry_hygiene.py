@@ -400,3 +400,119 @@ def test_moment_policy_written_once():
     assert _moment_idiom_hits("SUM(CAST(e AS DECIMAL(38,18))), CAST(x AS DECIMAL(38,12))") == []
     assert _moment_idiom_hits("hugeint_sql('1') << 63") == []
     assert _moment_idiom_hits("F.round(F.log(F.col('r')) * 1000000), round(x * 1000)") == []
+
+
+# Package surface must be reached by the program, not only by tests.  A
+# top-level function or class in the package is reached when its name
+# appears as an AST Name, Attribute or import alias in a non-test .py
+# file, outside its own definition and outside every other unreached
+# definition (so the rule runs to a fixed point).  Registered queries
+# (``@query``) are roots.  The names below are kept on purpose; each
+# entry says why, and they count as roots too.
+SURFACE_KEEP = {
+    "compact_table": "public maintenance API: rewrite an export's small files, size-rolled",
+    "lsh_band_domain_violations": "the LSH band-domain rule the registry tests enforce",
+    "compare": "row-set diff driver for engine-vs-engine tests (testing.py)",
+    "read_events_stream": "file-source driver of the events stream, beside its operators",
+    "run_to_memory": "availableNow memory-sink driver, beside the stream operators",
+    "stream_dedup": "dedup-in-stream (SURVEY §2 Streaming); batch twin stream_dedup_pairs",
+    "register_synthetic_docs": "entry point the synthetic-docs data source documents",
+    "register_jsonl_shards": "entry point the JSONL-shard sink documents",
+    # applyInPandasWithState wrappers, each tested stream-equals-batch;
+    # no batch query calls their kernels, so the twin is named here
+    "running_totals": "stateful stream; checked against a batch per-user sum",
+    "rolling_anomalies": "stateful stream; batch twin ts_anomaly_rolling_zscore",
+    "ewma_stream": "stateful stream; batch twin window_ewma_truncated",
+    "holt_stream": "stateful stream; batch twin window_holt_linear_truncated",
+    "markov_stream": "stateful stream; batch twin events_markov_transitions",
+    "sprt_monitor": "stateful stream; batch twin events_sprt_sequential",
+    "cumulative_distinct_monitor": "stateful stream; batch twin stream_cumulative_distinct",
+    "closed_sessions_monitor": "stateful stream; batch twin stream_closed_sessions",
+    "growth_class_monitor": "stateful stream; batch twin stream_user_day_class",
+    "heavy_hitters_monitor": "stateful stream; batch twin stream_heavy_hitters",
+}
+
+PKG = "oracle_parquet_dumper_spark"
+
+
+def _program_sources() -> dict[str, str]:
+    """relpath -> text of every non-test .py file in the repo."""
+    out = {}
+    for d, dirs, files in os.walk(REPO):
+        dirs[:] = [x for x in dirs if not x.startswith(".") and x not in ("tests", "__pycache__")]
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(d, fn)
+                out[os.path.relpath(path, REPO)] = open(path).read()
+    return out
+
+
+def _names_used(node) -> set[str]:
+    import ast
+
+    used = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.alias):
+            used.add(n.name.rsplit(".", 1)[-1])
+    return used
+
+
+def _is_query(node) -> bool:
+    import ast
+
+    for d in getattr(node, "decorator_list", []):
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", None) == "query" or getattr(f, "attr", None) == "query":
+            return True
+    return False
+
+
+def _test_only_surface(sources: dict[str, str], keep=frozenset()) -> set[str]:
+    """``module:name`` of every package definition no program code reaches."""
+    import ast
+
+    defs = {}  # (module, name) -> names its body uses
+    live = set()  # names used by module-level code, queries and kept names
+    for rel, text in sources.items():
+        for stmt in ast.parse(text).body:
+            if rel.startswith(PKG + os.sep) and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                if _is_query(stmt) or stmt.name in keep:
+                    live |= _names_used(stmt)
+                else:
+                    defs[(rel, stmt.name)] = _names_used(stmt) - {stmt.name}
+            else:
+                live |= _names_used(stmt)
+    dead: set = set()
+    while True:
+        used = live.union(*(u for k, u in defs.items() if k not in dead))
+        new = {k for k in defs if k[1] not in used} - dead
+        if not new:
+            return {f"{rel}:{name}" for rel, name in dead}
+        dead |= new
+
+
+def test_no_test_only_package_surface():
+    sources = _program_sources()
+    dead = _test_only_surface(sources, frozenset(SURFACE_KEEP))
+    assert not dead, (
+        "package names only tests reach; delete them or add a reasoned "
+        f"SURFACE_KEEP entry: {sorted(dead)}"
+    )
+    # every kept name is still defined and still needs its entry
+    needed = {k.rsplit(":", 1)[1] for k in _test_only_surface(sources)}
+    assert set(SURFACE_KEEP) <= needed, sorted(set(SURFACE_KEEP) - needed)
+    # the rule fires on a planted test-only function, and runs to a
+    # fixed point: a helper only that function calls goes with it
+    planted = dict(sources)
+    planted[os.path.join(PKG, "planted.py")] = (
+        "def planted_helper():\n    return 1\n\n\n"
+        "def planted_api():\n    return planted_helper()\n"
+    )
+    got = _test_only_surface(planted, frozenset(SURFACE_KEEP))
+    assert {g.rsplit(":", 1)[1] for g in got} == {"planted_api", "planted_helper"}, got

@@ -1,7 +1,5 @@
-"""Source/sink round-trips: CSV and JSON preserve the fixture content
-(with explicit schemas — the no-inference-at-scale policy); the parquet
-loader truncates nanosecond timestamps as DuckDB does, and infers each
-file version's schema once."""
+"""Parquet source tests: the loader truncates nanosecond timestamps as
+DuckDB does, and infers each file version's schema once."""
 
 from __future__ import annotations
 
@@ -15,79 +13,10 @@ from pyspark.errors import AnalysisException
 
 from oracle_parquet_dumper_spark.sources import load_table
 from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust, table_path
-from oracle_parquet_dumper_spark.sources.text_formats import (
-    read_avro,
-    read_csv,
-    read_json,
-    read_orc,
-    write_csv,
-    write_json,
-    write_orc,
-)
 
 
 def _sorted_rows(df):
     return sorted(tuple(str(v) for v in r) for r in df.collect())
-
-
-def test_csv_roundtrip(spark, smoke_sf_dir, tmp_path):
-    nation = load_table(spark, smoke_sf_dir, "nation")
-    out = str(tmp_path / "nation_csv")
-    write_csv(nation, out)
-    back = read_csv(spark, out, schema=nation.schema)
-    assert _sorted_rows(back) == _sorted_rows(nation)
-
-
-def test_json_roundtrip(spark, smoke_sf_dir, tmp_path):
-    customer = load_table(spark, smoke_sf_dir, "customer")
-    out = str(tmp_path / "customer_json")
-    write_json(customer, out)
-    back = read_json(spark, out, schema=customer.schema)
-    assert _sorted_rows(back) == _sorted_rows(customer)
-
-
-def test_csv_schema_inference(spark, smoke_sf_dir, tmp_path):
-    region = load_table(spark, smoke_sf_dir, "region")
-    out = str(tmp_path / "region_csv")
-    write_csv(region, out)
-    inferred = read_csv(spark, out)  # no schema -> inference
-    assert set(inferred.columns) == set(region.columns)
-    assert inferred.count() == region.count()
-
-
-def test_orc_roundtrip_and_pushdown(spark, smoke_sf_dir, tmp_path):
-    """ORC round-trips exactly and keeps the scan-level pushdown story:
-    a filtered read must show PushedFilters on the OrcScan."""
-    nation = load_table(spark, smoke_sf_dir, "nation")
-    out = str(tmp_path / "nation_orc")
-    write_orc(nation, out)
-    back = read_orc(spark, out, schema=nation.schema)
-    assert _sorted_rows(back) == _sorted_rows(nation)
-    filtered = read_orc(spark, out).where("n_regionkey = 2").select("n_name")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan
-
-
-def test_avro_gated_clearly(spark, smoke_sf_dir, tmp_path):
-    """Without the spark-avro connector jar the helpers raise a clear
-    RuntimeError (not a raw py4j stack); with it, they round-trip."""
-    from oracle_parquet_dumper_spark.sources.text_formats import _require_avro
-
-    region = load_table(spark, smoke_sf_dir, "region")
-    try:
-        _require_avro(spark)
-        have_avro = True
-    except RuntimeError:
-        have_avro = False
-    out = str(tmp_path / "region_avro")
-    if have_avro:
-        from oracle_parquet_dumper_spark.sources.text_formats import write_avro
-
-        write_avro(region, out)
-        assert _sorted_rows(read_avro(spark, out)) == _sorted_rows(region)
-    else:
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            read_avro(spark, out)
 
 
 def test_events_ns_timestamp_matches_duckdb(spark, sf_dir, duck):
@@ -103,18 +32,6 @@ def test_events_ns_timestamp_matches_duckdb(spark, sf_dir, duck):
         ).fetchall()
     }
     assert got == expect
-
-
-def test_xml_roundtrip(spark, smoke_sf_dir, tmp_path):
-    """Native XML (Spark 4): write nation with custom row/root tags,
-    read back with explicit schema, content identical."""
-    from oracle_parquet_dumper_spark.sources.text_formats import read_xml, write_xml
-
-    nation = spark.read.parquet(f"{smoke_sf_dir}/nation.parquet")
-    p = str(tmp_path / "nation_xml")
-    write_xml(nation, p, row_tag="nation", root_tag="nations")
-    back = read_xml(spark, p, row_tag="nation", schema=nation.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
 
 
 def test_split_scan_footer_read_failure_assumes_one_row_group(spark, tmp_path, monkeypatch):

@@ -36,12 +36,17 @@ def test_stream_session_equals_batch(spark, smoke_sf_dir):
 
 def test_stream_dedup_bounded_state(spark, smoke_sf_dir):
     stream = ops.stream_dedup(ops.read_events_stream(spark, smoke_sf_dir))
-    ops.run_to_memory(stream, "t_dedup", output_mode="append")
+    q = ops.run_to_memory(stream, "t_dedup", output_mode="append")
     got = spark.table("t_dedup")
     batch = load_table(spark, smoke_sf_dir, "events")
     # one survivor per (user_id, event_type) pair
-    assert got.count() == batch.select("user_id", "event_type").distinct().count()
+    pairs = batch.select("user_id", "event_type").distinct().count()
+    assert got.count() == pairs
     assert got.select("user_id", "event_type").distinct().count() == got.count()
+    # state is bounded by the distinct pairs, not by the watermark: ts is
+    # not a key, so no pair is ever evicted
+    (dedupe,) = q.lastProgress["stateOperators"]
+    assert (dedupe["numRowsTotal"], dedupe["numRowsRemoved"]) == (pairs, 0)
 
 
 def test_apply_in_pandas_with_state(spark, smoke_sf_dir):
