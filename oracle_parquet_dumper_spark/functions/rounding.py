@@ -15,7 +15,8 @@ helpers (tests/test_registry_hygiene.py fails on a raw copy elsewhere):
   spelling ``spark.sql()`` also accepts.  On 50,000 random values per
   type (digit count uniform; Spark 4.1, DuckDB 1.0) DuckDB's direct
   cast misses on 409 DECIMAL(38,0), 4,653 DECIMAL(25,6) and no
-  DECIMAL(18,0) values; Spark's cast equals its string hop on all.
+  18-digit integer DECIMAL values; Spark's cast equals its string hop
+  on all.
 - ``dec_money``/``dec_rate``/``dec_one_minus``/``dec_one_plus``:
   capture 2-decimal columns exactly before multiplying.  A double
   product cast per row to DECIMAL(25,6) is not portable: Spark rounds

@@ -29,7 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oracle_parquet_dumper_spark.functions.rounding import cents_py, to_double_sql
+from oracle_parquet_dumper_spark.functions.rounding import (
+    cents_py,
+    comoment,
+    comoment_sql,
+    exact_dot,
+    exact_dot_sql,
+    exact_sum,
+    exact_sum_sql,
+    to_double,
+    to_double_sql,
+)
 from oracle_parquet_dumper_spark.functions.tokens import md5_long, md5_long_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
@@ -1071,22 +1081,18 @@ _ASSORT_SQL = f"""
     ),
     a AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS m_edges,
-             SUM(CAST(du AS DECIMAL(18,0))) AS sx,
-             SUM(CAST(dv AS DECIMAL(18,0))) AS sy,
-             SUM(CAST(du AS DECIMAL(18,0)) * CAST(dv AS DECIMAL(18,0))) AS sxy,
-             SUM(CAST(du AS DECIMAL(18,0)) * CAST(du AS DECIMAL(18,0))) AS sxx,
-             SUM(CAST(dv AS DECIMAL(18,0)) * CAST(dv AS DECIMAL(18,0))) AS syy
+             {exact_sum_sql('du')} AS sx,
+             {exact_sum_sql('dv')} AS sy,
+             {exact_dot_sql('du', 'dv')} AS sxy,
+             {exact_dot_sql('du', 'du')} AS sxx,
+             {exact_dot_sql('dv', 'dv')} AS syy
       FROM j
     ),
     n AS (SELECT CAST(COUNT(DISTINCT src) AS BIGINT) AS n_nodes FROM edges)
     SELECT m_edges, n_nodes,
-           (CAST(m_edges AS DOUBLE) * {to_double_sql('sxy')}
-            - {to_double_sql('sx')} * {to_double_sql('sy')})
-           / sqrt((CAST(m_edges AS DOUBLE) * {to_double_sql('sxx')}
-                   - {to_double_sql('sx')} * {to_double_sql('sx')})
-                  * (CAST(m_edges AS DOUBLE) * {to_double_sql('syy')}
-                     - {to_double_sql('sy')} * {to_double_sql('sy')}))
-             AS assortativity
+           {to_double_sql(comoment_sql('m_edges', 'sxy', 'sx', 'sy'))}
+           / sqrt({to_double_sql(comoment_sql('m_edges', 'sxx', 'sx'))}
+                  * {to_double_sql(comoment_sql('m_edges', 'syy', 'sy'))}) AS assortativity
     FROM a CROSS JOIN n
     """
 
@@ -1107,11 +1113,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/0 — measured at sf0.01 where it IS complete), while the part
     graph keeps constant average degree as SF grows.
 
-    Determinism: degrees and all five moment sums are exact integers
-    carried as DECIMAL (du*dv products stay in DECIMAL(37,0) headroom,
-    so the sums never overflow at any SF); each exact sum crosses to
-    double through ONE ``to_double`` (functions/rounding.py), and the
-    Pearson formula is then an identical IEEE op tree on both engines.
+    Determinism: the five moment sums (``exact_sum``/``exact_dot``) and
+    the co-moment numerators m·Σxy − Σx·Σy (``comoment``) are exact
+    integers (functions/rounding.py); each numerator crosses to double
+    through ONE ``to_double``, and the Pearson formula is then an
+    identical IEEE op tree on both engines.
 
     Scale shape: edge build is keyed by l_orderkey (pair count bounded
     by order size — never quadratic in table size); endpoint degrees
@@ -1131,30 +1137,24 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     j = edges.select(
-        F.count(F.lit(1)).over(W.partitionBy("src")).cast("decimal(18,0)").alias("du"),
-        F.count(F.lit(1)).over(W.partitionBy("dst")).cast("decimal(18,0)").alias("dv"),
+        F.count(F.lit(1)).over(W.partitionBy("src")).alias("du"),
+        F.count(F.lit(1)).over(W.partitionBy("dst")).alias("dv"),
     )
     a = j.agg(
         F.count(F.lit(1)).cast("long").alias("m_edges"),
-        F.sum("du").alias("sx"),
-        F.sum("dv").alias("sy"),
-        F.sum(F.col("du") * F.col("dv")).alias("sxy"),
-        F.sum(F.col("du") * F.col("du")).alias("sxx"),
-        F.sum(F.col("dv") * F.col("dv")).alias("syy"),
+        exact_sum("du").alias("sx"),
+        exact_sum("dv").alias("sy"),
+        exact_dot("du", "dv").alias("sxy"),
+        exact_dot("du", "du").alias("sxx"),
+        exact_dot("dv", "dv").alias("syy"),
     )
     n1 = edges.agg(F.countDistinct("src").cast("long").alias("n_nodes"))  # 1-row fold
-    md = F.col("m_edges").cast("double")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
+    m = F.col("m_edges")
+    cov = to_double(comoment(m, "sxy", "sx", "sy"))
+    var_u = to_double(comoment(m, "sxx", "sx"))
+    var_v = to_double(comoment(m, "syy", "sy"))
     return a.crossJoin(F.broadcast(n1)).select(
-        "m_edges",
-        "n_nodes",
-        (
-            (md * F.col("sxy").cast("double") - sxd * syd)
-            / F.sqrt(
-                (md * F.col("sxx").cast("double") - sxd * sxd)
-                * (md * F.col("syy").cast("double") - syd * syd)
-            )
-        ).alias("assortativity"),
+        "m_edges", "n_nodes", (cov / F.sqrt(var_u * var_v)).alias("assortativity")
     )
 
 

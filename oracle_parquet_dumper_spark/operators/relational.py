@@ -3773,13 +3773,9 @@ def agg_wls_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM r GROUP BY 1
     )
     SELECT l_returnflag, n,
-           (CAST(n AS DOUBLE) * {to_double_sql('sqp')}
-            - {to_double_sql('sq')} * {to_double_sql('sp')})
-           / sqrt((CAST(n AS DOUBLE) * {to_double_sql('sqq')}
-                   - {to_double_sql('sq')} * {to_double_sql('sq')})
-                  * (CAST(n AS DOUBLE) * {to_double_sql('spp')}
-                     - {to_double_sql('sp')} * {to_double_sql('sp')}))
-             AS spearman_rho
+           {to_double_sql(comoment_sql('n', 'sqp', 'sq', 'sp'))}
+           / sqrt({to_double_sql(comoment_sql('n', 'sqq', 'sq'))}
+                  * {to_double_sql(comoment_sql('n', 'spp', 'sp'))}) AS spearman_rho
     FROM s ORDER BY l_returnflag
     """,
     tags=("agg", "stats", "window", "skew-source"),
@@ -3801,9 +3797,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation dependence instead of chasing a unique key).
 
     Determinism: rank moments are exact integer sums (rq·rp ~ n²,
-    so BIGINT sums overflow one decade past sf1); each crosses to double
-    once (``to_double``), then the Pearson-on-ranks formula is one
-    shared IEEE tree.
+    so BIGINT sums overflow one decade past sf1), and the co-moment
+    numerators n·Σxy − Σx·Σy (``comoment``) are exact too: each
+    numerator crosses to double once (``to_double``), then
+    Pearson-on-ranks is one shared IEEE tree.
 
     Scale shape — the first draft was a scale-killer and the decade
     sweep caught it: RANK() windows partitioned by l_returnflag have
@@ -3850,15 +3847,10 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_dot("rq", "rq").alias("sqq"),
         exact_dot("rp", "rp").alias("spp"),
     )
-    nd = F.col("n").cast("double")
+    n = F.col("n")
+    cov = to_double(comoment(n, "sqp", "sq", "sp"))
+    var_q = to_double(comoment(n, "sqq", "sq"))
+    var_p = to_double(comoment(n, "spp", "sp"))
     return s.select(
-        "l_returnflag",
-        "n",
-        (
-            (nd * to_double(F.col("sqp")) - to_double(F.col("sq")) * to_double(F.col("sp")))
-            / F.sqrt(
-                (nd * to_double(F.col("sqq")) - to_double(F.col("sq")) * to_double(F.col("sq")))
-                * (nd * to_double(F.col("spp")) - to_double(F.col("sp")) * to_double(F.col("sp")))
-            )
-        ).alias("spearman_rho"),
+        "l_returnflag", "n", (cov / F.sqrt(var_q * var_p)).alias("spearman_rho")
     ).orderBy("l_returnflag")

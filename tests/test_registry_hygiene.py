@@ -365,14 +365,17 @@ def test_float_policy_written_once():
 # place the 128-bit integer type is spelled.  DECIMAL(38,18) and
 # DECIMAL(38,12) are NOT this rule: they are the fixed-point vector
 # sums of operators/similarity.py, so the pattern stops at scale 0.
+# DECIMAL(18,0) is a hand-written narrower spelling of the same exact
+# sums, and the owner never builds it.
 # Integer cents, the moments' usual input, are ``cents``/``cents_py``.
 MOMENT_POLICY_IDIOMS = {
     "DECIMAL(38,0)": re.compile(r"decimal\(\s*38\s*,\s*0\s*\)", re.I),
+    "DECIMAL(18,0)": re.compile(r"decimal\(\s*18\s*,\s*0\s*\)", re.I),
     "d38 local": re.compile(r"\bd38\b"),
     "HUGEINT": re.compile(r"\bhugeint\b", re.I),
     "inline cents round": re.compile(r"\bround\(\s*[\w.\"(){}]+?\s*\*\s*100\s*\)"),
 }
-MOMENT_NOWHERE = {"d38 local"}
+MOMENT_NOWHERE = {"d38 local", "DECIMAL(18,0)"}
 
 
 def _moment_idiom_hits(src: str) -> list[str]:
@@ -389,9 +392,12 @@ def test_moment_policy_written_once():
         'd38 = "decimal(38,0)"',
         "SUM(CAST(v AS hugeint) * v) OVER w",
         'F.round(F.col("value") * 100).cast("long")',
+        "SUM(CAST(du AS DECIMAL(18,0))\n * CAST(dv AS DECIMAL(18, 0)))",
+        'F.count(F.lit(1)).over(w).cast("decimal(18,0)")',
     ]
     assert [_moment_idiom_hits(s) for s in raw] == [
-        ["DECIMAL(38,0)"], ["DECIMAL(38,0)", "d38 local"], ["HUGEINT"], ["inline cents round"]
+        ["DECIMAL(38,0)"], ["DECIMAL(38,0)", "d38 local"], ["HUGEINT"], ["inline cents round"],
+        ["DECIMAL(18,0)"], ["DECIMAL(18,0)"],
     ]
     for cents in ("CAST(round(value * 100) AS BIGINT)", "v = int(round(row.value * 100))"):
         assert _moment_idiom_hits(cents) == ["inline cents round"]
