@@ -5,6 +5,7 @@ checks so the drift cannot recur."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -454,8 +455,6 @@ def _program_sources() -> dict[str, str]:
 
 
 def _names_used(node) -> set[str]:
-    import ast
-
     used = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -468,19 +467,15 @@ def _names_used(node) -> set[str]:
 
 
 def _is_query(node) -> bool:
-    import ast
-
-    for d in getattr(node, "decorator_list", []):
+    for d in node.decorator_list:
         f = d.func if isinstance(d, ast.Call) else d
         if getattr(f, "id", None) == "query" or getattr(f, "attr", None) == "query":
             return True
     return False
 
 
-def _test_only_surface(sources: dict[str, str], keep=frozenset()) -> set[str]:
-    """``module:name`` of every package definition no program code reaches."""
-    import ast
-
+def _test_only_surface(sources: dict[str, str], keep=()) -> set[tuple[str, str]]:
+    """(module, name) of every package definition no program code reaches."""
     defs = {}  # (module, name) -> names its body uses
     live = set()  # names used by module-level code, queries and kept names
     for rel, text in sources.items():
@@ -499,19 +494,19 @@ def _test_only_surface(sources: dict[str, str], keep=frozenset()) -> set[str]:
         used = live.union(*(u for k, u in defs.items() if k not in dead))
         new = {k for k in defs if k[1] not in used} - dead
         if not new:
-            return {f"{rel}:{name}" for rel, name in dead}
+            return dead
         dead |= new
 
 
 def test_no_test_only_package_surface():
     sources = _program_sources()
-    dead = _test_only_surface(sources, frozenset(SURFACE_KEEP))
+    dead = _test_only_surface(sources, SURFACE_KEEP)
     assert not dead, (
         "package names only tests reach; delete them or add a reasoned "
-        f"SURFACE_KEEP entry: {sorted(dead)}"
+        f"SURFACE_KEEP entry: {sorted(f'{rel}:{name}' for rel, name in dead)}"
     )
     # every kept name is still defined and still needs its entry
-    needed = {k.rsplit(":", 1)[1] for k in _test_only_surface(sources)}
+    needed = {name for _, name in _test_only_surface(sources)}
     assert set(SURFACE_KEEP) <= needed, sorted(set(SURFACE_KEEP) - needed)
     # the rule fires on a planted test-only function, and runs to a
     # fixed point: a helper only that function calls goes with it
@@ -520,5 +515,5 @@ def test_no_test_only_package_surface():
         "def planted_helper():\n    return 1\n\n\n"
         "def planted_api():\n    return planted_helper()\n"
     )
-    got = _test_only_surface(planted, frozenset(SURFACE_KEEP))
-    assert {g.rsplit(":", 1)[1] for g in got} == {"planted_api", "planted_helper"}, got
+    got = _test_only_surface(planted, SURFACE_KEEP)
+    assert {name for _, name in got} == {"planted_api", "planted_helper"}, got
