@@ -8,9 +8,13 @@ Two implementations:
 - ``ParquetDirectoryCatalog`` — a directory of ``<table>.parquet`` (flat,
   single schema) or ``<schema>/<table>.parquet`` trees.  This is the
   test substrate and also the "re-export / compact" path at scale.
-- ``JdbcCatalog`` — Oracle's ``all_tables`` / ``all_tab_columns`` via
-  Spark JDBC (network-gated; SQL generation is unit-tested without a
-  live database).
+- ``JdbcCatalog`` — Oracle's ``all_tables`` via Spark JDBC, one
+  whole-table JDBC read per table (network-gated; SQL generation is
+  unit-tested without a live database).
+
+Columns are pruned by type after the read (``eligible_fields``), from
+the Spark schema and the JDBC driver's own type name, so both catalogs
+share one exclusion rule.
 
 Regex include/exclude semantics follow Oracle ``REGEXP_LIKE`` (substring
 match, reference main.py:200,205-207): Python ``re.search``.
@@ -26,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # Reference excludes these Oracle types (main.py:96-97): LOBs, raw binary,
-# intervals, LONG.  The Spark-side reproduction excludes the types they
-# map to after ingest.
+# intervals, LONG.  A JDBC read keeps the source type name in each
+# field's ``jdbcClientType`` metadata (CLOB and LONG read as strings);
+# any other source is pruned by the Spark types they map to.
 EXCLUDED_SPARK_TYPES: tuple[type, ...] = (
     T.BinaryType,
     T.CalendarIntervalType,
@@ -38,13 +43,18 @@ EXCLUDED_SPARK_TYPES: tuple[type, ...] = (
 EXCLUDED_ORACLE_TYPES = ("BLOB", "BFILE", "CLOB", "UNDEFINED", "UROWID", "LONG", "RAW")
 
 
-def eligible_fields(schema: T.StructType, exclude_binary: bool = True) -> list[str]:
+def eligible_fields(schema: T.StructType) -> list[str]:
     """Type-exclusion projection pruning (reference A4, main.py:92-99):
-    return the column names whose types survive the exclusion list, in
-    schema (= catalog) order."""
+    the column names whose Spark type and JDBC source type both survive
+    the exclusion lists, in schema (= catalog) order."""
     out = []
     for f in schema.fields:
-        if exclude_binary and isinstance(f.dataType, EXCLUDED_SPARK_TYPES):
+        source = f.metadata.get("jdbcClientType", "").upper()
+        if (
+            isinstance(f.dataType, EXCLUDED_SPARK_TYPES)
+            or source in EXCLUDED_ORACLE_TYPES
+            or source.startswith("INTERVAL")
+        ):
             continue
         out.append(f.name)
     return out
@@ -117,10 +127,11 @@ class JdbcCatalog:
     """Oracle catalog via Spark JDBC — the distributed analog of the
     reference's single-connection dictionary queries.
 
-    Each method pushes the dictionary query into Oracle with
+    ``list_tables`` pushes the dictionary query into Oracle with
     ``option("query", ...)`` so filtering happens server-side, exactly
     like the reference's bind-variable REGEXP_LIKE predicates
-    (main.py:195-214).
+    (main.py:195-214).  ``read_table`` reads a whole table over one JDBC
+    connection, as the reference does.
 
     NUMBER/DECIMAL mapping policy (pinned by
     tests/test_jdbc_roundtrip.py::test_jdbc_decimal_fidelity_roundtrip):
@@ -163,7 +174,7 @@ class JdbcCatalog:
         self.url = url or conn.jdbc_url
         self.driver = driver or self.DEFAULT_DRIVER
 
-    def _reader(self, sql: str, *, as_subquery: bool = False):
+    def _reader(self, sql: str):
         r = (
             self.spark.read.format("jdbc")
             .option("url", self.url)
@@ -171,13 +182,8 @@ class JdbcCatalog:
             .option("password", self.conn.password if self.conn else "")
             .option("driver", self.driver)
             .option("fetchsize", str(self.fetchsize))
+            .option("query", sql)
         )
-        if as_subquery:
-            # partitionColumn cannot be combined with the 'query' option;
-            # a derived-table dbtable is the documented equivalent.
-            r = r.option("dbtable", f"({sql}) t")
-        else:
-            r = r.option("query", sql)
         if self.isolation_init:
             r = r.option("sessionInitStatement", self.isolation_init)
         return r
@@ -207,104 +213,14 @@ class JdbcCatalog:
             sql += f" AND NOT REGEXP_LIKE(table_name, '{q(exclude_pattern)}')"
         return sql + " ORDER BY table_name ASC"
 
-    @staticmethod
-    def columns_sql(schema: str, table: str) -> str:
-        """Dictionary SQL equivalent to reference get_columns
-        (main.py:92-99): type-excluded, catalog-ordered."""
-        q = JdbcCatalog._q
-        excl = ", ".join(f"'{t}'" for t in EXCLUDED_ORACLE_TYPES)
-        return (
-            "SELECT column_name FROM all_tab_columns "
-            f"WHERE owner = '{q(schema)}' AND table_name = '{q(table)}' "
-            f"AND data_type NOT IN ({excl}) "
-            "AND data_type NOT LIKE 'INTERVAL %' "
-            "ORDER BY column_id ASC"
-        )
-
     def list_tables(
         self, schema: str, include_pattern: str = ".*", exclude_pattern: str | None = None
     ) -> list[str]:
         df = self._reader(self.tables_sql(schema, include_pattern, exclude_pattern)).load()
         return [r[0] for r in df.collect()]
 
-    def list_columns(self, schema: str, table: str) -> list[str]:
-        df = self._reader(self.columns_sql(schema, table)).load()
-        return [r[0] for r in df.collect()]
-
-    def read_table(
-        self,
-        schema: str,
-        table: str,
-        columns: list[str] | None = None,
-        row_limit: int = -1,
-        scn: int | None = None,
-        partition_column: str | None = None,
-        num_partitions: int = 1,
-        bounds: tuple[int, int] | None = None,
-    ) -> DataFrame:
-        """Distributed table read — the big win over the reference's
-        serial batch loop (main.py:156-158): N partitioned JDBC readers.
-
-        ``scn`` threads Oracle flashback ``AS OF SCN`` into every
-        partition's query, restoring the snapshot consistency the
-        reference gets from one session-level isolation statement
-        (main.py:222-223) — a per-session setting cannot span Spark's
-        many JDBC connections (SURVEY.md §7 hard part 1).
-        """
-        cols = ", ".join(f'"{c}"' for c in columns) if columns else "*"
-        src = f'"{schema}"."{table}"'
-        if scn is not None:
-            src += f" AS OF SCN {scn}"
-        sql = f"SELECT {cols} FROM {src}"
-        if row_limit != -1:
-            sql += f" FETCH FIRST {row_limit} ROWS ONLY"
-        partitioned = bool(partition_column and bounds and num_partitions > 1)
-        r = self._reader(sql, as_subquery=partitioned)
-        if partitioned:
-            r = (
-                r.option("partitionColumn", partition_column)
-                .option("lowerBound", str(bounds[0]))
-                .option("upperBound", str(bounds[1]))
-                .option("numPartitions", str(num_partitions))
-            )
-        return r.load()
-
-    def current_scn(self) -> int:
-        df = self._reader("SELECT current_scn FROM v$database").load()
-        return int(df.collect()[0][0])
-
-    @staticmethod
-    def bounds_sql(schema: str, table: str, partition_column: str, scn: int | None = None) -> str:
-        """Bounds-discovery query for a partitioned read: one cheap
-        MIN/MAX pushed to the database decides the range each of the N
-        JDBC partitions scans."""
-        src = f'"{schema}"."{table}"'
-        if scn is not None:
-            src += f" AS OF SCN {scn}"
-        # Aliases matter: Spark's JDBC reader re-selects columns by name,
-        # and unaliased aggregates get dialect-dependent names ("1"/"2"
-        # on Derby) that break that re-select.
-        return (
-            f'SELECT MIN("{partition_column}") AS lo, MAX("{partition_column}") AS hi FROM {src}'
-        )
-
-    def plan_partitioned_read(
-        self,
-        schema: str,
-        table: str,
-        partition_column: str,
-        num_partitions: int,
-        scn: int | None = None,
-    ) -> dict:
-        """Discover bounds and return the kwargs for ``read_table`` —
-        the two-step (bounds probe, partitioned scan) that turns the
-        reference's serial full-table stream into N concurrent range
-        scans sharing one flashback snapshot."""
-        row = self._reader(self.bounds_sql(schema, table, partition_column, scn)).load().collect()[0]
-        lo, hi = int(row[0]), int(row[1])
-        return {
-            "partition_column": partition_column,
-            "bounds": (lo, hi),
-            "num_partitions": num_partitions,
-            "scn": scn,
-        }
+    def read_table(self, schema: str, table: str) -> DataFrame:
+        """Whole-table read (reference A6, main.py:156-158): one JDBC
+        connection streams ``fetchsize``-row batches into one Spark
+        partition."""
+        return self._reader(f'SELECT * FROM "{schema}"."{table}"').load()

@@ -136,7 +136,7 @@ def parse_incremental(pairs: list[str]) -> dict[str, str]:
     return out
 
 
-def load_env_file(path: str | None = None) -> None:
+def load_env_file() -> None:
     """Reference parity (main.py:28): load a ``.env`` file into the
     environment before flag defaults are read.  Existing env vars win
     (python-dotenv default), matching dotenv's load-at-import semantics."""
@@ -146,7 +146,7 @@ def load_env_file(path: str | None = None) -> None:
         return
     # usecwd: search from the process working directory (bare
     # load_dotenv() would walk from this module's install location).
-    load_dotenv(path or find_dotenv(usecwd=True))
+    load_dotenv(find_dotenv(usecwd=True))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -5,10 +5,9 @@ Parity map (SURVEY.md §2 Part A):
 
 - A1-A3  catalog enumeration + regex include/exclude  -> ``catalog.py``
 - A4-A5  type-pruned projection + lowercase rename    -> ``_project``
+         (Spark type and JDBC source type, ``catalog.eligible_fields``)
 - A6/A9  table scan, batched fetch                    -> one
-         ``catalog.read_table(schema, table)`` per table (JDBC fetchsize);
-         ``JdbcCatalog``'s partitioned and ``AS OF SCN`` reads are not
-         used by the exporter yet
+         ``catalog.read_table(schema, table)`` per table (JDBC fetchsize)
 - A7     row limit                                    -> ``df.limit``
 - A11    compression (none/snappy/gzip/zstd, default zstd)
 - A12    byte-targeted file rolling                   -> ``maxRecordsPerFile``
@@ -16,7 +15,7 @@ Parity map (SURVEY.md §2 Part A):
          documents its size as approximate, main.py:453-454)
 - A13    overwrite / error-if-exists                  -> directory guard
 - A14    snapshot isolation                           -> JDBC
-         ``sessionInitStatement``, per connection (no shared SCN yet)
+         ``sessionInitStatement``, per connection (one per table read)
 - A15    ``<out>/<schema>/<table>/<table>_<n>.parquet`` layout
 - A16    schema x table driver loop with wall-clock metrics
 - A17    zero-eligible-column skip (warn)
@@ -102,9 +101,8 @@ def validate_export(
     the exported row count (>= for incremental appends), (c) carry at
     least one column.  This catches the failure exports silently
     tolerate — a sink that wrote fewer rows than it claimed.  Row and
-    column counts come from the footers of the written files (hive
-    partition directories add their columns), read with pyarrow on the
-    driver, so the audit runs no Spark job; ``spark`` and
+    column counts come from the footers of the written files, read with
+    pyarrow on the driver, so the audit runs no Spark job; ``spark`` and
     ``output_path`` are unused.  The per-table DQ operators
     (operators/validation.py) are the deeper, schema-aware layer."""
     out: list[TableValidation] = []
@@ -118,7 +116,7 @@ def validate_export(
             try:
                 # Same files Spark would read: names starting with "_" or
                 # "." (markers, checksums) are skipped.
-                dataset = pads.dataset(r.target, format="parquet", partitioning="hive")
+                dataset = pads.dataset(r.target, format="parquet")
                 if not dataset.files:
                     raise FileNotFoundError(f"no parquet data files under {r.target}")
                 if not dataset.schema.names:
@@ -156,8 +154,7 @@ def _rows_per_file(df: DataFrame, max_file_size: int) -> int | None:
 
 
 def _write_rolled(
-    df: DataFrame, path: str, compression: str, rows_per_file: int,
-    partition_cols: list[str] = (), metrics: tuple = (),
+    df: DataFrame, path: str, compression: str, rows_per_file: int, metrics: tuple = (),
 ) -> dict:
     """The write every export ends in (A11/A12): overwrite ``path``,
     one file per ``rows_per_file`` rows.  ``metrics`` are observed on
@@ -165,14 +162,12 @@ def _write_rolled(
     if metrics:
         obs = Observation()
         df = df.observe(obs, *metrics)
-    writer = (
+    (
         df.write.mode("overwrite")
         .option("compression", compression)
         .option("maxRecordsPerFile", str(rows_per_file))
+        .parquet(path)
     )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
     return obs.get if metrics else {}
 
 
@@ -227,11 +222,6 @@ class SparkParquetExporter:
     lowercase_object_names: bool = False
     parquet_max_file_size: int = DEFAULT_MAX_FILE_SIZE
     max_concurrent_tables: int = 1
-    # Hive-style partition columns per table (A15 extension — SURVEY.md
-    # §2: "within a table, partitionBy if we add partition columns").
-    # Partitioned tables keep Spark's directory layout and file names
-    # (partition pruning needs the directories); full export only.
-    partition_by: dict[str, list[str]] = field(default_factory=dict)
     # Space-filling-curve clustering per table (layouts.curve_clustered):
     # every file gets a tight min/max envelope on EVERY listed column, for
     # multi-dimensional file skipping (OPTIMIZE ZORDER at export time).
@@ -255,11 +245,6 @@ class SparkParquetExporter:
         return self.catalog.list_tables(
             schema, self.table_name_include_pattern, self.table_name_exclude_pattern
         )
-
-    def get_columns(self, schema: str, table_name: str) -> list[str]:
-        """Reference ``get_columns`` parity (main.py:87-108): type-excluded
-        column names in catalog order."""
-        return eligible_fields(self.catalog.read_table(schema, table_name).schema)
 
     # -- projection (A4/A5) -------------------------------------------------
     def _project(self, df: DataFrame) -> DataFrame | None:
@@ -300,16 +285,14 @@ class SparkParquetExporter:
             return ExportResult(schema, table, 0, [], time.perf_counter() - t0, empty), {}
         if self.cluster_by.get(table):
             projected = curve_clustered(projected, self.cluster_by[table], self.cluster_curve)
-        part_cols = self.partition_by.get(table, [])
         got = _write_rolled(
             projected,
             target + _STAGING if staged else target,
             self.compression_method,
             rows_per_file,
-            part_cols,
             (F.count(F.lit(1)).alias("rows"), *metrics),
         )
-        files = [] if staged or part_cols else _finalize_layout(target, self._name(table))
+        files = [] if staged else _finalize_layout(target, self._name(table))
         elapsed = time.perf_counter() - t0
         return ExportResult(schema, table, int(got["rows"]), files, elapsed, target=target), got
 
@@ -350,11 +333,6 @@ class SparkParquetExporter:
         self, schema: str, table: str, watermark_col: str
     ) -> ExportResult:
         t0 = time.perf_counter()
-        if self.partition_by.get(table):
-            raise ValueError(
-                f"partition_by is not supported for incremental export of "
-                f"{schema}.{table}: the staged delta is committed as flat files"
-            )
         self._recover_pending()
         key = f"{schema}.{table}"
         state = self._load_state()

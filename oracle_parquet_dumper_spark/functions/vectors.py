@@ -46,14 +46,18 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_rounded(a: Column | str, b: Column | str, digits: int = 6) -> Column:
-    """Cosine rounded for cross-engine comparison: the double fold is
-    deterministic per engine but the two engines may differ in the last
-    ulp; 6 digits is far beyond any ranking need."""
-    return F.round(cosine(a, b), digits)
+# Rounded cosines compare across engines: the double fold is
+# deterministic per engine but the two engines may differ in the last
+# ulp; 6 digits is far beyond any ranking need.
+COSINE_DIGITS = 6
 
 
-def cosine_prenormed(a, b, norm_a, norm_b, digits: int = 6) -> Column:
+def cosine_rounded(a: Column | str, b: Column | str) -> Column:
+    """Cosine rounded to ``COSINE_DIGITS`` for cross-engine comparison."""
+    return F.round(cosine(a, b), COSINE_DIGITS)
+
+
+def cosine_prenormed(a, b, norm_a, norm_b) -> Column:
     """Cosine from a per-pair dot and per-ROW precomputed norms.  Array
     folds are interpreted (higher-order functions don't codegen), so in
     pairwise joins compute each side's norm once before the join — this
@@ -61,7 +65,7 @@ def cosine_prenormed(a, b, norm_a, norm_b, digits: int = 6) -> Column:
     ``a``/``b`` must already be array<double> (see ``as_double``)."""
     na = F.col(norm_a) if isinstance(norm_a, str) else norm_a
     nb = F.col(norm_b) if isinstance(norm_b, str) else norm_b
-    return F.round(dot_d(a, b) / (na * nb), digits)
+    return F.round(dot_d(a, b) / (na * nb), COSINE_DIGITS)
 
 
 def absmax(a: Column | str) -> Column:
@@ -99,9 +103,9 @@ def quantize_int8_sql(vec_expr: str) -> str:
     return f"list_transform({vec_expr}, x -> CAST(round(x * 127.0 / {amax}) AS INT))"
 
 
-def cosine_rounded_sql(a: str, b: str, digits: int = 6) -> str:
+def cosine_rounded_sql(a: str, b: str) -> str:
     return (
         f"round(list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / "
         f"(sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])) * "
-        f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))), {digits})"
+        f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))), {COSINE_DIGITS})"
     )

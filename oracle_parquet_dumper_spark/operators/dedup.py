@@ -46,7 +46,7 @@ from oracle_parquet_dumper_spark.functions.tokens import (
     words,
     words_sql,
 )
-from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded, cosine_rounded_sql
+from oracle_parquet_dumper_spark.functions.vectors import cosine_rounded_sql
 from oracle_parquet_dumper_spark.plans.registry import query
 from oracle_parquet_dumper_spark.session import materialize
 from oracle_parquet_dumper_spark.sources.tables import load_table, read_parquet_robust, split_scan
@@ -196,7 +196,7 @@ def minhash_shingle_hashes_from_toks():
     return F.transform(shingles("toks"), lambda g: md5_long(g) % MINHASH_P)
 
 
-def minhash_sig_from_shm(t2: DataFrame, shm_col: str = "shm") -> DataFrame:
+def minhash_sig_from_shm(t2: DataFrame) -> DataFrame:
     """(doc_id, sig) from a (doc_id, shm) relation — stage (3) of
     ``minhash_signatures_df`` (sixteen affine ``array_min`` folds over
     the shingle-hash array), split out for callers that carry ``shm``
@@ -207,7 +207,7 @@ def minhash_sig_from_shm(t2: DataFrame, shm_col: str = "shm") -> DataFrame:
             *[
                 F.array_min(
                     F.transform(
-                        shm_col,
+                        "shm",
                         lambda s: (F.lit(MINHASH_A[i]) * s + F.lit(MINHASH_B[i]))
                         % MINHASH_P,
                     )
@@ -290,7 +290,7 @@ def _agree_sql(a: str = "a", b: str = "b") -> str:
     )
 
 
-def _minhash_pairs_sql(source_cte: str = "documents") -> str:
+def _minhash_pairs_sql() -> str:
     """(a, b, est_jaccard) candidate pairs: any of the N_BANDS bands
     fully agreeing, verified by the fraction of agreeing minhashes.  The
     SQL twin states band collision declaratively (OR over band-equality
@@ -799,35 +799,24 @@ def dedup_fuzzy_levenshtein_lsh_capped(spark: SparkSession, sf_dir: str) -> Data
     return _levenshtein_lsh(spark, sf_dir, cap=LEV_LSH_CAP)
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    strategy: str = "min_label",
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     """Connected components over undirected (a, b) pair rows.  Returns
     (node, component) where component is the minimum reachable node id.
 
-    ``strategy="min_label"`` (default): iterative min-label propagation —
-    one join + one aggregate per round, O(component diameter) rounds.
-    Near-dup clusters are shallow (stars/chains of a few hops), so 3-5
-    rounds suffice; a diameter above ``max_iterations`` raises instead
-    of returning non-minimal labels.
+    Iterative min-label propagation: one join + one aggregate per round,
+    O(component diameter) rounds.  Near-dup clusters are shallow
+    (stars/chains of a few hops), so 3-5 rounds suffice; a diameter above
+    ``max_iterations`` raises instead of returning non-minimal labels.
+    Large-star/small-star contraction (Kiveris et al., SoCC'14) bounds the
+    rounds by O(log^2 n) instead, but on ``pipeline_curation`` at sf0.1
+    (local[4], 4 cores) it ran 1.75x slower than this loop (median 3.46 s
+    vs 1.97 s over 5 interleaved reps, equal result hashes), so it is not
+    kept.
 
-    ``strategy="star"``: alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log^2 n) rounds regardless of diameter, the right
-    choice when the pair graph may contain long chains.  Costs ~2x the
-    per-round shuffles of min_label, which is why it is the fallback
-    rather than the default for near-dup graphs.
-
-    Both loops are driver-side control flow over fully distributed
-    steps — no data ever visits the driver except a 1-row convergence
-    probe per round.
+    The loop is driver-side control flow over fully distributed steps —
+    no data ever visits the driver except a 1-row convergence probe per
+    round.
     """
-    if strategy == "star":
-        return _star_contraction_components(edges, max_iterations)
-    if strategy != "min_label":
-        raise ValueError(f"strategy must be 'min_label' or 'star', got {strategy!r}")
     both = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
         edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
@@ -867,84 +856,9 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             f"min-label rounds (component diameter exceeds the budget); "
-            f"raise max_iterations or switch to strategy='star'"
+            f"raise max_iterations"
         )
     return labels
-
-
-def _sym(half: DataFrame) -> DataFrame:
-    """Symmetrize a canonical (x < y) half-edge set into both directions."""
-    return half.unionByName(
-        half.select(F.col("y").alias("x"), F.col("x").alias("y"))
-    )
-
-
-def _canon(directed: DataFrame) -> DataFrame:
-    """Canonicalize rewired (u, v) edges: drop self-loops, order each
-    pair as (x, y) with x < y, dedup."""
-    return (
-        directed.where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("x"), F.greatest("u", "v").alias("y"))
-        .distinct()
-    )
-
-
-def _large_star(half: DataFrame) -> DataFrame:
-    """Large-star: every node connects its strictly-larger neighbors to
-    the minimum of its neighborhood (incl. itself)."""
-    e = _sym(half)
-    m = e.groupBy("x").agg(F.least(F.min("y"), F.first("x")).alias("m"))
-    return _canon(
-        e.where(F.col("y") > F.col("x"))
-        .join(m, "x")
-        .select(F.col("y").alias("u"), F.col("m").alias("v"))
-    )
-
-
-def _small_star(half: DataFrame) -> DataFrame:
-    """Small-star: every node connects itself and its smaller neighbors
-    to the minimum of those smaller neighbors."""
-    sm = _sym(half).where(F.col("y") < F.col("x"))
-    m = sm.groupBy("x").agg(F.min("y").alias("m"))
-    rew = (
-        sm.join(m, "x")
-        .select(F.col("y").alias("u"), F.col("m").alias("v"))
-        .unionByName(m.select(F.col("x").alias("u"), F.col("m").alias("v")))
-    )
-    return _canon(rew)
-
-
-def _star_contraction_components(edges: DataFrame, max_iterations: int) -> DataFrame:
-    """Kiveris alternating-star CC (see connected_components docstring).
-
-    State is the canonical half-edge set; each round applies large-star
-    then small-star and stops when the round is a no-op (exact
-    set-equality probe via two anti-join EXCEPTs — both sets are
-    distinct by construction).  At the fixpoint every component is a
-    star rooted at its minimum node, so the final labels fall out of one
-    neighborhood-min aggregate."""
-    half = materialize(
-        _canon(edges.select(F.col("a").alias("u"), F.col("b").alias("v"))), eager=True
-    )
-    converged = False
-    for _ in range(max_iterations):
-        nxt = materialize(_small_star(_large_star(half)), eager=True)
-        changed = (
-            nxt.exceptAll(half).limit(1).count()
-            or half.exceptAll(nxt).limit(1).count()
-        )
-        half = nxt
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"star-contraction did not converge in {max_iterations} rounds "
-            f"(theoretical bound is O(log^2 n) — raise max_iterations)"
-        )
-    return _sym(half).groupBy("x").agg(
-        F.least(F.min("y"), F.first("x")).alias("component")
-    ).select(F.col("x").alias("node"), "component")
 
 
 _CLOSURE_SQL = """
@@ -1200,13 +1114,16 @@ def sample_weighted_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_prop_oracle(rounds: int = 3) -> str:
+LP_ROUNDS = 3  # label-propagation rounds, Spark loop and SQL unroll alike
+
+
+def _label_prop_oracle() -> str:
     """SQL twin of dedup_label_propagation: the fixed-round loop
     unrolled into chained CTEs (the PageRank-oracle pattern), each round
     one grouped vote + ROW_NUMBER winner + frozen-label union."""
     ctes = []
     prev = "lab0"
-    for r in range(1, rounds + 1):
+    for r in range(1, LP_ROUNDS + 1):
         ctes.append(f"""w{r} AS (
       SELECT x AS doc_id, assigned, 'propagated' AS status FROM (
         SELECT e.x, l.assigned,
@@ -1285,7 +1202,7 @@ def _label_prop_histogram(spark: SparkSession, sf_dir: str, edges: DataFrame) ->
         ),
         eager=True,
     )
-    for _ in range(3):
+    for _ in range(LP_ROUNDS):
         votes = (
             edges.join(labels, edges.y == labels.doc_id)
             .groupBy(F.col("x"), F.col("assigned"))

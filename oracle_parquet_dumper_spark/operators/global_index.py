@@ -67,8 +67,6 @@ def with_global_index(
     n_col: str = "_gn",
     weight_col: str | None = None,
     cum_col: str = "_gcum",
-    wtot_col: str = "_gwtot",
-    precomputed_bounds: tuple[str, str] | None = None,
     bucketer: str = "width",
     bucket_col: str | None = None,
 ) -> DataFrame:
@@ -82,17 +80,12 @@ def with_global_index(
     every input column plus ``idx_col``/``n_col``.
 
     ``weight_col`` additionally computes ``cum_col`` = INCLUSIVE running
-    sum of the weight in the same global order and ``wtot_col`` = total
+    sum of the weight in the same global order and ``_gwtot`` = total
     weight (per group) — the same two-pass trick applied to SUM instead
     of COUNT: per-bucket weight totals roll into broadcast offsets, the
     within-bucket running sum stays partitioned.  This is what replaces
     ``SUM(w) OVER (ORDER BY ...)`` at scale (e.g. vocabulary coverage
     curves).
-
-    ``precomputed_bounds=(mn_col, mx_col)`` skips step 1: the caller
-    already carries (row-constant per group) bucketing bounds — e.g. a
-    1-row aggregate it needed anyway.  Bounds only steer bucket SIZES;
-    any row-constant pair that brackets the values keeps the index exact.
 
     ``bucketer``: ``"width"`` (default) buckets equi-width over the
     broadcast min/max; ``"quantile"`` buckets by approx-percentile
@@ -114,8 +107,6 @@ def with_global_index(
 
     if bucketer not in ("width", "quantile"):
         raise ValueError(f"unknown bucketer: {bucketer!r}")
-    if bucketer == "quantile" and precomputed_bounds is not None:
-        raise ValueError("precomputed_bounds only applies to the width bucketer")
 
     # 1. broadcast per-group bounds; monotone bucketing.
     if bucketer == "quantile":
@@ -156,12 +147,7 @@ def with_global_index(
             step //= 2
         hb = out_b.withColumn("_gb", F.col("_bsp").cast("int")).drop("_qb", "_bsp")
     else:
-        if precomputed_bounds is not None:
-            mn_c, mx_c = precomputed_bounds
-            bounded = df.withColumn("_mn", F.col(mn_c).cast("double")).withColumn(
-                "_mx", F.col(mx_c).cast("double")
-            )
-        elif gb:
+        if gb:
             bounds = df.groupBy(*gb).agg(F.min(v).alias("_mn"), F.max(v).alias("_mx"))
             bounded = df.join(F.broadcast(bounds), gb)
         else:
@@ -197,7 +183,7 @@ def with_global_index(
     if weight_col:
         off_cols += [
             F.coalesce(F.sum("_bw").over(off_w), F.lit(0)).alias("_woff"),
-            F.sum("_bw").over(tot_w).alias(wtot_col),
+            F.sum("_bw").over(tot_w).alias("_gwtot"),
         ]
     offsets = counts.select(*gb, "_gb", *off_cols)
 
@@ -230,7 +216,6 @@ def weighted_quantiles(
     disc: dict[str, float] | None = None,
     extra_aggs: dict[str, Column] | None = None,
     n_col: str | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
     bucketer: str = "width",
 ) -> DataFrame:
     """Exact percentiles over a VALUE-AGGREGATED relation — the scale-safe
@@ -273,7 +258,6 @@ def weighted_quantiles(
         value_col,
         [value_col],
         group_cols=gb or None,
-        n_buckets=n_buckets,
         weight_col=weight_col,
         bucketer=bucketer,
     )
@@ -349,8 +333,6 @@ def grouped_topk(
     order_cols: list[str],
     k: int,
     rank_col: str = "_rk",
-    n_buckets: int = 32,
-    bucket_on: str | None = None,
 ) -> DataFrame:
     """Exact top-k rows per group under ``order_cols`` (all ASC; negate a
     numeric column for DESC) — WITHOUT a window partitioned only by the
@@ -359,19 +341,19 @@ def grouped_topk(
 
     Two phases:
 
-    1. pre-top-k per ``(group, _gb)`` where ``_gb`` is a deterministic
-       hash bucket of ``bucket_on`` (default: the last order column — a
-       unique tie-break key in every caller).  The window partitions on
-       ``n_buckets`` × |groups| keys, so parallelism scales with the
-       bucket count, not the group domain; each task keeps a k-row heap
+    1. pre-top-k per ``(group, _gb)`` where ``_gb`` is one of 32
+       deterministic hash buckets of the last order column (a unique
+       tie-break key in every caller).  The window partitions on
+       32 × |groups| keys, so parallelism scales with the bucket count,
+       not the group domain; each task keeps a k-row heap
        (WindowGroupLimit pushes the rank filter below the sort).
        Correctness: a global top-k row is top-k within ANY subset that
        contains it, in particular its own bucket — so the union of
        per-bucket top-ks is a superset of the global top-k.
-    2. bounded merge: ``collect_list`` over the ≤ k·n_buckets survivors
+    2. bounded merge: ``collect_list`` over the ≤ 32·k survivors
        per group, ``array_sort`` (struct comparison = field order, so
        ``order_cols`` lead the struct), slice k, posexplode for the
-       final rank.  Per-group state is ≤ k·n_buckets structs by
+       final rank.  Per-group state is ≤ 32·k structs by
        construction — never data-sized.
 
     ``order_cols`` must be a total order per group (unique) — otherwise
@@ -380,9 +362,7 @@ def grouped_topk(
     carried through; ``rank_col`` (1-based int) is appended.
     """
     carry = [c for c in df.columns if c not in order_cols]
-    hb = df.withColumn(
-        "_gb", F.pmod(F.xxhash64(bucket_on or order_cols[-1]), F.lit(n_buckets))
-    )
+    hb = df.withColumn("_gb", F.pmod(F.xxhash64(order_cols[-1]), F.lit(32)))
     pre = W.partitionBy(*group_cols, "_gb").orderBy(*order_cols)
     cand = (
         hb.withColumn("_prk", F.row_number().over(pre))

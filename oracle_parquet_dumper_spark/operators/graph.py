@@ -99,7 +99,7 @@ def supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cooccurrence_edges(su)
 
 
-def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPING) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """(node, pr) after ``iters`` synchronous rounds.  Assumes every node
     has out-edges (true for a symmetric edge list, so no dangling-mass
     term)."""
@@ -128,18 +128,18 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPIN
     # 1-row node count, materialized ONCE (r14): left in-plan it was
     # re-derived per round — 5 extra aggregation jobs over the edges.
     n1 = materialize(edges_deg.agg(F.count_distinct("src").alias("nn")), eager=True)
-    ranks = _pagerank_rounds(edges_deg, edges_deg.select("src").distinct(), n1, iters, damping)
+    ranks = _pagerank_rounds(edges_deg, edges_deg.select("src").distinct(), n1, iters)
     return ranks.select("node", (F.col("r") / F.lit(float(PR_SCALE))).alias("pr"))
 
 
 def _pagerank_rounds(
-    edges_deg: DataFrame, nodes: DataFrame, n1: DataFrame, iters: int, damping: float
+    edges_deg: DataFrame, nodes: DataFrame, n1: DataFrame, iters: int
 ) -> DataFrame:
     """(node, r): ``iters`` synchronous rounds over the (src, dst, deg)
     relation ``edges_deg``, starting from uniform integer rank mass on
     the ``src`` column of ``nodes``; ``n1`` is the 1-row node count
     ``nn``.  Each round's ranks are materialized eagerly."""
-    d_num = cents_py(damping)  # 0.85 -> 85, exact integer damping
+    d_num = cents_py(PR_DAMPING)  # 0.85 -> 85, exact integer damping
     ranks = nodes.crossJoin(F.broadcast(n1)).select(
         F.col("src").alias("node"), F.expr(f"{PR_SCALE} div nn").alias("r")
     )
@@ -300,7 +300,7 @@ def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row node count, materialized ONCE — left in-plan it would
     # re-scan the edge table every round just to recount nodes
     n1 = materialize(deg.agg(F.count(F.lit(1)).alias("nn")), eager=True)
-    ranks = _pagerank_rounds(edges_deg, deg, n1, PR_ITERS, PR_DAMPING)
+    ranks = _pagerank_rounds(edges_deg, deg, n1, PR_ITERS)
     return (
         ranks.select(
             F.col("node").cast("long").alias("node"),

@@ -949,20 +949,15 @@ def capture_checkpoints():
             setattr(DataFrame, n, orig)
 
 
-def audit_query(spark, sf_dir: str, name: str, df=None) -> PlanAudit:
-    """Audit one registered query.  Pass ``df`` to reuse an
-    already-built DataFrame instead of re-running the query function
-    (planning a query twice doubles the tool's wall-clock) — note a
-    pre-built df was planned OUTSIDE capture_checkpoints, so the
-    checkpoint-fragment lint only runs when the audit builds the query
-    itself (df=None, the --all path and the test suite's default)."""
+def audit_query(spark, sf_dir: str, name: str) -> PlanAudit:
+    """Audit one registered query: build it under
+    ``capture_checkpoints``, so the relations it checkpoints are linted
+    with the same rules as its executed plan."""
     from oracle_parquet_dumper_spark.plans import REGISTRY
 
     spec = REGISTRY[name]
-    frags: list[str] = []
-    if df is None:
-        with capture_checkpoints() as frags:
-            df = spec.fn(spark, sf_dir)
+    with capture_checkpoints() as frags:
+        df = spec.fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     a = audit_text(name, plan)
     bounded = _bounded_cols(name)

@@ -13,6 +13,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Differential harnesses (cross_sf_sweep, drive_contract) collect full
+# results to compare against DuckDB; at sf1 some pair queries return
+# millions of rows, over Spark's 1g default.  Data paths never collect —
+# this only sizes the verification sink.
+MAX_RESULT_SIZE = "4g"
 
 
 def get_spark(
@@ -34,9 +39,7 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(min(cpus, DEFAULT_SHUFFLE_PARTITIONS)))
-        )
+        shuffle_partitions = min(cpus, DEFAULT_SHUFFLE_PARTITIONS)
 
     builder = (
         SparkSession.builder.master(master)
@@ -50,11 +53,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Differential harnesses (cross_sf_sweep, drive_contract) collect
-        # full results to compare against DuckDB; at sf1 some pair
-        # queries return millions of rows, over the 1g default.  Data
-        # paths never collect — this only sizes the verification sink.
-        .config("spark.driver.maxResultSize", os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"))
+        .config("spark.driver.maxResultSize", MAX_RESULT_SIZE)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

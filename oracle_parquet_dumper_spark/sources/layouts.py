@@ -30,15 +30,14 @@ def write_bucketed_table(
     bucket_col: str,
     n_buckets: int,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed parquet table in the session
-    catalog.  ``n_buckets`` is the write-time shuffle width AND the
-    read-time parallelism floor — pick it from target partition size
-    (total bytes / 128 MB), not from cluster size, and use the SAME
-    count for every table that joins on ``bucket_col``; mismatched
-    counts reintroduce one side's exchange."""
-    w = df.write.mode(mode).option("path", path).bucketBy(n_buckets, bucket_col)
+    catalog, replacing any table of that name.  ``n_buckets`` is the
+    write-time shuffle width AND the read-time parallelism floor — pick
+    it from target partition size (total bytes / 128 MB), not from
+    cluster size, and use the SAME count for every table that joins on
+    ``bucket_col``; mismatched counts reintroduce one side's exchange."""
+    w = df.write.mode("overwrite").option("path", path).bucketBy(n_buckets, bucket_col)
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.format("parquet").saveAsTable(table)

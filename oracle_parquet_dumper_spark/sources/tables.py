@@ -24,6 +24,8 @@ import stat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructType
 
+SPLIT_SCAN_MIN_BYTES = 4 << 20  # split_scan's raw-input floor
+
 TABLES = [
     "region",
     "nation",
@@ -183,9 +185,9 @@ def split_scan(df: DataFrame, cpu_weight: int = 1) -> DataFrame:
     (SPARK-23207), and no query in the registry is sensitive to
     physical row placement (all outputs are order-hashed).
 
-    Bytes floor: below SPARK_GRAFT_SPLIT_SCAN_MIN_BYTES (default 4 MB —
-    Spark's own ``files.openCostInBytes`` constant, i.e. "inputs smaller
-    than this are not worth extra tasks") the split is skipped: the
+    Bytes floor: below ``SPLIT_SCAN_MIN_BYTES`` (4 MB — Spark's own
+    ``files.openCostInBytes`` constant, i.e. "inputs smaller than this
+    are not worth extra tasks") the split is skipped: the
     added stages' scheduling latency exceeds the map win on tiny inputs
     (measured at sf0.1, 0.59 MB documents: tfidf 0.58 -> 1.46 s WITH an
     unconditional split), while one decade up the same call sites win
@@ -218,7 +220,7 @@ def split_scan(df: DataFrame, cpu_weight: int = 1) -> DataFrame:
     cur = df.rdd.getNumPartitions()
     if cur >= p:
         return df
-    min_bytes = int(os.environ.get("SPARK_GRAFT_SPLIT_SCAN_MIN_BYTES", str(4 << 20)))
+    min_bytes = SPLIT_SCAN_MIN_BYTES
     paths = [
         f[len("file:"):] if f.startswith("file:") else f for f in df.inputFiles()
     ]
@@ -249,7 +251,7 @@ def split_scan(df: DataFrame, cpu_weight: int = 1) -> DataFrame:
     return df.repartition(int(target))
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register fixture tables as temp views for the SQL API surface."""
-    for name in tables or TABLES:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register the fixture tables as temp views for the SQL API surface."""
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

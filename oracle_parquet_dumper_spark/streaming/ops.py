@@ -31,6 +31,10 @@ from oracle_parquet_dumper_spark.functions.rounding import (
     to_double,
 )
 
+# Event-time lateness every stream operator here and in ``stateful``
+# tolerates before a window closes or state is dropped.
+WATERMARK = "1 hour"
+
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -71,11 +75,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def tumbling_counts(events: DataFrame, width: str = "6 hours", watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window counts per event type."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 6-hour tumbling-window counts per event type."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             dec_sum("value").alias("sum_value"),
@@ -84,27 +88,23 @@ def tumbling_counts(events: DataFrame, width: str = "6 hours", watermark: str = 
     )
 
 
-def sliding_counts(
-    events: DataFrame, width: str = "12 hours", slide: str = "6 hours", watermark: str = "1 hour"
-) -> DataFrame:
-    """Watermarked sliding-window counts (each event lands in
-    width/slide windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 12-hour windows sliding by 6 hours (each event lands
+    in two windows)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "12 hours", "6 hours").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "2 days", watermark: str = "1 hour"
-) -> DataFrame:
-    """Session windows per user: events closer than ``gap`` merge into
+def session_windows(events: DataFrame) -> DataFrame:
+    """Session windows per user: events closer than 2 days merge into
     one session (native session_window state store merging)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "2 days").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -115,7 +115,7 @@ def session_windows(
     )
 
 
-def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """In-stream exact dedup on (user_id, event_type): one event per pair
     survives, as in the batch twin ``stream_dedup_pairs``.
 
@@ -125,7 +125,7 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     distinct-pair count and ``numRowsRemoved`` 0).  Eviction would need
     ``dropDuplicatesWithinWatermark``, which only drops repeats inside
     the horizon and so is not the batch twin's global dedup."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["user_id", "event_type"])
+    return events.withWatermark("ts", WATERMARK).dropDuplicates(["user_id", "event_type"])
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"):
@@ -142,19 +142,17 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"
     return q
 
 
-def interval_join_purchases_views(
-    purchases: DataFrame, views: DataFrame, window: str = "1 hour", watermark: str = "1 hour"
-) -> DataFrame:
+def interval_join_purchases_views(purchases: DataFrame, views: DataFrame) -> DataFrame:
     """Stream-stream inner join: each purchase matched to the same
-    user's views in the preceding ``window``.  The time-range condition
+    user's views in the preceding hour.  The time-range condition
     plus both-side watermarks lets Spark expire join state — without
     them stream-stream join state grows forever."""
-    p = purchases.withWatermark("ts", watermark).select(
+    p = purchases.withWatermark("ts", WATERMARK).select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
     )
-    v = views.withWatermark("ts", watermark).select(
+    v = views.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("v_user"),
         F.col("ts").alias("v_ts"),
         F.col("value").alias("view_value"),
@@ -162,16 +160,14 @@ def interval_join_purchases_views(
     cond = (
         (F.col("p_user") == F.col("v_user"))
         & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window}"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 hour"))
     )
     return p.join(v, cond, "inner").select(
         "purchase_id", F.col("p_user").alias("user_id"), "p_ts", "v_ts", "view_value"
     )
 
 
-def enrich_with_dimension(
-    events: DataFrame, dim: DataFrame, n_dim_rows: int, watermark: str = "1 hour"
-) -> DataFrame:
+def enrich_with_dimension(events: DataFrame, dim: DataFrame, n_dim_rows: int) -> DataFrame:
     """Stream-static enrichment join + windowless aggregate: each event
     is mapped onto a dimension key (user_id mod |dim| + 1, the synthetic
     user->customer assignment) and broadcast-joined against the STATIC
@@ -180,7 +176,7 @@ def enrich_with_dimension(
     lookup tables stay fresh in long-running streams.  The aggregate
     (count + decimal sum per segment) is the stateful part and is
     bounded by segment cardinality."""
-    keyed = events.withWatermark("ts", watermark).withColumn(
+    keyed = events.withWatermark("ts", WATERMARK).withColumn(
         "cust_key", (F.col("user_id") % F.lit(n_dim_rows)) + 1
     )
     # no forced broadcast: the customer dim grows with the business —
@@ -196,7 +192,7 @@ def enrich_with_dimension(
     )
 
 
-def ohlc_tumbling(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def ohlc_tumbling(events: DataFrame) -> DataFrame:
     """Watermarked tumbling 1h OHLC per event type — the streaming form
     of operators/events_analytics.ts_resample_ohlc.  open/close are
     min_by/max_by on the same exact DECIMAL ordering key (within-hour
@@ -213,7 +209,7 @@ def ohlc_tumbling(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
         + F.col("event_id").cast("decimal(19,0)")
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .withColumn("ord", ord_key)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -251,13 +247,8 @@ def drift_reference(events_batch: DataFrame) -> DataFrame:
     )
 
 
-def drift_mean_shift(
-    events: DataFrame,
-    reference: DataFrame,
-    width: str = "6 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-window drift monitor: each tumbling window's per-type mean
+def drift_mean_shift(events: DataFrame, reference: DataFrame) -> DataFrame:
+    """Per-window drift monitor: each 6-hour tumbling window's per-type mean
     value, standardized against the static reference profile —
     shift = (window_mean - ref_mean)/ref_sd, the alerting metric a
     model-serving pipeline watches for input drift.
@@ -270,8 +261,8 @@ def drift_mean_shift(
     vc = cents("value")
     enriched = events.join(F.broadcast(reference), "event_type")
     g = (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        enriched.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             exact_sum(vc).alias("s"),

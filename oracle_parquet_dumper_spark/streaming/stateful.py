@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from oracle_parquet_dumper_spark.functions.rounding import cents_py
+from oracle_parquet_dumper_spark.streaming.ops import WATERMARK
 
 # Ship the stateful kernels by value (see operators/multimodal.py): the
 # Python workers must not need this package on their import path.
@@ -47,10 +48,10 @@ def running_total_kernel(key, pdfs, state):
     )
 
 
-def running_totals(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def running_totals(events: DataFrame) -> DataFrame:
     """Streaming per-user running value totals via applyInPandasWithState."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             running_total_kernel,
@@ -120,11 +121,11 @@ def rolling_anomaly_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def rolling_anomalies(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def rolling_anomalies(events: DataFrame) -> DataFrame:
     """Streaming per-user rolling z-score anomalies via
     applyInPandasWithState (ring-buffer state, update mode)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             rolling_anomaly_kernel,
@@ -180,10 +181,10 @@ def ewma_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def ewma_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def ewma_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user truncated EWMA via applyInPandasWithState."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             ewma_kernel,
@@ -241,11 +242,11 @@ def holt_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def holt_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def holt_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user truncated Holt forecast via
     applyInPandasWithState (ring-buffer state, update mode)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             holt_kernel,
@@ -294,11 +295,11 @@ def markov_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def markov_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def markov_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user transition extraction via
     applyInPandasWithState (last-value state, append mode)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             markov_kernel,
@@ -381,7 +382,7 @@ def sprt_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def sprt_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def sprt_monitor(events: DataFrame) -> DataFrame:
     """Streaming Wald SPRT monitor: per arm (user_id % 2), cumulative
     trials/successes over view+purchase events and the boundary decision
     per day — the always-valid experiment monitor as a stateful stream
@@ -389,7 +390,7 @@ def sprt_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     from pyspark.sql import functions as F
 
     trials = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .where(F.col("event_type").isin("view", "purchase"))
         .select(
             (F.col("user_id") % 2).alias("arm"),
@@ -452,7 +453,7 @@ def cumd_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def cumulative_distinct_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def cumulative_distinct_monitor(events: DataFrame) -> DataFrame:
     """Per event type, the running number of DISTINCT users ever seen,
     one row per day — the audience-growth monitor as a stateful stream
     whose state is a bitmap, not a user set (state size = users/63
@@ -460,7 +461,7 @@ def cumulative_distinct_monitor(events: DataFrame, watermark: str = "1 hour") ->
     HLL would not be bit-checkable against the batch twin)."""
     from pyspark.sql import functions as F
 
-    rows = events.withWatermark("ts", watermark).select(
+    rows = events.withWatermark("ts", WATERMARK).select(
         F.col("event_type"),
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         F.col("user_id"),
@@ -539,14 +540,14 @@ def closed_sessions_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def closed_sessions_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def closed_sessions_monitor(events: DataFrame) -> DataFrame:
     """Streaming sessionization with closed-session semantics — the
     stateful twin of stream_closed_sessions (operators/
     streaming_batch.py): per-user state is (start, last, count), three
     longs; sessions are emitted the moment a gap proves them over."""
     from pyspark.sql import functions as F
 
-    rows = events.withWatermark("ts", watermark).select(
+    rows = events.withWatermark("ts", WATERMARK).select(
         F.col("user_id"), F.col("ts"), F.col("event_id")
     )
     return rows.groupBy("user_id").applyInPandasWithState(
@@ -605,13 +606,13 @@ def growth_class_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def growth_class_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def growth_class_monitor(events: DataFrame) -> DataFrame:
     """Streaming twin of stream_user_day_class (operators/
     streaming_batch.py): per-user state is ONE date string; emitted
     rows are bit-identical to the batch classification."""
     from pyspark.sql import functions as F
 
-    rows = events.withWatermark("ts", watermark).select(
+    rows = events.withWatermark("ts", WATERMARK).select(
         F.col("user_id"),
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
         F.col("ts"),
@@ -675,13 +676,13 @@ def heavy_hitters_kernel(key, pdfs, state):
     yield pd.DataFrame(out)
 
 
-def heavy_hitters_monitor(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def heavy_hitters_monitor(events: DataFrame) -> DataFrame:
     """Per tumbling 6h window, the exact top-{HH_TOP} event types by
     count as a stateful stream — the heavy-hitters dashboard.  Keyed by
     window start; state per key is the bounded type-count table."""
     from pyspark.sql import functions as F
 
-    rows = events.withWatermark("ts", watermark).select(
+    rows = events.withWatermark("ts", WATERMARK).select(
         F.date_format(
             F.window("ts", "6 hours").start, "yyyy-MM-dd HH:mm:ss"
         ).alias("window_start"),

@@ -617,59 +617,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
     assert comps == {(i, 0) for i in range(7)}
 
 
-def test_star_contraction_converges_on_long_chain(spark):
-    """VERDICT r3 #3: a 1000-node path (diameter 999) kills min-label's
-    20-round budget but star-contraction converges in O(log^2 n) rounds;
-    labels must still be the component minimum for every node."""
-    import pytest
-
-    from oracle_parquet_dumper_spark.operators.dedup import connected_components
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(999)], ["a", "b"])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=20)
-    comps = {
-        (r.node, r.component)
-        for r in connected_components(chain, max_iterations=20, strategy="star").collect()
-    }
-    assert comps == {(i, 0) for i in range(1000)}
-
-
-def test_star_contraction_matches_min_label(spark):
-    """On a multi-component random graph both strategies must emit
-    identical (node, component) labelings."""
-    import random
-
-    from oracle_parquet_dumper_spark.operators.dedup import connected_components
-
-    rng = random.Random(7)
-    edges = set()
-    # three planted components over disjoint id ranges + some chains
-    for lo, hi in ((0, 40), (100, 170), (200, 205)):
-        ids = list(range(lo, hi))
-        for _ in range(len(ids) * 2):
-            a, b = rng.sample(ids, 2)
-            edges.add((min(a, b), max(a, b)))
-    df = spark.createDataFrame(sorted(edges), ["a", "b"])
-    ml = {(r.node, r.component) for r in connected_components(df).collect()}
-    st = {
-        (r.node, r.component)
-        for r in connected_components(df, strategy="star").collect()
-    }
-    assert ml == st
-    assert st  # non-empty sanity
-
-
-def test_connected_components_rejects_unknown_strategy(spark):
-    import pytest
-
-    from oracle_parquet_dumper_spark.operators.dedup import connected_components
-
-    df = spark.createDataFrame([(1, 2)], ["a", "b"])
-    with pytest.raises(ValueError, match="strategy"):
-        connected_components(df, strategy="bogus")
-
-
 def test_dedup_incremental_planted_verdicts(spark, tmp_path):
     """The fixture corpus has no exact duplicates, so plant all three
     verdict tiers: doc 7 (batch, INC_MOD=7) is an exact copy of corpus

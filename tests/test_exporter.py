@@ -170,11 +170,6 @@ def test_jdbc_sql_generation():
     assert sql.endswith("ORDER BY table_name ASC")
     sql2 = JdbcCatalog.tables_sql("S", ".*", "TMP_")
     assert "AND NOT REGEXP_LIKE(table_name, 'TMP_')" in sql2
-    csql = JdbcCatalog.columns_sql("S", "T")
-    for t in ("BLOB", "BFILE", "CLOB", "UNDEFINED", "UROWID", "LONG", "RAW"):
-        assert f"'{t}'" in csql
-    assert "NOT LIKE 'INTERVAL %'" in csql
-    assert csql.endswith("ORDER BY column_id ASC")
 
 
 def test_jdbc_sql_quote_escaping():
@@ -185,8 +180,6 @@ def test_jdbc_sql_quote_escaping():
     assert "owner = 'O''BRIEN'" in sql
     assert "REGEXP_LIKE(table_name, 'A''B')" in sql
     assert "NOT REGEXP_LIKE(table_name, 'C''D')" in sql
-    csql = JdbcCatalog.columns_sql("O'BRIEN", "T'1")
-    assert "owner = 'O''BRIEN'" in csql and "table_name = 'T''1'" in csql
 
 
 def test_catalog_listing(spark, source_dir):
@@ -194,29 +187,6 @@ def test_catalog_listing(spark, source_dir):
     assert cat.list_schemas() == ["main"]
     assert cat.list_tables("main") == ["BINONLY", "EMPTYTAB", "NATION", "REGION"]
     assert cat.read_table("main", "REGION").count() == 5
-
-
-def test_partitioned_write_layout_and_pruning(spark, tmp_path):
-    """A15 extension: hive-partitioned table export; a filter on the
-    partition column must prune to one directory (PartitionFilters)."""
-    from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog
-
-    out = str(tmp_path / "out")
-    cat = ParquetDirectoryCatalog(spark, "/root/testdata/sf0.001")
-    SparkParquetExporter(
-        spark=spark,
-        catalog=cat,
-        output_path=out,
-        table_name_include_pattern="^orders$",
-        partition_by={"orders": ["o_orderstatus"]},
-    ).export_tables()
-    tdir = os.path.join(out, "main", "orders")
-    parts = sorted(e for e in os.listdir(tdir) if e.startswith("o_orderstatus="))
-    assert len(parts) == 3  # O / F / P
-    df = spark.read.parquet(tdir).where("o_orderstatus = 'F'")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(o_orderstatus" in plan
-    assert df.count() > 0
 
 
 def test_concurrent_table_export(spark, source_dir, tmp_path):
@@ -270,13 +240,6 @@ def test_rows_from_observed_metric(spark, source_dir, tmp_path):
         spark, source_dir, out3, table_name_include_pattern="NATION", row_limit=7
     )
     assert results3[0].rows == 7
-
-
-def test_jdbc_bounds_sql():
-    sql = JdbcCatalog.bounds_sql("S", "T", "ID")
-    assert sql == 'SELECT MIN("ID") AS lo, MAX("ID") AS hi FROM "S"."T"'
-    sql_scn = JdbcCatalog.bounds_sql("S", "T", "ID", scn=12345)
-    assert 'AS OF SCN 12345' in sql_scn
 
 
 def test_cli_dotenv_defaults(spark, source_dir, tmp_path, monkeypatch):
@@ -837,8 +800,7 @@ def _assert_tight_envelopes(result, rows):
 def test_incremental_delta_is_clustered(spark, tmp_path):
     """cluster_by applies to incremental deltas too: a second delta
     rolled into several files has the same tight per-file envelopes as
-    a clustered full export.  partition_by is refused for incremental
-    export, naming the table."""
+    a clustered full export."""
     import pyarrow.compute as pc
 
     lineitem = pq.read_table("/root/testdata/sf0.001/lineitem.parquet")
@@ -862,10 +824,6 @@ def test_incremental_delta_is_clustered(spark, tmp_path):
     assert delta.rows == rows
     assert not set(delta.files) & set(first.files)
     _assert_tight_envelopes(delta, rows)
-
-    exp.partition_by = {"lineitem": ["l_returnflag"]}
-    with pytest.raises(ValueError, match="main.lineitem"):
-        exp.export_table_incremental("main", "lineitem", "l_orderkey")
 
 
 def test_cluster_curve_validation():
@@ -1077,25 +1035,6 @@ def test_validate_export_junk_part_file(spark, source_dir, tmp_path):
     (v,) = validate_export(spark, str(tmp_path / "out"), [r])
     assert not v.ok
     assert len(v.issues) == 1 and v.issues[0].startswith("unreadable output: ")
-
-
-def test_validate_export_partitioned(spark, smoke_sf_dir, tmp_path):
-    """A hive-partitioned export validates clean: rows are summed over
-    every partition directory."""
-    from oracle_parquet_dumper_spark.exporter import validate_export
-
-    out = str(tmp_path / "out")
-    results = SparkParquetExporter(
-        spark=spark,
-        catalog=ParquetDirectoryCatalog(spark, smoke_sf_dir),
-        output_path=out,
-        table_name_include_pattern="^orders$",
-        partition_by={"orders": ["o_orderstatus"]},
-    ).export_tables()
-    (r,) = results
-    assert r.rows == pq.read_metadata(os.path.join(smoke_sf_dir, "orders.parquet")).num_rows
-    (v,) = validate_export(spark, out, results)
-    assert v.ok, v.issues
 
 
 def test_validate_export_incremental_at_least_rule(spark, tmp_path):

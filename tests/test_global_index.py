@@ -74,15 +74,6 @@ def test_weighted_cumsum_matches_window_sum(spark):
     assert joined.where(F.col("_gwtot") != F.col("want_tot")).count() == 0
 
 
-def test_precomputed_bounds_same_index(spark):
-    df = _fixture(spark).withColumn("lo", F.lit(0)).withColumn("hi", F.lit(96))
-    got = with_global_index(
-        df, "v", ["k"], precomputed_bounds=("lo", "hi"), n_buckets=9
-    ).select("k", "_gidx")
-    want = df.select("k", (F.row_number().over(W.orderBy("v", "k")) - 1).alias("want"))
-    assert got.join(want, "k").where(F.col("_gidx") != F.col("want")).count() == 0
-
-
 def test_constant_value_column_degenerates_to_one_bucket(spark):
     df = spark.range(50).select(F.col("id").alias("k"), F.lit(7).alias("v"))
     got = with_global_index(df, "v", ["k"]).select("k", "_gidx", "_gn")
@@ -156,11 +147,7 @@ def test_quantile_bucketer_same_exact_index(spark):
 def test_bucketer_arg_validation(spark):
     import pytest
 
-    df = _zipf_fixture(spark, 10).withColumn("lo", F.lit(0.0)).withColumn("hi", F.lit(1.0))
-    with pytest.raises(ValueError, match="precomputed_bounds"):
-        with_global_index(
-            df, "v", ["k"], precomputed_bounds=("lo", "hi"), bucketer="quantile"
-        )
+    df = _zipf_fixture(spark, 10)
     with pytest.raises(ValueError, match="bucketer"):
         with_global_index(df, "v", ["k"], bucketer="bogus")
 

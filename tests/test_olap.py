@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import os
 
-from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog
+from oracle_parquet_dumper_spark.catalog import ParquetDirectoryCatalog, eligible_fields
 from oracle_parquet_dumper_spark.exporter import SparkParquetExporter, exporter
 from oracle_parquet_dumper_spark.sources.tables import read_parquet_robust
 
@@ -37,7 +37,7 @@ def test_exporter_catalog_introspection(spark, smoke_sf_dir):
         table_name_include_pattern="nation|lineitem",
     )
     assert exp.get_tables("main") == ["lineitem", "nation"]
-    cols = exp.get_columns("main", "nation")
+    cols = eligible_fields(exp.catalog.read_table("main", "nation").schema)
     assert cols == ["n_nationkey", "n_name", "n_regionkey"]
 
 

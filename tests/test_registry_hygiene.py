@@ -517,3 +517,227 @@ def test_no_test_only_package_surface():
     )
     got = _test_only_surface(planted, SURFACE_KEEP)
     assert {name for _, name in got} == {"planted_api", "planted_helper"}, got
+
+
+# Every option of the package must be set by the program.  An optional
+# parameter of a package function or method (a dataclass field with a
+# default counts as a parameter of its class) is set when a non-test call
+# passes it by keyword or position, or forwards ``*args``/``**kwargs``
+# that a call of the forwarding function set (resolved through that
+# function's own callers).  Calls inside the definition itself and inside
+# unreferenced methods do not count; a dataclass field is also set by an
+# attribute store or mutation (``x.f = ...``, ``x.f += ...``,
+# ``x.f.append(...)``).  Every method of a package class must be named by
+# non-test code outside its own body (dunders are called implicitly).
+# Keys are ``module:Qualname(param)`` for a parameter and
+# ``module:Class.method`` for a method.
+OPTION_KEEP = {
+    "cli:main(argv)": "entry point: argparse reads sys.argv when None",
+    "plans.audit:main(argv)": "entry point: argparse reads sys.argv when None",
+    "cli:_AppendOverEnv.__call__(option_string)": "argparse Action protocol",
+    "exporter:compact_table(target_file_size)": "public maintenance API; its target size",
+    "exporter:compact_table(compression)": "public maintenance API; its codec",
+    "exporter:compact_table(cluster_by)": "public maintenance API; curve-clustered rewrite",
+    "exporter:compact_table(cluster_curve)": "public maintenance API; curve choice",
+    "operators.dedup:connected_components(max_iterations)": "test seam bounding the round loop",
+    "operators.graph:pagerank(iters)": "test seam bounding the round loop",
+    "operators.global_index:with_global_index(n_buckets)": "test seam: the index is exact at any bucket count",
+    "sources.layouts:gc_state_siblings(grace_s)": "test seam: the age a sibling must reach",
+    "operators.dedup:dedup_incremental_stored(state_dir)": "test seam: a temp state directory",
+    "plans.registry:lsh_band_domain_violations(registry)": "test seam: a planted registry",
+    "streaming.ops:run_to_memory(output_mode)": "test seam: the sink mode of a probe stream",
+    "session:get_spark(master)": "test seam: the session a test builds",
+    "session:get_spark(shuffle_partitions)": "test seam: the session a test builds",
+    "operators.udfs:SplitSentences.eval": "Spark calls a Python UDTF's eval",
+    "sources.pydatasource:SyntheticDocsReader.partitions": "Spark calls DataSourceReader.partitions",
+    "sources.pydatasource:SyntheticDocsSource.streamReader": "Spark calls DataSource.streamReader",
+    "sources.pydatasource:SyntheticDocsStreamReader.initialOffset": "Spark calls it on a stream start",
+    "sources.pydatasource:SyntheticDocsStreamReader.latestOffset": "Spark calls it per micro-batch",
+    "sources.pydatasource:SyntheticDocsStreamReader.partitions": "Spark calls it per micro-batch",
+    "sources.pydatasource:SyntheticDocsStreamReader.commit": "Spark calls it per micro-batch",
+    "sources.pydatasource:JsonlShardBatchWriter.commit": "Spark calls it after a batch write",
+    "sources.pydatasource:JsonlShardStreamWriter.commit": "Spark calls it per micro-batch",
+    "sources.pydatasource:JsonlShardsSink.writer": "Spark calls DataSource.writer",
+    "sources.pydatasource:JsonlShardsSink.streamWriter": "Spark calls DataSource.streamWriter",
+    "sources.pydatasource:_JsonlShardWriterBase.abort": "Spark calls it when a batch write fails",
+    "sources.pydatasource:JsonlShardStreamWriter.abort": "Spark calls it when a micro-batch fails",
+}
+
+
+def _is_dataclass(node) -> bool:
+    return any(
+        "dataclass" in (getattr(f, "id", None), getattr(f, "attr", None))
+        for d in node.decorator_list
+        for f in [d.func if isinstance(d, ast.Call) else d]
+    )
+
+
+def _package_defs(trees: dict[str, ast.Module]):
+    """(key, owner class or None, def node) of every package function,
+    method and dataclass; keys as in ``OPTION_KEEP``."""
+    for rel, tree in trees.items():
+        if not rel.startswith(PKG + os.sep):
+            continue
+        mod = rel[len(PKG) + 1 : -3].replace(os.sep, ".")
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield f"{mod}:{stmt.name}", None, stmt
+            elif isinstance(stmt, ast.ClassDef):
+                if _is_dataclass(stmt):
+                    yield f"{mod}:{stmt.name}", stmt.name, stmt
+                for m in stmt.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        yield f"{mod}:{stmt.name}.{m.name}", stmt.name, m
+
+
+def _name_of(node) -> str | None:
+    return getattr(node, "id", None) or getattr(node, "attr", None)
+
+
+def _bound(node) -> bool:
+    """A method's first parameter is ``self``/``cls``, not a call argument."""
+    pos = node.args.posonlyargs + node.args.args
+    return bool(pos) and pos[0].arg in ("self", "cls")
+
+
+def _optional_params(node) -> list[tuple[int | None, str]]:
+    """(call position, or None for keyword-only; name) of each parameter
+    with a default, or of each defaulted field of a dataclass."""
+    if isinstance(node, ast.ClassDef):
+        fields = [s for s in node.body if isinstance(s, ast.AnnAssign)]
+        return [(i, s.target.id) for i, s in enumerate(fields) if s.value is not None]
+    a = node.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i - _bound(node), p.arg) for i, p in enumerate(pos) if i >= first]
+    return out + [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _unset_options(sources: dict[str, str], keep=()) -> set[str]:
+    """Keys of every package option and method the program never sets or
+    names, less ``keep``."""
+    trees = {rel: ast.parse(t) for rel, t in sources.items()}
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    mutators = ("append", "extend", "add", "update", "insert", "setdefault")
+    encl = {}  # id(node) -> innermost enclosing function definition
+    calls, names, subclasses, stored = {}, {}, {}, set()
+    for tree in trees.values():
+        stack = [(tree, None)]
+        while stack:
+            node, fn = stack.pop()
+            for ch in ast.iter_child_nodes(node):
+                encl[id(ch)] = fn
+                stack.append((ch, ch if isinstance(ch, funcs) else fn))
+            if isinstance(node, ast.Call):
+                f = node.func
+                calls.setdefault(_name_of(f), []).append(node)
+                if isinstance(f, ast.Attribute) and f.attr in mutators:
+                    stored.add(_name_of(f.value))  # x.f.append(...)
+            elif isinstance(node, ast.ClassDef):
+                for b in node.bases:
+                    subclasses.setdefault(_name_of(b), set()).add(node.name)
+            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Store):
+                stored.add(node.attr)
+            if isinstance(node, (ast.Name, ast.Attribute)):
+                names.setdefault(_name_of(node), []).append(node)
+
+    def inside(node, defs) -> bool:
+        fn = encl.get(id(node))
+        while fn is not None:
+            if fn in defs:
+                return True
+            fn = encl.get(id(fn))
+        return False
+
+    defs = list(_package_defs(trees))
+    methods = [
+        n for k, owner, n in defs
+        if owner and isinstance(n, funcs) and k not in keep
+        and not (n.name.startswith("__") and n.name.endswith("__"))
+    ]
+    dead: set = set()
+    while True:  # a method named only inside unreferenced methods is unreferenced too
+        new = {
+            n for n in methods
+            if n not in dead and all(inside(x, dead | {n}) for x in names.get(n.name, ()))
+        }
+        if not new:
+            break
+        dead |= new
+
+    def shapes(name_set, node, seen) -> list:
+        """(positional count, keyword names or None = any) of each live
+        call of a name in ``name_set``; forwarded ``*a``/``**kw`` resolve
+        through the callers of the function that forwards them."""
+        out = []
+        for c in (c for n in name_set for c in calls.get(n, ())):
+            if inside(c, dead | {node}):
+                continue
+            fn = encl.get(id(c))
+            npos = sum(not isinstance(x, ast.Starred) for x in c.args)
+            kws = {k.arg for k in c.keywords if k.arg}
+            stars = [x.value for x in c.args if isinstance(x, ast.Starred)]
+            dstars = [k.value for k in c.keywords if k.arg is None]
+            varargs = {a.arg for a in (fn.args.vararg, fn.args.kwarg) if a} if fn else set()
+            fwd = [s for s in stars + dstars if isinstance(s, ast.Name) and s.id in varargs]
+            if not fwd or len(fwd) < len(stars) + len(dstars) or fn in seen:
+                # a literal call, or one that unpacks some other value
+                out.append((float("inf") if stars else npos, None if dstars else kws))
+                continue
+            pos = fn.args.posonlyargs + fn.args.args
+            own = {p.arg for p in pos + fn.args.kwonlyargs}
+            for opos, okws in shapes({fn.name}, fn, seen | {fn}):
+                p = npos + max(0, opos - (len(pos) - _bound(fn))) if stars else npos
+                k = kws if not dstars else None if okws is None else kws | (okws - own)
+                out.append((p, k))
+        return out
+
+    unset = set()
+    for key, owner, node in defs:
+        if node in dead:
+            unset.add(key)
+            continue
+        if isinstance(node, ast.ClassDef) or node.name == "__init__":
+            # a constructor call names the class or a subclass
+            callees, todo = {owner, "__init__"}, [owner]
+            while todo:
+                for sub in subclasses.get(todo.pop(), ()):
+                    if sub not in callees:
+                        callees.add(sub)
+                        todo.append(sub)
+        else:
+            callees = {node.name}
+        got = shapes(callees, node, frozenset())
+        for pos, p in _optional_params(node):
+            if isinstance(node, ast.ClassDef) and p in stored:
+                continue
+            if not any(k is None or p in k or (pos is not None and n > pos) for n, k in got):
+                unset.add(f"{key}({p})")
+    return unset - set(keep)
+
+
+def test_no_unset_package_options():
+    sources = _program_sources()
+    unset = _unset_options(sources, OPTION_KEEP)
+    assert not unset, (
+        "package options or methods no program code sets or names; delete "
+        f"them or add a reasoned OPTION_KEEP entry: {sorted(unset)}"
+    )
+    # every kept entry still exists and still needs its reason
+    needed = _unset_options(sources)
+    assert set(OPTION_KEEP) <= needed, sorted(set(OPTION_KEEP) - needed)
+    # the rule fires on a planted never-set parameter and an unnamed
+    # method, and a call from that method does not set anything
+    planted = dict(sources)
+    planted[os.path.join(PKG, "planted.py")] = (
+        "def planted_fn(x, width=3, *, slide=1):\n    return x\n\n\n"
+        "class Planted:\n"
+        "    def used(self, a, b=2):\n        return planted_fn(a)\n\n"
+        "    def unused(self):\n        return self.used(1, 2), planted_fn(1, slide=2)\n\n\n"
+        "def caller():\n    return Planted().used(1)\n"
+    )
+    got = _unset_options(planted, OPTION_KEEP)
+    assert got == {
+        "planted:planted_fn(width)", "planted:planted_fn(slide)",
+        "planted:Planted.used(b)", "planted:Planted.unused",
+    }, got

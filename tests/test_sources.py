@@ -41,6 +41,7 @@ def test_split_scan_footer_read_failure_assumes_one_row_group(spark, tmp_path, m
     still split rather than silently left at one task."""
     import numpy as np
 
+    from oracle_parquet_dumper_spark.sources import tables
     from oracle_parquet_dumper_spark.sources.tables import split_scan
 
     path = str(tmp_path / "one_row_group.parquet")
@@ -57,7 +58,7 @@ def test_split_scan_footer_read_failure_assumes_one_row_group(spark, tmp_path, m
         assert df.rdd.getNumPartitions() == 2
         # bytes floor at half the file: the sized target is 2 partitions,
         # which only a one-row-group (effective 1-task) scan falls short of
-        monkeypatch.setenv("SPARK_GRAFT_SPLIT_SCAN_MIN_BYTES", str(nbytes // 2 + 1))
+        monkeypatch.setattr(tables, "SPLIT_SCAN_MIN_BYTES", nbytes // 2 + 1)
 
         def unreadable(*args, **kwargs):
             raise OSError("footer unreadable")

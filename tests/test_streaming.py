@@ -34,7 +34,7 @@ def test_stream_session_equals_batch(spark, smoke_sf_dir):
     assert _normalize(got) == _normalize(expect)
 
 
-def test_stream_dedup_bounded_state(spark, smoke_sf_dir):
+def test_stream_dedup_keeps_every_pair(spark, smoke_sf_dir):
     stream = ops.stream_dedup(ops.read_events_stream(spark, smoke_sf_dir))
     q = ops.run_to_memory(stream, "t_dedup", output_mode="append")
     got = spark.table("t_dedup")
